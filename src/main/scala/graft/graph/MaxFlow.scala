@@ -1,7 +1,10 @@
 package graft.graph
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable
@@ -12,7 +15,7 @@ import scala.util.Random
   * (SURVEY §2/§3/§7).
   *
   * One round =
-  *   1. map over `Dataset[VertexState]`: refresh edge/path flows against
+  *   1. map over the vertex states: refresh edge/path flows against
   *      the broadcast accepted-flow deltas (T6/J2), prune saturated paths
   *      (T7), extend a random eligible path toward each unvisited neighbor
   *      (T8, ff5 `fset` memo T9), emitting delta-vertices;
@@ -28,12 +31,15 @@ import scala.util.Random
   * residual BFS per path) until no augmenting path remains — guaranteeing
   * the exact max-flow that the reference validates by known answers.
   *
-  * Scale notes: per-round state is one shuffle of (masters ∪ deltas) — the
-  * ff1 topology-shuffling design; message volume is degree-bounded and
-  * memoized by fset; candidate traffic to the driver is bounded by
-  * `candidatesPerVertex` × (meet vertices), the same back-pressure as
-  * `mf.excess.list.max`. `localCheckpoint` per round keeps the plan O(1)
-  * in rounds.
+  * This file holds the one run loop and the default [[ShuffleAll]]
+  * [[Layout]] of steps 1–2; [[MaxFlowSchimmy]] holds the schimmy layout.
+  *
+  * Scale notes: under ShuffleAll, per-round state is one shuffle of
+  * (masters ∪ deltas) — the ff1 topology-shuffling design; message
+  * volume is degree-bounded and memoized by fset; candidate traffic to
+  * the driver is bounded by `candidatesPerVertex` × (meet vertices), the
+  * same back-pressure as `mf.excess.list.max`. `localCheckpoint` per
+  * round keeps the plan O(1) in rounds.
   */
 object MaxFlow {
 
@@ -176,22 +182,8 @@ object MaxFlow {
   private[graph] def stepVertexCore(v: VertexState, d: FlowDelta, round: Int,
                                     conf: Config, ctrsOpt: Option[Ctrs])
       : (VertexState, Array[VertexState]) = {
-    val adj2 = if (d.isEmpty) v.adj else v.adj.map { a =>
-      a.copy(flow = effFlow(a.flow, v.id, a.nbr, d))
-    }
-    def refresh(p: PathState): PathState =
-      if (d.isEmpty || p.length == 0) p
-      else {
-        val nf = new Array[Long](p.flows.length)
-        var i = 0
-        while (i < nf.length) {
-          nf(i) = effFlow(p.flows(i), p.nodes(i), p.nodes(i + 1), d)
-          i += 1
-        }
-        PathState(p.nodes, nf, p.caps)
-      }
-    val s2 = v.s.map(refresh).filter(_.potential > 0)
-    val t2 = v.t.map(refresh).filter(_.potential > 0)
+    val fresh = applyDeltaOnly(v, d)
+    val (adj2, s2, t2) = (fresh.adj, fresh.s, fresh.t)
     ctrsOpt.foreach { ctrs =>
       ctrs.satS.add(v.s.length - s2.length)
       ctrs.satT.add(v.t.length - t2.length)
@@ -388,8 +380,8 @@ object MaxFlow {
       (total, delta.toMap, accepted.toSeq)
   }
 
-  /** One-shot barrier acceptance over a full candidate array (the schimmy
-    * engine and the specs use this; v1 streams through [[Acceptor]]).
+  /** One-shot barrier acceptance over a full candidate array, for the
+    * specs; the run loop streams through [[Acceptor]] on both layouts.
     */
   private[graph] def accept(cands: Array[Candidate],
       seed: Long): (Long, FlowDelta, Seq[(Seq[Long], Long)]) = {
@@ -398,14 +390,53 @@ object MaxFlow {
     a.result
   }
 
+  /** Where the round state lives and how it meets its messages (phases
+    * 1-2), the one step the engines do differently: [[ShuffleAll]] (ff1)
+    * or schimmy ([[MaxFlowSchimmy]], ff3). The rest is [[runLoop]]'s.
+    * `init` lays out the first state lazily; `merge` is one round's merged
+    * states with their candidates (the loop persists it and runs one job
+    * over it); `next` reads the next state lazily from that merge; `view`
+    * gives the state as rows, for durable writes, flush and cleanup.
+    */
+  private[graph] trait Layout[S] {
+    def init(initial: Dataset[VertexState]): S
+    def merge(state: S, d: Broadcast[FlowDelta], round: Int, conf: Config,
+              ctrs: Ctrs): RDD[(VertexState, Array[Candidate])]
+    def next(merged: RDD[(VertexState, Array[Candidate])]): S
+    def view(state: S): Dataset[VertexState]
+  }
+
+  /** ff1's layout: a checkpointed `Dataset` of masters, and one shuffle of
+    * (masters ∪ deltas) per round. */
+  private[graph] final class ShuffleAll(spark: SparkSession)
+      extends Layout[Dataset[VertexState]] {
+    import spark.implicits._
+    // LAZY checkpoint: the first round's single runJob materializes the
+    // graph build — the loop never pays a standalone materialization job
+    // (same one-job-per-round discipline as the CC/BFS loops)
+    def init(initial: Dataset[VertexState]): Dataset[VertexState] =
+      initial.localCheckpoint(eager = false)
+    def merge(state: Dataset[VertexState], d: Broadcast[FlowDelta], round: Int,
+              conf: Config, ctrs: Ctrs): RDD[(VertexState, Array[Candidate])] =
+      state
+        .flatMap(stepVertex(_, d.value, round, conf, ctrs))
+        .groupByKey(_.id)
+        .mapGroups(mergeVertex(_, _, round, conf, Some(ctrs)))
+        .rdd
+    // project off the candidate arrays, checkpoint LAZILY — the next action
+    // (the following round's runJob, a stateDir write, or the cleanup's
+    // residual count) materializes it from the warm merge cache, so each
+    // round costs exactly one job
+    def next(merged: RDD[(VertexState, Array[Candidate])]): Dataset[VertexState] =
+      spark.createDataset(merged.map(_._1)).localCheckpoint(eager = false)
+    def view(state: Dataset[VertexState]): Dataset[VertexState] = state
+  }
+
   /** Run max-flow between `sources` and `sinks` over the directed edge
     * relation `edges(src, dst, cap)`.
     */
   def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
-          sinks: Seq[Long], conf: Config = Config()): Result = {
-    require(sources.toSet.intersect(sinks.toSet).isEmpty,
-      "sources and sinks must be disjoint")
-
+          sinks: Seq[Long], conf: Config = Config()): Result =
     // Superstep exchange sizing is left to AQE partition coalescing: a
     // tiny fixture's groupByKey exchanges coalesce to ~1 reduce task at
     // runtime, and a huge graph was never squeezed below the session
@@ -413,8 +444,16 @@ object MaxFlow {
     // spark.sql.shuffle.partitions let a concurrent query planned
     // mid-loop inherit the shrunken value (VERDICT r4 "wrong" #2) —
     // operator code must not mutate the caller's session.
+    run(spark, edges, sources, sinks, conf, new ShuffleAll(spark))
+
+  /** [[run]] on a given state layout. */
+  private[graph] def run[S](spark: SparkSession, edges: DataFrame,
+                            sources: Seq[Long], sinks: Seq[Long], conf: Config,
+                            layout: Layout[S]): Result = {
+    require(sources.toSet.intersect(sinks.toSet).isEmpty,
+      "sources and sinks must be disjoint")
     val init = GraphBuilder.buildState(spark, edges, sources, sinks)
-    runLoop(spark, init, conf)
+    runLoop(spark, layout, init, conf, startRound = 0)
   }
 
   /** Continue a run from durable round state written via Config.stateDir
@@ -429,26 +468,30 @@ object MaxFlow {
     * at 1).
     */
   def resume(spark: SparkSession, stateDir: String,
-             conf: Config = Config()): Result = {
+             conf: Config = Config()): Result =
+    resume(spark, stateDir, conf, new ShuffleAll(spark))
+
+  /** [[resume]] on a given state layout. */
+  private[graph] def resume[S](spark: SparkSession, stateDir: String,
+                               conf: Config, layout: Layout[S]): Result = {
     val (st, startRound) =
       graft.sources.StateIO.readLatestForResume(spark, stateDir)
-    runLoop(spark, st, conf, startRound)
+    runLoop(spark, layout, st, conf, startRound)
   }
 
-  private def runLoop(spark: SparkSession, initial: Dataset[VertexState],
-                      conf: Config, startRound: Int = 0): Result = {
+  private def runLoop[S](spark: SparkSession, layout: Layout[S],
+                         initial: Dataset[VertexState], conf: Config,
+                         startRound: Int): Result = {
     import spark.implicits._
     val sc = spark.sparkContext
 
-    // LAZY checkpoint: the first round's single runJob materializes the
-    // graph build — the loop never pays a standalone materialization job
-    // (same one-job-per-round discipline as the CC/BFS loops)
-    var state: Dataset[VertexState] = initial.localCheckpoint(eager = false)
-    var prevMrdd: org.apache.spark.rdd.RDD[(VertexState, Array[Candidate])] = null
-    var prevBc: org.apache.spark.broadcast.Broadcast[FlowDelta] = null
+    var st: S = layout.init(initial)
+    var prevMrdd: RDD[(VertexState, Array[Candidate])] = null
+    var prevBc: Broadcast[FlowDelta] = null
     // the checkpointed state frame that FED prevMrdd — its only remaining
     // reader is prevMrdd's recompute path, so it dies exactly when
-    // prevMrdd is unpersisted (the two-deep schedule prevBc follows)
+    // prevMrdd is unpersisted (the two-deep schedule prevBc follows); a
+    // schimmy state's view pins nothing (its merge is the checkpoint)
     var prevFeedState: Dataset[VertexState] = null
     var engineFlow = 0L
     var round = startRound
@@ -458,17 +501,21 @@ object MaxFlow {
     val reports = mutable.ArrayBuffer.empty[RoundCounters]
     var done = false
     var zeroStreak = 0
+    def credit(delta: collection.Map[(Long, Long), Long]): Unit =
+      delta.foreach { case (k, v) => assignment.update(k, assignment.getOrElse(k, 0L) + v) }
+    // round-tagged dir (kill-safe: never overwritten) + prune to bound storage
+    def durable(rows: Dataset[VertexState], r: Int): Unit = conf.stateDir.foreach { dir =>
+      graft.sources.StateIO.writeRound(rows, dir, r)
+      graft.sources.StateIO.pruneRounds(spark, dir)
+    }
 
     while (!done && round < conf.maxRounds) {
       round += 1
-      val inState = state // feeds this round's mrdd
+      val inState = layout.view(st) // feeds this round's mrdd
       val bc = sc.broadcast(pending)
       val ctrs = Ctrs(sc, s"mf-r$round")
-      val mrdd = state
-        .flatMap(stepVertex(_, bc.value, round, conf, ctrs))
-        .groupByKey(_.id)
-        .mapGroups(mergeVertex(_, _, round, conf, Some(ctrs)))
-        .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val mrdd = layout.merge(st, bc, round, conf, ctrs)
+        .persist(StorageLevel.MEMORY_AND_DISK)
       // Mid-round acceptance overlap (the reference's RMI ApServer,
       // ff2/ApServer.java:19-49): ONE parallel job materializes the merged
       // state into cache, and each partition's candidates are offered to
@@ -496,8 +543,9 @@ object MaxFlow {
       // runJob returns after every handler ran: acceptance is complete and
       // the round's accumulators are final. It also materialized mrdd into
       // cache — and, through its lineage, the previous round's lazily-
-      // checkpointed state (truncated by doCheckpoint when the job ended),
-      // so the previous round's cache AND broadcast are now droppable.
+      // checkpointed state (or, under schimmy, mrdd's own lazy checkpoint;
+      // doCheckpoint truncates either when the job ends), so the previous
+      // round's cache AND broadcast are now droppable.
       // They could not be dropped a round earlier: this job's tasks
       // serialize the untruncated lineage, which still references them
       // (counters are not double-counted: the projection map over the
@@ -514,9 +562,7 @@ object MaxFlow {
       if (conf.validate) mrdd.foreach(p => validateVertex(p._1))
       val (got, delta, roundPaths) = acceptor.result
       allPaths ++= roundPaths
-      delta.foreach { case (k, v) =>
-        assignment.update(k, assignment.getOrElse(k, 0L) + v)
-      }
+      credit(delta)
       engineFlow += got
       reports += RoundCounters(round, got, engineFlow,
         roundPaths.size, acceptor.candidateCount, ctrs.loseExcess.value,
@@ -526,11 +572,7 @@ object MaxFlow {
         ctrs.dropS.value, ctrs.dropT.value,
         ctrs.aliveS.value, ctrs.aliveT.value)
       pending = delta
-      // next round's state: project off the candidate arrays, checkpoint
-      // LAZILY — the next action (the following round's runJob, a stateDir
-      // write, or the cleanup's residual count) materializes it from the
-      // warm mrdd cache, so each round costs exactly one job
-      state = spark.createDataset(mrdd.map(_._1)).localCheckpoint(eager = false)
+      st = layout.next(mrdd)
       prevMrdd = mrdd
       prevBc = bc // destroyed after the NEXT job truncates this lineage
       prevFeedState = inState // released when prevMrdd is unpersisted
@@ -548,21 +590,17 @@ object MaxFlow {
       done = (got == 0 && ctrs.moves == 0) ||
         (round > 1 && got == 0 && ctrs.loseExcess.value == 0 && frontierStalled) ||
         (engineFlow > 0 && zeroStreak >= conf.acceptPatience)
-      conf.stateDir.foreach { dir =>
-        if (done || round % conf.checkpointEvery == 0) {
-          // persist the FLUSHED view so resume starts with no pending
-          // delta; round-tagged dir (kill-safe) + prune to bound storage
-          val bcF = sc.broadcast(pending)
-          graft.sources.StateIO.writeRound(
-            state.map(applyDeltaOnly(_, bcF.value)), dir, round)
-          graft.sources.StateIO.pruneRounds(spark, dir)
-          bcF.destroy()
-        }
+      if (conf.stateDir.nonEmpty && (done || round % conf.checkpointEvery == 0)) {
+        // persist the FLUSHED view so resume starts with no pending delta
+        val bcF = sc.broadcast(pending)
+        durable(layout.view(st).map(applyDeltaOnly(_, bcF.value)), round)
+        bcF.destroy()
       }
     }
     // flush any un-applied deltas into the state before cleanup — lazy:
     // the cleanup's first action (residual count) materializes flush +
     // count in one pass
+    var state = layout.view(st)
     if (pending.nonEmpty) {
       val bc = sc.broadcast(pending)
       state = state.map(applyDeltaOnly(_, bc.value)).localCheckpoint(eager = false)
@@ -583,9 +621,8 @@ object MaxFlow {
         val (extra, delta, cleanPaths) = residualMaxFlowDriver(resid)
         allPaths ++= cleanPaths
         if (extra > 0) {
-          delta.foreach { case (k, v) =>
-            assignment.update(k, assignment.getOrElse(k, 0L) + v)
-          }
+          credit(delta)
+          cleanupFlow = extra
           // the refreshed state is only observable through a durable
           // checkpoint — when one is asked, refresh AND WRITE it as round
           // round+1 (a NEW dir, the writeRound never-overwrite discipline):
@@ -593,15 +630,13 @@ object MaxFlow {
           // delete-then-write window that, when it is the ONLY complete
           // round, can leave zero resumable checkpoints after a kill. A
           // resume then sees a quiescent graph under the next round index.
-          conf.stateDir.foreach { dir =>
+          if (conf.stateDir.nonEmpty) {
             val bc = sc.broadcast(delta)
             state = state.map(applyDeltaOnly(_, bc.value))
               .localCheckpoint(eager = false)
-            graft.sources.StateIO.writeRound(state, dir, round + 1)
-            graft.sources.StateIO.pruneRounds(spark, dir)
+            durable(state, round + 1)
             bc.destroy() // writeRound materialized the lazy checkpoint
           }
-          cleanupFlow = extra
         }
       } else {
         // Distributed fallback: each BFS returns a BATCH of vertex-disjoint
@@ -629,9 +664,7 @@ object MaxFlow {
               allPaths += ((path.toSeq, q))
               cleanupFlow += q
             }
-            delta.foreach { case (k, v) =>
-              assignment.update(k, assignment.getOrElse(k, 0L) + v)
-            }
+            credit(delta)
             val bc = sc.broadcast(delta.toMap)
             val preApply = state
             state = state.map(applyDeltaOnly(_, bc.value)).localCheckpoint(eager = true)
@@ -644,10 +677,7 @@ object MaxFlow {
         // same durable contract as the driver-side path: when the fallback
         // found flow, a resume must see the quiescent post-cleanup graph —
         // written as round+1 (never overwriting the newest complete dir)
-        if (cleanupFlow > 0) conf.stateDir.foreach { dir =>
-          graft.sources.StateIO.writeRound(state, dir, round + 1)
-          graft.sources.StateIO.pruneRounds(spark, dir)
-        }
+        if (cleanupFlow > 0) durable(state, round + 1)
       }
     }
     if (prevMrdd != null) prevMrdd.unpersist(blocking = false)
@@ -675,15 +705,20 @@ object MaxFlow {
       s"duplicate adjacency at ${v.id}")
   }
 
+  /** The accepted-flow refresh (T6/J2) with saturated-path pruning (T7):
+    * edge and path flows re-read through the delta map, paths with no
+    * potential left dropped. An empty delta leaves every flow as it is.
+    */
   private[graph] def applyDeltaOnly(v: VertexState, d: FlowDelta): VertexState = {
-    val adj2 = v.adj.map(a => a.copy(flow = effFlow(a.flow, v.id, a.nbr, d)))
     def refresh(p: PathState): PathState =
-      if (p.length == 0) p
+      if (d.isEmpty || p.length == 0) p
       else {
         val nf = Array.tabulate(p.flows.length)(i =>
           effFlow(p.flows(i), p.nodes(i), p.nodes(i + 1), d))
         PathState(p.nodes, nf, p.caps)
       }
+    val adj2 = if (d.isEmpty) v.adj
+      else v.adj.map(a => a.copy(flow = effFlow(a.flow, v.id, a.nbr, d)))
     VertexState(v.id, adj2, v.s.map(refresh).filter(_.potential > 0),
       v.t.map(refresh).filter(_.potential > 0), v.fsetS, v.fsetT)
   }

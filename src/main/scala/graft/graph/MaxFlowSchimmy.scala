@@ -1,8 +1,9 @@
 package graft.graph
 
 import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -14,8 +15,8 @@ import scala.collection.mutable
   * merge-joins its own master partition file. Spark-native equivalent:
   *
   *  - master state is an `RDD[(id, VertexState)]` laid out by a fixed
-  *    `HashPartitioner(N)`; the partitioner is a STRUCTURAL property that
-  *    survives `localCheckpoint` (lineage truncation) across every round;
+  *    `HashPartitioner(N)`; every later state is a partition-preserving
+  *    projection of a merge, so the layout survives every round;
   *  - per round, only the (small) delta messages are shuffled —
   *    `partitionBy` onto the same partitioner — and the merge is a
   *    partitioner-preserving `zipPartitions` of master × deltas: the
@@ -25,10 +26,7 @@ import scala.collection.mutable
   *    K-bounded retention and J3 candidate generation), and the master
   *    refresh re-runs `stepVertexCore` — every per-vertex decision is
   *    seeded by (id, round), so the merge recomputes the identical master
-  *    update the extension pass saw without the state ever moving;
-  *  - accepted flow deltas ride in as a broadcast map (S6/J2), and
-  *    candidates stream to the driver's Acceptor as partitions finish
-  *    (C1/C2), identical to v1.
+  *    update the extension pass saw without the state ever moving.
   *
   * Why not a Catalyst join: a DataFrame master whose hash partitioning is
   * "remembered" through `localCheckpoint` loses that partitioning under
@@ -39,17 +37,18 @@ import scala.collection.mutable
   * compile-time structure instead of an optimizer outcome;
   * MaxFlowSchimmySpec locks it with a shuffle-bytes meter.
   *
-  * Same algorithm and exactness-cleanup guarantee as [[MaxFlow]]; only the
-  * shuffle topology differs. At 100 TB state (heavy adjacency + path
-  * lists) this moves only O(messages) per round instead of O(state).
+  * This file holds only the entry points, the partitioner sizing and the
+  * schimmy [[MaxFlow.Layout]]. The run loop — streamed acceptance, round
+  * report, convergence, durable round state and the exactness cleanup — is
+  * [[MaxFlow]]'s, shared with v1, so only the shuffle topology differs. At
+  * 100 TB state (heavy adjacency + path lists) this moves only
+  * O(messages) per round instead of O(state).
   */
 object MaxFlowSchimmy {
 
   def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
           sinks: Seq[Long],
           conf: MaxFlow.Config = MaxFlow.Config()): MaxFlow.Result = {
-    require(sources.toSet.intersect(sinks.toSet).isEmpty,
-      "sources and sinks must be disjoint")
     // The RDD loop's parallelism is a structural HashPartitioner sized to
     // the graph below — nothing session-global: the previous set/restore
     // of spark.sql.shuffle.partitions could leak into a concurrent query
@@ -58,59 +57,39 @@ object MaxFlowSchimmy {
     val sessParts = spark.conf.get("spark.sql.shuffle.partitions").toLong
     val nEdges = edges.count()
     val loopParts = math.max(2L, math.min(sessParts, nEdges / 20000 + 1)).toInt
-    runLoop(spark,
-      GraphBuilder.buildState(spark, edges, sources, sinks), conf, loopParts)
+    MaxFlow.run(spark, edges, sources, sinks, conf, new Schimmy(spark, loopParts))
   }
 
   /** Continue from durable round state written via Config.stateDir — the
-    * reference's restart-from-round-<i> capability (S7), engine-parity
-    * with [[MaxFlow.resume]]: newest COMPLETE `round-<i>/` checkpoint,
-    * round-index continuity, flat-dir fallback.
+    * reference's restart-from-round-<i> capability (S7), with the same
+    * contract as [[MaxFlow.resume]]: newest COMPLETE `round-<i>/`
+    * checkpoint, round-index continuity, flat-dir fallback.
     */
   def resume(spark: SparkSession, stateDir: String,
-             conf: MaxFlow.Config = MaxFlow.Config()): MaxFlow.Result = {
-    val (st, startRound) =
-      graft.sources.StateIO.readLatestForResume(spark, stateDir)
-    runLoop(spark, st, conf,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, startRound)
-  }
+             conf: MaxFlow.Config = MaxFlow.Config()): MaxFlow.Result =
+    MaxFlow.resume(spark, stateDir, conf,
+      new Schimmy(spark, spark.conf.get("spark.sql.shuffle.partitions").toInt))
 
-  private def runLoop(spark: SparkSession, initial: Dataset[VertexState],
-                      conf: MaxFlow.Config, nParts: Int,
-                      startRound: Int = 0): MaxFlow.Result = {
+  /** The schimmy superstep over `nParts` master partitions. */
+  private final class Schimmy(spark: SparkSession, nParts: Int)
+      extends MaxFlow.Layout[RDD[(Long, VertexState)]] {
     import spark.implicits._
-    val sc = spark.sparkContext
-    val part = new HashPartitioner(nParts)
+    private val part = new HashPartitioner(nParts)
 
-    // master layout: partitioned ONCE by vertex id; localCheckpoint keeps
-    // the partitioner AND truncates lineage, so the layout is permanent
-    var state = initial
-      .rdd.map(v => (v.id, v))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    state.localCheckpoint()
-    state.count()
+    // master layout: partitioned ONCE by vertex id; the first round's job
+    // reads this shuffle's output twice (extension pass and merge) without
+    // recomputing the graph build
+    def init(initial: Dataset[VertexState]): RDD[(Long, VertexState)] =
+      initial.rdd.map(v => (v.id, v)).partitionBy(part)
 
-    var engineFlow = 0L
-    var round = startRound
-    var pending: MaxFlow.FlowDelta = Map.empty
-    val assignment = mutable.HashMap.empty[(Long, Long), Long]
-    val allPaths = mutable.ArrayBuffer.empty[(Seq[Long], Long)]
-    val reports = mutable.ArrayBuffer.empty[MaxFlow.RoundCounters]
-    var zeroStreak = 0
-    var done = false
-
-    while (!done && round < conf.maxRounds) {
-      round += 1
-      val bc = sc.broadcast(pending)
-      val ctrs = MaxFlow.Ctrs(sc, s"schimmy-r$round")
-      val r = round
-
+    def merge(state: RDD[(Long, VertexState)], d: Broadcast[MaxFlow.FlowDelta],
+              r: Int, conf: MaxFlow.Config,
+              ctrs: MaxFlow.Ctrs): RDD[(VertexState, Array[Candidate])] = {
       // 1. extension pass: messages only — the master NEVER moves (the
       //    schimmy contract). This is the counting pass for the
       //    refresh/extend counters.
       val msgs = state.mapPartitions(_.flatMap { case (_, v) =>
-        val (_, out) = MaxFlow.stepVertexCore(v, bc.value, r, conf, Some(ctrs))
+        val (_, out) = MaxFlow.stepVertexCore(v, d.value, r, conf, Some(ctrs))
         out.iterator.map(m => (m.id, m))
       })
 
@@ -122,122 +101,26 @@ object MaxFlowSchimmy {
       //    update is recomputed via the seeded stepVertexCore (identical
       //    to what pass 1 saw — no counters the second time); the merge +
       //    candidate generation is v1's mergeVertex, counters live.
-      val merged = state.zipPartitions(grouped, preservesPartitioning = true) {
-        (mit, dit) =>
-          val byDst = mutable.HashMap.empty[Long, mutable.ArrayBuffer[VertexState]]
-          dit.foreach { case (id, m) =>
-            byDst.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += m
-          }
-          mit.map { case (id, v) =>
-            val (master, _) = MaxFlow.stepVertexCore(v, bc.value, r, conf, None)
-            val deltas = byDst.remove(id).map(_.iterator).getOrElse(Iterator.empty)
-            val (nv, cands) =
-              MaxFlow.mergeVertex(id, Iterator(master) ++ deltas, r, conf,
-                Some(ctrs))
-            (id, (nv, cands))
-          }
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-
-      // 4. mid-round acceptance overlap (ff2/ApServer.java:19-49): one
-      //    parallel job materializes the merge; candidates stream to the
-      //    acceptor in partition order as partitions finish
-      val acceptor = new MaxFlow.Acceptor(conf.seed * 31 + round)
-      val nP = merged.getNumPartitions
-      val partCands = new Array[Array[Candidate]](nP)
-      val partDone = new Array[Boolean](nP)
-      val lock = new Object
-      var nextOffer = 0
-      sc.runJob(merged,
-        (it: Iterator[(Long, (VertexState, Array[Candidate]))]) =>
-          it.flatMap(_._2._2).toArray,
-        (idx: Int, cs: Array[Candidate]) => lock.synchronized {
-          partCands(idx) = cs
-          partDone(idx) = true
-          while (nextOffer < nP && partDone(nextOffer)) {
-            acceptor.offer(partCands(nextOffer))
-            partCands(nextOffer) = null
-            nextOffer += 1
-          }
-        })
-      val (got, delta, roundPaths) = acceptor.result
-      allPaths ++= roundPaths
-      delta.foreach { case (k, v) =>
-        assignment.update(k, assignment.getOrElse(k, 0L) + v)
-      }
-      engineFlow += got
-      reports += MaxFlow.RoundCounters(round, got, engineFlow,
-        roundPaths.size, acceptor.candidateCount, ctrs.loseExcess.value,
-        ctrs.moveS.value, ctrs.moveT.value,
-        ctrs.extendS.value, ctrs.extendT.value,
-        ctrs.satS.value, ctrs.satT.value,
-        ctrs.dropS.value, ctrs.dropT.value,
-        ctrs.aliveS.value, ctrs.aliveT.value)
-
-      val prev = state
-      state = merged.mapValues(_._1).persist(StorageLevel.MEMORY_AND_DISK)
-      state.localCheckpoint()
-      state.count()
-      prev.unpersist(blocking = false)
-      merged.unpersist(blocking = false)
-
-      pending = delta
-      bc.destroy()
-      zeroStreak = if (got == 0) zeroStreak + 1 else 0
-      // "a frontier stalled" is one-sided in unidirectional mode: the
-      // sink frontier never moves when useSinkExcess=false, so only the
-      // source side counts (else the ff2 rule fires at round 2)
-      val frontierStalled =
-        if (conf.useSinkExcess) ctrs.moveS.value == 0 || ctrs.moveT.value == 0
-        else ctrs.moveS.value == 0
-      done = (got == 0 && ctrs.moves == 0) ||
-        (round > 1 && got == 0 && ctrs.loseExcess.value == 0 && frontierStalled) ||
-        (engineFlow > 0 && zeroStreak >= conf.acceptPatience)
-      conf.stateDir.foreach { dir =>
-        if (done || round % conf.checkpointEvery == 0) {
-          // persist the FLUSHED view so resume starts with no pending
-          // delta; round-tagged dir (kill-safe) + prune to bound storage
-          val bcF = sc.broadcast(pending)
-          graft.sources.StateIO.writeRound(
-            spark.createDataset(state.values)
-              .map(MaxFlow.applyDeltaOnly(_, bcF.value)), dir, round)
-          graft.sources.StateIO.pruneRounds(spark, dir)
-          bcF.destroy()
+      state.zipPartitions(grouped, preservesPartitioning = true) { (mit, dit) =>
+        val byDst = mutable.HashMap.empty[Long, mutable.ArrayBuffer[VertexState]]
+        dit.foreach { case (id, m) =>
+          byDst.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += m
         }
-      }
+        mit.map { case (id, v) =>
+          val (master, _) = MaxFlow.stepVertexCore(v, d.value, r, conf, None)
+          val deltas = byDst.remove(id).map(_.iterator).getOrElse(Iterator.empty)
+          MaxFlow.mergeVertex(id, Iterator(master) ++ deltas, r, conf, Some(ctrs))
+        }
+      }.localCheckpoint() // lazy: the round's job caches it, then truncates
     }
 
-    // flush pending deltas, then exactness cleanup — identical to v1
-    var typedState: Dataset[VertexState] = spark.createDataset(state.values)
-    if (pending.nonEmpty) {
-      val bc = sc.broadcast(pending)
-      typedState = typedState.map(MaxFlow.applyDeltaOnly(_, bc.value))
-      pending = Map.empty
-    }
-    typedState = typedState.localCheckpoint(eager = true)
-    state.unpersist(blocking = false)
-    var cleanupFlow = 0L
-    if (conf.exactCleanup) {
-      val resid = typedState.flatMap(v =>
-        v.adj.withFilter(_.residualOut > 0).map(a => (v.id, a.nbr, a.residualOut)))
-        .collect()
-      val (extra, delta, cleanPaths) = MaxFlow.residualMaxFlowDriver(resid)
-      if (extra > 0) {
-        allPaths ++= cleanPaths
-        delta.foreach { case (k, v) =>
-          assignment.update(k, assignment.getOrElse(k, 0L) + v)
-        }
-        // durable parity with v1: the final round checkpoint must include
-        // the cleanup flow so a resume sees a quiescent graph
-        conf.stateDir.foreach { dir =>
-          val bcD = sc.broadcast(delta)
-          graft.sources.StateIO.writeRound(
-            typedState.map(MaxFlow.applyDeltaOnly(_, bcD.value)), dir, round)
-          bcD.destroy()
-        }
-        cleanupFlow = extra
-      }
-    }
-    MaxFlow.Result(engineFlow + cleanupFlow, engineFlow, cleanupFlow, round,
-      assignment.toMap, allPaths.toSeq, reports.toSeq)
+    // the next masters are a projection of the checkpointed merge, kept in
+    // place on the same partitions
+    def next(merged: RDD[(VertexState, Array[Candidate])]): RDD[(Long, VertexState)] =
+      merged.mapPartitions(_.map { case (v, _) => (v.id, v) },
+        preservesPartitioning = true)
+
+    def view(state: RDD[(Long, VertexState)]): Dataset[VertexState] =
+      spark.createDataset(state.values)
   }
 }

@@ -50,13 +50,7 @@ object GraphQueries {
     */
   def q16_maxflow(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val li = Tables.load(s, dir, "lineitem").filter(col("l_orderkey") < 2000)
-    val pairs = li.groupBy(
-        (col("l_suppkey") + 10).as("su"),
-        (col("l_partkey") + PartOffset + 10).as("pu"))
-      .agg(count(lit(1)).as("cap"))
-    val edges = pairs.select(col("su").as("src"), col("pu").as("dst"), col("cap"))
-      .unionAll(pairs.select(col("pu").as("src"), col("su").as("dst"), col("cap")))
+    val edges = q16Edges(s, dir)
     val sources = (10L to 17L)                          // suppkeys 0..7
     val sinks = (PartOffset + 10L to PartOffset + 17L)  // partkeys 0..7
     // per-workload tuning in the spirit of the reference's mf.* configs:

@@ -41,7 +41,8 @@ object Truss {
     // vertex with two out-edges), and check the closing oriented edge.
     // Fan-out is Σ C(outdeg(x), 2) ≤ O(m^1.5) on ANY graph — the id-
     // ordered join pays Σ deg² and detonated on a dense co-occurrence
-    // graph (addendum19's first 10M-event run filled the disk).
+    // graph (the first 10M-event run of PERF.md r7, addendum19 filled
+    // the disk).
     def support(cur: DataFrame): DataFrame = {
       val deg = cur.select(col("u").as("node"))
         .unionAll(cur.select(col("v").as("node")))

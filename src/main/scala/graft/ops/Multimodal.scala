@@ -913,8 +913,8 @@ object Multimodal {
     * self-join sides or the guard's count pre-agg); banding is an
     * equality join on 16-bit keys — candidates only ever meet inside a
     * band bucket, never all-pairs; verification is four xor+popcount
-    * ops per candidate. DENSITY-GUARDED (r11 verdict: the builder's own
-    * addendum52 probe measured the blow-up mode — 30.9M pairs at 102k
+    * ops per candidate. DENSITY-GUARDED (r11 verdict: the probe of
+    * PERF.md r11, addendum52 measured the blow-up mode — 30.9M pairs at 102k
     * aliasing images; real corpora with large uniform regions alias the
     * same way): every (bno, bk) bucket is bounded at `maxBlockRows` by
     * the shared [[DensityGuard]] BEFORE the join, sample-or-fail per

@@ -655,8 +655,8 @@ object Pipeline {
     * same per-doc bucket counts, not a second corpus scan. Bit-identical
     * to `dsDsir(raw, raw WHERE is_target, k)` (spec-locked): the bucket
     * counts, smoothing, weights and draws are the same numbers; only
-    * the redundant pass disappears (42.8 → 32.1 s in addendum45's
-    * same-session pair at 500k docs with a 400k-doc target).
+    * the redundant pass disappears (42.8 → 32.1 s in a same-session
+    * pair at 500k docs with a 400k-doc target, PERF.md r9, addendum45).
     */
   def dsDsirWithin(raw: DataFrame, k: Int,
       numBuckets: Int = 256): DataFrame = {

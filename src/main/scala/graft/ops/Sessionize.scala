@@ -1729,7 +1729,7 @@ object Sessionize {
     * pure function of the weekday), plus the ADJUSTED strength
     * (1 − MS_within/MS_total, the eta²-adjusted form): raw R² inflates
     * under the null by E[R²] = (k−1)/(n−1) — a 30-day series in 7 DOW
-    * cells reads ~0.2-0.4 of pure noise (addendum26 measured 0.38) —
+    * cells reads ~0.2-0.4 of pure noise (0.38 in PERF.md r7, addendum26) —
     * while the adjusted statistic centers on 0, so `strength_adj` is
     * the gate and `strength` the effect size. Quantifies what [[evDow]] only
     * profiles, and is the calendar-decomposition gate in front of
@@ -1802,7 +1802,7 @@ object Sessionize {
     * raised xmin before claiming a power law), and a genuinely Pareto
     * tail reads ~0.8 above its continuous exponent (the known floor
     * bias CSN's xmin−0.5 correction would remove — measured in
-    * PipelineScaleProbe addendum26). `max_x` anchors the tail the
+    * PERF.md r7, addendum26). `max_x` anchors the tail the
     * estimate summarizes.
     *
     * Engine-exactness: counts are integers; each user's ln(x) is rounded
@@ -2594,7 +2594,7 @@ object Sessionize {
     abCdfPlan(events, salt)
       // evKs consumes the relation from four CTEs — materialize once
       // (the InlineCTE multi-consumer lesson; 16.5 -> ~6 s at 1M
-      // distinct values in the addendum31 probe)
+      // distinct values in PERF.md r7, addendum31)
       .localCheckpoint(eager = false)
       .createOrReplaceTempView("__ab_cdf")
 

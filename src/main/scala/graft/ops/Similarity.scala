@@ -314,10 +314,10 @@ object Similarity {
     * are identical to the inline chain) swaps the train CTEs for a
     * view read, collapsing the chain to base → n3 → one broadcast-able
     * cross join; the executed ss_ivf_pre plan holds 5 scans / 9
-    * exchanges vs ss_ivf_ann's 9 scans / 25 exchanges (ExplainAudit,
-    * r13 — the k-means refinement rounds and their windows vanish),
-    * and the 100k probe (PERF.md addendum55) measures the query-path
-    * win directly: ann 21.4→3.9 s (5.6×), rq 37.4→18.5 s (2.0×),
+    * exchanges vs ss_ivf_ann's 9 scans / 25 exchanges (PERF.md r13
+    * plan audit — the k-means refinement rounds and their windows
+    * vanish), and the 100k probe (PERF.md r13, addendum55) measures
+    * the query-path win directly: ann 21.4→3.9 s (5.6×), rq 37.4→18.5 s (2.0×),
     * training 48.8 s ONCE — amortized after ~3 queries. The
     * inline default remains the right call ONLY for the oracle-scale
     * one-shot entries (where training IS the query and the A/B shows
@@ -504,7 +504,7 @@ object Similarity {
     * replays the inline text verbatim; what changes is the PLAN: 5
     * scans / 9 exchanges (query/assign/probe legs against the
     * broadcast codebook) instead of the inline entry's 9 scans / 25
-    * exchanges of re-derived train chains (ExplainAudit, r13).
+    * exchanges of re-derived train chains (PERF.md r13 plan audit).
     */
   def ssIvfPre(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.load(s, dir, "embeddings")
@@ -790,7 +790,7 @@ object Similarity {
     * chain as ss_ivf_ann/ss_centroids/dd_semdedup (the shared-quantizer
     * discipline), so its cells are the ones the index actually uses.
     *
-    * Measured regimes (addendum28): at 500 vectors / 7 labels / 16
+    * Measured regimes (PERF.md r7, addendum28): at 500 vectors / 7 labels / 16
     * cells, cohesion > separation (the partition is real); at 100k
     * vectors the SAME 16 cells read between 0.874 vs within 0.506 —
     * ~2.3 centroids crowd each natural cluster, the "cells leak, raise
@@ -858,9 +858,9 @@ object Similarity {
     *
     * A label present in only one half emits no row (there is no drift to
     * measure) — callers comparing id-parity halves should make sure label
-    * assignment is independent of id parity (addendum19's first generated
-    * corpus wasn't: label = id % 10 puts even labels only in the even
-    * half).
+    * assignment is independent of id parity (the first corpus generated
+    * for PERF.md r7, addendum19 wasn't: label = id % 10 puts even
+    * labels only in the even half).
     */
   def ssDrift(emb: DataFrame): DataFrame = {
     val s = emb.sparkSession
@@ -1521,7 +1521,7 @@ object Similarity {
     * REGIME CONTRACT (measured): clustered-corpus recall@5 ≥ 0.5 at
     * mult=12 (spec lock); on the 100k weak-label MID-similarity corpus
     * it reads 0.220 — matching the lean-RQ rung with zero training
-    * (addendum52). `mult` is the recall dial, as for PQ.
+    * (PERF.md r11, addendum52). `mult` is the recall dial, as for PQ.
     *
     * Scale design: one narrow codegen pass packs codes (no shuffle,
     * 16 B/vector — 16× smaller than SQ8, same as PQ with zero
@@ -1539,7 +1539,7 @@ object Similarity {
     * Hamming scan — one equality join, per-query scan ~nprobe·N/nlist
     * codes (nprobe·√N at √N nlist). [[ssIvfBqTopk]] is the probed
     * oracle entry; recall-vs-nprobe is measured at 100k in PERF.md
-    * addendum53.
+    * r12, addendum53.
     */
   def ssBqTopkOn(s: SparkSession, emb: DataFrame, queryPred: String,
                  topK: Int, mult: Int = 3, nlist: Int = 16,
@@ -1663,8 +1663,8 @@ object Similarity {
     * pDim=16 (spec lock), but on the 100k weak-label MID-similarity
     * corpus the 1/√pDim distortion is comparable to the inter-neighbor
     * gaps and pDim=16 collapses to 0.080; pDim=32 reads 0.200
-    * (addendum52 — the LSH-regime honesty class). When the gaps are
-    * unknown, prefer the quantization entries: they compress per-dim
+    * (PERF.md r11, addendum52 — the LSH-regime honesty class). When
+    * the gaps are unknown, prefer the quantization entries: they compress per-dim
     * precision, not the geometry.
     *
     * Scale design: the sign matrix is a 64·pDim-row relation built
@@ -2594,7 +2594,8 @@ object Similarity {
     * (i, i+29) — the background-similarity table a pipeline reads BEFORE
     * picking a dedup threshold (dd_embed_cos's 0.9) or an ANN radius
     * (ss_range): a threshold below the histogram's bulk marks everything
-    * a duplicate; the addendum-probe disk-fill was exactly a
+    * a duplicate; the round-6 dd_embed_cos disk-fill (PERF.md r7,
+    * scale2tight) was exactly a
     * threshold-vs-density mismatch this table makes visible up front.
     * Id-lag pairs are a deterministic, reproducible sample of the pair
     * space (no RNG, no all-pairs) — with ids assigned independently of

@@ -750,7 +750,7 @@ object TextAnalysis {
     * rank window on the FULL vocabulary and took the rank-1 frequency as
     * a scalar subquery on the tf CTE — Spark inlines CTEs, so that
     * re-ran the corpus-sized aggregation twice (72 s at 500k docs vs
-    * 12 s for this shape on the same corpus, addendum15).
+    * 12 s for this shape on the same corpus, PERF.md r7, addendum15).
     */
   def taZipf(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
@@ -969,8 +969,8 @@ object TextAnalysis {
     // the (source, token) count is referenced FOUR times downstream (per-
     // source totals, corpus totals, grand total, grid) — Spark inlines SQL
     // CTEs, so as a CTE the corpus-sized explode+aggregate would run four
-    // times (measured 78 s vs 8 s at 500k docs, addendum18). Materialize
-    // it once; it is vocabulary × sources sized.
+    // times (measured 78 s vs 8 s at 500k docs, PERF.md r7,
+    // addendum18). Materialize it once; it is vocabulary × sources sized.
     docs.select(col("source"), explode(split(col("text"), " ")).as("w"))
       .groupBy("source", "w").agg(count(lit(1)).as("c"))
       .localCheckpoint(eager = false)
@@ -1374,8 +1374,9 @@ object TextAnalysis {
     * overlap. The frequency prior matters at scale: a FLAT tiny α caps
     * an out-of-corpus token's z at δ·√α (σ² ≈ 1/α however much evidence
     * accumulates), so a 50k-occurrence source-exclusive token LOSES to
-    * 18M-token sampling noise — found by the addendum26 planted-token
-    * leg; with α ∝ g_w the z grows with √evidence as it should.
+    * 18M-token sampling noise — found by the planted-token leg of
+    * PERF.md r7, addendum26; with α ∝ g_w the z grows with √evidence
+    * as it should.
     *
     * Engine-exactness: all inputs to the score are integer counts plus
     * decimal literals, so the two ln's, the sqrt and the division are ONE

@@ -47,7 +47,7 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
         bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
     }
     import spark.implicits._
-    val edges = graft.ScaleProbe.smallWorld(n = 4000, k = 4, rewireP = 0.1,
+    val edges = graft.Probe.smallWorld(n = 4000, k = 4, rewireP = 0.1,
       maxC = 10, seed = 3L).toDF("src", "dst", "cap").persist()
     edges.count()
     val ids = (10L until 4010L)
@@ -57,7 +57,7 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
       val m = new Meter
       spark.sparkContext.addSparkListener(m)
       val r = run
-      Thread.sleep(500) // listener bus drains asynchronously
+      org.apache.spark.graftshim.ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(m)
       (r, m.bytes)
     }

@@ -47,7 +47,7 @@ object Bench {
         .mapGroups((_, it) => it.foldLeft(0L)(_ + _._2)).collect()
       spark.range(1000).toDF("id").localCheckpoint(eager = false).count()
       // …and the max-flow ENGINE itself (VERDICT r6 "wrong" #4): the
-      // stepVertex/mergeVertex/acceptor/EK-cleanup classes JIT on first
+      // extendVertex/mergeVertex/acceptor/EK-cleanup classes JIT on first
       // use, and with only the generic typed warm-up above that first use
       // was q16's run 1 — a 16-vertex bipartite graph (q16's shape, meets
       // in 3 hops, exercises engine + acceptor + driver cleanup) absorbs

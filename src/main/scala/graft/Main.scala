@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.{Bfs, GraphModel, MaxFlow, MaxFlowSchimmy}
+import graft.graph.{Bfs, GraphModel, MaxFlow}
 import graft.sources.{GraphSources, StateIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Usage:
   *   graft.Main mf  --format dimacs|facebook --input PATH
   *                  [--sources 1,2] [--sinks 3] [--cap 1] [--max-cap N]
-  *                  [--k 32] [--max-path-length 30] [--engine v1|schimmy]
+  *                  [--k 32] [--max-path-length 30]
   *                  [--approx] [--no-sink-excess] [--lenient]
   *                  [--random-terminals N [--min-degree 3000]]
   *                  [--flowpaths DIR] [--state DIR]
@@ -103,10 +103,7 @@ object Main {
           maxPathLength = opts.get("max-path-length").map(_.toInt).getOrElse(30),
           exactCleanup = !opts.contains("approx"), // mf.approx
           useSinkExcess = !opts.contains("no-sink-excess")) // mf.sink.excess
-        val r =
-          if (opts.get("engine").contains("schimmy"))
-            MaxFlowSchimmy.run(spark, edges, sources, sinks, conf)
-          else MaxFlow.run(spark, edges, sources, sinks, conf)
+        val r = MaxFlow.run(spark, edges, sources, sinks, conf)
         // the reference's per-round echo line (ff2/FordFulkerson.java:438-445)
         r.rounds_report.foreach(rc => println(rc.echo))
         println(s"maxflow=${r.flow} (engine=${r.engineFlow}, cleanup=${r.cleanupFlow}, " +

@@ -1,6 +1,6 @@
 package graft
 
-import graft.graph.{EdmondsKarp, GraphModel, MaxFlow, MaxFlowSchimmy, Mst}
+import graft.graph.{EdmondsKarp, GraphModel, MaxFlow, Mst}
 import graft.sources.StateIO
 import org.apache.spark.graftshim.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
@@ -120,10 +120,9 @@ object Probe {
     }
   }
 
-  /** Both max-flow state layouts (shuffle-all v1, schimmy v2) on
-    * `smallWorld(n)` with per-layout shuffle bytes, checked against
-    * Edmonds-Karp up to `OracleCap` vertices (above it: layout agreement
-    * and conservation), then Borůvka against Kruskal.
+  /** Max-flow on `smallWorld(n)` with its shuffle bytes, records and
+    * stages, checked against Edmonds-Karp up to `OracleCap` vertices (above
+    * it: conservation only), then Borůvka against Kruskal.
     */
   def graph(spark: SparkSession, n: Int): Unit = {
     val (sources, sinks) = terminals(n)
@@ -138,31 +137,23 @@ object Probe {
         Some(w)
       } else {
         println(s"SCALE oracle skipped (n=$n > cap=$OracleCap); " +
-          "certificate = layout agreement + conservation")
+          "certificate = conservation")
         None
       }
 
-    def measured(tag: String)(run: => MaxFlow.Result): MaxFlow.Result = {
-      val meter = new ShuffleMeter
-      spark.sparkContext.addSparkListener(meter)
-      val (r, dt) = wall(run)
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(meter)
-      val conserved = StateIO.conservationHolds(r.assignment, r.flow)
-      println(f"SCALE $tag flow=${r.flow} engine=${r.engineFlow} " +
-        f"cleanup=${r.cleanupFlow} rounds=${r.rounds} t=$dt%.1f s " +
-        f"shuffleMB=${meter.bytes / 1e6}%.1f shuffleRecords=${meter.records} " +
-        f"stages=${meter.stages} MBperRound=${meter.bytes / 1e6 / r.rounds}%.2f " +
-        f"conserved=$conserved ok=${want.forall(_ == r.flow)}")
-      require(conserved, s"$tag conservation violated")
-      r
-    }
-
-    val v1 = measured("v1")(MaxFlow.run(spark, df, sources, sinks))
-    val v2 = measured("v2")(MaxFlowSchimmy.run(spark, df, sources, sinks))
-    println(s"SCALE agree=${v1.flow == v2.flow}")
-    require(v1.flow == v2.flow && want.forall(_ == v1.flow),
-      s"max-flow mismatch: v1=${v1.flow} v2=${v2.flow} oracle=$want")
+    val meter = new ShuffleMeter
+    spark.sparkContext.addSparkListener(meter)
+    val (r, dtMf) = wall(MaxFlow.run(spark, df, sources, sinks))
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(meter)
+    val conserved = StateIO.conservationHolds(r.assignment, r.flow)
+    println(f"SCALE maxflow flow=${r.flow} engine=${r.engineFlow} " +
+      f"cleanup=${r.cleanupFlow} rounds=${r.rounds} t=$dtMf%.1f s " +
+      f"shuffleMB=${meter.bytes / 1e6}%.1f shuffleRecords=${meter.records} " +
+      f"stages=${meter.stages} MBperRound=${meter.bytes / 1e6 / r.rounds}%.2f " +
+      f"conserved=$conserved ok=${want.forall(_ == r.flow)}")
+    require(conserved, "max-flow conservation violated")
+    require(want.forall(_ == r.flow), s"max-flow mismatch: got=${r.flow} oracle=$want")
 
     // MST leg: Borůvka vs in-memory Kruskal under the same
     // canonicalization and (w, u, v) total order — edge-for-edge
@@ -192,7 +183,7 @@ object Probe {
   }
 
   /** The durable-resume drill on the `graph` instance: `full <n>` is the
-    * uninterrupted schimmy run (the oracle); `run <n> <stateDir>` writes
+    * uninterrupted run (the oracle); `run <n> <stateDir>` writes
     * round checkpoints every 3 rounds for a harness to kill -9 mid-flight;
     * `resume <stateDir> <wantTotal>` resumes from the newest complete
     * checkpoint and requires routed + resumed == wantTotal, conservation,
@@ -201,7 +192,7 @@ object Probe {
   def mfResume(spark: SparkSession, args: List[String]): Unit = args match {
     case "full" :: ns :: Nil =>
       val (sources, sinks) = terminals(ns.toInt)
-      val (r, dt) = wall(MaxFlowSchimmy.run(spark, smallWorldDf(spark, ns.toInt), sources, sinks))
+      val (r, dt) = wall(MaxFlow.run(spark, smallWorldDf(spark, ns.toInt), sources, sinks))
       require(StateIO.conservationHolds(r.assignment, r.flow),
         "full-run conservation violated")
       println(f"RESUMEPROBE full flow=${r.flow} rounds=${r.rounds} t=$dt%.1f s")
@@ -214,7 +205,7 @@ object Probe {
       java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/mfresume.pid"),
         ProcessHandle.current().pid().toString.getBytes("UTF-8"))
       println(s"RESUMEPROBE run started n=$n stateDir=$dir (kill me mid-flight)")
-      val r = MaxFlowSchimmy.run(spark, smallWorldDf(spark, n), sources, sinks,
+      val r = MaxFlow.run(spark, smallWorldDf(spark, n), sources, sinks,
         MaxFlow.Config(stateDir = Some(dir), checkpointEvery = 3))
       // only reached if the harness failed to kill in time
       println(s"RESUMEPROBE run finished uninterrupted flow=${r.flow}")
@@ -227,7 +218,7 @@ object Probe {
       val routed = StateIO.readState(spark, StateIO.roundDir(dir, ckRound))
         .filter(_.id == GraphModel.SuperSource)
         .head().adj.map(_.flow).sum
-      val (r, dt) = wall(MaxFlowSchimmy.resume(spark, dir))
+      val (r, dt) = wall(MaxFlow.resume(spark, dir))
       val conserved = StateIO.conservationHolds(r.assignment, r.flow)
       val firstRound = r.rounds_report.headOption.map(_.round).getOrElse(-1)
       println(f"RESUMEPROBE resume ckRound=$ckRound routed=$routed " +

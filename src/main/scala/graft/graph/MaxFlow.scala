@@ -1,10 +1,10 @@
 package graft.graph
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable
@@ -12,34 +12,53 @@ import scala.util.Random
 
 /** Distributed max-flow via bidirectional excess-path growth — the
   * reference's ff1–ff5 algorithm family re-expressed as Spark supersteps
-  * (SURVEY §2/§3/§7).
+  * (SURVEY §2/§3/§7), in ff3's **schimmy** layout (SURVEY §2.4 J1, §2.1 S5;
+  * ff3/ReduceFF.java:82-137, ff3/MapFF.java:46-59): the graph topology is
+  * never shuffled, only the messages are.
   *
   * One round =
-  *   1. map over the vertex states: refresh edge/path flows against
-  *      the broadcast accepted-flow deltas (T6/J2), prune saturated paths
-  *      (T7), extend a random eligible path toward each unvisited neighbor
-  *      (T8, ff5 `fset` memo T9), emitting delta-vertices;
-  *   2. shuffle on vertex id + merge (A1, K-bounded priority retention A5),
-  *      meet-in-the-middle concat of S×T pairs with cycle splice (J3);
-  *   3. collect candidates to the driver and greedily admit them against an
-  *      intra-round residual delta map (C1/C2 — Spark's driver plays the
+  *   1. extension pass over the master partitions: refresh edge/path flows
+  *      against the broadcast accepted-flow deltas (T6/J2), prune saturated
+  *      paths (T7), extend a random eligible path toward each unvisited
+  *      neighbor (T8, ff5 `fset` memo T9), emitting delta-vertices;
+  *   2. the round's one shuffle — the delta messages onto the masters'
+  *      partitioner — and a partitioner-preserving `zipPartitions` merge of
+  *      each master partition with its messages (A1, K-bounded retention
+  *      A5), with meet-in-the-middle concat of S×T pairs and cycle splice
+  *      (J3): the reference's reducer-side merge-join of the local master
+  *      partition file. The merge recomputes the master refresh of pass 1:
+  *      every per-vertex choice is seeded by (id, round), so it is the same
+  *      update and the master never moves;
+  *   3. stream the candidates to the driver and greedily admit them against
+  *      an intra-round residual delta map (C1/C2 — Spark's driver plays the
   *      reference's RMI ApServer);
   *   4. broadcast the admitted deltas into the next round.
   * Convergence per C3 (no accepted flow, no moves). Because the excess-path
   * engine (like the reference's) is a heuristic search, an optional
-  * exactness cleanup runs classic shortest-augmenting-path (distributed
-  * residual BFS per path) until no augmenting path remains — guaranteeing
-  * the exact max-flow that the reference validates by known answers.
+  * exactness cleanup runs classic shortest-augmenting-path (driver-side, or
+  * distributed residual BFS on large residual graphs) until no augmenting
+  * path remains — guaranteeing the exact max-flow that the reference
+  * validates by known answers.
   *
-  * This file holds the one run loop and the default [[ShuffleAll]]
-  * [[Layout]] of steps 1–2; [[MaxFlowSchimmy]] holds the schimmy layout.
+  * Scale notes: the masters are an `RDD[(id, VertexState)]` under one
+  * `HashPartitioner` sized from the input ([[masterPartitions]]), laid out
+  * by a single `partitionBy`; each later state is a partition-preserving
+  * projection of the round's merge, which is also the round's lazy local
+  * checkpoint, so the plan stays O(1) in rounds and a round moves
+  * O(messages), not O(state). Message volume is degree-bounded and memoized
+  * by fset; candidate traffic to the driver is bounded by
+  * `candidatesPerVertex` × (meet vertices), the same back-pressure as
+  * `mf.excess.list.max`.
   *
-  * Scale notes: under ShuffleAll, per-round state is one shuffle of
-  * (masters ∪ deltas) — the ff1 topology-shuffling design; message
-  * volume is degree-bounded and memoized by fset; candidate traffic to
-  * the driver is bounded by `candidatesPerVertex` × (meet vertices), the
-  * same back-pressure as `mf.excess.list.max`. `localCheckpoint` per
-  * round keeps the plan O(1) in rounds.
+  * Why an RDD partitioner and not a Catalyst join: a DataFrame master whose
+  * hash partitioning is "remembered" through `localCheckpoint` loses it
+  * under AQE, and the plan re-exchanges the full master state every round
+  * (measured: 4.24 GB shuffled at 1M vertices, more than shuffling it
+  * outright). The partitioner makes the no-state-shuffle contract a
+  * structure instead of an optimizer outcome; MaxFlowSchimmySpec locks it
+  * by shuffle records. ff1's shuffle-all layout (masters ∪ deltas through
+  * `groupByKey` every round) was removed: schimmy was 1.3–2.2× faster from
+  * 20k to 5.1M vertices (PERF.md) and on the 1k-vertex benchmark graphs.
   */
 object MaxFlow {
 
@@ -163,24 +182,15 @@ object MaxFlow {
   private[graph] def effFlow(f: Long, a: Long, b: Long, d: FlowDelta): Long =
     f + d.getOrElse((a, b), 0L) - d.getOrElse((b, a), 0L)
 
-  /** Phase 1: refresh + prune + extend (SURVEY T6–T9). Emits the updated
-    * master plus one delta-vertex per extension target.
+  /** Phase 1: refresh + prune + extend (SURVEY T6–T9): returns the updated
+    * master (refreshed flows, pruned paths, grown fsets) and the extension
+    * messages. All choices are seeded by (vertex, round), so a re-run over
+    * the same state reproduces the same output — the merge recomputes the
+    * master update this way instead of shuffling it (counters are passed
+    * only on the counting pass).
     */
-  private[graph] def stepVertex(v: VertexState, d: FlowDelta, round: Int,
-                                conf: Config, ctrs: Ctrs): Iterator[VertexState] = {
-    val (master, msgs) = stepVertexCore(v, d, round, conf, Some(ctrs))
-    Iterator(master) ++ msgs.iterator
-  }
-
-  /** The refresh/prune/extend core shared by both engines: returns the
-    * updated master (refreshed flows, pruned paths, grown fsets) and the
-    * extension messages. All choices are seeded by (vertex, round), so a
-    * re-run over the same state reproduces the same output — the schimmy
-    * engine exploits this to recompute the master update at merge time
-    * without shuffling it (counters are passed only on the counting pass).
-    */
-  private[graph] def stepVertexCore(v: VertexState, d: FlowDelta, round: Int,
-                                    conf: Config, ctrsOpt: Option[Ctrs])
+  private[graph] def extendVertex(v: VertexState, d: FlowDelta, round: Int,
+                                  conf: Config, ctrsOpt: Option[Ctrs])
       : (VertexState, Array[VertexState]) = {
     val fresh = applyDeltaOnly(v, d)
     val (adj2, s2, t2) = (fresh.adj, fresh.s, fresh.t)
@@ -381,7 +391,7 @@ object MaxFlow {
   }
 
   /** One-shot barrier acceptance over a full candidate array, for the
-    * specs; the run loop streams through [[Acceptor]] on both layouts.
+    * specs; the run loop streams through [[Acceptor]].
     */
   private[graph] def accept(cands: Array[Candidate],
       seed: Long): (Long, FlowDelta, Seq[(Seq[Long], Long)]) = {
@@ -390,70 +400,56 @@ object MaxFlow {
     a.result
   }
 
-  /** Where the round state lives and how it meets its messages (phases
-    * 1-2), the one step the engines do differently: [[ShuffleAll]] (ff1)
-    * or schimmy ([[MaxFlowSchimmy]], ff3). The rest is [[runLoop]]'s.
-    * `init` lays out the first state lazily; `merge` is one round's merged
-    * states with their candidates (the loop persists it and runs one job
-    * over it); `next` reads the next state lazily from that merge; `view`
-    * gives the state as rows, for durable writes, flush and cleanup.
+  /** The masters' partition count, one rule for [[run]] and [[resume]]: the
+    * partition count the initial state already has — the build's
+    * AQE-coalesced exchange, or the splits of a resumed round dir — at
+    * least 2 and at most `spark.sql.shuffle.partitions`. Read off the
+    * materialized input, so sizing costs no job, and under AQE's
+    * partition coalescing (on by default) a tiny graph gets a few
+    * partitions even on a 200-partition session.
     */
-  private[graph] trait Layout[S] {
-    def init(initial: Dataset[VertexState]): S
-    def merge(state: S, d: Broadcast[FlowDelta], round: Int, conf: Config,
-              ctrs: Ctrs): RDD[(VertexState, Array[Candidate])]
-    def next(merged: RDD[(VertexState, Array[Candidate])]): S
-    def view(state: S): Dataset[VertexState]
-  }
+  private[graph] def masterPartitions(spark: SparkSession,
+                                      initial: RDD[VertexState]): Int =
+    math.max(2, math.min(initial.getNumPartitions,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
 
-  /** ff1's layout: a checkpointed `Dataset` of masters, and one shuffle of
-    * (masters ∪ deltas) per round. */
-  private[graph] final class ShuffleAll(spark: SparkSession)
-      extends Layout[Dataset[VertexState]] {
-    import spark.implicits._
-    // LAZY checkpoint: the first round's single runJob materializes the
-    // graph build — the loop never pays a standalone materialization job
-    // (same one-job-per-round discipline as the CC/BFS loops)
-    def init(initial: Dataset[VertexState]): Dataset[VertexState] =
-      initial.localCheckpoint(eager = false)
-    def merge(state: Dataset[VertexState], d: Broadcast[FlowDelta], round: Int,
-              conf: Config, ctrs: Ctrs): RDD[(VertexState, Array[Candidate])] =
-      state
-        .flatMap(stepVertex(_, d.value, round, conf, ctrs))
-        .groupByKey(_.id)
-        .mapGroups(mergeVertex(_, _, round, conf, Some(ctrs)))
-        .rdd
-    // project off the candidate arrays, checkpoint LAZILY — the next action
-    // (the following round's runJob, a stateDir write, or the cleanup's
-    // residual count) materializes it from the warm merge cache, so each
-    // round costs exactly one job
-    def next(merged: RDD[(VertexState, Array[Candidate])]): Dataset[VertexState] =
-      spark.createDataset(merged.map(_._1)).localCheckpoint(eager = false)
-    def view(state: Dataset[VertexState]): Dataset[VertexState] = state
+  /** Phases 1-2 of one round: the extension pass emits messages only, they
+    * are the round's one shuffle (onto the masters' partitioner), and each
+    * master partition merge-joins its own messages in place
+    * (ff3/ReduceFF.java:82-137). The merge is the round's lazy local
+    * checkpoint: the round's job caches it, then truncates its lineage.
+    */
+  private def superstep(state: RDD[(Long, VertexState)], part: HashPartitioner,
+                        d: Broadcast[FlowDelta], round: Int, conf: Config,
+                        ctrs: Ctrs): RDD[(VertexState, Array[Candidate])] = {
+    // the counting pass for the refresh/extend counters
+    val msgs = state.mapPartitions(_.flatMap { case (_, v) =>
+      extendVertex(v, d.value, round, conf, Some(ctrs))._2.iterator.map(m => (m.id, m))
+    })
+    state.zipPartitions(msgs.partitionBy(part), preservesPartitioning = true) {
+      (mit, dit) =>
+        val byDst = mutable.HashMap.empty[Long, mutable.ArrayBuffer[VertexState]]
+        dit.foreach { case (id, m) =>
+          byDst.getOrElseUpdate(id, mutable.ArrayBuffer.empty) += m
+        }
+        mit.map { case (id, v) =>
+          // the seeded master update pass 1 saw, without its counters
+          val (master, _) = extendVertex(v, d.value, round, conf, None)
+          val deltas = byDst.remove(id).map(_.iterator).getOrElse(Iterator.empty)
+          mergeVertex(id, Iterator(master) ++ deltas, round, conf, Some(ctrs))
+        }
+    }.localCheckpoint()
   }
 
   /** Run max-flow between `sources` and `sinks` over the directed edge
     * relation `edges(src, dst, cap)`.
     */
   def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
-          sinks: Seq[Long], conf: Config = Config()): Result =
-    // Superstep exchange sizing is left to AQE partition coalescing: a
-    // tiny fixture's groupByKey exchanges coalesce to ~1 reduce task at
-    // runtime, and a huge graph was never squeezed below the session
-    // default anyway. The previous set/restore of
-    // spark.sql.shuffle.partitions let a concurrent query planned
-    // mid-loop inherit the shrunken value (VERDICT r4 "wrong" #2) —
-    // operator code must not mutate the caller's session.
-    run(spark, edges, sources, sinks, conf, new ShuffleAll(spark))
-
-  /** [[run]] on a given state layout. */
-  private[graph] def run[S](spark: SparkSession, edges: DataFrame,
-                            sources: Seq[Long], sinks: Seq[Long], conf: Config,
-                            layout: Layout[S]): Result = {
+          sinks: Seq[Long], conf: Config = Config()): Result = {
     require(sources.toSet.intersect(sinks.toSet).isEmpty,
       "sources and sinks must be disjoint")
     val init = GraphBuilder.buildState(spark, edges, sources, sinks)
-    runLoop(spark, layout, init, conf, startRound = 0)
+    runLoop(spark, init, conf, startRound = 0)
   }
 
   /** Continue a run from durable round state written via Config.stateDir
@@ -468,31 +464,27 @@ object MaxFlow {
     * at 1).
     */
   def resume(spark: SparkSession, stateDir: String,
-             conf: Config = Config()): Result =
-    resume(spark, stateDir, conf, new ShuffleAll(spark))
-
-  /** [[resume]] on a given state layout. */
-  private[graph] def resume[S](spark: SparkSession, stateDir: String,
-                               conf: Config, layout: Layout[S]): Result = {
+             conf: Config = Config()): Result = {
     val (st, startRound) =
       graft.sources.StateIO.readLatestForResume(spark, stateDir)
-    runLoop(spark, layout, st, conf, startRound)
+    runLoop(spark, st, conf, startRound)
   }
 
-  private def runLoop[S](spark: SparkSession, layout: Layout[S],
-                         initial: Dataset[VertexState], conf: Config,
-                         startRound: Int): Result = {
+  private def runLoop(spark: SparkSession, initial: Dataset[VertexState],
+                      conf: Config, startRound: Int): Result = {
     import spark.implicits._
     val sc = spark.sparkContext
 
-    var st: S = layout.init(initial)
+    // `.rdd` runs the input's exchanges, so its partition count is final;
+    // the masters are laid out by this one partitionBy, and the first
+    // round's job reads its output twice (extension pass and merge)
+    val input = initial.rdd
+    val part = new HashPartitioner(masterPartitions(spark, input))
+    var st: RDD[(Long, VertexState)] = input.map(v => (v.id, v)).partitionBy(part)
+    def rows(s: RDD[(Long, VertexState)]): Dataset[VertexState] =
+      spark.createDataset(s.values)
     var prevMrdd: RDD[(VertexState, Array[Candidate])] = null
     var prevBc: Broadcast[FlowDelta] = null
-    // the checkpointed state frame that FED prevMrdd — its only remaining
-    // reader is prevMrdd's recompute path, so it dies exactly when
-    // prevMrdd is unpersisted (the two-deep schedule prevBc follows); a
-    // schimmy state's view pins nothing (its merge is the checkpoint)
-    var prevFeedState: Dataset[VertexState] = null
     var engineFlow = 0L
     var round = startRound
     var pending: FlowDelta = Map.empty
@@ -504,18 +496,16 @@ object MaxFlow {
     def credit(delta: collection.Map[(Long, Long), Long]): Unit =
       delta.foreach { case (k, v) => assignment.update(k, assignment.getOrElse(k, 0L) + v) }
     // round-tagged dir (kill-safe: never overwritten) + prune to bound storage
-    def durable(rows: Dataset[VertexState], r: Int): Unit = conf.stateDir.foreach { dir =>
-      graft.sources.StateIO.writeRound(rows, dir, r)
+    def durable(ds: Dataset[VertexState], r: Int): Unit = conf.stateDir.foreach { dir =>
+      graft.sources.StateIO.writeRound(ds, dir, r)
       graft.sources.StateIO.pruneRounds(spark, dir)
     }
 
     while (!done && round < conf.maxRounds) {
       round += 1
-      val inState = layout.view(st) // feeds this round's mrdd
       val bc = sc.broadcast(pending)
       val ctrs = Ctrs(sc, s"mf-r$round")
-      val mrdd = layout.merge(st, bc, round, conf, ctrs)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val mrdd = superstep(st, part, bc, round, conf, ctrs)
       // Mid-round acceptance overlap (the reference's RMI ApServer,
       // ff2/ApServer.java:19-49): ONE parallel job materializes the merged
       // state into cache, and each partition's candidates are offered to
@@ -541,24 +531,15 @@ object MaxFlow {
           }
         })
       // runJob returns after every handler ran: acceptance is complete and
-      // the round's accumulators are final. It also materialized mrdd into
-      // cache — and, through its lineage, the previous round's lazily-
-      // checkpointed state (or, under schimmy, mrdd's own lazy checkpoint;
-      // doCheckpoint truncates either when the job ends), so the previous
-      // round's cache AND broadcast are now droppable.
-      // They could not be dropped a round earlier: this job's tasks
-      // serialize the untruncated lineage, which still references them
-      // (counters are not double-counted: the projection map over the
+      // the round's accumulators are final. It also materialized mrdd's
+      // lazy checkpoint (doCheckpoint truncates its lineage when the job
+      // ends), so the previous round's cache AND broadcast are now
+      // droppable. They could not be dropped a round earlier: this job's
+      // tasks serialize the untruncated lineage, which still references
+      // them (counters are not double-counted: the projection map over the
       // previous cached mrdd carries no accumulators).
       if (prevMrdd != null) prevMrdd.unpersist(blocking = false)
       if (prevBc != null) prevBc.destroy()
-      // …and the state checkpoint that fed the just-unpersisted mrdd:
-      // nothing can recompute through it anymore (Checkpoints.scala —
-      // this frame was the one per-round BlockManager leak the
-      // prevMrdd/prevBc pruning missed: one pinned vertex-state copy
-      // per round across a long run)
-      Checkpoints.release(prevFeedState)
-      prevFeedState = null
       if (conf.validate) mrdd.foreach(p => validateVertex(p._1))
       val (got, delta, roundPaths) = acceptor.result
       allPaths ++= roundPaths
@@ -572,10 +553,12 @@ object MaxFlow {
         ctrs.dropS.value, ctrs.dropT.value,
         ctrs.aliveS.value, ctrs.aliveT.value)
       pending = delta
-      st = layout.next(mrdd)
+      // the next masters: a projection of the checkpointed merge, kept in
+      // place on the same partitions
+      st = mrdd.mapPartitions(_.map { case (v, _) => (v.id, v) },
+        preservesPartitioning = true)
       prevMrdd = mrdd
       prevBc = bc // destroyed after the NEXT job truncates this lineage
-      prevFeedState = inState // released when prevMrdd is unpersisted
       zeroStreak = if (got == 0) zeroStreak + 1 else 0
       // C3 quiescence; the ff2 counter rule (no flow, no lost excess, one
       // frontier stalled — ff2/FordFulkerson.java:447-451); or early stop
@@ -593,14 +576,14 @@ object MaxFlow {
       if (conf.stateDir.nonEmpty && (done || round % conf.checkpointEvery == 0)) {
         // persist the FLUSHED view so resume starts with no pending delta
         val bcF = sc.broadcast(pending)
-        durable(layout.view(st).map(applyDeltaOnly(_, bcF.value)), round)
+        durable(rows(st).map(applyDeltaOnly(_, bcF.value)), round)
         bcF.destroy()
       }
     }
     // flush any un-applied deltas into the state before cleanup — lazy:
     // the cleanup's first action (residual count) materializes flush +
     // count in one pass
-    var state = layout.view(st)
+    var state = rows(st)
     if (pending.nonEmpty) {
       val bc = sc.broadcast(pending)
       state = state.map(applyDeltaOnly(_, bc.value)).localCheckpoint(eager = false)
@@ -682,7 +665,6 @@ object MaxFlow {
     }
     if (prevMrdd != null) prevMrdd.unpersist(blocking = false)
     if (prevBc != null) prevBc.destroy()
-    Checkpoints.release(prevFeedState) // fed the just-unpersisted mrdd
     Result(engineFlow + cleanupFlow, engineFlow, cleanupFlow, round,
       assignment.toMap, allPaths.toSeq, reports.toSeq)
   }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("graph: both max-flow layouts equal Edmonds-Karp, Borůvka equals Kruskal") {
+  test("graph: max-flow equals Edmonds-Karp, Borůvka equals Kruskal") {
     Probe.graph(spark, 2000)
     assert(!spark.sparkContext.isStopped)
   }

@@ -131,18 +131,12 @@ class CheckpointHygieneSpec extends AnyFunSuite {
     // so an unreleased per-round state checkpoint would pin ~6+ frames
     val edges = (0L until 24L).flatMap(i =>
       Seq((i, i + 1, 3L), (i + 1, i, 3L))).toDF("src", "dst", "cap")
-    // both state layouts share the run loop and its release schedule
-    for ((name, run) <- Seq[(String, () => MaxFlow.Result)](
-        "shuffle-all" -> (() => MaxFlow.run(spark, edges, Seq(0L), Seq(24L))),
-        "schimmy" -> (() => MaxFlowSchimmy.run(spark, edges, Seq(0L), Seq(24L))))) {
-      clearAll()
-      val base = pinned
-      val res = run()
-      assert(res.flow == 3L && res.rounds >= 3,
-        s"$name: flow ${res.flow} rounds ${res.rounds}")
-      val left = pinned - base
-      assert(left <= 4, s"$name: pinned $left frames (want <=4, not one per round)")
-    }
+    clearAll()
+    val base = pinned
+    val res = MaxFlow.run(spark, edges, Seq(0L), Seq(24L))
+    assert(res.flow == 3L && res.rounds >= 3, s"flow ${res.flow} rounds ${res.rounds}")
+    val left = pinned - base
+    assert(left <= 4, s"pinned $left frames (want <=4, not one per round)")
   }
 
   test("KCore pins only the surviving edge set") {

@@ -16,8 +16,8 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
     val r = MaxFlowSchimmy.run(spark, edges, sources, sinks)
     assert(r.flow == 23L, s"got $r")
     assert(StateIO.conservationHolds(r.assignment, r.flow))
-    // the schimmy engine fills the same round report as v1 (A8 parity;
-    // `Main --engine schimmy` prints it via RoundCounters.echo)
+    // the schimmy engine fills the round report (A8; `Main mf` prints it
+    // via RoundCounters.echo)
     val rep = r.rounds_report
     assert(rep.nonEmpty && rep.map(_.round) == (1 to r.rounds))
     assert(rep.map(_.acceptedFlow).sum == r.engineFlow)
@@ -39,50 +39,81 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
     }
   }
 
-  test("schimmy shuffles a fraction of v1's bytes (S5/J1 — the no-state-shuffle contract)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    class Meter extends SparkListener {
-      @volatile var bytes = 0L
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-        bytes += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-    }
-    import spark.implicits._
-    val edges = graft.Probe.smallWorld(n = 4000, k = 4, rewireP = 0.1,
-      maxC = 10, seed = 3L).toDF("src", "dst", "cap").persist()
-    edges.count()
-    val ids = (10L until 4010L)
-    val sources = Seq(ids.head, ids(1))
-    val sinks = Seq(ids.last, ids(ids.length - 2))
-    def metered(run: => MaxFlow.Result): (MaxFlow.Result, Long) = {
-      val m = new Meter
-      spark.sparkContext.addSparkListener(m)
-      val r = run
-      org.apache.spark.graftshim.ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(m)
-      (r, m.bytes)
-    }
-    // cleanup off so the meter sees ONLY the superstep loop (the BFS
-    // cleanup is shared machinery and would dilute the contrast)
-    val conf = MaxFlow.Config(exactCleanup = false)
-    val (r1, b1) = metered(MaxFlow.run(spark, edges, sources, sinks, conf))
-    val (r2, b2) = metered(MaxFlowSchimmy.run(spark, edges, sources, sinks, conf))
-    edges.unpersist()
-    assert(r1.engineFlow > 0 && r2.engineFlow > 0)
-    // v1 shuffles masters+deltas every round; schimmy shuffles deltas only.
-    // The master state (1M+ bytes/round here) must show up as a large gap —
-    // not a rounding error. Guards the regression this spec was born from:
-    // an optimizer-inferred partitioning silently degrading to a full
-    // state re-exchange per round.
-    assert(b2 < b1 / 2,
-      s"schimmy shuffled $b2 bytes vs v1 $b1 — the no-state-shuffle contract is broken")
-  }
-
   test("schimmy and v1 agree (multi-source/multi-sink)") {
+    // "v1" is the `MaxFlow.run` entry point, which ran the shuffle-all
+    // layout before it was deleted and now runs the schimmy superstep:
+    // both entry points must still agree, and equal Edmonds-Karp, on a
+    // graph with two sources and two sinks
     val edges = EdmondsKarp.randomGraph(n = 12, edgeProb = 0.25, maxCap = 5, seed = 99)
     val ids = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     val df = edges.toDF("src", "dst", "cap")
     val v1 = MaxFlow.run(spark, df, ids.take(2), ids.takeRight(2))
     val v2 = MaxFlowSchimmy.run(spark, df, ids.take(2), ids.takeRight(2))
     assert(v1.flow == v2.flow)
+    assert(v2.flow == EdmondsKarp.maxFlow(edges, ids.take(2), ids.takeRight(2)))
+  }
+
+  // the no-state-shuffle contract
+  test("loop shuffle records = vertices + extension messages (S5/J1)") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    class Meter extends SparkListener {
+      @volatile var records = 0L
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        records += sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+    }
+    val edges = graft.Probe.smallWorld(n = 4000, k = 4, rewireP = 0.1,
+      maxC = 10, seed = 3L).toDF("src", "dst", "cap").persist()
+    edges.count()
+    val ids = (10L until 4010L)
+    val sources = Seq(ids.head, ids(1))
+    val sinks = Seq(ids.last, ids(ids.length - 2))
+    def metered[T](body: => T): (T, Long) = {
+      val m = new Meter
+      spark.sparkContext.addSparkListener(m)
+      val r = body
+      org.apache.spark.graftshim.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(m)
+      (r, m.records)
+    }
+    // the graph build's own exchanges, run alone: the run repeats them
+    val (vertices, buildRecords) =
+      metered(GraphBuilder.buildState(spark, edges, sources, sinks).rdd.count())
+    // cleanup off so the meter sees only the build and the superstep loop
+    val (r, records) = metered(MaxFlow.run(spark, edges, sources, sinks,
+      MaxFlow.Config(exactCleanup = false)))
+    edges.unpersist()
+    val moves = r.rounds_report.map(_.moves).sum
+    assert(r.engineFlow > 0 && moves > 0 && r.rounds > 1)
+    // one initial partitionBy moves each master once; after that a round
+    // shuffles exactly its extension messages. Any state re-exchange (a
+    // shuffle of the masters per round, or an optimizer-inferred
+    // partitioning that silently degrades to one) adds >= vertices per
+    // round and breaks the equality.
+    assert(records - buildRecords == vertices + moves,
+      s"loop shuffled ${records - buildRecords} records over ${r.rounds} rounds; " +
+        s"want $vertices masters + $moves messages")
+  }
+
+  test("master partitions come from the input, not shuffle.partitions") {
+    // a tiny graph on a session at the 200-partition default: both the
+    // build's coalesced exchange and a resumed round dir size the masters
+    // to at most one partition per core
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val cores = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, "200")
+    try {
+      val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
+      val built = GraphBuilder.buildState(spark, edges, sources, sinks).rdd
+      assert(MaxFlow.masterPartitions(spark, built) <= cores,
+        s"build: ${built.getNumPartitions} input partitions")
+      val dir = java.nio.file.Files.createTempDirectory("parts").toString + "/rounds"
+      val first = MaxFlow.run(spark, edges, sources, sinks, MaxFlow.Config(
+        maxRounds = 2, exactCleanup = false, stateDir = Some(dir), checkpointEvery = 1))
+      val resumed = StateIO.readLatestForResume(spark, dir)._1.rdd
+      assert(MaxFlow.masterPartitions(spark, resumed) <= cores,
+        s"resume: ${resumed.getNumPartitions} input partitions")
+      assert(first.flow + MaxFlow.resume(spark, dir).flow == 23L)
+    } finally spark.conf.set(key, prev)
   }
 }

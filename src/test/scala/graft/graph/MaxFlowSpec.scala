@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.TestSpark
 import graft.sources.GraphSources
-import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class MaxFlowSpec extends AnyFunSuite {
@@ -13,11 +12,6 @@ class MaxFlowSpec extends AnyFunSuite {
     getClass.getResource(s"/fixtures/$name").getPath
 
   private def toDf(edges: Seq[(Long, Long, Long)]) = edges.toDF("src", "dst", "cap")
-
-  /** Both state layouts of the shared run loop: shuffle-all (v1) and schimmy. */
-  private val engines: Seq[(String, (DataFrame, Seq[Long], Seq[Long], MaxFlow.Config) => MaxFlow.Result)] =
-    Seq("shuffle-all" -> (MaxFlow.run(spark, _, _, _, _)),
-      "schimmy" -> (MaxFlowSchimmy.run(spark, _, _, _, _)))
 
   test("CLRS network: max-flow 23 (known answer, run:49-style)") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
@@ -120,10 +114,8 @@ class MaxFlowSpec extends AnyFunSuite {
 
   test("invariant layer holds through a full run (Config.validate)") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
-    for ((name, run) <- engines) {
-      val r = run(edges, sources, sinks, MaxFlow.Config(validate = true))
-      assert(r.flow == 23L, s"$name: got $r")
-    }
+    val r = MaxFlow.run(spark, edges, sources, sinks, MaxFlow.Config(validate = true))
+    assert(r.flow == 23L, s"got $r")
   }
 
   test("round report carries the MFCounter set (A8; mf/MFCounter.java:3-49)") {
@@ -156,25 +148,21 @@ class MaxFlowSpec extends AnyFunSuite {
   test("distributed cleanup fallback (driverCleanupMaxEdges=0) stays exact") {
     // maxRounds=0 disables the excess-path engine entirely and
     // driverCleanupMaxEdges=0 forbids the one-shot driver EK, so the whole
-    // flow must come from the batched distributed-BFS fallback — on either
-    // layout, since both share the cleanup
+    // flow must come from the batched distributed-BFS fallback
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
     val redges = EdmondsKarp.randomGraph(n = 10, edgeProb = 0.3, maxCap = 10, seed = 5)
     val ids = redges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
     val want = EdmondsKarp.maxFlow(redges, Seq(ids.head), Seq(ids.last))
     val conf = MaxFlow.Config(maxRounds = 0, driverCleanupMaxEdges = 0L)
-    for ((name, run) <- engines) {
-      val r = run(edges, sources, sinks, conf)
-      assert(r.flow == 23L && r.engineFlow == 0L && r.cleanupFlow == 23L,
-        s"$name: got $r")
-      // and on a random graph vs the in-memory oracle
-      val got = run(toDf(redges), Seq(ids.head), Seq(ids.last), conf)
-      assert(got.flow == want, s"$name: want=$want got=$got")
-      // fallback paths are recorded like engine paths (flowpaths parity)
-      assert(r.paths.nonEmpty && r.paths.map(_._2).sum == 23L, name)
-      r.paths.foreach { case (p, q) =>
-        assert(p.head == 1L && p.last == 2L && q > 0, name)
-      }
+    val r = MaxFlow.run(spark, edges, sources, sinks, conf)
+    assert(r.flow == 23L && r.engineFlow == 0L && r.cleanupFlow == 23L, s"got $r")
+    // and on a random graph vs the in-memory oracle
+    val got = MaxFlow.run(spark, toDf(redges), Seq(ids.head), Seq(ids.last), conf)
+    assert(got.flow == want, s"want=$want got=$got")
+    // fallback paths are recorded like engine paths (flowpaths parity)
+    assert(r.paths.nonEmpty && r.paths.map(_._2).sum == 23L)
+    r.paths.foreach { case (p, q) =>
+      assert(p.head == 1L && p.last == 2L && q > 0)
     }
   }
 

@@ -2,7 +2,6 @@ package graft.graph
 
 import graft.TestSpark
 import graft.sources.{GraphSources, StateIO}
-import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 class StateIOSpec extends AnyFunSuite {
@@ -85,50 +84,39 @@ class StateIOSpec extends AnyFunSuite {
     assert(rest.rounds_report.head.round == first.rounds_report.last.round + 1)
   }
 
-  /** Both state layouts, each with its own resume. */
-  private val engines: Seq[(String,
-      (DataFrame, Seq[Long], Seq[Long], MaxFlow.Config) => MaxFlow.Result,
-      String => MaxFlow.Result)] = Seq(
-    ("shuffle-all", MaxFlow.run(spark, _, _, _, _), MaxFlow.resume(spark, _)),
-    ("schimmy", MaxFlowSchimmy.run(spark, _, _, _, _), MaxFlowSchimmy.resume(spark, _)))
-
   test("cleanup flow reaches the durable checkpoint (resume sees a quiescent graph)") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
-    for ((name, run, resume) <- engines) {
-      val dir = java.nio.file.Files.createTempDirectory("resume-clean").toString + "/rounds"
-      // stop the loop early so the exactness cleanup carries real flow, with
-      // checkpoints on: the post-cleanup state must reach a round dir
-      val first = run(edges, sources, sinks,
-        MaxFlow.Config(maxRounds = 2, stateDir = Some(dir), checkpointEvery = 1))
-      assert(first.flow == 23L && first.cleanupFlow > 0L, s"$name: got $first")
-      // the cleanup state lands in a NEW round dir (round+1) — never an
-      // in-place overwrite of the newest complete checkpoint
-      assert(StateIO.latestRound(spark, dir).exists(_ > first.rounds),
-        s"$name: latest=${StateIO.latestRound(spark, dir)} rounds=${first.rounds}")
-      val rest = resume(dir)
-      assert(rest.flow == 0L,
-        s"$name: checkpoint missing cleanup flow: resume re-found ${rest.flow}")
-    }
+    val dir = java.nio.file.Files.createTempDirectory("resume-clean").toString + "/rounds"
+    // stop the loop early so the exactness cleanup carries real flow, with
+    // checkpoints on: the post-cleanup state must reach a round dir
+    val first = MaxFlow.run(spark, edges, sources, sinks,
+      MaxFlow.Config(maxRounds = 2, stateDir = Some(dir), checkpointEvery = 1))
+    assert(first.flow == 23L && first.cleanupFlow > 0L, s"got $first")
+    // the cleanup state lands in a NEW round dir (round+1) — never an
+    // in-place overwrite of the newest complete checkpoint
+    assert(StateIO.latestRound(spark, dir).exists(_ > first.rounds),
+      s"latest=${StateIO.latestRound(spark, dir)} rounds=${first.rounds}")
+    val rest = MaxFlow.resume(spark, dir)
+    assert(rest.flow == 0L,
+      s"checkpoint missing cleanup flow: resume re-found ${rest.flow}")
   }
 
   test("distributed-fallback cleanup also reaches the durable checkpoint") {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
-    for ((name, run, resume) <- engines) {
-      val dir = java.nio.file.Files.createTempDirectory("resume-fb").toString + "/rounds"
-      // driverCleanupMaxEdges = 0 forces the distributed BFS fallback; it
-      // must honor the same durable contract as the driver-side path
-      val first = run(edges, sources, sinks,
-        MaxFlow.Config(maxRounds = 2, stateDir = Some(dir), checkpointEvery = 1,
-          driverCleanupMaxEdges = 0L))
-      assert(first.flow == 23L && first.cleanupFlow > 0L, s"$name: got $first")
-      // the cleanup state lands in a NEW round dir (round+1) — never an
-      // in-place overwrite of the newest complete checkpoint
-      assert(StateIO.latestRound(spark, dir).exists(_ > first.rounds),
-        s"$name: latest=${StateIO.latestRound(spark, dir)} rounds=${first.rounds}")
-      val rest = resume(dir)
-      assert(rest.flow == 0L,
-        s"$name: fallback checkpoint missing cleanup flow: resume re-found ${rest.flow}")
-    }
+    val dir = java.nio.file.Files.createTempDirectory("resume-fb").toString + "/rounds"
+    // driverCleanupMaxEdges = 0 forces the distributed BFS fallback; it
+    // must honor the same durable contract as the driver-side path
+    val first = MaxFlow.run(spark, edges, sources, sinks,
+      MaxFlow.Config(maxRounds = 2, stateDir = Some(dir), checkpointEvery = 1,
+        driverCleanupMaxEdges = 0L))
+    assert(first.flow == 23L && first.cleanupFlow > 0L, s"got $first")
+    // the cleanup state lands in a NEW round dir (round+1) — never an
+    // in-place overwrite of the newest complete checkpoint
+    assert(StateIO.latestRound(spark, dir).exists(_ > first.rounds),
+      s"latest=${StateIO.latestRound(spark, dir)} rounds=${first.rounds}")
+    val rest = MaxFlow.resume(spark, dir)
+    assert(rest.flow == 0L,
+      s"fallback checkpoint missing cleanup flow: resume re-found ${rest.flow}")
   }
 
   test("random-K truncation (A6) stays exact (oracle equality)") {

@@ -109,6 +109,15 @@ object Caches {
     df
   }
 
+  /** Drop the registration of a frame its owner has released itself, so
+    * [[releaseAll]] neither revisits it nor, once the wrapper is
+    * collected, falls back to `clearCache` on its account.
+    */
+  private[graft] def untrack(df: DataFrame): Unit = {
+    val q = registry.synchronized(registry.get(df.sparkSession))
+    if (q != null) q.removeIf(t => t.df.get() eq df)
+  }
+
   /** Unpersist every tracked frame of `spark` and drop the bookkeeping
     * (the registry must not hold plan references across a long-lived
     * caller's session either). If any tracked wrapper was GC-collected

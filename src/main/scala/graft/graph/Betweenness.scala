@@ -29,8 +29,12 @@ import org.apache.spark.sql.functions._
   * Scale: per level, one join of the frontier against the edge relation
   * + one (pivot, node) aggregate — frontier-sized, never corpus-rank.
   * The backward pass mirrors it level by level. State is (pivots ×
-  * reached nodes), bounded by the horizon; the edge relation is cached
-  * once. O(horizon) jobs total, independent of graph size.
+  * reached nodes), bounded by the horizon; the edge relation is laid out
+  * once. Both passes are one [[Superstep]] loop over one
+  * (s, v, sigma, d, delta) relation — rounds 1..horizon add level d =
+  * round, rounds horizon+1..2·horizon−1 fill delta for levels
+  * horizon−1..1 — so O(horizon) jobs total, independent of graph size,
+  * and one frame is left pinned.
   */
 object Betweenness {
 
@@ -40,65 +44,51 @@ object Betweenness {
     */
   def run(s: SparkSession, und: DataFrame, nPivots: Int = 8,
           horizon: Int = 4): DataFrame = {
-    val e = GraphQueries.bidirectional(und) // consumed 2·horizon times
-    val piv = e.select(col("a").as("node")).distinct()
-      .orderBy("node").limit(nPivots)
-    // forward: levels(d) = (s, v, sigma) for nodes FIRST reached at d
-    var lvl = piv.select(col("node").as("s"), col("node").as("v"),
-      lit(1L).as("sigma")).localCheckpoint(eager = true)
-    val levels = scala.collection.mutable.ListBuffer(lvl)
-    var visited = lvl.select("s", "v").localCheckpoint(eager = true)
-    for (_ <- 1 to horizon) {
-      val fresh = lvl.join(e, lvl("v") === e("a"))
-        .select(col("s"), e("b").as("v"), col("sigma"))
-        .join(visited, Seq("s", "v"), "left_anti")
-        .groupBy("s", "v").agg(sum("sigma").as("sigma"))
-        .localCheckpoint(eager = true)
-      levels += fresh
-      val prevVisited = visited
-      visited = visited.unionAll(fresh.select("s", "v"))
-        .localCheckpoint(eager = true)
-      // the merged visited set is materialized — its predecessor is dead
-      // (Checkpoints.scala; the q43_scc in-session degradation)
-      Checkpoints.release(prevVisited)
-      lvl = fresh
-    }
-    // the backward pass reads only `levels`; the visited set is done
-    Checkpoints.release(visited)
-    // backward: deepest level has delta 0; each shallower level sums
-    // the truncating nano-unit quotient sigma_v*(1e9 + delta_w) div
-    // sigma_w over its successors. Level 0 is skipped — it holds only
-    // pivot self-rows, which the output excludes anyway.
     val zero = lit(0).cast("decimal(38,0)")
-    var above = levels(horizon)
-      .select(col("s"), col("v"), col("sigma"), zero.as("delta"))
-    val deltas = scala.collection.mutable.ListBuffer(above)
-    for (d <- (horizon - 1) to 1 by -1) {
-      val cur = levels(d)
-      val terms = cur.join(e, cur("v") === e("a"))
-        .select(col("s"), col("v"), col("sigma"), e("b").as("w"))
-        .join(above.select(col("s"), col("v").as("w"),
-          col("sigma").as("sw"), col("delta").as("dw")), Seq("s", "w"))
-        .groupBy("s", "v")
-        .agg(sum(expr("(CAST(sigma AS DECIMAL(38,0)) * (1000000000 + dw))" +
-          " div sw").cast("decimal(38,0)")).as("delta"))
-      val dl = cur.select("s", "v", "sigma")
-        .join(terms.select(col("s"), col("v"), col("delta")),
-          Seq("s", "v"), "left_outer")
-        .select(col("s"), col("v"), col("sigma"),
-          coalesce(col("delta"), zero).as("delta"))
-        .localCheckpoint(eager = true)
-      deltas += dl
-      above = dl
-    }
-    // every level but the deepest has been folded into a materialized
-    // delta frame; levels(horizon) stays — deltas(0) reads through it
-    Checkpoints.release(levels.dropRight(1).toSeq: _*)
-    deltas.map(_.select("s", "v", "delta")).reduce(_ unionAll _)
-      .filter(col("v") =!= col("s"))
+    Superstep.layout(GraphQueries.bidirectional(und), "a") { e =>
+      val piv = e.select(col("a").as("node")).distinct()
+        .orderBy("node").limit(nPivots)
+      // level d = the nodes FIRST reached at d; delta null = not yet
+      // accumulated (the deepest level's delta is 0)
+      val init = piv.select(col("node").as("s"), col("node").as("v"),
+        lit(1L).as("sigma"), lit(0).as("d"), lit(null).cast("decimal(38,0)")
+          .as("delta"))
+      def forward(st: DataFrame, d: Int): DataFrame = {
+        val lvl = st.filter(col("d") === d - 1)
+        val fresh = lvl.join(e, lvl("v") === e("a"))
+          .select(col("s"), e("b").as("v"), col("sigma"))
+          .join(st.select("s", "v"), Seq("s", "v"), "left_anti")
+          .groupBy("s", "v").agg(sum("sigma").as("sigma"))
+        st.unionAll(fresh.select(col("s"), col("v"), col("sigma"),
+          lit(d).as("d"), lit(null).cast("decimal(38,0)").as("delta")))
+      }
+      // level d's delta sums the truncating nano-unit quotient
+      // sigma_v*(1e9 + delta_w) div sigma_w over its successors w at d+1.
+      // Level 0 is never accumulated — it holds only pivot self-rows,
+      // which the output excludes anyway.
+      def backward(st: DataFrame, d: Int): DataFrame = {
+        val cur = st.filter(col("d") === d)
+        val above = st.filter(col("d") === d + 1)
+        val terms = cur.join(e, cur("v") === e("a"))
+          .select(col("s"), col("v"), col("sigma"), e("b").as("w"))
+          .join(above.select(col("s"), col("v").as("w"),
+            col("sigma").as("sw"), coalesce(col("delta"), zero).as("dw")),
+            Seq("s", "w"))
+          .groupBy("s", "v")
+          .agg(sum(expr("(CAST(sigma AS DECIMAL(38,0)) * (1000000000 + dw))" +
+            " div sw").cast("decimal(38,0)")).as("delta"))
+        st.filter(col("d") =!= d).unionAll(cur.select("s", "v", "sigma", "d")
+          .join(terms, Seq("s", "v"), "left_outer")
+          .select(col("s"), col("v"), col("sigma"), col("d"),
+            coalesce(col("delta"), zero).as("delta")))
+      }
+      Superstep.iterate(init, 2 * horizon - 1) { (st, r) =>
+        if (r <= horizon) forward(st, r) else backward(st, 2 * horizon - r)
+      }(Superstep.never)._1
+    }.filter(col("d") > 0 && col("v") =!= col("s"))
       .groupBy(col("v").as("node"))
-      .agg(round(sum("delta").cast("double") / lit(1000000000d), 6)
-        .as("bc"))
+      .agg(round(sum(coalesce(col("delta"), zero)).cast("double") /
+        lit(1000000000d), 6).as("bc"))
       .orderBy("node")
   }
 }

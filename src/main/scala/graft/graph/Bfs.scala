@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative frontier BFS (SURVEY §2.2 T10, §2.3 A7, §3.3; bfs/bfs.java).
   *
@@ -10,12 +9,10 @@ import org.apache.spark.storage.StorageLevel
   * (bfs/bfs.java:92-103); here the frontier is simply the set of vertices
   * first reached in the previous superstep. Per round: one hash-partitioned
   * join frontier⋈edges (the shuffle the reference's map phase performs) +
-  * one anti-join against the visited set (the reference's min-combine A7).
-  *
-  * Scale notes: `edges` is re-used every round — persist it partitioned by
-  * `src` once so each superstep reuses the exchange; the visited set only
-  * grows, and `localCheckpoint` truncates the lineage so plan size stays
-  * O(1) in rounds, not O(rounds).
+  * one anti-join against the visited set (the reference's min-combine A7),
+  * on the [[Superstep]] runtime: the edges are laid out once by `src`, and
+  * each round's frame is the visited set so far, materialized by the
+  * round's row count (an unchanged count means nothing new was reached).
   */
 object Bfs {
 
@@ -27,47 +24,11 @@ object Bfs {
     * @return DataFrame(node: Long, dist: Int), one row per reached vertex
     */
   def run(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
-          maxDepth: Int = Int.MaxValue): DataFrame = {
-    import spark.implicits._
-    // Per-level exchange sizing is left to AQE partition coalescing (a
-    // tiny graph's exchanges coalesce to ~1 reduce task at runtime); the
-    // previous set/restore of spark.sql.shuffle.partitions let a
-    // concurrent query planned mid-loop inherit the shrunken value
-    // (VERDICT r4 "wrong" #2) — operator code must not mutate the
-    // caller's session.
-    // r14: SORTED within partitions too — the r13 repartition+persist
-    // removed the per-round exchange of the adjacency, but every round's
-    // sort-merge join still re-SORTED the cached edge partitions; the
-    // InMemoryRelation preserves the cached plan's output ordering, so a
-    // pre-sorted layout makes each round's join sort-free on the big side
-    val adj = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // NOT persisted: a literal source list rebuilds for free, and a
-    // persist here pinned one frame per run for the whole session
-    var dist = sources.distinct.toDF("node")
-      .select(col("node").cast("long"), lit(0).as("dist"))
-    var frontier = dist
-    var level = 0
-    var frontierSize = frontier.count()
-
-    while (frontierSize > 0 && level < maxDepth) {
-      level += 1
-      val next = frontier.join(adj, frontier("node") === adj("src"))
-        .select(adj("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(level).as("dist"))
-        // lazy checkpoint cuts lineage (O(1) plan per round) and caches on
-        // the count below — one job per level, not two
-        .localCheckpoint(eager = false)
-      frontierSize = next.count()
-      dist = dist.unionAll(next)
-      frontier = next
-    }
-    adj.unpersist()
-    dist
-  }
+          maxDepth: Int = Int.MaxValue): DataFrame =
+    // every source under one landmark: the multi-source loop's (node, src)
+    // pairs collapse to one distance per node
+    search(spark, edges, sources.distinct.map(s => (s, 0L)), maxDepth)
+      .select("node", "dist")
 
   /** Multi-source BFS in ONE superstep loop: per-landmark distances
     * d(node, src) for every source in `sources`, computed simultaneously —
@@ -81,37 +42,30 @@ object Bfs {
     * the landmark count, the budget a caller sizes.
     */
   def runMulti(spark: SparkSession, edges: DataFrame, sources: Seq[Long],
-               maxDepth: Int = Int.MaxValue): DataFrame = {
+               maxDepth: Int = Int.MaxValue): DataFrame =
+    search(spark, edges, sources.distinct.map(s => (s, s)), maxDepth)
+
+  /** The one BFS loop over (node, src) roots: (node, src, dist). Exchange
+    * sizing is left to AQE partition coalescing — operator code must not
+    * mutate the caller's session (VERDICT r4 "wrong" #2).
+    */
+  private def search(spark: SparkSession, edges: DataFrame,
+      roots: Seq[(Long, Long)], maxDepth: Int): DataFrame = {
     import spark.implicits._
-    // r14: SORTED within partitions too — the r13 repartition+persist
-    // removed the per-round exchange of the adjacency, but every round's
-    // sort-merge join still re-SORTED the cached edge partitions; the
-    // InMemoryRelation preserves the cached plan's output ordering, so a
-    // pre-sorted layout makes each round's join sort-free on the big side
-    val adj = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var dist = sources.distinct.toDF("landmark")
-      .select(col("landmark").cast("long").as("node"),
-        col("landmark").cast("long").as("src"), lit(0).as("dist"))
-    var frontier = dist
-    var level = 0
-    var frontierSize = frontier.count()
-
-    while (frontierSize > 0 && level < maxDepth) {
-      level += 1
-      val next = frontier.select(col("node").as("fnode"), col("src").as("lsrc"))
-        .join(adj, col("fnode") === adj("src"))
-        .select(col("dst").as("node"), col("lsrc").as("src")).distinct()
-        .join(dist.select("node", "src"), Seq("node", "src"), "left_anti")
-        .select(col("node"), col("src"), lit(level).as("dist"))
-        .localCheckpoint(eager = false)
-      frontierSize = next.count()
-      dist = dist.unionAll(next)
-      frontier = next
+    Superstep.layout(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        "src") { adj =>
+      val init = roots.toDF("node", "src").select(col("node"), col("src"),
+        lit(0).as("dist"))
+      Superstep.iterate(init, maxDepth) { (seen, level) =>
+        val next = seen.filter(col("dist") === level - 1)
+          .select(col("node").as("fnode"), col("src").as("lsrc"))
+          .join(adj, col("fnode") === adj("src"))
+          .select(col("dst").as("node"), col("lsrc").as("src")).distinct()
+          .join(seen.select("node", "src"), Seq("node", "src"), "left_anti")
+          .select(col("node"), col("src"), lit(level).as("dist"))
+        seen.unionAll(next)
+      }(Superstep.unchanged(_.count()))._1
     }
-    adj.unpersist()
-    dist
   }
 }

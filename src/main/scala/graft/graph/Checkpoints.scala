@@ -1,45 +1,17 @@
 package graft.graph
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.execution.LogicalRDD
 
-/** Explicit block-manager hygiene for the iterative fixpoint loops.
-  *
-  * Every `localCheckpoint` pins its partitions in the BlockManager; the
-  * only default release path is the async ContextCleaner, which frees a
-  * checkpoint's blocks when the JVM garbage-collects the RDD object. On a
-  * large heap that GC may not run for the whole session, so a long
-  * session accumulates dead blocks — and an iterative operator (two
-  * nested propagation loops in Scc, one checkpoint per round everywhere
-  * else) accumulates them fastest. Measured consequence (round-7 driver
-  * session): q43_scc ran 6 s in isolation but 17.8 → 37.8 → 38.7 s late
-  * in a 228-query session, monotonically WORSENING across warm runs.
-  *
-  * The fix is the MaxFlow round-pruning discipline generalized: each loop
-  * explicitly releases a checkpointed frame the moment it is superseded —
-  * i.e. the successor frame that replaced it is itself materialized, so
-  * nothing can ever recompute through the released frame again. That
-  * last clause is a hard contract: a local checkpoint TRUNCATES lineage,
-  * so a released frame is unrecoverable — `release` must only ever see
-  * frames no live plan references.
+/** Checkpoint release for the loops that do not run on [[Superstep]]:
+  * Scc's peel loop, Mst's Borůvka rounds, MaxFlow's durable rounds and
+  * the Similarity candidate passes. The contract is [[Superstep]]'s:
+  * release a frame only once the successor that replaced it is
+  * materialized — a released local checkpoint cannot be recomputed.
   */
 object Checkpoints {
 
-  /** Free the BlockManager storage behind checkpointed frames.
-    *
-    * Accepts exactly the frame `localCheckpoint` returned (its analyzed
-    * plan is the single `LogicalRDD` leaf holding the pinned RDD). A
-    * non-checkpointed frame (or null, so callers can pass an unset
-    * `var`) is a no-op — nothing is pinned, nothing to free. Deliberately
-    * does NOT walk plan trees: releasing every `LogicalRDD` leaf of a
-    * derived plan could free an upstream checkpoint the caller still
-    * holds.
+  /** Free the BlockManager storage behind frames `localCheckpoint`
+    * returned; any other frame, or null (an unset `var`), is a no-op.
     */
-  def release(frames: Dataset[_]*): Unit =
-    frames.foreach { df =>
-      if (df != null) df.queryExecution.analyzed match {
-        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
-        case _              => ()
-      }
-    }
+  def release(frames: Dataset[_]*): Unit = Superstep.unpin(frames: _*)
 }

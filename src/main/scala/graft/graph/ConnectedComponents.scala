@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components by min-label propagation — a second iterative
   * fixpoint algorithm on the same superstep substrate as Bfs/MaxFlow
@@ -33,73 +32,45 @@ object ConnectedComponents {
     * round included) — the convergence diagnostic the scale probes record.
     */
   def runCounted(spark: SparkSession, edges: DataFrame,
-                 maxIter: Int = 50): (DataFrame, Int) = {
-    // Exchange sizing is left to AQE partition coalescing — the previous
-    // set/restore of spark.sql.shuffle.partitions could leak the shrunken
-    // value into a concurrent query planned mid-loop (VERDICT r4 "wrong"
-    // #2); operator code must not mutate the caller's session.
-    // r14: sorted within partitions — the per-round SMJ re-sorted the
-    // cached edge partitions every round; the pre-sorted layout's output
-    // ordering survives the InMemoryRelation, so the join is sort-free
-    // on the edge side (see Bfs.scala)
-    val adj = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    if (adj.limit(1).count() == 0) {
-      // no edges — no labels (the exact-sum convergence test is
-      // undefined on an empty relation; callers fold isolated nodes
-      // back in themselves, e.g. Scc's coalesce)
-      adj.unpersist()
-      return (adj.select(col("src").as("node"), col("src").as("comp")), 0)
+                 maxIter: Int = 50): (DataFrame, Int) =
+    Superstep.layout(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        "src") { adj =>
+      if (adj.isEmpty)
+        // no edges — no labels (the exact-sum convergence test is
+        // undefined on an empty relation; callers fold isolated nodes
+        // back in themselves, e.g. Scc's coalesce)
+        (spark.range(0).selectExpr("id AS node", "id AS comp"), 0)
+      else {
+        val init = adj.select(col("src").as("node"))
+          .union(adj.select(col("dst").as("node")))
+          .distinct()
+          .withColumn("comp", col("node"))
+        // the returned frame is the round's checkpoint itself, so Scc can
+        // release it per peel
+        Superstep.iterate(init, maxIter) { (labels, _) =>
+          val prop = adj.join(labels, adj("src") === labels("node"))
+            .select(adj("dst").as("node"), col("comp"))
+          // r13: aggregate the PROPAGATED labels alone (edge-fan-in rows,
+          // map-side partial MIN), then fold into the label relation with
+          // a node-keyed left join — min over {labels(v)} ∪ prop(v)
+          // equals least(labels.comp, min(prop(v))) because min is
+          // associative with the join's null as identity (a node nobody
+          // propagated to keeps its label; every prop target IS in
+          // labels, which holds all nodes from round 0). The previous
+          // self-union + re-aggregate re-shuffled the FULL label relation
+          // every round on top of the propagated rows (guide §2.3
+          // "aggregate before you shuffle"): the per-round shuffle drops
+          // from |nodes| + |prop| rows to |prop| rows.
+          val inMin = prop.groupBy("node").agg(min("comp").as("pcomp"))
+          labels.join(inMin, Seq("node"), "left_outer")
+            .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
+        }(Superstep.unchanged(exactSum))
+      }
     }
-    def exactSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("comp").cast("decimal(38,0)"))).head()
-        .getDecimal(0)
-    // LAZY checkpoints throughout: the convergence aggregate right after is
-    // the materializing action, so each round runs ONE job (compute +
-    // cache + exact sum) instead of an eager-checkpoint job plus an
-    // aggregate job (the Bfs count pattern; VERDICT r4 "next" #4).
-    var labels = adj.select(col("src").as("node"))
-      .union(adj.select(col("dst").as("node")))
-      .distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint(eager = false)
-    var prevSum = exactSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val prop = adj.join(labels, adj("src") === labels("node"))
-        .select(adj("dst").as("node"), col("comp"))
-      // r13: aggregate the PROPAGATED labels alone (edge-fan-in rows,
-      // map-side partial MIN), then fold into the label relation with a
-      // node-keyed left join — min over {labels(v)} ∪ prop(v) equals
-      // least(labels.comp, min(prop(v))) because min is associative
-      // with the join's null as identity (a node nobody propagated to
-      // keeps its label; every prop target IS in labels, which holds
-      // all nodes from round 0). The previous self-union + re-aggregate
-      // re-shuffled the FULL label relation every round on top of the
-      // propagated rows (guide §2.3 "aggregate before you shuffle"):
-      // labels is node-sized, and both it and the aggregate are hash-
-      // partitioned on node, so the fold join adds no exchange of its
-      // own while the per-round shuffle drops from |nodes| + |prop|
-      // rows to |prop| rows.
-      val inMin = prop.groupBy("node").agg(min("comp").as("pcomp"))
-      val next = labels.join(inMin, Seq("node"), "left_outer")
-        .select(col("node"),
-          least(col("comp"), col("pcomp")).as("comp"))
-        .localCheckpoint(eager = false)
-      val s = exactSum(next)
-      // `next` is materialized by the exactSum action just above, so the
-      // frame it replaced is dead — free its blocks now instead of
-      // waiting for a driver GC that a large heap may never run
-      // (Checkpoints.scala; the q43_scc in-session degradation)
-      Checkpoints.release(labels)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-    }
-    adj.unpersist()
-    (labels, iter)
-  }
+
+  /** The exact label sum, the convergence measure (see above). */
+  private def exactSum(labels: DataFrame): java.math.BigInteger =
+    labels.agg(sum(col("comp").cast("decimal(38,0)"))).head()
+      .getDecimal(0).toBigInteger
 }

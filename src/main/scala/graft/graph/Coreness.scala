@@ -21,11 +21,12 @@ import org.apache.spark.sql.functions._
   * KCore cross-check (nodes with coreness ≥ k are EXACTLY KCore.run's
   * k-core) — the BFS/max-flow verification discipline.
   *
-  * Scale design: round cost is one shuffle of the edge relation plus a
-  * degree-bounded window per vertex; round count is the h-index
-  * convergence depth (single digits on heavy-tailed graphs, bounded by
-  * graph diameter × value range in theory). Lazy localCheckpoint per
-  * round keeps the plan O(1) stages (the q26/q33 discipline); only the
+  * Scale design: the edges are laid out once by dst ([[Superstep]]), so
+  * each round's join reads them with no exchange; round cost is the
+  * value shuffle plus a degree-bounded window per vertex; round count is
+  * the h-index convergence depth (single digits on heavy-tailed graphs,
+  * bounded by graph diameter × value range in theory). Each round's value
+  * table is a Superstep frame, so the plan stays O(1) stages; only the
   * per-round changed COUNT reaches the driver.
   */
 object Coreness {
@@ -45,58 +46,45 @@ object Coreness {
     *         ordered by node
     */
   def run(s: SparkSession, edges: DataFrame, maxIter: Int = 100,
-          driverFinishMaxEdges: Long = 5000000L): DataFrame = {
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint(eager = true)
-    // the `> 0` guard makes "0 disables the driver tier" literal: an
-    // empty edge relation must not satisfy count() <= 0 and sneak into
-    // the driver path when the caller asked for the distributed loop
-    if (driverFinishMaxEdges > 0 && e.count() <= driverFinishMaxEdges) {
-      import s.implicits._
-      val (srcA, dstA) = DriverGraph.collectEdges(e)
-      Checkpoints.release(e)
-      return peelCoreness(srcA, dstA).toSeq.toDF("node", "coreness")
-        .orderBy("node")
-    }
-    var vals = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
-    // the checkpoint the current `vals` frame reads through — released
-    // the moment a newer materialized round supersedes it
-    // (Checkpoints.scala; the q43_scc in-session degradation)
-    var live = vals
-    var iter = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      val nb = e.join(vals.select(col("node").as("dst"), col("c").as("nc")),
-        Seq("dst"))
-        .select(col("src").as("node"), col("nc"))
-      val w = Window.partitionBy("node").orderBy(col("nc").desc)
-      val h = nb.withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("hl", least(col("rn"), col("nc")))
-        .groupBy("node").agg(max("hl").as("h"))
-      // LAZY: the changed-count right below is the materializing action
-      // — one job per round, not an eager-checkpoint job plus a count
-      // (the CC/Bfs discipline the scaladoc declares)
-      val next = vals.join(h, Seq("node"))
-        .select(col("node"), col("c"), col("h"))
-        .localCheckpoint(eager = false)
-      changed = next.filter(col("h") =!= col("c")).count()
-      Checkpoints.release(live)
-      live = next
-      vals = next.select(col("node"), col("h").as("c"))
-    }
-    if (changed != 0) {
-      // failure path keeps the hygiene discipline too: a repeatedly
-      // failing query must not re-accumulate pinned BlockManager frames
-      Checkpoints.release(e, live)
-      throw new IllegalStateException(
-        s"Coreness.run: not converged after $maxIter rounds")
-    }
-    // the result reads only the last round's checkpoint, not the edges
-    Checkpoints.release(e)
-    vals.select(col("node"), col("c").as("coreness")).orderBy("node")
+          driverFinishMaxEdges: Long = 5000000L): DataFrame =
+    Superstep.layout(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        "dst") { e =>
+      // the `> 0` guard makes "0 disables the driver tier" literal: an
+      // empty edge relation must not satisfy count() <= 0 and sneak into
+      // the driver path when the caller asked for the distributed loop
+      if (driverFinishMaxEdges > 0 && e.count() <= driverFinishMaxEdges) {
+        import s.implicits._
+        val (srcA, dstA) = DriverGraph.collectEdges(e)
+        peelCoreness(srcA, dstA).toSeq.toDF("node", "coreness")
+      } else {
+        val init = e.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("c"))
+          .withColumn("changed", lit(true))
+        Superstep.iterate(init, Int.MaxValue) { (vals, r) =>
+          if (r > maxIter) throw new IllegalStateException(
+            s"Coreness.run: not converged after $maxIter rounds")
+          round(e, vals)
+        }(_.filter(col("changed")).count() == 0)._1
+          .select(col("node"), col("c").as("coreness"))
+      }
+    }.orderBy("node")
+
+  /** One h-index round over the dst-keyed edge layout `e` and the value
+    * table (node, c): (node, c, changed) — exposed so PlanSpec can lock
+    * that the round join reads the layout with no exchange.
+    */
+  private[graft] def round(e: DataFrame, vals: DataFrame): DataFrame = {
+    val nb = e.join(vals.select(col("node").as("dst"), col("c").as("nc")),
+      Seq("dst"))
+      .select(col("src").as("node"), col("nc"))
+    val w = Window.partitionBy("node").orderBy(col("nc").desc)
+    val h = nb.withColumn("rn", row_number().over(w).cast("long"))
+      .withColumn("hl", least(col("rn"), col("nc")))
+      .groupBy("node").agg(max("hl").as("h"))
+    vals.join(h, Seq("node"))
+      .select(col("node"), col("h").as("c"),
+        (col("h") =!= col("c")).as("changed"))
   }
 
   /** In-memory bucket peeling (Batagelj–Zaveršnik 2003, the classic

@@ -125,20 +125,13 @@ object GraphQueries {
   /** Per-bucket participant cap for clique-style pairing (q25). */
   val CooccurCap = 256
 
-  /** Undirected (u, v) pairs as a cached bidirectional edge relation
-    * (a, b) — the shared input shape of [[Betweenness]] and [[Katz]].
+  /** Undirected (u, v) pairs as a bidirectional edge relation (a, b) —
+    * the shared input shape of [[Betweenness]], [[Katz]] and [[anfOn]],
+    * each of which lays it out by `a` ([[Superstep.layout]]).
     */
   private[graph] def bidirectional(und: DataFrame): DataFrame =
-    // hash-partitioned on `a` BEFORE the checkpoint (r13): every consumer
-    // (Betweenness 2·horizon times, Katz horizon times) joins on e("a"),
-    // and a checkpoint preserves its partitioning — so the per-level
-    // exchange of the edge relation disappears (guide §2.4)
     und.selectExpr("u AS a", "v AS b")
       .unionAll(und.selectExpr("v AS a", "u AS b"))
-      // sorted too (r14): the checkpoint preserves ordering as well, so
-      // every per-level SMJ consumes the layout exchange- AND sort-free
-      .repartition(col("a")).sortWithinPartitions("a")
-      .localCheckpoint(eager = true)
 
   /** Q24: connected components of the user co-occurrence graph (users with
     * events in the same 10-second epoch bucket are linked). Edge relation
@@ -491,53 +484,25 @@ object GraphQueries {
       .localCheckpoint(eager = false)
     val edges = fwd.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .unionAll(fwd.select(col("v").as("src"), col("u").as("dst"), col("w")))
-      // partitioned on the per-hop join key BEFORE the eager checkpoint
-      // (the r13 PageRank/bidirectional discipline: the checkpoint
-      // preserves the layout, so each hop's frontier⋈edges join stops
-      // re-exchanging the graph-sized relation — guide §2.4)
-      .repartition(col("src")).sortWithinPartitions("src")
-      .localCheckpoint(eager = true) // probed every round
-    var dist = s.range(1)
-      .selectExpr("CAST(1 AS BIGINT) AS node", "CAST(0 AS BIGINT) AS cost")
-      .localCheckpoint(eager = true)
-    var frontier = dist
-    // frames superseded LAST hop — their successor dist materializes at
-    // THIS hop's count, which is when they become releasable
-    // (Checkpoints.scala). Only the loop top is a safe release point: on
-    // the hops-limit exit the newest dist is still an unmaterialized lazy
-    // checkpoint that reads its predecessors.
-    var prevDist: DataFrame = null
-    var prevFrontier: DataFrame = null
-    var hops = 0
-    var frontierSize = 1L
-    while (hops < 6 && frontierSize > 0) {
-      hops += 1
-      val cand = frontier.join(edges, frontier("node") === edges("src"))
-        .select(edges("dst").as("node"), (col("cost") + col("w")).as("cost"))
-        .groupBy("node").agg(fmin("cost").as("cost"))
-      // LAZY checkpoint + count = ONE job per hop (compute + cache +
-      // convergence read together — the Bfs pattern; VERDICT r4 "next"
-      // #4), replacing an eager-checkpoint job plus two isEmpty probes.
-      val improved = cand.as("c")
-        .join(dist.as("d"), Seq("node"), "left_outer")
-        .filter(col("d.cost").isNull || col("c.cost") < col("d.cost"))
-        .select(col("node"), col("c.cost").as("cost"))
-        .localCheckpoint(eager = false)
-      frontierSize = improved.count() // materializes the current dist too
-      Checkpoints.release(prevDist, prevFrontier)
-      prevDist = null; prevFrontier = null
-      if (frontierSize > 0) {
-        prevDist = dist
-        // lazy too: materialized by the NEXT hop's count (or the final
-        // orderBy), folding the dist rebuild into that job
-        dist = dist.join(improved, Seq("node"), "left_anti")
-          .unionAll(improved)
-          .localCheckpoint(eager = false)
-      }
-      prevFrontier = frontier
-      frontier = improved
-    }
-    dist.orderBy("node")
+    Superstep.layout(edges, "src") { adj =>
+      val init = s.range(1).selectExpr("CAST(1 AS BIGINT) AS node",
+        "CAST(0 AS BIGINT) AS cost", "true AS up")
+      // `up` flags the nodes improved last hop: the frontier. ONE
+      // full-outer join merges the candidates and flags the improved rows
+      // (the Layers round shape), and the improved count is the hop's one
+      // action
+      Superstep.iterate(init, 6) { (dist, _) =>
+        val cand = dist.where(col("up")).join(adj, col("node") === col("src"))
+          .select(col("dst").as("node"), (col("cost") + col("w")).as("cand"))
+          .groupBy("node").agg(fmin("cand").as("cand"))
+        val better = col("cand").isNotNull &&
+          (col("cost").isNull || col("cand") < col("cost"))
+        dist.join(cand, Seq("node"), "full_outer")
+          .select(col("node"),
+            when(better, col("cand")).otherwise(col("cost")).as("cost"),
+            better.as("up"))
+      }(_.where(col("up")).count() == 0)._1
+    }.select("node", "cost").orderBy("node")
   }
 
   val q26OracleSql: String =
@@ -1501,10 +1466,9 @@ object GraphQueries {
     * base (measured: 63 exchanges / 32 aggregates at sf0.001,
     * plans/r13/q60_anf_before.txt) — exactly the duplicated-subtree
     * shape guide §7.2 says to hunt. The loop below computes each round
-    * ONCE behind a lazy localCheckpoint (the PageRank/Bfs lineage
-    * discipline) and merges sketches with a node-keyed LEFT JOIN
-    * instead of the self-union + re-aggregate, so the round's exchange
-    * carries only the propagated sketches (edge-fan-in rows), never
+    * ONCE as a [[Superstep]] frame and merges sketches with a node-keyed
+    * LEFT JOIN instead of the self-union + re-aggregate, so the round's
+    * exchange carries only the propagated sketches (edge-fan-in rows), never
     * the full label relation again (guide §2.3 "aggregate before you
     * shuffle", §2.4 "share one exchange").
     *
@@ -1521,43 +1485,35 @@ object GraphQueries {
     // carries |nodes| rows of 8 Longs instead of 8·|nodes| rows — same
     // joins, an 8th of the exchange (measured 3.7 → see PERF r10)
     val skCols = (0 until masks).map(m => s"sk$m")
-    // both directions, hash-partitioned on the propagation key ONCE and
-    // reused by all rounds (the ConnectedComponents adjacency
-    // discipline); Caches-tracked so a library caller can release it
-    // after consuming the lazy result
-    val e = graft.Caches.track(
-      und.select(col("u").as("a"), col("v").as("b"))
-        .unionAll(und.select(col("v").as("a"), col("u").as("b")))
-        .repartition(col("a")).sortWithinPartitions("a"))
     val xCols = (0 until masks).map { m =>
       s"CAST(conv(substring(md5(concat('anf', '$m', ':', " +
         s"CAST(node AS STRING))), 1, 15), 16, 10) AS BIGINT) " +
         s"| ${1L << 30}L AS x$m"
     }
     val r0Cols = (0 until masks).map(m => s"(x$m & -x$m) AS sk$m")
-    var r = e.select(col("a").as("node")).distinct()
-      .selectExpr("node" +: xCols: _*)
-      .selectExpr("node" +: r0Cols: _*)
-      .localCheckpoint(eager = false)
-    graft.Caches.trackPinned(r)
-    for (_ <- 1 to rounds) {
-      val prop = e.join(r, e("a") === r("node"))
-        .select(col("b").as("node") +: skCols.map(c => col(c)): _*)
-        .groupBy("node")
-        .agg(expr(s"bit_or(sk0)").as("p0"),
-          (1 until masks).map(m => expr(s"bit_or(sk$m)").as(s"p$m")): _*)
-      val next = r.as("r").join(prop.as("p"), Seq("node"), "left_outer")
-        .selectExpr("node" +:
-          skCols.map(c => s"$c | coalesce(p${c.stripPrefix("sk")}, 0L) AS $c"): _*)
-        .localCheckpoint(eager = false)
-      graft.Caches.trackPinned(next)
-      r = next
+    // both directions, laid out on the propagation key ONCE and reused by
+    // all rounds (the ConnectedComponents adjacency discipline)
+    val sketches = Superstep.layout(bidirectional(und), "a") { e =>
+      val init = e.select(col("a").as("node")).distinct()
+        .selectExpr("node" +: xCols: _*)
+        .selectExpr("node" +: r0Cols: _*)
+      Superstep.iterate(init, rounds) { (r, _) =>
+        val prop = e.join(r, e("a") === r("node"))
+          .select(col("b").as("node") +: skCols.map(c => col(c)): _*)
+          .groupBy("node")
+          .agg(expr(s"bit_or(sk0)").as("p0"),
+            (1 until masks).map(m => expr(s"bit_or(sk$m)").as(s"p$m")): _*)
+        r.as("r").join(prop.as("p"), Seq("node"), "left_outer")
+          .selectExpr("node" +: skCols.map(c =>
+            s"$c | coalesce(p${c.stripPrefix("sk")}, 0L) AS $c"): _*)
+      }(Superstep.never)._1
     }
     val bitsExpr = (0 until masks).map { m =>
       s"CAST(log2(CAST(((sk$m ^ (sk$m + 1)) + 1) div 2 AS DOUBLE)) " +
         "AS BIGINT)"
     }.mkString(" + ")
-    r.selectExpr("node AS user_id", s"CAST($bitsExpr AS BIGINT) AS bits_sum")
+    sketches
+      .selectExpr("node AS user_id", s"CAST($bitsExpr AS BIGINT) AS bits_sum")
       .selectExpr("user_id", "bits_sum",
         s"ROUND(pow(2.0D, CAST(bits_sum AS DOUBLE) / $masks) " +
           "/ 0.77351D, 6) AS reach_est")

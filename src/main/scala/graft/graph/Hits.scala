@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * Scale design: per half-iteration ONE join of the score relation
   * against edges (hash-partitioned on the join key) and ONE partial+final
   * SUM aggregation, then the max as a 1-row broadcast cross join — fully
-  * declarative, no driver-side scalar collect. Eager `localCheckpoint` per
-  * half-step truncates lineage (the q26_sssp discipline) and the
-  * superseded pair is released immediately (Checkpoints.scala). On a bipartite
+  * declarative, no driver-side scalar collect. The edges are laid out once
+  * per join side ([[Superstep]]); each iteration's (kind, node, score)
+  * relation, hubs and authorities together, is one Superstep frame,
+  * released once its successor is materialized. On a bipartite
   * graph (the q42 supplier→part feed) hubs and authorities partition the
   * node set; the operator itself is general to any directed graph.
   */
@@ -40,51 +41,28 @@ object Hits {
   def run(s: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"Hits.run: iters must be >= 1, got $iters")
     // the edge relation is consumed 2·iters times (a-step joins on src,
-    // h-step joins on dst) and was re-derived from source + re-exchanged
-    // per half-step; persist BOTH layouts once (the r13 PageRank
-    // discipline, guide §2.4) — edst derives from the esrc cache so the
-    // upstream distinct runs exactly once
-    import org.apache.spark.storage.StorageLevel
-    val esrc = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edst = esrc.repartition(col("dst")).sortWithinPartitions("dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var h = esrc.select(col("src").as("node"))
-      .distinct().withColumn("score", lit(Scale))
-    var a: DataFrame = h // overwritten in the first iteration
-    // EAGER checkpoints + release of the superseded pair: the previous
-    // lazy-everywhere shape pinned every half-step's sums until the final
-    // action (Checkpoints.scala; the q43_scc in-session degradation)
-    var prevA: DataFrame = null
-    var prevH: DataFrame = null
-    for (_ <- 1 to iters) {
-      // checkpoint the RAW sums: normalize consumes its input twice (max
-      // + join), so an unmaterialized aggregate would run every pass twice
-      val aRaw = esrc.as("e").join(h.as("h"), expr("h.node = e.src"))
-        .selectExpr("e.dst AS node", "h.score AS c")
-        .groupBy("node").agg(sum("c").as("score"))
-        .localCheckpoint(eager = true)
-      a = normalize(aRaw)
-      val hRaw = edst.as("e").join(a.as("a"), expr("a.node = e.dst"))
-        .selectExpr("e.src AS node", "a.score AS c")
-        .groupBy("node").agg(sum("c").as("score"))
-        .localCheckpoint(eager = true)
-      h = normalize(hRaw)
-      // the current pair is materialized, so the previous iteration's raw
-      // sums are dead; the LAST pair stays — the returned a/h read it
-      Checkpoints.release(prevA, prevH)
-      prevA = aRaw
-      prevH = hRaw
-    }
-    // the final a/h read only the last checkpointed sums, so the edge
-    // caches are dead once the loop exits
-    esrc.unpersist(blocking = false)
-    edst.unpersist(blocking = false)
-    h.selectExpr("'hub' AS kind", "node", "score")
-      .unionAll(a.selectExpr("'auth' AS kind", "node", "score"))
-      .orderBy("kind", "node")
+    // h-step joins on dst): one layout per side, edst derived from the
+    // esrc cache so the upstream distinct runs exactly once
+    val fwd = edges.select(col("src").cast("long").as("src"),
+      col("dst").cast("long").as("dst"))
+    Superstep.layout(fwd, "src") { esrc =>
+      Superstep.layout(esrc, "dst") { edst =>
+        val init = esrc.select(col("src").as("node")).distinct()
+          .selectExpr("'hub' AS kind", "node", s"${Scale}L AS score")
+        Superstep.iterate(init, iters) { (scores, _) =>
+          val h = scores.filter(col("kind") === "hub")
+          val a = normalize(
+            esrc.as("e").join(h.as("h"), expr("h.node = e.src"))
+              .selectExpr("e.dst AS node", "h.score AS c")
+              .groupBy("node").agg(sum("c").as("score")))
+          normalize(edst.as("e").join(a.as("a"), expr("a.node = e.dst"))
+            .selectExpr("e.src AS node", "a.score AS c")
+            .groupBy("node").agg(sum("c").as("score")))
+            .selectExpr("'hub' AS kind", "node", "score")
+            .unionAll(a.selectExpr("'auth' AS kind", "node", "score"))
+        }(Superstep.never)._1
+      }
+    }.orderBy("kind", "node")
   }
 
   /** Integer max-normalization as a 1-row broadcast cross join. */

@@ -18,10 +18,10 @@ import org.apache.spark.sql.functions._
   * hashes the survivor relation. Round cost is proportional to the
   * surviving graph, round count to the peeling depth (shallow on
   * heavy-tailed graphs: dense cores stabilize after the fringe cascades
-  * off). Lazy
-  * `localCheckpoint` per round truncates lineage so round R plans O(1)
-  * stages (the q26_sssp/q33 discipline). No windows, no driver-side
-  * vertex data — only the per-round survivor COUNT reaches the driver.
+  * off). Each round's survivor set is a [[Superstep]] frame, so round R
+  * plans O(1) stages. No windows, no driver-side vertex data — only the
+  * per-round survivor COUNT reaches the driver: an unchanged count means
+  * nothing was peeled.
   */
 object KCore {
 
@@ -33,14 +33,7 @@ object KCore {
     */
   def run(s: SparkSession, edges: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"KCore.run: k must be >= 1, got $k")
-    var cur = edges.localCheckpoint(eager = false)
-    // the frames the current `cur` was built from — dead (and released)
-    // as soon as the next round's eager checkpoint materializes `cur`
-    // (Checkpoints.scala; the q43_scc in-session degradation)
-    var prevCur: DataFrame = null
-    var prevDrop: DataFrame = null
-    var changed = true
-    while (changed) {
+    Superstep.iterate(edges, Int.MaxValue) { (cur, _) =>
       // peel by the DROP set, not the keep set: per round it is the small
       // side (the fringe below k — empty at the fixpoint), so AQE turns
       // both anti-joins into broadcasts; a keep-side semi-join would hash
@@ -49,22 +42,12 @@ object KCore {
       // relation implicitly — same fixpoint.
       val drop = cur.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") < k).select(col("src").as("node"))
-        .localCheckpoint(eager = true) // reused by both anti-joins + count
-      Checkpoints.release(prevCur, prevDrop) // cur is materialized now
-      if (drop.isEmpty) {
-        changed = false
-        prevCur = null; prevDrop = null
-        Checkpoints.release(drop) // empty — nothing reads it
-      } else {
-        prevCur = cur; prevDrop = drop
-        cur = cur
-          .join(drop.select(col("node").as("src")), Seq("src"), "left_anti")
-          .join(drop.select(col("node").as("dst")), Seq("dst"), "left_anti")
-          .select("src", "dst")
-          .localCheckpoint(eager = false)
-      }
-    }
-    cur.groupBy("src").agg(count(lit(1)).as("deg"))
+      cur
+        .join(drop.select(col("node").as("src")), Seq("src"), "left_anti")
+        .join(drop.select(col("node").as("dst")), Seq("dst"), "left_anti")
+        .select("src", "dst")
+    }(Superstep.unchanged(_.count()))._1
+      .groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
       .orderBy("node")
   }

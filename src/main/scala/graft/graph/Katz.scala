@@ -17,12 +17,15 @@ import org.apache.spark.sql.functions._
   * by the INTEGER invAlpha^(horizon−k), so the whole accumulation is
   * exact in BIGINT/DECIMAL and the single terminal division by
   * invAlpha^horizon is one IEEE op + ROUND 6, identical bits both
-  * engines.
+  * engines. The accumulation runs in Horner form, acc_k = acc_{k-1} ·
+  * invAlpha + w_k, which is the same integer Σ_k w_k · invAlpha^(horizon−k)
+  * after `horizon` levels, carried in one (node, w, acc) relation.
   *
   * Scale: one join of the level vector against the edge relation + one
   * node aggregate per level — horizon exchanges total, each linear in
-  * |E|; no window, no global sort. Walk counts grow as deg^k: BIGINT
-  * holds horizon 4 up to ~30k average degree.
+  * |E|; no window, no global sort. Each level is one [[Superstep]]
+  * frame. Walk counts grow as deg^k: BIGINT holds horizon 4 up to ~30k
+  * average degree.
   */
 object Katz {
 
@@ -37,24 +40,23 @@ object Katz {
     // corrupting weights through an inexact math.pow
     require(BigInt(invAlpha).pow(horizon) < BigInt(2).pow(53),
       s"invAlpha^horizon = $invAlpha^$horizon exceeds exact double range")
-    val e = GraphQueries.bidirectional(und) // consumed `horizon` times
-    var w = e.select(col("a").as("node")).distinct()
-      .withColumn("w", lit(1L))
-      .localCheckpoint(eager = true)
     val denom = math.pow(invAlpha.toDouble, horizon.toDouble)
-    var acc: DataFrame = null
-    for (k <- 1 to horizon) {
-      w = e.join(w, w("node") === e("a"))
-        .groupBy(e("b").as("node"))
-        .agg(sum("w").as("w"))
-        .localCheckpoint(eager = true)
-      val weight = BigInt(invAlpha).pow(horizon - k).toLong
-      val contrib = w.select(col("node"),
-        (col("w").cast("decimal(38,0)") * lit(weight)).as("sc"))
-      acc = if (acc == null) contrib else acc.unionAll(contrib)
-    }
-    acc.groupBy("node")
-      .agg(round(sum("sc").cast("double") / lit(denom), 6).as("katz"))
+    Superstep.layout(GraphQueries.bidirectional(und), "a") { e =>
+      val init = e.select(col("a").as("node")).distinct()
+        .select(col("node"), lit(1L).as("w"),
+          lit(0).cast("decimal(38,0)").as("acc"))
+      Superstep.iterate(init, horizon) { (lvl, _) =>
+        val w = e.join(lvl, lvl("node") === e("a"))
+          .groupBy(e("b").as("node"))
+          .agg(sum("w").as("nw"))
+        lvl.join(w, Seq("node"), "left_outer")
+          .select(col("node"), coalesce(col("nw"), lit(0L)).as("w"),
+            (col("acc") * lit(invAlpha) +
+              coalesce(col("nw"), lit(0L)).cast("decimal(38,0)"))
+              .cast("decimal(38,0)").as("acc"))
+      }(Superstep.never)._1
+    }.select(col("node"),
+        round(col("acc").cast("double") / lit(denom), 6).as("katz"))
       .orderBy("node")
   }
 }

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Community detection by synchronous label propagation (Raghavan et al.
   * 2007), on the same superstep substrate as Bfs/ConnectedComponents.
@@ -33,11 +32,9 @@ import org.apache.spark.storage.StorageLevel
   * sort: the plurality/min-tie vote is the struct-ordering maximum of
   * (count, -label), so the round never pays a WindowExec sort over the
   * adjacency. Cost is O(|E|) rows per round with no quadratic term. The
-  * edge relation is persisted once and reused across rounds; labels are
-  * lazily checkpointed per round and the final labelling is materialized
-  * eagerly before the edge cache is released (fixed rounds mean no
-  * in-loop convergence action exists to pin the cache, unlike
-  * ConnectedComponents' per-round exact-sum).
+  * edge relation is laid out once by the joined end ([[Superstep]]) and
+  * each round's labelling is materialized before the previous one is
+  * released.
   */
 object LabelProp {
 
@@ -48,35 +45,20 @@ object LabelProp {
     */
   def run(spark: SparkSession, und: DataFrame, rounds: Int): DataFrame = {
     val fwd = und.select(col("u").cast("long"), col("v").cast("long"))
-    val edges = fwd.select(col("u").as("a"), col("v").as("b"))
+    val both = fwd.select(col("u").as("a"), col("v").as("b"))
       .unionAll(fwd.select(col("v").as("a"), col("u").as("b")))
-      // each round joins labels on the b side; sorted so the per-round
-      // SMJ consumes the cached layout sort-free (r14, see Bfs.scala)
-      .repartition(col("b")).sortWithinPartitions("b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("a").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(eager = false)
-    // every round's lazy checkpoint materializes during `out`'s eager job
-    // below and is dead the moment it completes — collect and release
-    // them all (Checkpoints.scala; fixed rounds mean no in-loop action
-    // exists to release against)
-    val hist = scala.collection.mutable.ListBuffer(labels)
-    for (_ <- 1 to rounds) {
-      val votes = edges.join(labels, edges("b") === labels("node"))
-        .select(edges("a"), col("lbl"))
-        .unionAll(labels.select(col("node").as("a"), col("lbl")))
-      labels = votes
-        .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("a").as("node"))
-        .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-        .localCheckpoint(eager = false)
-      hist += labels
-    }
-    val out = labels.select(col("node"), col("lbl").as("community"))
-      .localCheckpoint(eager = true)
-    Checkpoints.release(hist.toSeq: _*)
-    edges.unpersist()
-    out
+    // each round joins labels on the b side
+    Superstep.layout(both, "b") { edges =>
+      val init = edges.select(col("a").as("node")).distinct()
+        .withColumn("lbl", col("node"))
+      Superstep.iterate(init, rounds) { (labels, _) =>
+        edges.join(labels, edges("b") === labels("node"))
+          .select(edges("a"), col("lbl"))
+          .unionAll(labels.select(col("node").as("a"), col("lbl")))
+          .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("c"))
+          .groupBy(col("a").as("node"))
+          .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
+      }(Superstep.never)._1
+    }.select(col("node"), col("lbl").as("community"))
   }
 }

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** DAG longest-path layering (topological levels): layer(v) = length of the
   * longest directed path ending at v — the level assignment a scheduler /
@@ -20,11 +19,12 @@ import org.apache.spark.storage.StorageLevel
   * relax forever, so `maxRounds` is a cycle guard that fails fast with a
   * clear message instead of looping.
   *
-  * Scale notes: the edge relation is persisted partitioned by src once and
-  * every superstep reuses that exchange; the frontier shrinks to the deep
-  * tail after the first rounds (most vertices settle at small layers), so
-  * late rounds join a tiny frontier against the pre-partitioned edges.
-  * `localCheckpoint` keeps the plan O(1) in rounds.
+  * Scale notes: the edge relation is laid out by src once ([[Superstep]])
+  * and every superstep reuses that exchange; the frontier shrinks to the
+  * deep tail after the first rounds (most vertices settle at small
+  * layers), so late rounds join a tiny frontier against the
+  * pre-partitioned edges. Each round's layer map is a Superstep frame, so
+  * the plan stays O(1) in rounds.
   */
 object Layers {
 
@@ -43,82 +43,46 @@ object Layers {
     * @return DataFrame(node: Long, layer: Long)
     */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 64,
-          driverFinishMaxEdges: Long = 5000000L): DataFrame = {
-    val dedup = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    // `> 0` keeps "0 disables the driver tier" literal even for an
-    // empty edge relation (count() <= 0 must not take the driver path)
-    if (driverFinishMaxEdges > 0 && dedup.count() <= driverFinishMaxEdges) {
-      import spark.implicits._
-      val (srcA, dstA) = DriverGraph.collectEdges(dedup)
-      Checkpoints.release(dedup)
-      return kahnLayers(srcA, dstA, maxRounds).toSeq.toDF("node", "layer")
-    }
-    val adj = dedup
-      .repartition(col("src")).sortWithinPartitions("src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // lazy checkpoint (not persist): the count below materializes it in
-    // the same job, and Checkpoints.release can free it the moment the
-    // first merged round replaces it — a persist here leaked one pinned
-    // node-set frame per Layers.run call for the whole session
-    var layer = adj.select(col("src").as("node"))
-      .unionAll(adj.select(col("dst").as("node")))
-      .distinct()
-      .select(col("node"), lit(0L).as("layer"))
-      .localCheckpoint(eager = false)
-    var frontier = layer
-    // the checkpoint the current `layer`/`frontier` frames read through —
-    // released as soon as a newer materialized round supersedes it
-    var live = layer
-    var round = 0
-    var improvedN = frontier.count()
-
-    while (improvedN > 0) {
-      round += 1
-      if (round > maxRounds) {
-        adj.unpersist()
-        // failure path releases its pinned frames too — a repeatedly
-        // failing query must not accumulate dead BlockManager blocks
-        Checkpoints.release(dedup, live)
-        throw new IllegalStateException(
-          s"Layers: no fixpoint after $maxRounds rounds — the edge relation " +
-            "has a cycle (or raise maxRounds for a deeper DAG)")
-      }
-      val cand = frontier
-        .select(col("node").as("fnode"), (col("layer") + 1L).as("cl"))
-        .join(adj, col("fnode") === col("src"))
-        .groupBy(col("dst"))
-        .agg(max(col("cl")).as("cand"))
-        .select(col("dst").as("node"), col("cand"))
-      // ONE full-outer join both merges the relaxation into the layer map
-      // and flags the improved rows (the round-7 rewrite: the previous
-      // join + anti-join + union shape paid an extra exchange per round)
-      val merged = layer.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          greatest(coalesce(col("layer"), lit(0L)),
-            coalesce(col("cand"), lit(0L))).as("layer"),
-          (coalesce(col("cand"), lit(-1L)) >
-            coalesce(col("layer"), lit(0L))).as("up"))
-        .localCheckpoint(eager = false)
-      val improved = merged.where(col("up")).select("node", "layer")
-      improvedN = improved.count() // materializes merged
-      if (improvedN > 0) {
-        layer = merged.select("node", "layer")
-        frontier = improved
-        Checkpoints.release(live) // superseded by the materialized merged
-        live = merged
+          driverFinishMaxEdges: Long = 5000000L): DataFrame =
+    Superstep.layout(
+        edges.select(col("src").cast("long"), col("dst").cast("long"))
+          .distinct(),
+        "src") { adj =>
+      // `> 0` keeps "0 disables the driver tier" literal even for an
+      // empty edge relation (count() <= 0 must not take the driver path)
+      if (driverFinishMaxEdges > 0 && adj.count() <= driverFinishMaxEdges) {
+        import spark.implicits._
+        val (srcA, dstA) = DriverGraph.collectEdges(adj)
+        kahnLayers(srcA, dstA, maxRounds).toSeq.toDF("node", "layer")
       } else {
-        // no-change round: the returned layer still reads `live`; only
-        // this round's merged frame is dead
-        Checkpoints.release(merged)
+        // every vertex starts at layer 0, all of it the first frontier
+        val init = adj.select(col("src").as("node"))
+          .unionAll(adj.select(col("dst").as("node")))
+          .distinct()
+          .select(col("node"), lit(0L).as("layer"), lit(true).as("up"))
+        Superstep.iterate(init, Int.MaxValue) { (layer, round) =>
+          if (round > maxRounds) throw new IllegalStateException(
+            s"Layers: no fixpoint after $maxRounds rounds — the edge " +
+              "relation has a cycle (or raise maxRounds for a deeper DAG)")
+          val cand = layer.where(col("up"))
+            .select(col("node").as("fnode"), (col("layer") + 1L).as("cl"))
+            .join(adj, col("fnode") === col("src"))
+            .groupBy(col("dst"))
+            .agg(max(col("cl")).as("cand"))
+            .select(col("dst").as("node"), col("cand"))
+          // ONE full-outer join both merges the relaxation into the layer
+          // map and flags the improved rows (the round-7 rewrite: the
+          // previous join + anti-join + union shape paid an extra exchange
+          // per round)
+          layer.join(cand, Seq("node"), "full_outer")
+            .select(col("node"),
+              greatest(coalesce(col("layer"), lit(0L)),
+                coalesce(col("cand"), lit(0L))).as("layer"),
+              (coalesce(col("cand"), lit(-1L)) >
+                coalesce(col("layer"), lit(0L))).as("up"))
+        }(_.where(col("up")).count() == 0)._1.select("node", "layer")
       }
     }
-    adj.unpersist()
-    Checkpoints.release(dedup) // adj (its only reader) is gone
-    layer
-  }
 
   /** In-memory Kahn topological longest-path: layer(v) = length of the
     * longest directed path ending at v, on the primitive CSR

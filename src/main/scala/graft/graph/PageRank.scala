@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Damped PageRank in FIXED-POINT integer arithmetic (scores scaled by
@@ -23,15 +23,14 @@ import org.apache.spark.sql.functions._
   * node has at least one outgoing AND one incoming edge (symmetric graphs
   * qualify); dangling-mass redistribution is out of scope.
   *
-  * Scale design: one outdegree aggregation up front, then per iteration ONE
-  * join of the rank relation against edges on src (both hash-partitioned on
-  * the same key — AQE reuses the layout) and ONE aggregation on dst; the
-  * degree re-join keys on the same node id. Eager `localCheckpoint` per
-  * iteration truncates the growing lineage so round R plans O(1) stages,
-  * not O(R) (the q26_sssp discipline), and the superseded rank frame is
-  * released immediately (Checkpoints.scala) so at most two rank frames
-  * are ever pinned. One job per iteration; no windows, no driver-side
-  * data.
+  * Scale design: the edges are laid out once by src ([[Superstep]]), one
+  * outdegree aggregation seeds the rank relation (node, outdeg, pr), then
+  * per iteration ONE join of the rank relation against the layout and ONE
+  * aggregation on dst; the re-join onto the previous rank relation (for
+  * outdeg) keys on the same node id. Each iteration's rank relation is a
+  * Superstep frame, so round R plans O(1) stages and at most two rank
+  * frames are ever pinned. One job per iteration; no windows, no
+  * driver-side data.
   */
 object PageRank {
 
@@ -39,41 +38,14 @@ object PageRank {
   val Scale: Long = 1000000000000L
 
   /** @param edges directed (src, dst) BIGINT pairs, pre-deduplicated. */
-  def run(s: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    // r13: hash-partition the edge relation on the propagation key ONCE
-    // and persist it (the Bfs/ConnectedComponents adjacency discipline,
-    // guide §2.4): every iteration's rank⋈edges join consumes exactly
-    // this layout, so the per-iteration edge exchange AND the repeated
-    // source re-scan both disappear — at scale the edge relation is the
-    // big side and was crossing the wire once per iteration.
-    val e = edges.repartition(col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(eager = true) // reused every iteration
-    val n = deg.count()
-    if (n == 0) { e.unpersist(blocking = false) }
-    require(n > 0, "PageRank.run: empty edge relation (no nodes to rank)")
-    val pr0 = Scale / n
-    val teleport = 15L * pr0 / 100L
-
-    var pr = deg.select(col("src").as("node"), col("outdeg"),
-      lit(pr0).as("pr"))
-    // EAGER checkpoint per iteration so the superseded rank frame can be
-    // released immediately (Checkpoints.scala): the previous lazy-everywhere
-    // shape pinned every iteration's rank relation until the caller's final
-    // action — O(iters) frames live at once, and none freed until a driver
-    // GC the session may never run
-    var live: DataFrame = null
-    for (_ <- 1 to iters) {
-      val nxt = step(pr, e, deg, teleport).localCheckpoint(eager = true)
-      Checkpoints.release(live)
-      live = nxt
-      pr = nxt
+  def run(s: SparkSession, edges: DataFrame, iters: Int): DataFrame =
+    Superstep.layout(edges, "src") { e =>
+      val deg = outdeg(e)
+      val n = deg.count()
+      require(n > 0, "PageRank.run: empty edge relation (no nodes to rank)")
+      val pr0 = Scale / n
+      iterate(e, deg.withColumn("pr", lit(pr0)), lit(15L * pr0 / 100L), iters)
     }
-    if (iters >= 1) Checkpoints.release(deg) // final pr no longer reads it
-    e.unpersist(blocking = false) // final pr is materialized above
-    pr.select("node", "pr")
-  }
 
   /** Personalized PageRank: the random surfer teleports ONLY to the
     * `sources` set (pr_0 = SCALE div |S| on sources, 0 elsewhere; the
@@ -87,68 +59,50 @@ object PageRank {
     // dedup FIRST: pr0 sizes the teleport mass per seed, and a duplicated
     // seed must not silently shrink the total mass below SCALE
     val srcs = sources.distinct
-    // partition-once + persist, as in run() (r13)
-    val e = edges.repartition(col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(eager = true)
-    if (deg.limit(1).count() == 0) {
-      Checkpoints.release(deg) // failure paths free their pinned frames
-      e.unpersist(blocking = false)
-      throw new IllegalArgumentException(
-        "runPersonalized: empty edge relation")
-    }
-    // every seed must rank — a seed with no out-edges is absent from deg
-    // and would silently drop from the init AND the teleport term, so the
-    // documented "teleports ONLY to the sources set" contract would hold
-    // less than SCALE mass; fail fast instead
-    val present = deg.filter(col("src").isin(srcs: _*)).count()
-    if (present != srcs.size) {
-      Checkpoints.release(deg)
-      e.unpersist(blocking = false)
-      throw new IllegalArgumentException(
+    Superstep.layout(edges, "src") { e =>
+      val deg = outdeg(e)
+      require(!deg.isEmpty, "runPersonalized: empty edge relation")
+      // every seed must rank — a seed with no out-edges is absent from deg
+      // and would silently drop from the init AND the teleport term, so the
+      // documented "teleports ONLY to the sources set" contract would hold
+      // less than SCALE mass; fail fast instead
+      val present = deg.filter(col("node").isin(srcs: _*)).count()
+      require(present == srcs.size,
         s"runPersonalized: ${srcs.size - present} seed(s) have no outgoing " +
           "edge — every source must appear as an edge src")
+      val pr0 = Scale / srcs.size
+      def seeded(v: Long) =
+        when(col("node").isin(srcs: _*), lit(v)).otherwise(lit(0L))
+      iterate(e, deg.withColumn("pr", seeded(pr0)), seeded(15L * pr0 / 100L),
+        iters)
     }
-    val pr0 = Scale / srcs.size
-    val tele = 15L * pr0 / 100L
-    val srcList = srcs.mkString(", ")
-    var pr = deg.selectExpr("src AS node", "outdeg",
-      s"CASE WHEN src IN ($srcList) THEN ${pr0}L ELSE 0L END AS pr")
-    // eager checkpoint + release of the superseded frame — see run()
-    var live: DataFrame = null
-    for (_ <- 1 to iters) {
-      val nxt = {
-        val inflow = pr.as("p").join(e.as("e"), expr("p.node = e.src"))
-          .selectExpr("e.dst AS node", "p.pr div p.outdeg AS contrib")
-          .groupBy("node").agg(sum("contrib").as("inflow"))
-        inflow.as("i").join(deg.as("d"), expr("i.node = d.src"))
-          .selectExpr("i.node", "d.outdeg",
-            s"CASE WHEN i.node IN ($srcList) THEN ${tele}L ELSE 0L END " +
-              "+ (85 * i.inflow) div 100 AS pr")
-          .localCheckpoint(eager = true)
-      }
-      Checkpoints.release(live)
-      live = nxt
-      pr = nxt
-    }
-    if (iters >= 1) Checkpoints.release(deg)
-    e.unpersist(blocking = false) // final pr is materialized above
-    pr.select("node", "pr")
   }
 
-  /** One rank iteration — exposed so PlanSpec can lock the pre-checkpoint
-    * plan shape (partial+final inflow combine). Qualified dataset aliases
-    * throughout: pr re-enters the join against edges/deg every iteration,
-    * so unqualified columns would trip Spark's ambiguous-self-join check.
+  /** (node, outdeg) over the laid-out edges. */
+  private def outdeg(e: DataFrame): DataFrame =
+    e.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
+
+  /** The one rank loop of [[run]] and [[runPersonalized]]. */
+  private def iterate(e: DataFrame, init: DataFrame, teleport: Column,
+      iters: Int): DataFrame =
+    Superstep.iterate(init, iters) { (pr, _) => step(pr, e, teleport) }(
+      Superstep.never)._1.select("node", "pr")
+
+  /** One rank iteration over (node, outdeg, pr) — exposed so PlanSpec can
+    * lock the pre-checkpoint plan shape (partial+final inflow combine).
+    * `teleport` is evaluated per `node`. Qualified dataset aliases
+    * throughout: pr re-enters the join against edges and itself every
+    * iteration, so unqualified columns would trip Spark's ambiguous
+    * self-join check.
     */
-  private[graft] def step(pr: DataFrame, edges: DataFrame, deg: DataFrame,
-      teleport: Long): DataFrame = {
+  private[graft] def step(pr: DataFrame, edges: DataFrame,
+      teleport: Column): DataFrame = {
     val inflow = pr.as("p").join(edges.as("e"), expr("p.node = e.src"))
       .selectExpr("e.dst AS node", "p.pr div p.outdeg AS contrib")
       .groupBy("node").agg(sum("contrib").as("inflow"))
-    inflow.as("i").join(deg.as("d"), expr("i.node = d.src"))
-      .selectExpr("i.node", "d.outdeg",
-        s"$teleport + (85 * i.inflow) div 100 AS pr")
+    inflow.as("i").join(pr.as("d"), expr("i.node = d.node"))
+      .selectExpr("i.node", "d.outdeg", "i.inflow")
+      .select(col("node"), col("outdeg"),
+        (teleport + expr("(85 * inflow) div 100")).as("pr"))
   }
 }

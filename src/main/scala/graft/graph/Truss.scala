@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * (a < b < c) orientation — the q25 formulation whose per-bucket cap
   * upstream bounds fan-out — and each triangle credits its three edges
   * via a projection union + one count aggregate. Edge sets shrink
-  * monotonically, so later passes are cheaper; `localCheckpoint` cuts
-  * the per-pass lineage.
+  * monotonically, so later passes are cheaper; each pass's edge set is a
+  * [[Superstep]] frame, so the lineage stays one pass deep.
   */
 object Truss {
 
@@ -31,9 +31,8 @@ object Truss {
           rounds: Int): DataFrame = {
     require(k >= 3, s"k=$k must be >= 3")
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    var e = edges.select(col("u").cast("long"), col("v").cast("long"))
+    val init = edges.select(col("u").cast("long"), col("v").cast("long"))
       .where(col("u") < col("v")).distinct()
-      .localCheckpoint(eager = true)
 
     // Degree-ordered triangle enumeration (Suri & Vassilvitskii's "curse
     // of the last reducer" fix): orient every edge from its (degree, id)-
@@ -75,14 +74,9 @@ object Truss {
         .groupBy("u", "v").agg(count(lit(1)).as("support"))
     }
 
-    for (_ <- 1 to rounds) {
-      val prev = e
-      e = support(e).where(col("support") >= k - 2).select("u", "v")
-        .localCheckpoint(eager = true)
-      // the refined edge set is materialized — its input is dead
-      // (Checkpoints.scala; the q43_scc in-session degradation)
-      Checkpoints.release(prev)
-    }
+    val (e, _) = Superstep.iterate(init, rounds) { (cur, _) =>
+      support(cur).where(col("support") >= k - 2).select("u", "v")
+    }(Superstep.never)
     e.join(support(e), Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("support"), lit(0L)).as("support"))

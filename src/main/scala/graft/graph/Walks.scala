@@ -14,19 +14,19 @@ import org.apache.spark.sql.functions._
   * vertex, so the whole trajectory is a pure function of (seed, salt) —
   * re-runs and the DuckDB oracle replay it node for node.
   *
-  * Scale design: the adjacency is indexed ONCE — `idx` (rank of dst in
-  * src's neighbor list) and `deg` share one src exchange (ordered
-  * ROW_NUMBER + unordered COUNT over the same partition key, the
-  * ds_qfilter discipline) and the relation is lazily checkpointed so all
-  * `steps` lookups reuse the materialized partitions. Each step is TWO
+  * Scale design: the adjacency is laid out ONCE by src ([[Superstep]]),
+  * which gives the node-sized degree relation without another exchange,
+  * and indexed ONCE into a second layout on the exact-lookup key
+  * (src, idx), idx = rank of dst in src's neighbor list. Each step is TWO
   * equi-joins sized by the FRONTIER, not the graph: (node = src) against
-  * the node-sized degree relation computes the wanted index, then
+  * the degree relation computes the wanted index, then
   * (node, want_idx) = (src, idx) is an exact one-row lookup into the
   * indexed adjacency — a hub vertex with 10^6 neighbors costs one row,
   * never a fan-out-then-filter. Walks ≪ edges at any SF, so the per-step
   * shuffle carries the walk frontier only (broadcast when it fits, AQE's
   * call); steps are inherently sequential — L joins, L stages, no
-  * driver-side graph data.
+  * driver-side graph data. Each step's frame holds every walk row so
+  * far and is the result after the last step.
   */
 object Walks {
 
@@ -43,57 +43,33 @@ object Walks {
     */
   def run(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
           steps: Int, salt: String): DataFrame = {
-    val w = Window.partitionBy("src").orderBy("dst")
-    val nbr = edges
-      .select(col("src").cast("long"), col("dst").cast("long"))
-      .withColumn("idx", row_number().over(w).cast("long") - 1)
-      .withColumn("deg",
-        count(lit(1)).over(Window.partitionBy("src")).cast("long"))
-      // registered (r14, ADVICE): a library caller's Caches.releaseAll
-      // can free this graph-sized pin; reused by every step's lookup
-      .localCheckpoint(eager = false)
-    graft.Caches.trackPinned(nbr)
-    // node-sized degree relation: a filter on the indexed adjacency, no
-    // second aggregation pass
-    // fresh aliases on both derived relations: `want` (via degs) and the
-    // lookup share nbr's lineage, so unaliased attributes would make the
-    // step-2 join an ambiguous self-join
-    val degs = nbr.filter(col("idx") === 0L)
-      .select(col("src").as("dsrc"), col("deg").as("ddeg"))
-    // pre-partitioned on the exact-lookup key and checkpointed ONCE
-    // (r13): every step's (at, want_idx) = (lsrc, lidx) join consumes
-    // this layout, so the per-step exchange of the graph-sized indexed
-    // adjacency disappears — only the walk-sized frontier moves per
-    // step (guide §2.4; the co-partitioning requires ALL join keys, so
-    // partitioning by lsrc alone would not be reused)
-    val look = nbr.select(col("src").as("lsrc"), col("idx").as("lidx"),
-      col("dst").as("ldst"))
-      // sorted on the full lookup key too (r14): the checkpoint preserves
-      // ordering, so each step's SMJ stops re-sorting the graph-sized
-      // lookup relation — only the walk-sized frontier side sorts
-      .repartition(col("lsrc"), col("lidx"))
-      .sortWithinPartitions("lsrc", "lidx")
-      .localCheckpoint(eager = false)
-    graft.Caches.trackPinned(look) // releasable by library callers (r14)
-
-    var frontier = seeds
-      .select(col("walk_id").cast("long"), col("node").cast("long"))
-    var out = frontier.select(col("walk_id"), lit(0).as("step"), col("node"))
-    for (t <- 1 to steps) {
-      val h = expr(
-        s"CAST(conv(substring(md5(concat('wk$salt:', " +
-          s"CAST(walk_id AS STRING), ':$t')), 1, 15), 16, 10) AS BIGINT)")
-      val want = frontier.join(degs, frontier("node") === degs("dsrc"))
-        .select(col("walk_id"), col("node").as("at"),
-          (h % col("ddeg")).as("want_idx"))
-      val next = want.join(look,
-          want("at") === look("lsrc") && want("want_idx") === look("lidx"))
-        .select(col("walk_id"), col("ldst").as("node"))
-        .localCheckpoint(eager = false) // cut lineage: O(1) plan per step
-      out = out.unionAll(
-        next.select(col("walk_id"), lit(t).as("step"), col("node")))
-      frontier = next
+    Superstep.layout(
+        edges.select(col("src").cast("long"), col("dst").cast("long")),
+        "src") { adj =>
+      val degs = adj.groupBy("src").agg(count(lit(1)).as("ddeg"))
+        .select(col("src").as("dsrc"), col("ddeg"))
+      // the co-partitioning requires ALL join keys, so a layout on lsrc
+      // alone would be re-exchanged by every step's lookup
+      val indexed = adj.select(col("src").as("lsrc"),
+        (row_number().over(Window.partitionBy("src").orderBy("dst")) - 1)
+          .cast("long").as("lidx"),
+        col("dst").as("ldst"))
+      Superstep.layout(indexed, "lsrc", "lidx") { look =>
+        val init = seeds.select(col("walk_id").cast("long"), lit(0).as("step"),
+          col("node").cast("long"))
+        Superstep.iterate(init, steps) { (walked, t) =>
+          val h = expr(
+            s"CAST(conv(substring(md5(concat('wk$salt:', " +
+              s"CAST(walk_id AS STRING), ':$t')), 1, 15), 16, 10) AS BIGINT)")
+          val frontier = walked.filter(col("step") === t - 1)
+          val want = frontier.join(degs, frontier("node") === degs("dsrc"))
+            .select(col("walk_id"), col("node").as("at"),
+              (h % col("ddeg")).as("want_idx"))
+          walked.unionAll(want.join(look,
+              want("at") === look("lsrc") && want("want_idx") === look("lidx"))
+            .select(col("walk_id"), lit(t).as("step"), col("ldst").as("node")))
+        }(Superstep.never)._1
+      }
     }
-    out
   }
 }

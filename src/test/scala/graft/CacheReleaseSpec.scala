@@ -60,4 +60,15 @@ class CacheReleaseSpec extends AnyFunSuite {
     Caches.releaseAll(spark)
     assert(Caches.trackedCount(spark) == 0)
   }
+
+  test("untrack drops exactly the released frame's registration") {
+    Caches.releaseAll(spark)
+    val kept = Caches.track(spark.range(10).toDF())
+    val released = Caches.track(spark.range(20).toDF())
+    released.unpersist(blocking = true)
+    Caches.untrack(released)
+    assert(Caches.trackedCount(spark) == 1)
+    Caches.releaseAll(spark)
+    assert(kept.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
 }

@@ -3,7 +3,8 @@ package graft.graph
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Locks the Checkpoints.release discipline: an iterative operator must
+/** Locks the release discipline of [[Superstep]] (and of the hand-rolled
+  * loops on Checkpoints.release): an iterative operator must
   * not leave one pinned BlockManager frame per ITERATION behind — only
   * its result lineage (O(1) frames, or O(peels) for Scc's parts). The
   * round-7 driver session measured the failure mode this prevents:
@@ -147,7 +148,90 @@ class CheckpointHygieneSpec extends AnyFunSuite {
     val chain = (3L until 13L).flatMap(i => Seq((i, i + 1), (i + 1, i)))
     val edges = (k4 ++ chain).toDF("src", "dst")
     val out = KCore.run(spark, edges, k = 2).collect()
-    assert(out.length == 4) // the K4 survives k=2? chain peels off
+    assert(out.length == 4) // the K4 survives k=2; the chain peels off
     assert(pinned - base <= 1, s"pinned ${pinned - base} frames (want <=1)")
+  }
+
+  /** Runs `body` from a clean baseline; at most `budget` frames may stay
+    * pinned after it, and every one of them must be registered with
+    * Caches, so `Caches.releaseAll` returns to the baseline.
+    */
+  private def assertReleased(what: String, budget: Int)(body: => Unit): Unit = {
+    clearAll()
+    val base = pinned
+    body
+    val left = pinned - base
+    assert(left <= budget, s"$what pinned $left frames (want <=$budget)")
+    graft.Caches.releaseAll(spark)
+    assert(pinned == base,
+      s"$what: ${pinned - base} frames survive Caches.releaseAll")
+  }
+
+  // a 20-node path: 19 rounds, far deeper than any budget
+  private val path20 = (0L until 19L).map(i => (i, i + 1))
+  private val path20Both = (path20 ++ path20.map(_.swap)).toDF("src", "dst")
+  private val path12Und = (0L until 11L).map(i => (i, i + 1)).toDF("u", "v")
+
+  test("Bfs.run pins only its result") {
+    assertReleased("Bfs.run", 1) {
+      val out = Bfs.run(spark, path20.toDF("src", "dst"), Seq(0L)).collect()
+      assert(out.length == 20 && out.forall(r => r.getLong(0) == r.getInt(1)))
+    }
+  }
+
+  test("Bfs.runMulti pins only its result") {
+    assertReleased("Bfs.runMulti", 1) {
+      val out = Bfs.runMulti(spark, path20Both, Seq(0L, 19L)).collect()
+      assert(out.length == 40 && out.map(_.getInt(2)).max == 19)
+    }
+  }
+
+  test("LabelProp pins only its result") {
+    assertReleased("LabelProp", 1) {
+      val out = LabelProp.run(spark, path12Und, rounds = 8).collect()
+      assert(out.length == 12)
+    }
+  }
+
+  test("Truss pins only its result") {
+    assertReleased("Truss", 1) {
+      // K4 plus a pendant chain: 4-truss refinement keeps the K4's edges
+      val k4 = for { a <- 0L to 3L; b <- (a + 1) to 3L } yield (a, b)
+      val chain = (3L until 9L).map(i => (i, i + 1))
+      val out = Truss.run(spark, (k4 ++ chain).toDF("u", "v"), k = 4,
+        rounds = 6).collect()
+      assert(out.length == 6 && out.forall(_.getLong(2) == 2L))
+    }
+  }
+
+  test("Katz pins only its result") {
+    assertReleased("Katz", 1) {
+      val out = Katz.run(spark, path12Und, horizon = 6, invAlpha = 4)
+        .collect()
+      assert(out.length == 12)
+    }
+  }
+
+  test("Betweenness pins only its result") {
+    assertReleased("Betweenness", 1) {
+      val out = Betweenness.run(spark, path12Und, nPivots = 2, horizon = 6)
+        .collect()
+      assert(out.nonEmpty)
+    }
+  }
+
+  test("anfOn pins only its result") {
+    assertReleased("anfOn", 1) {
+      assert(GraphQueries.anfOn(path12Und).collect().length == 12)
+    }
+  }
+
+  test("Walks pins only its result") {
+    assertReleased("Walks", 1) {
+      val seeds = Seq((1L, 0L), (2L, 10L)).toDF("walk_id", "node")
+      val out = Walks.run(spark, path20Both, seeds, steps = 8, salt = "h")
+        .collect()
+      assert(out.length == 18)
+    }
   }
 }

@@ -15,17 +15,17 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
 
   test("iterative adjacency layout: pre-sorted persisted edges drop the per-round sort") {
-    // r14: every superstep engine persists its edge relation
-    // repartition(key) + sortWithinPartitions(key). The InMemoryRelation
-    // preserves the cached plan's output ordering, so each round's
-    // sort-merge join consumes the layout exchange- AND sort-free on the
-    // edge side — with the unsorted r13 layout the SMJ re-sorted the
-    // graph-sized side every round. Locked comparatively: same round
-    // plan, both layouts, the sorted one must plan strictly fewer sorts.
+    // every superstep engine lays its edges out through Superstep.layout
+    // (see its scaladoc). Locked comparatively: same round plan, the
+    // unsorted persisted layout and Superstep's, the latter must plan
+    // strictly fewer sorts; and Coreness's round join must read its edge
+    // side from the layout with no exchange.
     import org.apache.spark.sql.functions._
     import org.apache.spark.storage.StorageLevel
     import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.graph.Superstep
     val prevThr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -50,14 +50,26 @@ class PlanSpec extends AnyFunSuite {
       }
       val unsorted = edges.repartition(col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val sorted = edges.repartition(col("src")).sortWithinPartitions("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
       val freeU = edgeSideSortFree(unsorted)
-      val freeS = edgeSideSortFree(sorted)
+      val freeS = Superstep.layout(edges, "src")(edgeSideSortFree)
       unsorted.unpersist(blocking = false)
-      sorted.unpersist(blocking = false)
       assert(!freeU, "unsorted layout unexpectedly sort-free (test stale)")
       assert(freeS, "sorted layout did not remove the per-round edge sort")
+      // Coreness joins each round's values on dst: its layout's scan must
+      // feed the round join directly
+      val corenessEdgeSide = Superstep.layout(edges, "dst") { e =>
+        e.count()
+        val vals = e.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("c")).localCheckpoint(eager = true)
+        graft.graph.Coreness.round(e, vals).queryExecution.executedPlan
+          .collectFirst { case j: SortMergeJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "dst")) =>
+              j.left }
+      }
+      assert(corenessEdgeSide.nonEmpty, "expected a sort-merge round join")
+      assert(corenessEdgeSide.get.collectFirst {
+        case x: ShuffleExchangeExec => x }.isEmpty,
+        s"Coreness round join re-exchanges its edges:\n${corenessEdgeSide.get}")
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThr)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
@@ -211,7 +223,7 @@ class PlanSpec extends AnyFunSuite {
       .localCheckpoint(eager = true)
     val pr = deg.select(col("src").as("node"), col("outdeg"),
       lit(1000L).as("pr"))
-    val plan = formatted(graft.graph.PageRank.step(pr, edges, deg, 150L))
+    val plan = formatted(graft.graph.PageRank.step(pr, edges, lit(150L)))
     assert(plan.contains("partial_sum"), s"no partial inflow combine:\n$plan")
   }
 

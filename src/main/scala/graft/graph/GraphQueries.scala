@@ -1071,33 +1071,34 @@ object GraphQueries {
     */
   def q41_linkpred(s: SparkSession, dir: String): DataFrame = {
     Tables.load(s, dir, "lineitem").createOrReplaceTempView("__li41")
-    // ek (the capped edge relation) is consumed THREE times (sdeg + both
-    // self-join sides); inlined, each mention re-ran the corpus DISTINCT
-    // and the pdeg cap join (guide §7.2 duplicated subtrees). Materialize
-    // it once, pre-partitioned on pk so the pair self-join consumes the
-    // layout on both sides with no further exchange (§2.4).
-    s.sql(
-      s"""WITH e AS (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk
-         |           FROM __li41),
-         |pdeg AS (SELECT pk, COUNT(*) AS d FROM e GROUP BY pk)
-         |SELECT e.sk, e.pk FROM e JOIN pdeg ON pdeg.pk = e.pk
-         |WHERE pdeg.d <= $LinkPredCap""".stripMargin)
-      .repartition(col("pk")).sortWithinPartitions("pk")
-      .localCheckpoint(eager = false)
+    // ek (the capped edge relation) is consumed THREE times (sdeg twice +
+    // both self-join sides); inlined, each mention re-ran the corpus
+    // DISTINCT and the pk degree cap (guide §7.2 duplicated subtrees).
+    // Materialize it once, partitioned and sorted on pk, as a persisted
+    // (tracked) relation: its cache scan keeps that layout, so the pair
+    // self-join consumes it on both sides with no exchange and no sort
+    // (§2.4; PlanSpec). A localCheckpoint would not do: under AQE its scan
+    // reports neither partitioning nor ordering. Neither statement uses
+    // WITH: a CTE inside the cached definition keeps later queries from
+    // matching the cache, and one around the cached view fails Spark 4.1's
+    // plan canonicalization (key not found on the layout's pk).
+    graft.Caches.track(s.sql(
+      s"""SELECT sk, pk FROM (
+         |  SELECT sk, pk, COUNT(*) OVER (PARTITION BY pk) AS d
+         |  FROM (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk FROM __li41))
+         |WHERE d <= $LinkPredCap""".stripMargin)
+      .repartition(col("pk")).sortWithinPartitions("pk"))
       .createOrReplaceTempView("__ek41")
+    val sdeg = "(SELECT sk, COUNT(*) AS deg FROM __ek41 GROUP BY sk)"
     s.sql(
-      s"""WITH ek AS (SELECT sk, pk FROM __ek41),
-         |sdeg AS (SELECT sk, COUNT(*) AS deg FROM ek GROUP BY sk),
-         |cn AS (
-         |  SELECT a.sk AS s1, b.sk AS s2, COUNT(*) AS common
-         |  FROM ek a JOIN ek b ON b.pk = a.pk AND a.sk < b.sk
-         |  GROUP BY a.sk, b.sk)
-         |SELECT c.s1, c.s2, c.common, d1.deg AS deg1, d2.deg AS deg2,
+      s"""SELECT c.s1, c.s2, c.common, d1.deg AS deg1, d2.deg AS deg2,
          |       ROUND(CAST(c.common AS DOUBLE)
          |             / (d1.deg + d2.deg - c.common), 6) AS jaccard
-         |FROM cn c
-         |JOIN sdeg d1 ON d1.sk = c.s1
-         |JOIN sdeg d2 ON d2.sk = c.s2
+         |FROM (SELECT a.sk AS s1, b.sk AS s2, COUNT(*) AS common
+         |      FROM __ek41 a JOIN __ek41 b ON b.pk = a.pk AND a.sk < b.sk
+         |      GROUP BY a.sk, b.sk) c
+         |JOIN $sdeg d1 ON d1.sk = c.s1
+         |JOIN $sdeg d2 ON d2.sk = c.s2
          |ORDER BY jaccard DESC, c.s1, c.s2 LIMIT 100""".stripMargin)
   }
 

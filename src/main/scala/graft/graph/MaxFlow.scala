@@ -5,6 +5,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import scala.collection.mutable
@@ -45,10 +46,15 @@ import scala.util.Random
   * by a single `partitionBy`; each later state is a partition-preserving
   * projection of the round's merge, which is also the round's lazy local
   * checkpoint, so the plan stays O(1) in rounds and a round moves
-  * O(messages), not O(state). Message volume is degree-bounded and memoized
-  * by fset; candidate traffic to the driver is bounded by
-  * `candidatesPerVertex` × (meet vertices), the same back-pressure as
-  * `mf.excess.list.max`.
+  * O(messages), not O(state). The merge is cached SERIALIZED
+  * (`MEMORY_AND_DISK_SER`, which `localCheckpoint` keeps): a deserialized
+  * block is sized by Spark's SizeEstimator, which reflectively re-walks the
+  * growing partition's object graph at every 1.1× growth step, and that
+  * walk was about three quarters of the executors' CPU samples on the
+  * 1k-vertex benchmark graph (PERF.md); a serialized block's size is its
+  * byte count. Message volume is degree-bounded and memoized by fset;
+  * candidate traffic to the driver is bounded by `candidatesPerVertex` ×
+  * (meet vertices), the same back-pressure as `mf.excess.list.max`.
   *
   * Why an RDD partitioner and not a Catalyst join: a DataFrame master whose
   * hash partitioning is "remembered" through `localCheckpoint` loses it
@@ -174,7 +180,19 @@ object MaxFlow {
       paths: Seq[(Seq[Long], Long)],
       /** per-round counter records — the reference's round report
         * (A8; ff2/FordFulkerson.java:438-445) */
-      rounds_report: Seq[RoundCounters] = Seq.empty)
+      rounds_report: Seq[RoundCounters] = Seq.empty,
+      /** the exactness-cleanup tier that ran */
+      cleanupTier: CleanupTier = CleanupTier.Off)
+
+  /** Which exactness cleanup ran: none (`exactCleanup = false`), the
+    * one-shot driver pass (residual edges ≤ `driverCleanupMaxEdges`), or
+    * the distributed BFS fallback. */
+  sealed trait CleanupTier
+  object CleanupTier {
+    case object Off extends CleanupTier
+    case object Driver extends CleanupTier
+    case object Distributed extends CleanupTier
+  }
 
   /** Directed intra/inter-round flow deltas: (u,v) → additional flow u→v. */
   type FlowDelta = Map[(Long, Long), Long]
@@ -417,7 +435,8 @@ object MaxFlow {
     * are the round's one shuffle (onto the masters' partitioner), and each
     * master partition merge-joins its own messages in place
     * (ff3/ReduceFF.java:82-137). The merge is the round's lazy local
-    * checkpoint: the round's job caches it, then truncates its lineage.
+    * checkpoint: the round's job caches it, serialized, then truncates its
+    * lineage.
     */
   private def superstep(state: RDD[(Long, VertexState)], part: HashPartitioner,
                         d: Broadcast[FlowDelta], round: Int, conf: Config,
@@ -438,8 +457,17 @@ object MaxFlow {
           val deltas = byDst.remove(id).map(_.iterator).getOrElse(Iterator.empty)
           mergeVertex(id, Iterator(master) ++ deltas, round, conf, Some(ctrs))
         }
-    }.localCheckpoint()
+    }.setName(RoundRddName)
+      // serialized, a block's size is its byte count; deserialized, Spark's
+      // SizeEstimator re-walks every VertexState as the block grows
+      // (localCheckpoint keeps a level already set and only forces useDisk)
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      .localCheckpoint()
   }
+
+  /** The name of each round's merged state RDD, as the Spark UI and
+    * listeners see it. */
+  private[graph] val RoundRddName = "MaxFlow.round"
 
   /** Run max-flow between `sources` and `sinks` over the directed edge
     * relation `edges(src, dst, cap)`.
@@ -591,10 +619,12 @@ object MaxFlow {
     }
 
     var cleanupFlow = 0L
+    var tier: CleanupTier = CleanupTier.Off
     if (conf.exactCleanup) {
       val nResidual = state.map(_.adj.count(_.residualOut > 0).toLong)
         .reduce(_ + _)
       if (nResidual <= conf.driverCleanupMaxEdges) {
+        tier = CleanupTier.Driver
         // Driver-side one-shot: collect the residual graph, run in-memory
         // shortest-augmenting-path to exhaustion, broadcast the deltas
         // back in a single distributed refresh.
@@ -622,6 +652,7 @@ object MaxFlow {
           }
         }
       } else {
+        tier = CleanupTier.Distributed
         // Distributed fallback: each BFS returns a BATCH of vertex-disjoint
         // shortest augmenting paths (vertex-disjoint ⇒ edge-disjoint ⇒
         // their bottlenecks are simultaneously valid), all bottlenecks are
@@ -666,7 +697,7 @@ object MaxFlow {
     if (prevMrdd != null) prevMrdd.unpersist(blocking = false)
     if (prevBc != null) prevBc.destroy()
     Result(engineFlow + cleanupFlow, engineFlow, cleanupFlow, round,
-      assignment.toMap, allPaths.toSeq, reports.toSeq)
+      assignment.toMap, allPaths.toSeq, reports.toSeq, tier)
   }
 
   /** Reference invariant set, applied to one vertex (Config.validate). */
@@ -707,60 +738,118 @@ object MaxFlow {
 
   /** Driver-side exhaustive augmentation over a collected residual graph:
     * shortest-augmenting-path (BFS) until the supersink is unreachable.
-    * Returns (total extra flow, net directed deltas). This is the same
-    * "sequential commit point on the master" role the reference assigns
-    * its RMI ApServer (ff2/ApServer.java) — exactness without per-path
-    * distributed jobs.
+    * Returns (total extra flow, net positive directed deltas, paths). This
+    * is the same "sequential commit point on the master" role the
+    * reference assigns its RMI ApServer (ff2/ApServer.java) — exactness
+    * without per-path distributed jobs.
+    *
+    * The graph is Int-indexed: vertex ids map to 0..n-1, each unordered
+    * vertex pair is one arc pair (2p: lo→hi, 2p+1: hi→lo, so an arc's
+    * reverse is `a ^ 1`) holding residual capacities, and the arcs sit in
+    * CSR order by tail. A BFS is an `Array[Int]` queue and a parent-arc
+    * array, with no boxed tuple keys on the per-path loop.
     */
   private[graph] def residualMaxFlowDriver(
       resid: Array[(Long, Long, Long)]): (Long, FlowDelta, Seq[(Seq[Long], Long)]) = {
-    val cap = mutable.HashMap.empty[(Long, Long), Long]
-    resid.foreach { case (u, v, c) => cap.update((u, v), cap.getOrElse((u, v), 0L) + c) }
-    val adj = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
-    resid.foreach { case (u, v, _) =>
-      adj.getOrElseUpdate(u, mutable.ArrayBuffer.empty) += v
-      adj.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += u // push-back arcs
+    import java.util.Arrays.binarySearch
+    def sortedUnique(xs: Array[Long]): Array[Long] = {
+      java.util.Arrays.sort(xs)
+      var m = 0
+      var i = 0
+      while (i < xs.length) {
+        if (m == 0 || xs(i) != xs(m - 1)) { xs(m) = xs(i); m += 1 }
+        i += 1
+      }
+      java.util.Arrays.copyOf(xs, m)
     }
-    adj.values.foreach { b => val d = b.distinct; b.clear(); b ++= d }
-    val flow = mutable.HashMap.empty[(Long, Long), Long].withDefaultValue(0L)
+    val ids = sortedUnique(resid.map(_._1) ++ resid.map(_._2))
+    val n = ids.length
+    val src = binarySearch(ids, GraphModel.SuperSource)
+    val snk = binarySearch(ids, GraphModel.SuperSink)
+    if (src < 0 || snk < 0) return (0L, Map.empty, Seq.empty)
+    def ix(id: Long): Int = binarySearch(ids, id)
+    def pairKey(a: Int, b: Int): Long =
+      (math.min(a, b).toLong << 32) | math.max(a, b).toLong
+    val keys = sortedUnique(resid.map(r => pairKey(ix(r._1), ix(r._2))))
+    val nArcs = 2 * keys.length
+    val head = new Array[Int](nArcs)
+    val res = new Array[Long](nArcs) // residual capacity per arc
+    var p = 0
+    while (p < keys.length) {
+      head(2 * p) = (keys(p) & 0xFFFFFFFFL).toInt
+      head(2 * p + 1) = (keys(p) >>> 32).toInt
+      p += 1
+    }
+    resid.foreach { case (u, v, c) =>
+      val (iu, iv) = (ix(u), ix(v))
+      val pi = binarySearch(keys, pairKey(iu, iv))
+      res(if (iu < iv) 2 * pi else 2 * pi + 1) += c
+    }
+    val cap = res.clone()
+    // CSR by tail: an arc's tail is the head of its reverse
+    val start = new Array[Int](n + 1)
+    var a = 0
+    while (a < nArcs) { start(head(a ^ 1) + 1) += 1; a += 1 }
+    var i = 0
+    while (i < n) { start(i + 1) += start(i); i += 1 }
+    val out = new Array[Int](nArcs)
+    val fill = start.clone()
+    a = 0
+    while (a < nArcs) {
+      val t = head(a ^ 1); out(fill(t)) = a; fill(t) += 1; a += 1
+    }
+
+    val parentArc = new Array[Int](n)
+    val queue = new Array[Int](n)
     val paths = mutable.ArrayBuffer.empty[(Seq[Long], Long)]
-    def residual(u: Long, v: Long): Long = cap.getOrElse((u, v), 0L) - flow((u, v))
     var total = 0L
     var go = true
     while (go) {
-      val parent = mutable.HashMap.empty[Long, Long]
-      val q = mutable.Queue(GraphModel.SuperSource)
-      parent(GraphModel.SuperSource) = GraphModel.SuperSource
-      while (q.nonEmpty && !parent.contains(GraphModel.SuperSink)) {
-        val u = q.dequeue()
-        for (v <- adj.getOrElse(u, Nil)
-             if !parent.contains(v) && residual(u, v) > 0) {
-          parent(v) = u
-          q.enqueue(v)
+      java.util.Arrays.fill(parentArc, -1)
+      parentArc(src) = nArcs // the root's marker: reached, no arc
+      queue(0) = src
+      var qh = 0
+      var qt = 1
+      while (qh < qt && parentArc(snk) < 0) {
+        val u = queue(qh); qh += 1
+        var k = start(u)
+        while (k < start(u + 1)) {
+          val e = out(k)
+          val v = head(e)
+          if (parentArc(v) < 0 && res(e) > 0) {
+            parentArc(v) = e; queue(qt) = v; qt += 1
+          }
+          k += 1
         }
       }
-      if (!parent.contains(GraphModel.SuperSink)) go = false
+      if (parentArc(snk) < 0) go = false
       else {
         var bn = Long.MaxValue
-        var v = GraphModel.SuperSink
-        while (v != GraphModel.SuperSource) {
-          val u = parent(v); bn = math.min(bn, residual(u, v)); v = u
-        }
-        val pbuf = mutable.ArrayBuffer(GraphModel.SuperSink)
-        v = GraphModel.SuperSink
-        while (v != GraphModel.SuperSource) {
-          val u = parent(v)
-          flow((u, v)) += bn
-          flow((v, u)) -= bn
-          v = u
-          pbuf += v
+        var v = snk
+        while (v != src) { val e = parentArc(v); bn = math.min(bn, res(e)); v = head(e ^ 1) }
+        val pbuf = mutable.ArrayBuffer(ids(snk))
+        v = snk
+        while (v != src) {
+          val e = parentArc(v)
+          res(e) -= bn
+          res(e ^ 1) += bn
+          v = head(e ^ 1)
+          pbuf += ids(v)
         }
         paths += ((pbuf.reverse.toSeq, bn))
         total += bn
       }
     }
-    val delta = flow.iterator.filter(_._2 > 0).map { case (k, f) => k -> f }.toMap
-    (total, delta, paths.toSeq)
+    // net flow lo→hi of pair p is what its forward arc lost
+    val delta = mutable.HashMap.empty[(Long, Long), Long]
+    p = 0
+    while (p < keys.length) {
+      val f = cap(2 * p) - res(2 * p)
+      val (lo, hi) = (ids(head(2 * p + 1)), ids(head(2 * p)))
+      if (f > 0) delta((lo, hi)) = f else if (f < 0) delta((hi, lo)) = -f
+      p += 1
+    }
+    (total, delta.toMap, paths.toSeq)
   }
 
   /** Distributed residual BFS; returns a batch of vertex-disjoint shortest

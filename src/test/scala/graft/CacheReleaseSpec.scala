@@ -21,7 +21,7 @@ class CacheReleaseSpec extends AnyFunSuite {
     */
   private val persistingQueries = Seq(
     "ds_dsir", "ta_textrank", "dd_minhash_lsh", "dd_minhash_est",
-    "dd_crossfuzzy", "dd_embed_cos", "dd_cdc", "ss_opq_topk")
+    "dd_crossfuzzy", "dd_embed_cos", "dd_cdc", "ss_opq_topk", "q41_linkpred")
 
   test("persisting queries release to baseline via Caches.releaseAll " +
       "(no clearSessionCaches)") {

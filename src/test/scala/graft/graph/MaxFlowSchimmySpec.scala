@@ -94,6 +94,49 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
         s"want $vertices masters + $moves messages")
   }
 
+  test("round state is cached serialized (no SizeEstimator walk per block)") {
+    // a deserialized cached block is sized by walking its object graph as
+    // it grows; every round's merged state must be stored serialized, and
+    // localCheckpoint must still have made it disk-backed
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+      SparkListenerStageCompleted}
+    import org.apache.spark.storage.{RDDBlockId, RDDInfo, StorageLevel}
+    class Levels extends SparkListener {
+      val rdds = new java.util.concurrent.ConcurrentHashMap[Int, RDDInfo]()
+      val blocks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, StorageLevel)]()
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+        sc.stageInfo.rddInfos.filter(_.name == MaxFlow.RoundRddName)
+          .foreach(i => rdds.put(i.id, i))
+      override def onBlockUpdated(b: SparkListenerBlockUpdated): Unit =
+        b.blockUpdatedInfo.blockId match {
+          case RDDBlockId(id, _) => blocks.add((id, b.blockUpdatedInfo.storageLevel))
+          case _ =>
+        }
+    }
+    val edges = graft.Probe.smallWorld(n = 1000, k = 4, rewireP = 0.1,
+      maxC = 10, seed = 7L).toDF("src", "dst", "cap")
+    val (sources, sinks) = graft.Probe.terminals(1000)
+    val l = new Levels
+    spark.sparkContext.addSparkListener(l)
+    val r = try MaxFlow.run(spark, edges, sources, sinks) finally {
+      org.apache.spark.graftshim.ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    import scala.jdk.CollectionConverters._
+    val rounds = l.rdds.values.asScala.toSeq
+    assert(r.rounds > 1 && rounds.size == r.rounds,
+      s"${rounds.size} round RDDs seen over ${r.rounds} rounds")
+    rounds.foreach { i =>
+      assert(!i.storageLevel.deserialized && i.storageLevel.useDisk,
+        s"round RDD ${i.id} cached at ${i.storageLevel}")
+    }
+    val stored = l.blocks.asScala.filter(b => l.rdds.containsKey(b._1) && b._2.isValid)
+    assert(stored.nonEmpty, "no round block was stored")
+    stored.foreach { case (id, lvl) =>
+      assert(!lvl.deserialized, s"a block of round RDD $id is stored at $lvl")
+    }
+  }
+
   test("master partitions come from the input, not shuffle.partitions") {
     // a tiny graph on a session at the 200-partition default: both the
     // build's coalesced exchange and a resumed round dir size the masters

@@ -17,6 +17,7 @@ class MaxFlowSpec extends AnyFunSuite {
     val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
     val r = MaxFlow.run(spark, edges, sources, sinks)
     assert(r.flow == 23L, s"got $r")
+    assert(r.cleanupTier == MaxFlow.CleanupTier.Driver, s"got $r")
   }
 
   test("disconnected sink: max-flow 0") {
@@ -100,6 +101,7 @@ class MaxFlowSpec extends AnyFunSuite {
     val approx = MaxFlow.run(spark, edges, sources, sinks,
       MaxFlow.Config(exactCleanup = false))
     assert(approx.cleanupFlow == 0L)
+    assert(approx.cleanupTier == MaxFlow.CleanupTier.Off)
     assert(approx.flow <= 23L && approx.flow >= 0L)
   }
 
@@ -156,14 +158,46 @@ class MaxFlowSpec extends AnyFunSuite {
     val conf = MaxFlow.Config(maxRounds = 0, driverCleanupMaxEdges = 0L)
     val r = MaxFlow.run(spark, edges, sources, sinks, conf)
     assert(r.flow == 23L && r.engineFlow == 0L && r.cleanupFlow == 23L, s"got $r")
+    // the driver tier also finds 23: only the reported tier tells them apart
+    assert(r.cleanupTier == MaxFlow.CleanupTier.Distributed, s"got $r")
     // and on a random graph vs the in-memory oracle
     val got = MaxFlow.run(spark, toDf(redges), Seq(ids.head), Seq(ids.last), conf)
     assert(got.flow == want, s"want=$want got=$got")
+    assert(got.cleanupTier == MaxFlow.CleanupTier.Distributed, s"got $got")
     // fallback paths are recorded like engine paths (flowpaths parity)
     assert(r.paths.nonEmpty && r.paths.map(_._2).sum == 23L)
     r.paths.foreach { case (p, q) =>
       assert(p.head == 1L && p.last == 2L && q > 0)
     }
+  }
+
+  test("driver cleanup on a raw residual graph equals Edmonds-Karp, " +
+      "with a feasible net assignment") {
+    for (seed <- 31 to 36) {
+      val edges = EdmondsKarp.randomGraph(n = 14, edgeProb = 0.25, maxCap = 9, seed = seed)
+      val ids = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      val (sources, sinks) = (ids.take(2), ids.takeRight(2))
+      val terminals = sources.map(s => (1L, s, GraphModel.InfCap)) ++
+        sinks.map(t => (t, 2L, GraphModel.InfCap))
+      // a repeated arc's residuals add up, as EdmondsKarp sums duplicates
+      val resid = (edges ++ edges.take(3) ++ terminals).toArray
+      val want = EdmondsKarp.maxFlow(edges ++ edges.take(3), sources, sinks)
+      val (total, delta, paths) = MaxFlow.residualMaxFlowDriver(resid)
+      assert(total == want, s"seed=$seed want=$want got=$total")
+      val cap = resid.groupMapReduce(r => (r._1, r._2))(_._3)(_ + _)
+      delta.foreach { case ((u, v), f) =>
+        assert(f > 0 && !delta.contains((v, u)), s"seed=$seed: ($u,$v) not net positive")
+        assert(f <= cap.getOrElse((u, v), 0L), s"seed=$seed: cap exceeded on $u→$v")
+      }
+      val net = scala.collection.mutable.HashMap.empty[Long, Long].withDefaultValue(0L)
+      delta.foreach { case ((u, v), f) => net(u) += f; net(v) -= f }
+      assert(net(1L) == total && net(2L) == -total, s"seed=$seed")
+      assert(net.forall { case (k, f) => k <= 2L || f == 0L }, s"seed=$seed: not conserved")
+      assert(paths.map(_._2).sum == total)
+      paths.foreach { case (p, q) => assert(p.head == 1L && p.last == 2L && q > 0) }
+    }
+    assert(MaxFlow.residualMaxFlowDriver(Array((3L, 4L, 5L))) ==
+      ((0L, Map.empty, Seq.empty)))
   }
 
   test("source-only search (mf.sink.excess=false, ff1/FordFulkerson.java:29) stays exact") {

@@ -444,6 +444,45 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), s"cartesian in linkpred:\n$plan")
   }
 
+  test("q41_linkpred: the pair self-join reads the cached pk layout, no exchange or sort") {
+    // under AQE (the session default) a localCheckpoint scan reports
+    // neither partitioning nor ordering, so a checkpointed ek was
+    // re-exchanged and re-sorted on both self-join sides; the persisted
+    // layout's scan feeds the join as it is. Broadcast is off so the
+    // self-join stays a sort-merge join at this scale.
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = graft.graph.GraphQueries.q41_linkpred(spark, sf)
+      df.collect() // the final adaptive plan
+      val aqe = new AdaptiveSparkPlanHelper {}
+      val plan = df.queryExecution.executedPlan
+      val selfJoins = aqe.collect(plan) {
+        case j: SortMergeJoinExec
+          if j.leftKeys.flatMap(_.references.map(_.name)) == Seq("pk") => j
+      }
+      assert(selfJoins.size == 1, s"expected one pk self-join:\n$plan")
+      for (side <- Seq(selfJoins.head.left, selfJoins.head.right)) {
+        assert(aqe.collect(side) { case s: InMemoryTableScanExec => s }.nonEmpty,
+          s"self-join side does not read the cached layout:\n$side")
+        val redone = aqe.collect(side) {
+          case e: ShuffleExchangeExec => e
+          case s: SortExec => s
+        }
+        assert(redone.isEmpty, s"self-join side re-lays out the cache:\n$side")
+      }
+    } finally {
+      spark.conf.set(key, prev)
+      graft.Caches.releaseAll(spark)
+    }
+  }
+
   test("ev_cooccur: pair join runs on the compacted presence relation, one user window") {
     val events = graft.Tables.load(spark, sf, "events")
     val plan = formatted(

@@ -3,7 +3,8 @@ package graft
 import graft.graph.{EdmondsKarp, GraphModel, MaxFlow, Mst}
 import graft.sources.StateIO
 import org.apache.spark.graftshim.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
@@ -109,20 +110,37 @@ object Probe {
     df
   }
 
-  /** Sums shuffle write traffic across all stages while registered. */
+  /** Sums shuffle write traffic across all stages while registered, and
+    * spans the max-flow round jobs: those whose result stage computes a
+    * `MaxFlow.round` RDD (`firstRound` is the earliest start, `lastRound`
+    * the latest end, in epoch ms; -1 before any).
+    */
   private class ShuffleMeter extends SparkListener {
     @volatile var bytes, records, stages = 0L
+    @volatile var firstRound, lastRound = -1L
+    private val rounds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics
       bytes += w.bytesWritten
       records += w.recordsWritten
       stages += 1
     }
+    override def onJobStart(js: SparkListenerJobStart): Unit =
+      // a stage's own RDD heads its rddInfos; the result stage is the last made
+      if (js.stageInfos.maxBy(_.stageId).rddInfos.headOption
+            .exists(_.name == MaxFlow.RoundRddName)) {
+        rounds.add(js.jobId)
+        if (firstRound < 0) firstRound = js.time
+      }
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      if (rounds.contains(je.jobId)) lastRound = math.max(lastRound, je.time)
   }
 
   /** Max-flow on `smallWorld(n)` with its shuffle bytes, records and
-    * stages, checked against Edmonds-Karp up to `OracleCap` vertices (above
-    * it: conservation only), then Borůvka against Kruskal.
+    * stages and its wall time split into build (the call to the first
+    * round job's start), rounds (to the last round job's end) and cleanup
+    * (to the return), checked against Edmonds-Karp up to `OracleCap`
+    * vertices (above it: conservation only), then Borůvka against Kruskal.
     */
   def graph(spark: SparkSession, n: Int): Unit = {
     val (sources, sinks) = terminals(n)
@@ -143,7 +161,9 @@ object Probe {
 
     val meter = new ShuffleMeter
     spark.sparkContext.addSparkListener(meter)
+    val t0 = System.currentTimeMillis()
     val (r, dtMf) = wall(MaxFlow.run(spark, df, sources, sinks))
+    val t1 = System.currentTimeMillis()
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(meter)
     val conserved = StateIO.conservationHolds(r.assignment, r.flow)
@@ -152,6 +172,11 @@ object Probe {
       f"shuffleMB=${meter.bytes / 1e6}%.1f shuffleRecords=${meter.records} " +
       f"stages=${meter.stages} MBperRound=${meter.bytes / 1e6 / r.rounds}%.2f " +
       f"conserved=$conserved ok=${want.forall(_ == r.flow)}")
+    val (first, last) = (meter.firstRound, meter.lastRound)
+    println(f"SCALE maxflow phases build=${(first - t0) / 1e3}%.3f s " +
+      f"rounds=${(last - first) / 1e3}%.3f s cleanup=${(t1 - last) / 1e3}%.3f s")
+    require(r.rounds > 0 && t0 <= first && first <= last && last <= t1,
+      s"round jobs not seen inside the solve: $t0 <= $first <= $last <= $t1")
     require(conserved, "max-flow conservation violated")
     require(want.forall(_ == r.flow), s"max-flow mismatch: got=${r.flow} oracle=$want")
 

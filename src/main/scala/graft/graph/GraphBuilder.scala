@@ -7,17 +7,22 @@ import org.apache.spark.sql.functions._
   * ff3/FordFulkerson.java:19-128 Map0FF/Reduce0FF).
   *
   * Input: the directed edge relation `edges(src, dst, cap)` from
-  * graft.sources.GraphSources. Output: `Dataset[VertexState]` hash-
-  * partitioned by vertex id — the partitioning every superstep reuses
-  * (the reference aligns partitions manually via unsplittable master
-  * files, ff3/FordFulkerson.java:131-136; a persisted Dataset with a
-  * stable HashPartitioning gives the same guarantee for free).
+  * graft.sources.GraphSources. Output: one `VertexState` per vertex, built
+  * like the reference's round 0 in one map/reduce pass: the map emits each
+  * arc from both of its ends and the reduce groups them by vertex id, so
+  * the build is one hash exchange on the id and no join. Its partitioning
+  * is not the masters' layout: `MaxFlow` lays the masters out with its own
+  * `partitionBy` (the reference aligns partitions manually via
+  * unsplittable master files, ff3/FordFulkerson.java:131-136).
   */
 object GraphBuilder {
 
   /** Inject supersource (id 1) / supersink (id 2) terminal edges with
     * "infinite" capacity (T5; ff1/Vertex.java:69-82,
-    * ff3/FordFulkerson.java:19-40) and build per-vertex adjacency.
+    * ff3/FordFulkerson.java:19-40) and build per-vertex adjacency: arc
+    * u→v (cap c) is seen by u as (nbr v, capOut c) and by v as (nbr u,
+    * capIn c), and parallel arcs sum per neighbour (A3). A null cap counts
+    * as 0. The input is read once.
     */
   def buildState(spark: SparkSession, edges: DataFrame,
                  sources: Seq[Long], sinks: Seq[Long]): Dataset[VertexState] = {
@@ -28,26 +33,19 @@ object GraphBuilder {
     val terminal =
       sources.distinct.flatMap(sId => Seq((1L, sId, inf), (sId, 1L, inf))) ++
       sinks.distinct.flatMap(tId => Seq((tId, 2L, inf), (2L, tId, inf)))
-    val all = edges
-      .select(col("src").cast("long"), col("dst").cast("long"), col("cap").cast("long"))
-      .unionAll(terminal.toDF("src", "dst", "cap"))
-      .groupBy("src", "dst").agg(sum("cap").as("cap")) // merge parallel arcs (A3)
-
-    // Directional symmetrization: each side needs (capOut, capIn); missing
-    // reverse arcs become cap-0 rows so push-back residuals exist.
-    val rev = all.select(col("dst").as("src"), col("src").as("dst"),
-      col("cap").as("capIn"))
-    val sym = all.withColumnRenamed("cap", "capOut")
-      .join(rev, Seq("src", "dst"), "full_outer")
-      .na.fill(0L, Seq("capOut", "capIn"))
-
-    sym.select(col("src"), col("dst"), col("capOut"), col("capIn"))
-      .as[(Long, Long, Long, Long)]
+    edges
+      .select(col("src").cast("long"), col("dst").cast("long"),
+        coalesce(col("cap").cast("long"), lit(0L)))
+      .as[(Long, Long, Long)]
+      .union(terminal.toDS())
+      // (id, nbr, capOut, capIn): the arc seen from its tail and its head
+      .flatMap { case (u, v, c) => Iterator((u, v, c, 0L), (v, u, 0L, c)) }
       .groupByKey(_._1)
       .mapGroups { (id, rows) =>
-        val adj = rows.map { case (_, nbr, capOut, capIn) =>
-          Adj(nbr, 0L, capOut, capIn)
-        }.toArray.sortBy(_.nbr) // sorted adjacency, ff4/Vertex.java:31
+        val adj = rows.toSeq
+          .groupMapReduce(_._2)(r => (r._3, r._4))((a, b) => (a._1 + b._1, a._2 + b._2))
+          .map { case (nbr, (capOut, capIn)) => Adj(nbr, 0L, capOut, capIn) }
+          .toArray.sortBy(_.nbr) // sorted adjacency, ff4/Vertex.java:31
         val seed = Array(PathState(Array(id), Array.empty, Array.empty))
         VertexState(id, adj,
           s = if (id == GraphModel.SuperSource) seed else Array.empty,

@@ -54,7 +54,13 @@ import scala.util.Random
   * 1k-vertex benchmark graph (PERF.md); a serialized block's size is its
   * byte count. Message volume is degree-bounded and memoized by fset;
   * candidate traffic to the driver is bounded by `candidatesPerVertex` ×
-  * (meet vertices), the same back-pressure as `mf.excess.list.max`.
+  * (meet vertices), the same back-pressure as `mf.excess.list.max`. Off
+  * the rounds, Catalyst is kept to the ends of the solve: the build is one
+  * exchange and no join ([[GraphBuilder.buildState]]), and the pending
+  * flush and the driver cleanup are RDD jobs on the masters: on the
+  * 1k-vertex benchmark graph a Dataset action spent 38–69 ms planning
+  * before its job started, an RDD action 8–11 ms (PERF.md). A `Dataset` is
+  * built only for durable writes and the distributed cleanup's BFS.
   *
   * Why an RDD partitioner and not a Catalyst join: a DataFrame master whose
   * hash partitioning is "remembered" through `localCheckpoint` loses it
@@ -467,7 +473,7 @@ object MaxFlow {
 
   /** The name of each round's merged state RDD, as the Spark UI and
     * listeners see it. */
-  private[graph] val RoundRddName = "MaxFlow.round"
+  private[graft] val RoundRddName = "MaxFlow.round"
 
   /** Run max-flow between `sources` and `sinks` over the directed edge
     * relation `edges(src, dst, cap)`.
@@ -509,8 +515,6 @@ object MaxFlow {
     val input = initial.rdd
     val part = new HashPartitioner(masterPartitions(spark, input))
     var st: RDD[(Long, VertexState)] = input.map(v => (v.id, v)).partitionBy(part)
-    def rows(s: RDD[(Long, VertexState)]): Dataset[VertexState] =
-      spark.createDataset(s.values)
     var prevMrdd: RDD[(VertexState, Array[Candidate])] = null
     var prevBc: Broadcast[FlowDelta] = null
     var engineFlow = 0L
@@ -524,8 +528,8 @@ object MaxFlow {
     def credit(delta: collection.Map[(Long, Long), Long]): Unit =
       delta.foreach { case (k, v) => assignment.update(k, assignment.getOrElse(k, 0L) + v) }
     // round-tagged dir (kill-safe: never overwritten) + prune to bound storage
-    def durable(ds: Dataset[VertexState], r: Int): Unit = conf.stateDir.foreach { dir =>
-      graft.sources.StateIO.writeRound(ds, dir, r)
+    def durable(s: RDD[VertexState], r: Int): Unit = conf.stateDir.foreach { dir =>
+      graft.sources.StateIO.writeRound(spark.createDataset(s), dir, r)
       graft.sources.StateIO.pruneRounds(spark, dir)
     }
 
@@ -604,17 +608,18 @@ object MaxFlow {
       if (conf.stateDir.nonEmpty && (done || round % conf.checkpointEvery == 0)) {
         // persist the FLUSHED view so resume starts with no pending delta
         val bcF = sc.broadcast(pending)
-        durable(rows(st).map(applyDeltaOnly(_, bcF.value)), round)
+        durable(st.values.map(applyDeltaOnly(_, bcF.value)), round)
         bcF.destroy()
       }
     }
-    // flush any un-applied deltas into the state before cleanup — lazy:
-    // the cleanup's first action (residual count) materializes flush +
-    // count in one pass
-    var state = rows(st)
+    // flush any un-applied deltas into the state before cleanup: a lazy
+    // RDD map over the cached round state, which the driver tier's two
+    // actions (residual count, residual collect) each re-run. No Dataset
+    // action here: each paid its own query planning (Scale notes).
+    var state: RDD[VertexState] = st.values
     if (pending.nonEmpty) {
       val bc = sc.broadcast(pending)
-      state = state.map(applyDeltaOnly(_, bc.value)).localCheckpoint(eager = false)
+      state = state.map(applyDeltaOnly(_, bc.value))
       pending = Map.empty
     }
 
@@ -622,7 +627,7 @@ object MaxFlow {
     var tier: CleanupTier = CleanupTier.Off
     if (conf.exactCleanup) {
       val nResidual = state.map(_.adj.count(_.residualOut > 0).toLong)
-        .reduce(_ + _)
+        .fold(0L)(_ + _)
       if (nResidual <= conf.driverCleanupMaxEdges) {
         tier = CleanupTier.Driver
         // Driver-side one-shot: collect the residual graph, run in-memory
@@ -645,10 +650,8 @@ object MaxFlow {
           // resume then sees a quiescent graph under the next round index.
           if (conf.stateDir.nonEmpty) {
             val bc = sc.broadcast(delta)
-            state = state.map(applyDeltaOnly(_, bc.value))
-              .localCheckpoint(eager = false)
-            durable(state, round + 1)
-            bc.destroy() // writeRound materialized the lazy checkpoint
+            durable(state.map(applyDeltaOnly(_, bc.value)), round + 1)
+            bc.destroy() // writeRound is the refresh's only action
           }
         }
       } else {
@@ -658,9 +661,11 @@ object MaxFlow {
         // their bottlenecks are simultaneously valid), all bottlenecks are
         // read in ONE state collect, and all deltas apply in one refresh —
         // no per-hop or per-path driver round-trips.
+        var pinned: RDD[VertexState] = null // the newest refreshed state
+        val deltas = mutable.ArrayBuffer.empty[Broadcast[FlowDelta]]
         var found = true
         while (found) {
-          val paths = findAugmentingPaths(spark, state)
+          val paths = findAugmentingPaths(spark, spark.createDataset(state))
           if (paths.isEmpty) found = false
           else {
             val ids = paths.flatMap(_.toSeq).toSet
@@ -680,18 +685,24 @@ object MaxFlow {
             }
             credit(delta)
             val bc = sc.broadcast(delta.toMap)
-            val preApply = state
-            state = state.map(applyDeltaOnly(_, bc.value)).localCheckpoint(eager = true)
-            bc.destroy() // eager: already materialized
-            // the eager checkpoint above is self-contained — the state it
-            // replaced is dead (one frame per BFS batch otherwise)
-            Checkpoints.release(preApply)
+            deltas += bc
+            state = state.map(applyDeltaOnly(_, bc.value))
+              .persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
+            state.count()
+            // the checkpoint above is materialized and self-contained — the
+            // state it replaced is dead (one frame per BFS batch otherwise)
+            if (pinned != null) pinned.unpersist(blocking = false)
+            pinned = state
           }
         }
         // same durable contract as the driver-side path: when the fallback
         // found flow, a resume must see the quiescent post-cleanup graph —
         // written as round+1 (never overwriting the newest complete dir)
         if (cleanupFlow > 0) durable(state, round + 1)
+        // a checkpointed map RDD keeps its closure, and every later job
+        // over the frame serializes it: its broadcast lives until here
+        deltas.foreach(_.destroy())
+        if (pinned != null) pinned.unpersist(blocking = false)
       }
     }
     if (prevMrdd != null) prevMrdd.unpersist(blocking = false)

@@ -94,6 +94,35 @@ class MaxFlowSchimmySpec extends AnyFunSuite {
         s"want $vertices masters + $moves messages")
   }
 
+  test("a driver-tier run starts no SQL execution after its build") {
+    // the rounds and the driver cleanup are RDD jobs: a Dataset action
+    // pays its own query planning, more than a small state's work
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    class Executions extends SparkListener {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet()
+        case _ =>
+      }
+    }
+    def executions[T](body: => T): (T, Int) = {
+      val l = new Executions
+      spark.sparkContext.addSparkListener(l)
+      val r = try body finally {
+        org.apache.spark.graftshim.ListenerBusDrain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(l)
+      }
+      (r, l.n.get)
+    }
+    val (edges, sources, sinks) = GraphSources.readDimacs(spark, fixture("clrs.dimacs"))
+    // the build alone, as the run starts it: its partition count is final
+    val (_, build) = executions(GraphBuilder.buildState(spark, edges, sources, sinks).rdd)
+    val (r, run) = executions(MaxFlow.run(spark, edges, sources, sinks))
+    assert(r.flow == 23L && r.cleanupTier == MaxFlow.CleanupTier.Driver, s"got $r")
+    assert(run - build == 0, s"the solve started ${run - build} SQL executions after its build")
+  }
+
   test("round state is cached serialized (no SizeEstimator walk per block)") {
     // a deserialized cached block is sized by walking its object graph as
     // it grows; every round's merged state must be stored serialized, and

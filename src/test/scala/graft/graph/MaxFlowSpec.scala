@@ -4,6 +4,8 @@ import graft.TestSpark
 import graft.sources.GraphSources
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.collection.mutable
+
 class MaxFlowSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -210,6 +212,54 @@ class MaxFlowSpec extends AnyFunSuite {
     assert(r.rounds_report.forall(_.extendT == 0))
     // the engine still finds flow (S paths completing at the supersink)
     assert(r.rounds_report.map(_.acceptedFlow).sum == r.engineFlow)
+  }
+
+  test("buildState equals a driver-built adjacency (parallel, antiparallel, " +
+      "self-loop, terminal-bound and null-cap arcs)") {
+    for (seed <- 41 to 44) {
+      val rng = new scala.util.Random(seed)
+      val ids = (10L until 22L)
+      def pick() = ids(rng.nextInt(ids.length))
+      val random = Seq.fill(40)((pick(), pick(), Option(1L + rng.nextInt(9))))
+      val arcs = random ++
+        random.take(5) ++                                    // parallel arcs
+        random.slice(5, 10).map { case (u, v, c) => (v, u, c) } ++ // antiparallel
+        Seq((ids(3), ids(3), Some(4L)),                      // self-loop
+          (ids(4), GraphModel.SuperSource, Some(2L)),        // into the terminals
+          (ids(5), GraphModel.SuperSink, Some(3L)),
+          (GraphModel.SuperSink, ids(6), Some(5L)),
+          (ids(7), ids(8), None), (ids(7), ids(8), Some(6L)), // a null cap is 0
+          (ids(9), ids(10), None))
+      val (sources, sinks) = (Seq(ids(0), ids(1), ids(0)), Seq(ids(11), ids(2)))
+      val inf = GraphModel.InfCap
+      val terminal =
+        sources.distinct.flatMap(s => Seq((1L, s, inf), (s, 1L, inf))) ++
+        sinks.distinct.flatMap(t => Seq((t, 2L, inf), (2L, t, inf)))
+      // (vertex, nbr) -> (capOut, capIn), summed over every arc of the pair
+      val want = mutable.HashMap.empty[(Long, Long), (Long, Long)].withDefaultValue((0L, 0L))
+      (arcs.map { case (u, v, c) => (u, v, c.getOrElse(0L)) } ++ terminal).foreach {
+        case (u, v, c) =>
+          val (o, i) = want((u, v)); want((u, v)) = (o + c, i)
+          val (o2, i2) = want((v, u)); want((v, u)) = (o2, i2 + c)
+      }
+      val got = GraphBuilder.buildState(spark,
+        arcs.toDF("src", "dst", "cap"), sources, sinks).collect()
+      assert(got.map(_.id).sorted.toSeq == want.keys.map(_._1).toSeq.distinct.sorted,
+        s"seed=$seed: vertex set")
+      got.foreach { v =>
+        val nbrs = v.adj.map(_.nbr).toSeq
+        assert(nbrs == nbrs.distinct.sorted, s"seed=$seed: ${v.id} adjacency not sorted")
+        assert(v.adj.map(a => (v.id, a.nbr) -> ((a.capOut, a.capIn))).toMap ==
+          want.filter(_._1._1 == v.id).toMap, s"seed=$seed: ${v.id} caps")
+        assert(v.adj.forall(_.flow == 0L), s"seed=$seed: ${v.id} flow")
+        val seedPath = Seq(Seq(v.id))
+        assert(v.s.map(_.nodes.toSeq).toSeq ==
+          (if (v.id == GraphModel.SuperSource) seedPath else Nil), s"seed=$seed: ${v.id} s")
+        assert(v.t.map(_.nodes.toSeq).toSeq ==
+          (if (v.id == GraphModel.SuperSink) seedPath else Nil), s"seed=$seed: ${v.id} t")
+        assert(v.fsetS.isEmpty && v.fsetT.isEmpty)
+      }
+    }
   }
 
   test("path concat splices cycles (ff1/Excess.java:48-68)") {

@@ -437,6 +437,30 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), s"cartesian in SQ topk:\n$plan")
   }
 
+  test("max-flow graph build: one exchange, one scan of the input, no join") {
+    // the round-0 masters are one map/reduce pass (ff3 Map0FF/Reduce0FF):
+    // each arc is emitted from both ends and grouped by vertex id
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val edges = spark.range(200)
+      .selectExpr("10 + id AS src", "10 + (id * 7) % 200 AS dst", "1 + id % 9 AS cap")
+      .persist()
+    try {
+      edges.count()
+      val state = graft.graph.GraphBuilder.buildState(spark, edges, Seq(10L), Seq(11L))
+      state.collect() // the final adaptive plan
+      val aqe = new AdaptiveSparkPlanHelper {}
+      val plan = state.queryExecution.executedPlan
+      val exchanges = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"${exchanges.size} exchanges in the build:\n$plan")
+      val scans = aqe.collect(plan) { case s: InMemoryTableScanExec => s }
+      assert(scans.size == 1, s"the build scans its input ${scans.size} times:\n$plan")
+      assert(aqe.collect(plan) { case j: BaseJoinExec => j }.isEmpty, s"a join:\n$plan")
+    } finally edges.unpersist()
+  }
+
   test("q41_linkpred: global top-k is TakeOrdered, never a full sort") {
     val plan = formatted(graft.graph.GraphQueries.q41_linkpred(spark, sf))
     assert(plan.contains("TakeOrderedAndProject"),

@@ -45,7 +45,9 @@ object Bench {
       import spark.implicits._
       spark.range(10000).map(i => (i % 100, i)).groupByKey(_._1)
         .mapGroups((_, it) => it.foldLeft(0L)(_ + _._2)).collect()
-      spark.range(1000).toDF("id").localCheckpoint(eager = false).count()
+      val pinned = Caches.pin(spark.range(1000).toDF("id"))
+      pinned.count()
+      Caches.release(pinned)
       // …and the max-flow ENGINE itself (VERDICT r6 "wrong" #4): the
       // extendVertex/mergeVertex/acceptor/EK-cleanup classes JIT on first
       // use, and with only the generic typed warm-up above that first use

@@ -164,10 +164,9 @@ object Main {
       case "triangles" =>
         import org.apache.spark.sql.functions.{col, least, greatest}
         val (edges, _, _) = load(spark, opts)
-        val und = edges.select(least(col("src"), col("dst")).as("u"),
+        val und = Caches.pin(edges.select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v"))
-          .filter(col("u") < col("v")).distinct()
-          .localCheckpoint(eager = false)
+          .filter(col("u") < col("v")).distinct())
         val n = und.as("e1")
           .join(und.as("e2"), col("e1.v") === col("e2.u"))
           .join(und.as("e3"),

@@ -103,9 +103,9 @@ object Probe {
   private def smallWorldDf(spark: SparkSession, n: Int): DataFrame = {
     import spark.implicits._
     // executors regenerate their slice of the ring — nothing is shipped
-    val df = spark.range(0L, n.toLong)
+    val df = Caches.track(spark.range(0L, n.toLong)
       .flatMap(edgesFor(_, n, 4, 0.1, 10, 7L))
-      .toDF("src", "dst", "cap").persist()
+      .toDF("src", "dst", "cap"))
     df.count()
     df
   }

@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkHygiene {
 
-  /** Checkpoints.release legitimately unpersists locally-checkpointed
-    * RDDs (guaranteed dead — see graph/Checkpoints.scala); Spark WARNs on
+  /** [[Caches.release]] legitimately unpersists pinned (locally
+    * checkpointed) RDDs once their successors are materialized, and so
+    * do MaxFlow's own round releases; Spark WARNs on
     * every such unpersist ("RDD N was locally checkpointed, its lineage
     * has been truncated…", RDD.unpersist), which would flood a protocol
     * run thousands of times. Suppress exactly that MESSAGE with a

@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.Tables
+import graft.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,14 +18,20 @@ object GraphQueries {
     */
   private[graph] val PartOffset = 1000000L
 
+  /** lineitem's distinct supplier→part edges, pinned: each query below
+    * derives both directions (or re-joins it every round) from this one
+    * frame instead of re-running the lineitem scan and distinct.
+    */
+  private def supplierParts(s: SparkSession, dir: String,
+      eager: Boolean = false): DataFrame =
+    Caches.pin(Tables.load(s, dir, "lineitem").select(col("l_suppkey").as("src"),
+      (col("l_partkey") + PartOffset).as("dst")).distinct(), eager)
+
   /** Q13: iterative-fixpoint BFS — shortest hop distance from supplier 1
     * over the supplier↔part co-occurrence graph.
     */
   def q13_bfs(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
     Bfs.run(s, edges, Seq(1L), maxDepth = 6).orderBy("node")
   }
@@ -166,8 +172,7 @@ object GraphQueries {
     * identical per-bucket cap.
     */
   def q25_triangles(s: SparkSession, dir: String): DataFrame = {
-    val und = cooccurPairs(userBuckets(s, dir))
-      .localCheckpoint(eager = false) // reused 3× below; cache once
+    val und = Caches.pin(cooccurPairs(userBuckets(s, dir))) // reused 3× below
     und.as("e1")
       .join(und.as("e2"), col("e1.v") === col("e2.u"))
       .join(und.as("e3"),
@@ -214,7 +219,7 @@ object GraphQueries {
     */
   def lccOn(und: DataFrame): DataFrame = {
     val s = und.sparkSession
-    und.localCheckpoint(eager = false) // reused 4x: 3 triangle legs + degree
+    Caches.pin(und) // reused 4x: 3 triangle legs + degree
       .createOrReplaceTempView("__lcc_und")
     s.sql(
       """WITH sym AS (
@@ -290,7 +295,7 @@ object GraphQueries {
     */
   def transitivityOn(und: DataFrame): DataFrame = {
     val s = und.sparkSession
-    und.localCheckpoint(eager = false) // reused 4x: 3 triangle legs + degree
+    Caches.pin(und) // reused 4x: 3 triangle legs + degree
       .createOrReplaceTempView("__tr_und")
     s.sql(
       """WITH sym AS (
@@ -389,10 +394,7 @@ object GraphQueries {
     * CorenessSpec as the any-depth check.
     */
   def q53_coreness(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val sym = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
     Coreness.run(s, sym)
@@ -478,10 +480,9 @@ object GraphQueries {
     val li = Tables.load(s, dir, "lineitem")
     // aggregate ONCE, checkpoint, then derive both directions — the union
     // would otherwise re-run the 600k-row aggregation per branch
-    val fwd = li.groupBy(col("l_suppkey").as("u"),
+    val fwd = Caches.pin(li.groupBy(col("l_suppkey").as("u"),
         (col("l_partkey") + PartOffset).as("v"))
-      .agg(count(lit(1)).as("w"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("w")))
     val edges = fwd.select(col("u").as("src"), col("v").as("dst"), col("w"))
       .unionAll(fwd.select(col("v").as("src"), col("u").as("dst"), col("w")))
     Superstep.layout(edges, "src") { adj =>
@@ -528,10 +529,7 @@ object GraphQueries {
     * node has in- and out-edges, so no dangling-mass term is needed.
     */
   def q33_pagerank(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
     PageRank.run(s, edges, iters = 3).orderBy("node")
@@ -547,10 +545,7 @@ object GraphQueries {
     * bipartite who-supplies-what relation.
     */
   def q42_hits(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = true) // re-joined every half-iteration
+    val fwd = supplierParts(s, dir, eager = true)
     Hits.run(s, fwd, iters = 2)
   }
 
@@ -641,10 +636,7 @@ object GraphQueries {
     * cast+rounded once.
     */
   def q45_closeness(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
     Bfs.runMulti(s, edges, Seq(1L, 2L, 3L, 4L), maxDepth = 8)
       .createOrReplaceTempView("__q45_d")
@@ -664,10 +656,7 @@ object GraphQueries {
     * landmark itself (dist 0).
     */
   def q46_ecc(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(fwd.select(col("dst").as("src"), col("src").as("dst")))
     Bfs.runMulti(s, edges, Seq(1L, 2L, 3L, 4L), maxDepth = 8)
       .createOrReplaceTempView("__q46_d")
@@ -689,10 +678,7 @@ object GraphQueries {
     * integer iterations — see [[PageRank.runPersonalized]].
     */
   def q48_ppr(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
     PageRank.runPersonalized(s, edges, Seq(1L, 2L, 3L, 4L), iters = 3)
@@ -707,10 +693,7 @@ object GraphQueries {
     * length-of-binary-string − 1, engine-portable.
     */
   def q49_degdist(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
     edges.createOrReplaceTempView("__q49_e")
@@ -922,9 +905,8 @@ object GraphQueries {
     */
   def q34_kcore(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_orderkey").as("src"),
-      (col("l_partkey") + OrderPartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false)
+    val fwd = Caches.pin(li.select(col("l_orderkey").as("src"),
+      (col("l_partkey") + OrderPartOffset).as("dst")).distinct())
     val edges = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
     KCore.run(s, edges, k = 4)
@@ -1082,7 +1064,7 @@ object GraphQueries {
     // WITH: a CTE inside the cached definition keeps later queries from
     // matching the cache, and one around the cached view fails Spark 4.1's
     // plan canonicalization (key not found on the layout's pk).
-    graft.Caches.track(s.sql(
+    Caches.track(s.sql(
       s"""SELECT sk, pk FROM (
          |  SELECT sk, pk, COUNT(*) OVER (PARTITION BY pk) AS d
          |  FROM (SELECT DISTINCT l_suppkey AS sk, l_partkey AS pk FROM __li41))
@@ -1127,13 +1109,11 @@ object GraphQueries {
     * hash-exact on whole trajectories, not just step counts.
     */
   def q54_walks(s: SparkSession, dir: String): DataFrame = {
-    val li = Tables.load(s, dir, "lineitem")
-    val fwd = li.select(col("l_suppkey").as("src"),
-      (col("l_partkey") + PartOffset).as("dst")).distinct()
-      .localCheckpoint(eager = false) // both directions derive from it
+    val fwd = supplierParts(s, dir)
     val edges = fwd.unionAll(
       fwd.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = li.select(col("l_suppkey").cast("long").as("walk_id"))
+    val seeds = Tables.load(s, dir, "lineitem")
+      .select(col("l_suppkey").cast("long").as("walk_id"))
       .distinct().withColumn("node", col("walk_id"))
     Walks.run(s, edges, seeds, steps = 4, salt = "42")
       .orderBy("walk_id", "step")
@@ -1199,8 +1179,8 @@ object GraphQueries {
     * relation.
     */
   def q56_modularity(s: SparkSession, dir: String): DataFrame = {
-    val und = cooccurPairs(userBuckets(s, dir))
-      .localCheckpoint(eager = false) // consumed by LPA, m, deg, intra
+    // consumed by LPA, m, deg, intra
+    val und = Caches.pin(cooccurPairs(userBuckets(s, dir)))
     modularity(und, LabelProp.run(s, und, rounds = 3))
   }
 
@@ -1274,8 +1254,7 @@ object GraphQueries {
     * counts. Nothing beyond the pairing shuffles wider than degrees.
     */
   def q57_richclub(s: SparkSession, dir: String): DataFrame =
-    richClub(cooccurPairs(userBuckets(s, dir))
-      .localCheckpoint(eager = false)) // consumed by deg and the k scans
+    richClub(Caches.pin(cooccurPairs(userBuckets(s, dir)))) // deg + k scans
 
   /** The production entry: the φ(k) ladder of ANY undirected edge
     * relation (u, v, one row per edge).

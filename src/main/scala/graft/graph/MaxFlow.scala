@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Caches
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -467,8 +468,7 @@ object MaxFlow {
       // serialized, a block's size is its byte count; deserialized, Spark's
       // SizeEstimator re-walks every VertexState as the block grows
       // (localCheckpoint keeps a level already set and only forces useDisk)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      .localCheckpoint()
+      .persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
   }
 
   /** The name of each round's merged state RDD, as the Spark UI and
@@ -871,39 +871,38 @@ object MaxFlow {
     * action), one job collecting the parent forest, and one job for the
     * supersink's parent set — the per-hop `dist.filter(...).head()` driver
     * round-trips and the per-level re-persisted growing union of the old
-    * design are gone (VERDICT r2 "wrong" #3). Each level is persisted once
-    * and every level is unpersisted before returning.
+    * design are gone (VERDICT r2 "wrong" #3). `adj` and each level are
+    * pinned once through [[Caches]] and released before returning, on
+    * the failure path too.
     */
   private def findAugmentingPaths(spark: SparkSession,
                                   state: Dataset[VertexState]): Seq[Array[Long]] = {
     import spark.implicits._
-    val adj = GraphBuilder.residualEdges(spark, state)
-      .repartition(col("src")).persist()
+    val adj = Caches.track(GraphBuilder.residualEdges(spark, state)
+      .repartition(col("src")))
     val levels = mutable.ArrayBuffer[DataFrame](
       Seq((GraphModel.SuperSource, GraphModel.SuperSource)).toDF("node", "parent"))
-    var frontier = levels.head.select("node")
-    var reached = false
-    var frontierSize = 1L
-    while (!reached && frontierSize > 0) {
-      val seen = levels.reduce(_ unionAll _) // all inputs cached; no re-persist
-      val next = frontier.join(adj, frontier("node") === adj("src"))
-        .select(adj("dst").as("node"), adj("src").as("parent"))
-        .groupBy("node").agg(min("parent").as("parent"))
-        .join(seen, Seq("node"), "left_anti")
-        // lazy checkpoint: caches the level AND breaks the lineage back to
-        // adj (the next level's join would otherwise be an ambiguous
-        // self-join); each level is checkpointed exactly once — blocks are
-        // freed by the ContextCleaner when the frames go out of scope
-        .localCheckpoint(eager = false)
-      // single action per level: frontier size + sink-reached together
-      val stats = next.agg(count(lit(1)),
-        count(when(col("node") === GraphModel.SuperSink, lit(1)))).head()
-      frontierSize = stats.getLong(0)
-      reached = stats.getLong(1) > 0
-      levels += next
-      frontier = next.select("node")
-    }
-    val result: Seq[Array[Long]] =
+    try {
+      var frontier = levels.head.select("node")
+      var reached = false
+      var frontierSize = 1L
+      while (!reached && frontierSize > 0) {
+        val seen = levels.reduce(_ unionAll _) // all inputs cached; no re-persist
+        // lazy pin: caches the level AND breaks the lineage back to adj
+        // (the next level's join would otherwise be an ambiguous
+        // self-join); each level is pinned exactly once
+        val next = Caches.pin(frontier.join(adj, frontier("node") === adj("src"))
+          .select(adj("dst").as("node"), adj("src").as("parent"))
+          .groupBy("node").agg(min("parent").as("parent"))
+          .join(seen, Seq("node"), "left_anti"))
+        // single action per level: frontier size + sink-reached together
+        val stats = next.agg(count(lit(1)),
+          count(when(col("node") === GraphModel.SuperSink, lit(1)))).head()
+        frontierSize = stats.getLong(0)
+        reached = stats.getLong(1) > 0
+        levels += next
+        frontier = next.select("node")
+      }
       if (!reached) Seq.empty
       else {
         // ONE action: the whole BFS parent forest to the driver (bounded by
@@ -943,7 +942,6 @@ object MaxFlow {
         }
         paths.toSeq
       }
-    adj.unpersist()
-    result
+    } finally Caches.release(adj +: levels.tail.toSeq: _*)
   }
 }

@@ -1,8 +1,8 @@
 package graft.graph
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Minimum spanning forest by Borůvka rounds on the same superstep
   * substrate as Bfs/ConnectedComponents (SURVEY §7 stage 2's loop shape):
@@ -45,21 +45,19 @@ object Mst {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 30,
           driverMergeMaxEdges: Long = 5000000L): DataFrame = {
     import spark.implicits._
-    val canon = edges
+    val canon = Caches.track(edges
       .select(least(col("u"), col("v")).cast("long").as("u"),
         greatest(col("u"), col("v")).cast("long").as("v"),
         col("w").cast("long").as("w"))
       .filter(col("u") =!= col("v"))
-      .groupBy("u", "v").agg(min("w").as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .groupBy("u", "v").agg(min("w").as("w")))
     val sym = canon.unionAll(
       canon.select(col("v").as("u"), col("u").as("v"), col("w")))
 
-    var labels = canon.select(col("u").as("node"))
+    var labels = Caches.pin(canon.select(col("u").as("node"))
       .union(canon.select(col("v").as("node")))
       .distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint(eager = false)
+      .withColumn("comp", col("node")))
     // per-round pick frames accumulate here and union ONCE at the end
     // (the Scc parts discipline): each is checkpoint-materialized by its
     // round's count, so re-checkpointing a growing accumulator would be
@@ -67,7 +65,7 @@ object Mst {
     val pickedParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     // frames superseded LAST round — their successor materializes at THIS
     // round's count, which is when they become releasable
-    // (Checkpoints.scala; the q43_scc in-session degradation)
+    // (the Superstep contract; the q43_scc in-session degradation)
     var prevLabels: DataFrame = null
     var prevMerged: DataFrame = null
     var iter = 0
@@ -85,18 +83,17 @@ object Mst {
         .filter(col("cu") =!= col("cv"))
       // per-component minimum outgoing edge under the total (w, u, v)
       // order; least/greatest re-canonicalize the orientation row
-      val pick = out
+      val pick = Caches.pin(out
         .select(col("cu"),
           struct(col("w"), least(col("u"), col("v")).as("u"),
             greatest(col("u"), col("v")).as("v"), col("cv")).as("e"))
         .groupBy("cu").agg(min("e").as("e"))
         .select(col("cu"), col("e.u").as("u"), col("e.v").as("v"),
-          col("e.w").as("w"), col("e.cv").as("cv"))
-        .localCheckpoint(eager = false)
+          col("e.w").as("w"), col("e.cv").as("cv")))
       val nPicked = pick.count()
       // the count just materialized the current labels frame, so the
       // frames last round superseded are finally dead
-      Checkpoints.release(prevLabels, prevMerged)
+      Caches.release(prevLabels, prevMerged)
       prevLabels = null; prevMerged = null
       if (nPicked == 0) done = true
       else {
@@ -133,16 +130,14 @@ object Mst {
           }
         prevLabels = labels
         prevMerged = merged
-        labels = labels
+        labels = Caches.pin(labels
           .join(broadcastIfSmall(merged, nPicked <= driverMergeMaxEdges),
             labels("comp") === col("mn"), "left")
-          .select(col("node"), coalesce(col("mc"), col("comp")).as("comp"))
-          .localCheckpoint(eager = false)
+          .select(col("node"), coalesce(col("mc"), col("comp")).as("comp")))
       }
     }
-    canon.unpersist()
     // the result reads only the pick frames; the label chain is done
-    Checkpoints.release(prevLabels, prevMerged, labels)
+    Caches.release(canon, prevLabels, prevMerged, labels)
     if (pickedParts.isEmpty)
       Seq.empty[(Long, Long, Long)].toDF("u", "v", "w")
     else pickedParts.reduce(_ unionAll _).orderBy("w", "u", "v")

@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.Caches
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -52,12 +53,10 @@ object Scc {
   def run(spark: SparkSession, edges: DataFrame,
           maxPeels: Int = 50,
           driverFinishMaxEdges: Long = 5000000L): DataFrame = {
-    var cur = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct()
-      .localCheckpoint(eager = true)
-    var remaining = cur.select(col("src").as("node"))
-      .union(cur.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(eager = true)
+    var cur = Caches.pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .distinct(), eager = true)
+    var remaining = Caches.pin(cur.select(col("src").as("node"))
+      .union(cur.select(col("dst").as("node"))).distinct(), eager = true)
     // settled frames accumulate here and union ONCE at the end: each is
     // checkpointed, so the final union is pure cached lineage — an
     // eager re-checkpoint of the growing result every peel was a full
@@ -74,7 +73,7 @@ object Scc {
         // The old `remaining` checkpoint is NOT released here: the parts
         // entry just added reads through it at result time.
         parts += remaining.select(col("node"), col("node").as("scc"))
-        remaining = remaining.limit(0).localCheckpoint(eager = true)
+        remaining = Caches.pin(remaining.limit(0), eager = true)
         remN = 0
       } else if (driverFinishMaxEdges > 0 &&
           curN + remN <= driverFinishMaxEdges) {
@@ -83,7 +82,7 @@ object Scc {
         val nodeArr = remaining.select("node").collect().map(_.getLong(0))
         val (srcA, dstA) = DriverGraph.collectEdges(cur)
         parts += tarjanScc(nodeArr, srcA, dstA).toSeq.toDF("node", "scc")
-        Checkpoints.release(cur, remaining)
+        Caches.release(cur, remaining)
         // non-checkpoint empties so the post-loop release is a no-op and
         // nothing can touch the released frames again
         cur = spark.range(0).selectExpr("id AS src", "id AS dst")
@@ -94,9 +93,8 @@ object Scc {
       // CC's node set comes from edge endpoints, so fold isolated
       // survivors (all their edges peeled) back in as their own color
       val fEdges = ConnectedComponents.run(spark, cur)
-      val f = remaining.join(fEdges, Seq("node"), "left")
-        .select(col("node"), coalesce(col("comp"), col("node")).as("f"))
-        .localCheckpoint(eager = false)
+      val f = Caches.pin(remaining.join(fEdges, Seq("node"), "left")
+        .select(col("node"), coalesce(col("comp"), col("node")).as("f")))
       // 2. backward-min within color: reverse only the edges whose both
       // endpoints share a color
       val fs = f.select(col("node").as("s"), col("f").as("sf"))
@@ -108,48 +106,45 @@ object Scc {
       val bEdges = ConnectedComponents.run(spark, colorRev)
       // CC's first action computed through f (colorRev derives from it),
       // so f's lazy checkpoint is materialized — fEdges is superseded
-      // (Checkpoints.scala: release the moment the successor is solid)
-      Checkpoints.release(fEdges)
+      // (the Superstep contract: release once the successor is solid)
+      Caches.release(fEdges)
       val b = f.join(bEdges, Seq("node"), "left")
         .select(col("node"), col("f"),
           coalesce(col("comp"), col("node")).as("b"))
       // 3. settled: f == b — LAZY checkpoint: the peel's anti-join
       // checkpoint right below is the materializing action (one job,
       // not two), and the end-of-run union reuses the cache
-      val settled = b.filter(col("f") === col("b"))
-        .select(col("node"), col("f").as("scc"))
-        .localCheckpoint(eager = false)
+      val settled = Caches.pin(b.filter(col("f") === col("b"))
+        .select(col("node"), col("f").as("scc")))
       parts += settled
       // 4. peel
       val prevRemaining = remaining
       val prevCur = cur
-      remaining = remaining.join(settled.select("node"), Seq("node"),
-          "left_anti")
-        .localCheckpoint(eager = true)
+      remaining = Caches.pin(remaining.join(settled.select("node"), Seq("node"),
+          "left_anti"), eager = true)
       val rs = remaining.select(col("node").as("s"))
       val rd = remaining.select(col("node").as("d"))
-      cur = cur.join(rs, cur("src") === rs("s"))
+      cur = Caches.pin(cur.join(rs, cur("src") === rs("s"))
         .join(rd, cur("dst") === rd("d"))
-        .select(cur("src"), cur("dst"))
-        .localCheckpoint(eager = true)
+        .select(cur("src"), cur("dst")), eager = true)
       // settled (via the eager anti-join), the new remaining, and the
       // new cur are all materialized now — everything this peel consumed
       // is dead. parts keeps only the settled checkpoints.
-      Checkpoints.release(bEdges, f, prevRemaining, prevCur)
+      Caches.release(bEdges, f, prevRemaining, prevCur)
       remN = remaining.count()
       }
     }
     if (remN != 0) {
       // failure path keeps the hygiene discipline: release the survivor
       // frames AND the settled-part checkpoints nothing will ever read
-      Checkpoints.release(cur, remaining)
-      Checkpoints.release(parts.toSeq: _*)
+      Caches.release(cur, remaining)
+      Caches.release(parts.toSeq: _*)
       throw new IllegalStateException(
         s"Scc.run: not converged after $maxPeels peels")
     }
     // the final survivor relations are empty and nothing reads them (the
     // isolated-survivor parts entry references the PRE-limit(0) frame)
-    Checkpoints.release(cur, remaining)
+    Caches.release(cur, remaining)
     if (parts.isEmpty) // edge-less input: empty result, not empty.reduce
       spark.range(0).selectExpr("id AS node", "id AS scc")
     else parts.reduce(_ unionAll _).orderBy("node")

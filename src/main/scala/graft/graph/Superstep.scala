@@ -1,7 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import graft.Caches
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** The one round loop of the iterative graph engines: read round i's
@@ -9,19 +9,22 @@ import org.apache.spark.sql.functions.col
   * job-per-round driver (ff1/FordFulkerson.java:186-190), written once.
   * Bfs, ConnectedComponents, LabelProp, KCore, Truss, PageRank, Hits,
   * Katz, Walks, Betweenness, the distributed tiers of Coreness and
-  * Layers, and GraphQueries' q26_sssp / anfOn run on it. Scc's peel loop,
-  * Mst's Borůvka rounds and MaxFlow's durable RDD rounds stay hand-rolled
-  * and release their frames through [[Checkpoints]].
+  * Layers, and GraphQueries' q26_sssp / anfOn run on it. Scc's peel loop
+  * and Mst's Borůvka rounds stay hand-rolled on the same verbs; MaxFlow's
+  * durable rounds are RDD state it frees itself.
   *
-  * Block-manager contract. Every `localCheckpoint` pins its partitions
-  * in the BlockManager, and the only default release path is the async
-  * ContextCleaner, which frees them when a driver GC collects the RDD
-  * object. A large heap may not GC for a whole session, so a session of
-  * iterative queries accumulates dead blocks: q43_scc ran 6 s alone but
-  * 17.8 → 37.8 → 38.7 s late in a 228-query session. [[iterate]] therefore
-  * releases a round's frame the moment its successor is MATERIALIZED —
-  * not earlier: a local checkpoint truncates lineage, so a released frame
-  * can never be recomputed, and nothing may read it again.
+  * Block-manager contract. Every frame is pinned with [[Caches.pin]] or
+  * [[Caches.track]] and freed with [[Caches.release]]. A pin holds its
+  * partitions in the BlockManager, and without a release the only path
+  * back is the async ContextCleaner, which frees them when a driver GC
+  * collects the RDD object. A large heap may not GC for a
+  * whole session, so a session of iterative queries accumulates dead
+  * blocks: q43_scc ran 6 s alone but 17.8 → 37.8 → 38.7 s late in a
+  * 228-query session. [[iterate]] therefore releases a round's frame the
+  * moment its successor is MATERIALIZED — not earlier: a local checkpoint
+  * truncates lineage, so a released frame can never be recomputed, and
+  * nothing may read it again. The frame left pinned stays registered, so
+  * `Caches.releaseAll` frees it.
   */
 private[graft] object Superstep {
 
@@ -29,7 +32,7 @@ private[graft] object Superstep {
     * releases (and unregisters) the layout when `run` returns or throws.
     *
     * The layout is hash-partitioned on `keys`, SORTED within partitions
-    * on them, persisted and registered with [[graft.Caches]]. The
+    * on them, and tracked with [[Caches.track]]. The
     * InMemoryRelation keeps the cached plan's partitioning and output
     * ordering, so each round's sort-merge join reads the edge side with
     * no exchange and no sort; an unsorted layout re-sorts the graph-sized
@@ -43,22 +46,19 @@ private[graft] object Superstep {
     */
   def layout[A](edges: DataFrame, keys: String*)(run: DataFrame => A): A = {
     val by = keys.map(col)
-    val adj = graft.Caches.track(
+    val adj = Caches.track(
       edges.repartition(by: _*).sortWithinPartitions(by: _*))
     try run(adj)
-    finally {
-      adj.unpersist(blocking = false)
-      graft.Caches.untrack(adj)
-    }
+    finally Caches.release(adj)
   }
 
   /** Rounds 1, 2, … of `step` from `init`, for at most `maxRounds`
     * rounds; returns the final frame and the number of rounds run.
     *
-    * Each frame (`init` included) is lazily checkpointed, registered with
-    * [[graft.Caches]], and handed to `done` — the round's one action (a
-    * count, an exact sum or an emptiness test) — which materializes it in
-    * the same job and says whether to stop. `init` is asked too, so an
+    * Each frame (`init` included) is lazily pinned ([[Caches.pin]]) and
+    * handed to `done` — the round's one action (a count, an exact sum or
+    * an emptiness test) — which materializes it in the same job and says
+    * whether to stop. `init` is asked too, so an
     * engine with nothing to do runs 0 rounds. If `done` ran no action (a
     * fixed-round engine, `never`), the frame is materialized here. Only
     * then is the frame it replaced released, so at most two frames are
@@ -74,21 +74,21 @@ private[graft] object Superstep {
     var cur: DataFrame = null
     var next: DataFrame = null
     try {
-      cur = pin(init)
+      cur = Caches.pin(init)
       var stop = settle(cur, done)
       var round = 0
       while (!stop && round < maxRounds) {
         round += 1
-        next = pin(step(cur, round))
+        next = Caches.pin(step(cur, round))
         stop = settle(next, done)
-        unpin(cur)
+        Caches.release(cur)
         cur = next
         next = null
       }
       (cur, round)
     } catch {
       case t: Throwable =>
-        unpin(cur, next)
+        Caches.release(cur, next)
         throw t
     }
   }
@@ -110,32 +110,10 @@ private[graft] object Superstep {
     }
   }
 
-  private def pin(df: DataFrame): DataFrame =
-    graft.Caches.trackPinned(df.localCheckpoint(eager = false))
-
   private def settle(frame: DataFrame, done: DataFrame => Boolean): Boolean = {
     val stop = done(frame)
-    val rdd = checkpointRdd(frame)
+    val rdd = Caches.checkpointRdd(frame)
     if (rdd != null && !rdd.isCheckpointed) rdd.count()
     stop
   }
-
-  private def checkpointRdd(df: Dataset[_]) =
-    if (df == null) null
-    else df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd
-      case _              => null
-    }
-
-  /** Frees the BlockManager storage behind checkpointed frames: exactly
-    * the frames `localCheckpoint` returned (a single `LogicalRDD` leaf).
-    * Any other frame, or null, is a no-op — plan trees are deliberately
-    * not walked, since a derived plan's leaves may be checkpoints the
-    * caller still holds.
-    */
-  private[graph] def unpin(frames: Dataset[_]*): Unit =
-    frames.foreach { df =>
-      val rdd = checkpointRdd(df)
-      if (rdd != null) rdd.unpersist(blocking = false)
-    }
 }

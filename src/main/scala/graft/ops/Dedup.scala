@@ -211,7 +211,7 @@ object Dedup {
       maxBlockRows, onOverflow, tag = "dd_minhash_band",
       remediation = "Use more bands / more rows per band (longer " +
         "signatures), raise the cap, or use onOverflow=sample.",
-      onFail = tok.unpersist(blocking = false))
+      onFail = Caches.release(tok))
     val gband = if (trackBand) Caches.track(guarded) else guarded
     (tok, sig, gband)
   }
@@ -245,7 +245,7 @@ object Dedup {
     // once, and PRESERVES the guard window's (band, bh) hash layout so
     // both self-join sides consume it with no further exchange (§2.4).
     val (tok, sig0, band0) = minhashRelationsOn(corpus, trackBand = false)
-    val band = Caches.trackPinned(band0.localCheckpoint(eager = false))
+    val band = Caches.pin(band0)
     // sig is read THREE times below (both signature-join sides + the
     // bands feeding cand) and each read re-runs the 8×md5 min-aggregate
     // over every shingle; persisting the doc-sized 8-column relation
@@ -539,7 +539,7 @@ object Dedup {
         tag = "dd_simhash_pairs",
         remediation = "Use more/wider bands, raise the cap, or use " +
           "onOverflow=sample.",
-        onFail = sig64.unpersist(blocking = false)))
+        onFail = Caches.release(sig64)))
       .createOrReplaceTempView("__sig64_band")
     s.sql(
       """SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -581,7 +581,7 @@ object Dedup {
         tag = "dd_hamming_hist",
         remediation = "Use more/wider bands, raise the cap, or use " +
           "onOverflow=sample.",
-        onFail = sig64h.unpersist(blocking = false)))
+        onFail = Caches.release(sig64h)))
       .createOrReplaceTempView("__sig64h_band")
     s.sql(
       """WITH cand AS (
@@ -789,14 +789,12 @@ object Dedup {
       maxBlockRows, onOverflow, tag = "dd_embed_cos",
       remediation =
         "Re-block with more planes, raise the cap, or use onOverflow=sample.",
-      onFail = sigP.unpersist(blocking = false)) // failure paths free pins
+      onFail = Caches.release(sigP)) // failure paths free pins
     guarded.createOrReplaceTempView("__esig")
     // scored pairs are persisted before the threshold filter: predicate
     // pushdown would otherwise substitute the cosine fold into the WHERE
     // clause and evaluate the 64-element aggregate twice per pair
-    // localCheckpoint pins its RDD without a .persist — registered so
-    // Caches.releaseAll frees it for library callers too
-    val scored = Caches.trackPinned(s.sql(
+    val scored = Caches.pin(s.sql(
       """WITH probes AS (
         |  SELECT vec_id, label, v, nrm,
         |         explode(concat(array(bucket),
@@ -805,8 +803,7 @@ object Dedup {
         |SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |       ROUND(graft_dot(a.v, b.v) / (a.nrm * b.nrm), 6) AS cos
         |FROM probes a JOIN __esig b
-        |  ON a.label = b.label AND a.pb = b.bucket AND a.vec_id < b.vec_id""".stripMargin)
-      .localCheckpoint(eager = false))
+        |  ON a.label = b.label AND a.pb = b.bucket AND a.vec_id < b.vec_id""".stripMargin))
     scored.filter(col("cos") >= 0.9).orderBy("vec_a", "vec_b")
   }
 
@@ -1442,7 +1439,7 @@ object Dedup {
         maxBlockRows, onOverflow, tag = "dd_editdist",
         remediation = "Block on a longer prefix or add a secondary " +
           "blocking key, raise the cap, or use onOverflow=sample.",
-        onFail = blocks.unpersist(blocking = false))
+        onFail = Caches.release(blocks))
       .createOrReplaceTempView("__ed_blocks")
     s.sql(
       s"""SELECT doc_a, doc_b, dist FROM (
@@ -1517,35 +1514,31 @@ object Dedup {
     // the chunk relation feeds BOTH the df >= 2 set and the per-doc
     // rollup; an inlined CTE would re-run the corpus explode + window
     // for each consumer (the ds_dsir lesson) — persisted via the
-    // registry, released by the caller/harness per the Caches contract
+    // registry, released by the caller/harness per the Caches contract,
+    // and WITH-free so the consumer's SQL matches the cache (PlanSpec)
     val ch = Caches.track(s.sql(
-      s"""WITH tok AS (
-         |  SELECT doc_id, split(text, ' ') AS toks FROM __cdc_docs),
-         |g AS (
-         |  SELECT doc_id, p.i AS i,
-         |         CAST(conv(substring(md5(p.w), 1, 15), 16, 10) AS BIGINT)
-         |           AS gh
-         |  FROM tok
-         |  LATERAL VIEW explode(CASE WHEN size(toks) >= 4
-         |    THEN transform(sequence(1, size(toks) - 3),
-         |      i -> struct(i AS i,
-         |                  array_join(slice(toks, i, 4), ' ') AS w))
-         |    ELSE array() END) pt AS p),
-         |cid AS (
+      s"""SELECT doc_id,
+         |       md5(array_join(transform(
+         |         array_sort(collect_list(struct(i, gh))),
+         |         x -> CAST(x.gh AS STRING)), ',')) AS sig
+         |FROM (
          |  SELECT doc_id, i, gh,
          |         SUM(CASE WHEN pmod(gh, $div) = 0 THEN 1 ELSE 0 END)
          |           OVER (PARTITION BY doc_id ORDER BY i
          |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
          |           - CASE WHEN pmod(gh, $div) = 0 THEN 1 ELSE 0 END
          |           AS chunk
-         |  FROM g),
-         |ch AS (
-         |  SELECT doc_id, chunk,
-         |         md5(array_join(transform(
-         |           array_sort(collect_list(struct(i, gh))),
-         |           x -> CAST(x.gh AS STRING)), ',')) AS sig
-         |  FROM cid GROUP BY doc_id, chunk)
-         |SELECT doc_id, sig FROM ch""".stripMargin))
+         |  FROM (
+         |    SELECT doc_id, p.i AS i,
+         |           CAST(conv(substring(md5(p.w), 1, 15), 16, 10) AS BIGINT)
+         |             AS gh
+         |    FROM (SELECT doc_id, split(text, ' ') AS toks FROM __cdc_docs)
+         |    LATERAL VIEW explode(CASE WHEN size(toks) >= 4
+         |      THEN transform(sequence(1, size(toks) - 3),
+         |        i -> struct(i AS i,
+         |                    array_join(slice(toks, i, 4), ' ') AS w))
+         |      ELSE array() END) pt AS p))
+         |GROUP BY doc_id, chunk""".stripMargin))
     ch.createOrReplaceTempView("__cdc_ch")
     s.sql(
       s"""WITH dup AS (

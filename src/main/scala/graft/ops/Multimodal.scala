@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -823,7 +823,7 @@ object Multimodal {
     import s.implicits._
     // tracked: the typed hash pass feeds the band self-join AND the
     // guard's count pre-agg — one narrow (media_id, phash) relation
-    val sig = graft.Caches.track(mediaFromDocs(s, dir).flatMap { r =>
+    val sig = Caches.track(mediaFromDocs(s, dir).flatMap { r =>
       val twin = r.payload.clone()
       twin(twin.length / 2) = 'x'.toByte
       Seq((r.media_id, phash64(r.payload)),
@@ -848,7 +848,7 @@ object Multimodal {
         tag = "mm_phash_pairs",
         remediation = "Use more/wider bands, raise the cap, or use " +
           "onOverflow=sample.",
-        onFail = sig.unpersist(blocking = false))
+        onFail = Caches.release(sig))
       .createOrReplaceTempView("__phash_band")
     s.sql(
       """SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
@@ -929,7 +929,7 @@ object Multimodal {
       s"mmAhashPairs: 4x16 banding is pigeonhole-exact only to radius 3, got $radius")
     val s = media.sparkSession
     import s.implicits._
-    val sig = graft.Caches.track(media.map { r =>
+    val sig = Caches.track(media.map { r =>
       val img = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(r.payload))
       require(img != null, s"media ${r.media_id}: not a decodable image")
@@ -954,7 +954,7 @@ object Multimodal {
         maxBlockRows, onOverflow, tag = "mm_ahash",
         remediation = "Use more/wider bands, raise the cap, or use " +
           "onOverflow=sample.",
-        onFail = sig.unpersist(blocking = false))
+        onFail = Caches.release(sig))
       .createOrReplaceTempView("__ahash_band")
     s.sql(
       s"""SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,

@@ -41,8 +41,7 @@ object Pipeline {
     // core (r13): the eager checkpoint would otherwise materialize
     // ddSimhashPairs' presentation sort — a global range exchange the
     // label propagation never needed
-    val pairs = Dedup.ddSimhashPairsCore(s, dir)
-      .localCheckpoint(eager = true)
+    val pairs = Caches.pin(Dedup.ddSimhashPairsCore(s, dir), eager = true)
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
     val (comps, rounds) =
@@ -65,8 +64,8 @@ object Pipeline {
     */
   def ddResolve(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
-    val p = pairs.select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(eager = true) // self-union of one relation (see above)
+    // self-union of one relation (see above)
+    val p = Caches.pin(pairs.select(col("doc_a"), col("doc_b")), eager = true)
     if (p.isEmpty) // the degenerate-input contract: empty in, empty out
       p.select(col("doc_a").as("doc_id"), col("doc_b").as("canon_id"))
     else {
@@ -584,14 +583,15 @@ object Pipeline {
     // BOTH the raw bucket model and the per-doc weights — persisted so
     // the gram explode + md5 bucketing runs ONCE over raw, not twice
     // (an inlined CTE measured 107.8 s at 500k docs; see PERF.md r9).
-    // Tracked: library callers release via Caches.releaseAll after
-    // consuming the returned winners; the harness does it per-query.
+    // WITH-free on purpose: later SQL never matches the cache of a WITH
+    // statement (PlanSpec locks the cache reads). Tracked: library
+    // callers release via Caches.releaseAll after consuming the returned
+    // winners; the harness does it per-query.
     Caches.track(s.sql(
-      s"""WITH rt AS (
-         |  SELECT doc_id, split(text, ' ') AS toks FROM __dsir_raw),
-         |rg AS (SELECT doc_id, explode($grams) AS g FROM rt)
-         |SELECT doc_id, ${bucket("g")} AS b, COUNT(*) AS n
-         |FROM rg GROUP BY doc_id, 2""".stripMargin))
+      s"""SELECT doc_id, ${bucket("g")} AS b, COUNT(*) AS n
+         |FROM (SELECT doc_id, explode($grams) AS g FROM (
+         |  SELECT doc_id, split(text, ' ') AS toks FROM __dsir_raw))
+         |GROUP BY doc_id, 2""".stripMargin))
       .createOrReplaceTempView("__dsir_docb")
     // r14 MEASURED AND REJECTED: materializing rcnt/tcnt once (lazy
     // localCheckpoint, broadcast-hinted) to kill their double derivation
@@ -601,8 +601,7 @@ object Pipeline {
     // re-reads the docb CACHE and the target side is declared tiny, so
     // the duplication is cheap by design. Inline form stays.
     s.sql(
-      s"""WITH docb AS (SELECT * FROM __dsir_docb),
-         |rcnt AS (SELECT b, SUM(n) AS c FROM docb GROUP BY b),
+      s"""WITH rcnt AS (SELECT b, SUM(n) AS c FROM __dsir_docb GROUP BY b),
          |tt0 AS (SELECT split(text, ' ') AS toks FROM __dsir_target),
          |tg AS (SELECT explode($grams) AS g FROM tt0),
          |tcnt AS (SELECT ${bucket("g")} AS b, COUNT(*) AS c FROM tg
@@ -621,7 +620,7 @@ object Pipeline {
          |z AS (
          |  SELECT d.doc_id,
          |         SUM(CAST(ROUND(d.n * l.llr, 9) AS DECIMAL(28,9))) AS z
-         |  FROM docb d JOIN llr l ON l.b = d.b
+         |  FROM __dsir_docb d JOIN llr l ON l.b = d.b
          |  GROUP BY d.doc_id)
          |SELECT doc_id,
          |       ROUND(CAST(z AS DOUBLE), 6) AS logw,
@@ -677,18 +676,16 @@ object Pipeline {
       s"pmod(CAST(conv(substring(md5(g), 1, 15), 16, 10) AS BIGINT), " +
         s"$numBuckets)"
     Caches.track(s.sql(
-      s"""WITH rt AS (
-         |  SELECT doc_id, is_target, split(text, ' ') AS toks
-         |  FROM __dsirw_raw),
-         |rg AS (SELECT doc_id, is_target, explode($grams) AS g FROM rt)
-         |SELECT doc_id, bool_or(is_target) AS is_target, $bucket AS b,
+      s"""SELECT doc_id, bool_or(is_target) AS is_target, $bucket AS b,
          |       COUNT(*) AS n
-         |FROM rg GROUP BY doc_id, 3""".stripMargin))
+         |FROM (SELECT doc_id, is_target, explode($grams) AS g FROM (
+         |  SELECT doc_id, is_target, split(text, ' ') AS toks
+         |  FROM __dsirw_raw))
+         |GROUP BY doc_id, 3""".stripMargin))
       .createOrReplaceTempView("__dsir_docb")
     s.sql(
-      s"""WITH docb AS (SELECT * FROM __dsir_docb),
-         |rcnt AS (SELECT b, SUM(n) AS c FROM docb GROUP BY b),
-         |tcnt AS (SELECT b, SUM(n) AS c FROM docb WHERE is_target
+      s"""WITH rcnt AS (SELECT b, SUM(n) AS c FROM __dsir_docb GROUP BY b),
+         |tcnt AS (SELECT b, SUM(n) AS c FROM __dsir_docb WHERE is_target
          |         GROUP BY b),
          |llr AS (
          |  SELECT ids.id AS b,
@@ -704,7 +701,7 @@ object Pipeline {
          |z AS (
          |  SELECT d.doc_id,
          |         SUM(CAST(ROUND(d.n * l.llr, 9) AS DECIMAL(28,9))) AS z
-         |  FROM docb d JOIN llr l ON l.b = d.b
+         |  FROM __dsir_docb d JOIN llr l ON l.b = d.b
          |  GROUP BY d.doc_id)
          |SELECT doc_id,
          |       ROUND(CAST(z AS DOUBLE), 6) AS logw,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -700,7 +700,7 @@ object Sessionize {
     events.createOrReplaceTempView("__co_events")
     // the presence relation: ONE raw-event window pass, then a hard
     // materialization boundary shared by every downstream consumer
-    val st = s.sql(
+    val st = Caches.pin(s.sql(
       s"""WITH flagged AS (
          |  SELECT user_id, ts, event_id, event_type,
          |         CASE WHEN unix_micros(ts) -
@@ -715,8 +715,7 @@ object Sessionize {
          |                             ROWS UNBOUNDED PRECEDING) AS sess_idx
          |  FROM flagged)
          |SELECT DISTINCT user_id, sess_idx, event_type FROM tagged"""
-        .stripMargin)
-      .localCheckpoint(eager = false)
+        .stripMargin))
     st.createOrReplaceTempView("__co_st")
     s.sql(
       """WITH sess AS (SELECT DISTINCT user_id, sess_idx FROM __co_st),
@@ -1683,11 +1682,10 @@ object Sessionize {
     // compact the raw stream ONCE; the basket relation feeds the total,
     // the item counts and both sides of the pair self-join — without the
     // lazy checkpoint InlineCTE re-runs the distinct per consumer
-    s.sql(
+    Caches.pin(s.sql(
       s"""SELECT DISTINCT user_id, unix_micros(ts) div 86400000000 AS day,
          |       CAST(get_json_object(props, '$$.k') AS BIGINT) AS item
-         |FROM __bk_events WHERE event_type = 'purchase'""".stripMargin)
-      .localCheckpoint(eager = false)
+         |FROM __bk_events WHERE event_type = 'purchase'""".stripMargin))
       .createOrReplaceTempView("__bk_items")
     s.sql(
       s"""WITH items AS (SELECT * FROM __bk_items),
@@ -2407,8 +2405,7 @@ object Sessionize {
     // the per-user (variant, X, Y) relation is the corpus pass and feeds
     // BOTH the global-moment aggregate and the adjusted rollup —
     // materialize it once (the InlineCTE multi-consumer lesson)
-    s.sql(prePostUserSql("__cp_events", preDays, salt))
-      .localCheckpoint(eager = false)
+    Caches.pin(s.sql(prePostUserSql("__cp_events", preDays, salt)))
       .createOrReplaceTempView("__cp_u")
     s.sql(
       s"""WITH u AS (SELECT * FROM __cp_u),
@@ -2591,11 +2588,10 @@ object Sessionize {
     * ds_batchpad's md5-shard ranks, adapted to an ordered prefix.
     */
   private def abCdfView(events: DataFrame, salt: String): Unit =
-    abCdfPlan(events, salt)
+    Caches.pin(abCdfPlan(events, salt))
       // evKs consumes the relation from four CTEs — materialize once
       // (the InlineCTE multi-consumer lesson; 16.5 -> ~6 s at 1M
       // distinct values in PERF.md r7, addendum31)
-      .localCheckpoint(eager = false)
       .createOrReplaceTempView("__ab_cdf")
 
   /** The un-checkpointed CDF plan — split out so PlanSpec can lock the
@@ -2760,8 +2756,7 @@ object Sessionize {
         |       CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
         |FROM __ab_ev_b GROUP BY user_id""".stripMargin)
       .createOrReplaceTempView("__ab_u")
-    cdfFromU(s)
-      .localCheckpoint(eager = false)
+    Caches.pin(cdfFromU(s))
       .createOrReplaceTempView("__ab_cdf")
   }
 

@@ -1,7 +1,8 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 /** Similarity search over the `embeddings` table (builder brief): exact
   * brute-force cosine top-k as the baseline, and two scale paths — an
@@ -212,8 +213,9 @@ object Similarity {
     * draw, sample-or-fail per `onOverflow`; under-cap buckets are
     * bit-exact, so the fixed oracle entry (which replays the unguarded
     * chain in DuckDB) stays green at the test SFs. The signature
-    * relation is persisted (Caches-tracked) so the probe side, the
-    * candidate side, and the guard window all read ONE signature pass.
+    * relation is persisted (Caches-tracked, WITH-free so the SQL below
+    * matches the cache) so the probe side, the candidate side, and the
+    * guard window all read ONE signature pass.
     */
   def ssLshAnnOn(s: SparkSession, emb: DataFrame,
                  nPlanes: Int, queryPred: String,
@@ -224,23 +226,21 @@ object Similarity {
     import org.apache.spark.sql.functions.col
     emb.createOrReplaceTempView("__emb")
     val planesLit = planesSql(nPlanes, 64)
-    val sig = graft.Caches.track(s.sql(
-      s"""WITH base AS (
-         |  SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
-         |  FROM __emb)
-         |SELECT vec_id, v,
+    val sig = Caches.track(s.sql(
+      s"""SELECT vec_id, v,
          |       sqrt(graft_dot(v, v)) AS nrm,
          |       aggregate(transform(sequence(0, ${nPlanes - 1}), j ->
          |         CASE WHEN graft_dot(v, element_at($planesLit, j + 1)) > 0D
          |              THEN shiftleft(1, j) ELSE 0 END),
          |         0, (acc, x) -> acc + x) AS bucket
-         |FROM base""".stripMargin))
+         |FROM (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
+         |      FROM __emb)""".stripMargin))
     DensityGuard.guard(sig, Seq("bucket"),
         DensityGuard.drawOn("lshannguard:", col("vec_id")),
         maxBlockRows, onOverflow, tag = "ss_lsh_ann",
         remediation = "Use more planes (finer buckets), raise the cap, " +
           "or use onOverflow=sample.",
-        onFail = sig.unpersist(blocking = false))
+        onFail = Caches.release(sig))
       .createOrReplaceTempView("__lsig")
     s.sql(
       s"""WITH probes AS (
@@ -475,26 +475,6 @@ object Similarity {
     s.read.parquet(path)
   }
 
-  /** Materialize a SMALL deterministic codebook relation ONCE per query
-    * invocation (r14, VERDICT item #1 — the ss_* duplicated-subtree
-    * sweep): eager localCheckpoint runs the training chain exactly one
-    * time INSIDE the query (computed from the parquet inputs on every
-    * invocation — nothing survives across runs), and the broadcast hint
-    * restores the plan the inline chain got from its parquet-stats leaf
-    * (a LogicalRDD has no size statistics, so an unhinted codebook would
-    * demote every centroid cross join to a non-broadcast strategy).
-    * Registered with [[graft.Caches]] so library callers can release the
-    * nlist-row pin; the harness clears it per query.
-    *
-    * This is NOT the r12-rejected n3/assign materialization (corpus-sized
-    * relations, where codegen re-derivation from parquet won): the hoist
-    * stops at the ≤ nSub·nCode-row codebooks, exactly where the CTE
-    * re-inlining multiplies whole k-means training chains per mention.
-    */
-  private def hoistCodebook(df: DataFrame): DataFrame =
-    org.apache.spark.sql.functions.broadcast(
-      graft.Caches.trackPinned(df.localCheckpoint(eager = true)))
-
   /** Oracle entry for the TRAIN-ONCE IVF pattern (r12 verdict item #1):
     * [[ssIvfTrain]] fits the nlist=16 codebook in its own job, the
     * codebook round-trips parquet, and the ANN query runs with
@@ -578,10 +558,16 @@ object Similarity {
     */
   def ssIvfAnn(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    // r14 coarse-codebook hoist (see [[hoistCodebook]]): assign + probes
-    // each re-ran the k-means chain inline
+    // r14 coarse-codebook hoist: assign + probes each re-ran the k-means
+    // chain inline. Every ss_* codebook hoist is the same two steps: an
+    // eager pin runs the SMALL (≤ nSub·nCode-row) training chain once per
+    // invocation, and the broadcast hint restores the plan its parquet
+    // leaf got (a LogicalRDD has no size statistics, so an unhinted
+    // codebook demotes every centroid cross join to a non-broadcast
+    // strategy). Corpus-sized relations stay inline: there codegen
+    // re-derivation from parquet won (r12).
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = hoistCodebook(ssIvfTrain(s, emb, 16))
+    val cent = broadcast(Caches.pin(ssIvfTrain(s, emb, 16), eager = true))
     ssIvfAnnOn(s, emb, "n.vec_id BETWEEN 20 AND 24", 5,
       pretrained = Some(cent))
   }
@@ -980,7 +966,7 @@ object Similarity {
     val s = emb.sparkSession
     emb.createOrReplaceTempView("__pw_emb")
     // the single corpus pass: (i, j) -> Gram sum + (i, j=0) -> mean sum
-    s.sql(
+    Caches.pin(s.sql(
       """SELECT p.pi AS i, q.qj AS j,
         |       SUM(CAST(ROUND(CAST(p.px AS DOUBLE) * CAST(q.qx AS DOUBLE),
         |                      9) AS DECIMAL(28,9))) AS g,
@@ -992,8 +978,7 @@ object Similarity {
         |FROM __pw_emb
         |LATERAL VIEW posexplode(embedding) p AS pi, px
         |LATERAL VIEW posexplode(embedding) q AS qj, qx
-        |GROUP BY p.pi, q.qj""".stripMargin)
-      .localCheckpoint(eager = false)
+        |GROUP BY p.pi, q.qj""".stripMargin))
       .createOrReplaceTempView("__pw_gram")
     powerIterate(s, rounds)
   }
@@ -1126,12 +1111,11 @@ object Similarity {
             if (j == 0) sx(i) else java.math.BigDecimal.ZERO,
             cnt)).iterator
       }
-    partials.toDF("i", "j", "g", "sx", "cnt")
+    Caches.pin(partials.toDF("i", "j", "g", "sx", "cnt")
       .groupBy("i", "j")
       .agg(org.apache.spark.sql.functions.expr("SUM(g)").as("g"),
         org.apache.spark.sql.functions.expr("SUM(sx)").as("sx"),
-        org.apache.spark.sql.functions.expr("SUM(cnt)").as("cnt"))
-      .localCheckpoint(eager = false)
+        org.apache.spark.sql.functions.expr("SUM(cnt)").as("cnt")))
       .createOrReplaceTempView("__pw_gram")
     powerIterate(s, rounds)
   }
@@ -1152,9 +1136,9 @@ object Similarity {
     * Scale design: the candidate relation carries ONE incremental
     * max-sim column — round t joins only the single newly-picked vector
     * (a broadcast literal), never S × candidates; the argmax is a
-    * TakeOrdered LIMIT 1; each round eagerly checkpoints the updated
-    * relation and releases its predecessor (the Checkpoints discipline),
-    * so the plan stays O(1) in rounds. At 100 TB MMR runs over a
+    * TakeOrdered LIMIT 1; each round eagerly pins the updated relation
+    * and releases its predecessor (the Superstep release contract), so
+    * the plan stays O(1) in rounds. At 100 TB MMR runs over a
     * RETRIEVED candidate set (the ANN entries' output, thousands of
     * rows), not the raw corpus — the same loop unchanged.
     */
@@ -1166,7 +1150,7 @@ object Similarity {
     import s.implicits._
     import org.apache.spark.sql.functions.{array, col, expr, greatest, lit, round}
     emb.createOrReplaceTempView("__mmr_emb")
-    var cand = s.sql(
+    var cand = Caches.pin(s.sql(
       s"""WITH base AS (
          |  SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
          |  FROM __mmr_emb),
@@ -1177,8 +1161,7 @@ object Similarity {
          |       CAST(0 AS DOUBLE) AS ms
          |FROM norms c CROSS JOIN (SELECT * FROM norms
          |                         WHERE vec_id = $queryId) q
-         |WHERE c.vec_id <> $queryId""".stripMargin)
-      .localCheckpoint(eager = true)
+         |WHERE c.vec_id <> $queryId""".stripMargin), eager = true)
     val out = Seq.newBuilder[(Long, Long, Double, Double)]
     var t = 1
     var done = false
@@ -1195,18 +1178,17 @@ object Similarity {
         // literal array via the Column API: an SQL numeric literal would
         // type the array DECIMAL and break graft_dot's double contract
         val pv = array(v.map(lit): _*)
-        val next = cand.filter(col("vec_id") =!= id)
+        val next = Caches.pin(cand.filter(col("vec_id") =!= id)
           .withColumn("ms", greatest(col("ms"),
             round(org.apache.spark.sql.functions
               .call_function("graft_dot", col("v"), pv)
-              / (col("nrm") * lit(nrm)), 6)))
-          .localCheckpoint(eager = true)
-        graft.graph.Checkpoints.release(cand)
+              / (col("nrm") * lit(nrm)), 6))), eager = true)
+        Caches.release(cand)
         cand = next
       }
       t += 1
     }
-    graft.graph.Checkpoints.release(cand)
+    Caches.release(cand)
     out.result().toDF("rank", "vec_id", "rel", "score").orderBy("rank")
   }
 
@@ -1256,7 +1238,7 @@ object Similarity {
     val out = Seq.newBuilder[(Long, Long, Double)]
     out += ((1L, fid, 0.0))
     def centerLit(v: Seq[Double]) = array(v.map(lit): _*)
-    var cand = s.sql(
+    var cand = Caches.pin(s.sql(
       """WITH base AS (
         |  SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
         |  FROM __kpp_emb)
@@ -1265,8 +1247,7 @@ object Similarity {
       .withColumn("d2", round(col("vv")
         - lit(2.0) * org.apache.spark.sql.functions
             .call_function("graft_dot", col("v"), centerLit(fv))
-        + lit(fvv), 9))
-      .localCheckpoint(eager = true)
+        + lit(fvv), 9)), eager = true)
     var t = 2
     var done = false
     while (t <= k && !done) {
@@ -1283,18 +1264,17 @@ object Similarity {
         val r = top.head
         val (id, v, vv) = (r.getLong(0), r.getSeq[Double](1), r.getDouble(2))
         out += ((t.toLong, id, r.getDouble(3)))
-        val next = cand.filter(col("vec_id") =!= id)
+        val next = Caches.pin(cand.filter(col("vec_id") =!= id)
           .withColumn("d2", least(col("d2"), round(col("vv")
             - lit(2.0) * org.apache.spark.sql.functions
                 .call_function("graft_dot", col("v"), centerLit(v))
-            + lit(vv), 9)))
-          .localCheckpoint(eager = true)
-        graft.graph.Checkpoints.release(cand)
+            + lit(vv), 9))), eager = true)
+        Caches.release(cand)
         cand = next
       }
       t += 1
     }
-    graft.graph.Checkpoints.release(cand)
+    Caches.release(cand)
     out.result().toDF("rank", "vec_id", "d2").orderBy("rank")
   }
 
@@ -1635,9 +1615,9 @@ object Similarity {
     * scan ~nprobe·N/nlist 16-byte codes instead of N.
     */
   def ssIvfBqTopk(s: SparkSession, dir: String): DataFrame = {
-    // r14 coarse-codebook hoist (see [[hoistCodebook]])
+    // r14 coarse-codebook hoist (see [[ssIvfAnn]])
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = hoistCodebook(ssIvfTrain(s, emb, 16))
+    val cent = broadcast(Caches.pin(ssIvfTrain(s, emb, 16), eager = true))
     ssBqTopkOn(s, emb, "vec_id < 5", 10, nprobe = 2,
       pretrained = Some(cent))
   }
@@ -1984,10 +1964,10 @@ object Similarity {
     * row-comparable with [[ssCosineTopk]] (exact) and [[ssSqTopk]] (SQ8).
     */
   def ssPqTopk(s: SparkSession, dir: String): DataFrame = {
-    // r14 codebook hoist (see [[hoistCodebook]]): cb1 was re-derived per
+    // r14 codebook hoist (see [[ssIvfAnn]]): cb1 was re-derived per
     // mention (enc + recn + lut = 3× the whole sub-codebook training)
     val emb = Tables.load(s, dir, "embeddings")
-    val cb = hoistCodebook(ssPqTrain(s, emb))
+    val cb = broadcast(Caches.pin(ssPqTrain(s, emb), eager = true))
     ssPqTopkOn(s, emb, "vec_id < 5", 10, pretrainedPq = Some(cb))
   }
 
@@ -2040,10 +2020,10 @@ object Similarity {
     * the rank differences ARE the composition's candidate truncation.
     */
   def ssIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    // r14 codebook hoist for BOTH quantizers (see [[hoistCodebook]])
+    // r14 codebook hoist for BOTH quantizers (see [[ssIvfAnn]])
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = hoistCodebook(ssIvfTrain(s, emb, 16))
-    val cb = hoistCodebook(ssPqTrain(s, emb))
+    val cent = broadcast(Caches.pin(ssIvfTrain(s, emb, 16), eager = true))
+    val cb = broadcast(Caches.pin(ssPqTrain(s, emb), eager = true))
     ssIvfPqTopkOn(s, emb, "vec_id < 5", 10,
       pretrained = Some(cent), pretrainedPq = Some(cb))
   }
@@ -2146,12 +2126,11 @@ object Similarity {
     // re-ran the corpus assign pass — materialized once (lazy
     // localCheckpoint; corpus-sized but narrow, and the train is a
     // one-off job per invocation)
-    s.sql(
+    Caches.pin(s.sql(
       s"""WITH ${ivfTrainAssignCtes(s, nlist, pretrained)}
          |SELECT a.vec_id, a.cid,
          |       zip_with(a.v, c.cv, (x, y) -> x - y) AS rv
-         |FROM assign a JOIN $C c ON c.cid = a.cid""".stripMargin)
-      .localCheckpoint(eager = false)
+         |FROM assign a JOIN $C c ON c.cid = a.cid""".stripMargin))
       .createOrReplaceTempView("__rres_train")
     s.sql(
       s"""WITH rres AS (SELECT vec_id, cid, rv FROM __rres_train),
@@ -2268,8 +2247,9 @@ object Similarity {
     // the corpus encode/ADC tail; rows are oracle-verified identical
     // (the ss_ivfrq_pre twin locked the equivalence in r13).
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = hoistCodebook(ssIvfTrain(s, emb, 16))
-    val rcb = hoistCodebook(ssRqTrain(s, emb, 16, pretrained = Some(cent)))
+    val cent = broadcast(Caches.pin(ssIvfTrain(s, emb, 16), eager = true))
+    val rcb = broadcast(Caches.pin(
+      ssRqTrain(s, emb, 16, pretrained = Some(cent)), eager = true))
     ssRqTopkOn(s, emb, "vec_id < 5", 10,
       pretrained = Some(cent), pretrainedRq = Some(rcb))
   }
@@ -2284,8 +2264,9 @@ object Similarity {
     // r14: same codebook hoist as [[ssRqTopk]] (the probed twin adds the
     // qprobes cut, which consumes the same hoisted centroids)
     val emb = Tables.load(s, dir, "embeddings")
-    val cent = hoistCodebook(ssIvfTrain(s, emb, 16))
-    val rcb = hoistCodebook(ssRqTrain(s, emb, 16, pretrained = Some(cent)))
+    val cent = broadcast(Caches.pin(ssIvfTrain(s, emb, 16), eager = true))
+    val rcb = broadcast(Caches.pin(
+      ssRqTrain(s, emb, 16, pretrained = Some(cent)), eager = true))
     ssRqTopkOn(s, emb, "vec_id < 5", 10, nprobe = 2,
       pretrained = Some(cent), pretrainedRq = Some(rcb))
   }
@@ -2321,13 +2302,10 @@ object Similarity {
                   mult: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     emb.createOrReplaceTempView("__emb_opq")
-    // the variance pass + permutation gather run ONCE and the permuted
-    // (vec_id, v, nrm) relation pins — inlined, the gather re-executed
-    // for every PQ-chain consumer of n3 (sub, seed, the encode ranks,
-    // qv, the exact rescore; measured 4.4 s at bench scale). Tracked:
-    // callers release via Caches.releaseAll; the harness clears per
-    // query.
-    graft.Caches.track(s.sql(
+    // the permuted (vec_id, v, nrm) relation is a plain view: later SQL
+    // never matches the cache of a WITH statement, so persisting it does
+    // not save the per-n3-mention variance pass + gather (ROADMAP)
+    s.sql(
       s"""WITH base0 AS (
          |  SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v0
          |  FROM __emb_opq),
@@ -2360,18 +2338,18 @@ object Similarity {
          |         transform(p.pm, ii -> element_at(b.v0, ii + 1)) AS v
          |  FROM base0 b CROSS JOIN perm p)
          |SELECT vec_id, v, sqrt(graft_dot(v, v)) AS nrm FROM base"""
-        .stripMargin))
+        .stripMargin)
       .createOrReplaceTempView("__opq_n3")
-    // r14 codebook hoist (see [[hoistCodebook]]): the PQ sub-codebooks
+    // r14 codebook hoist (see [[ssIvfAnn]]): the PQ sub-codebooks
     // over the PERMUTED corpus train once per invocation instead of per
     // cb1 mention (enc + recn + lut re-ran the training chain, each over
     // the cached permuted relation). The permutation is corpus-derived,
     // so the hoist stays INSIDE the query — the portability caveat in
     // [[ssPqTrain]]'s scaladoc is about cross-corpus reuse, not this.
-    val cb = hoistCodebook(s.sql(
+    val cb = broadcast(Caches.pin(s.sql(
       s"""WITH n3 AS (SELECT * FROM __opq_n3),
          |${pqTrainEncodeCtes(nSub, nCode)}
-         |SELECT m, code, cv FROM cb1 ORDER BY m, code""".stripMargin))
+         |SELECT m, code, cv FROM cb1 ORDER BY m, code""".stripMargin), eager = true))
     s.sql(
       s"""WITH n3 AS (SELECT * FROM __opq_n3),
          |${pqTrainEncodeCtes(nSub, nCode, Some(cb))},
@@ -2415,7 +2393,7 @@ object Similarity {
     // would otherwise serialize the whole O(N²/2) dot-product scan
     // through one task (measured 3.3 → 1.1 s at bench scale)
     val par = s.sparkContext.defaultParallelism
-    val half = s.sql(
+    val half = Caches.pin(s.sql(
       s"""WITH base AS (
         |  SELECT /*+ REPARTITION($par) */
         |         vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
@@ -2424,10 +2402,9 @@ object Similarity {
         |  SELECT vec_id, v, sqrt(graft_dot(v, v)) AS nrm FROM base)
         |SELECT q.vec_id AS a, c.vec_id AS b,
         |       ROUND(graft_dot(q.v, c.v) / (q.nrm * c.nrm), 6) AS cos
-        |FROM norms q JOIN norms c ON c.vec_id > q.vec_id""".stripMargin)
-      .localCheckpoint(eager = false)
+        |FROM norms q JOIN norms c ON c.vec_id > q.vec_id""".stripMargin))
     half.createOrReplaceTempView("__knn_half")
-    val topk = s.sql(
+    val topk = Caches.pin(s.sql(
       s"""WITH scored AS (
          |  SELECT a, b, cos FROM __knn_half
          |  UNION ALL SELECT b AS a, a AS b, cos FROM __knn_half)
@@ -2436,8 +2413,7 @@ object Similarity {
          |         ROW_NUMBER() OVER (PARTITION BY a
          |           ORDER BY cos DESC, b) AS rn
          |  FROM scored)
-         |WHERE rn <= $k""".stripMargin)
-      .localCheckpoint(eager = false)
+         |WHERE rn <= $k""".stripMargin))
     topk.createOrReplaceTempView("__knn_topk")
     s.sql(
       """SELECT x.a AS vec_a, x.b AS vec_b, x.cos,

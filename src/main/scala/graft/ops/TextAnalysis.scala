@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Caches, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -971,9 +971,8 @@ object TextAnalysis {
     // CTEs, so as a CTE the corpus-sized explode+aggregate would run four
     // times (measured 78 s vs 8 s at 500k docs, PERF.md r7,
     // addendum18). Materialize it once; it is vocabulary × sources sized.
-    docs.select(col("source"), explode(split(col("text"), " ")).as("w"))
-      .groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+    Caches.pin(docs.select(col("source"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("source", "w").agg(count(lit(1)).as("c")))
       .createOrReplaceTempView("__jsd_sw")
     s.sql(
       """WITH sw AS (SELECT source, w, c FROM __jsd_sw),
@@ -1397,11 +1396,10 @@ object TextAnalysis {
     // one corpus pass; the vocabulary-sized (source, token) counts feed
     // four consumers below, so materialize them (lazy checkpoint) rather
     // than let InlineCTE re-run the explode+aggregate per consumer
-    s.sql(
+    Caches.pin(s.sql(
       """SELECT source, t.token AS token, COUNT(*) AS y FROM __lo_docs
         |LATERAL VIEW explode(split(text, ' ')) t AS token
-        |GROUP BY source, t.token""".stripMargin)
-      .localCheckpoint(eager = false)
+        |GROUP BY source, t.token""".stripMargin))
       .createOrReplaceTempView("__lo_y")
     s.sql(
       s"""WITH g AS (SELECT token, SUM(y) AS g FROM __lo_y GROUP BY token),
@@ -1463,20 +1461,17 @@ object TextAnalysis {
     docs.createOrReplaceTempView("__bm_docs")
     queryDocs.createOrReplaceTempView("__bm_qdocs")
     // one corpus pass; (doc, term, tf) feeds dl, df AND the postings join
-    s.sql(
+    Caches.pin(s.sql(
       """SELECT doc_id, t.w AS w, COUNT(*) AS tf FROM __bm_docs
         |LATERAL VIEW explode(split(text, ' ')) t AS w
-        |GROUP BY doc_id, t.w""".stripMargin)
-      .localCheckpoint(eager = false)
+        |GROUP BY doc_id, t.w""".stripMargin))
       .createOrReplaceTempView("__bm_tf")
     val selfGuard = if (excludeSelf) "AND t.doc_id <> q.query_id" else ""
     // dl feeds BOTH the avgdl scalar and the per-doc scoring join; as an
     // inline CTE Spark re-aggregated __bm_tf per mention (the r13
     // before-plan shows the doc_id HashAggregate twice) — materialized
     // once, doc-sized and narrow (guide §7.2 duplicated subtrees)
-    s.sql(
-      """SELECT doc_id, SUM(tf) AS dl FROM __bm_tf GROUP BY doc_id"""
-    ).localCheckpoint(eager = false)
+    Caches.pin(s.sql("SELECT doc_id, SUM(tf) AS dl FROM __bm_tf GROUP BY doc_id"))
       .createOrReplaceTempView("__bm_dl")
     s.sql(
       s"""WITH dl AS (SELECT doc_id, dl FROM __bm_dl),
@@ -1752,7 +1747,7 @@ object TextAnalysis {
     // because Catalyst pushes the filter below Generate — semantics must
     // not depend on that, since sequence(1, size-1) on a short doc is a
     // DESCENDING [1, 0] and element_at(toks, 0) throws at eval
-    graft.Caches.track(s.sql(
+    Caches.track(s.sql(
       """SELECT DISTINCT least(p.a, p.b) AS u, greatest(p.a, p.b) AS v
         |FROM (SELECT split(text, ' ') AS toks FROM __tr_docs)
         |LATERAL VIEW explode(CASE WHEN size(toks) >= 2
@@ -1810,15 +1805,14 @@ object TextAnalysis {
   def taBpe(docs: DataFrame, merges: Int = 3): DataFrame = {
     val s = docs.sparkSession
     docs.createOrReplaceTempView("__bpe_docs")
-    s.sql(
+    Caches.pin(s.sql(
       """SELECT trim(regexp_replace(word, '(.)', '$1 ')) AS sym, n
         |FROM (SELECT t.w AS word, COUNT(*) AS n FROM __bpe_docs
         |      LATERAL VIEW explode(split(text, ' ')) t AS w
-        |      GROUP BY t.w)""".stripMargin)
-      .localCheckpoint(eager = false)
+        |      GROUP BY t.w)""".stripMargin))
       .createOrReplaceTempView("__bpe_enc0")
     val merged = (1 to merges).map { r =>
-      s.sql(
+      Caches.pin(s.sql(
         s"""SELECT element_at(split(pair, ' '), 1) AS lhs,
            |       element_at(split(pair, ' '), 2) AS rhs, cnt
            |FROM (
@@ -1829,10 +1823,9 @@ object TextAnalysis {
            |    i -> concat(element_at(st, i), ' ',
            |                element_at(st, i + 1)))) p AS pair
            |  GROUP BY p.pair)
-           |ORDER BY cnt DESC, concat(lhs, ' ', rhs) LIMIT 1""".stripMargin)
-        .localCheckpoint(eager = false)
+           |ORDER BY cnt DESC, concat(lhs, ' ', rhs) LIMIT 1""".stripMargin))
         .createOrReplaceTempView(s"__bpe_top$r")
-      s.sql(
+      Caches.pin(s.sql(
         s"""SELECT aggregate(split(e.sym, ' '), '', (acc, c) -> CASE
            |    WHEN acc = '' THEN c
            |    WHEN endswith(concat(' ', acc), concat(' ', t.lhs))
@@ -1840,8 +1833,7 @@ object TextAnalysis {
            |    THEN concat(substr(acc, 1, length(acc) - length(t.lhs)),
            |                t.lhs, t.rhs)
            |    ELSE concat(acc, ' ', c) END) AS sym, e.n
-           |FROM __bpe_enc${r - 1} e CROSS JOIN __bpe_top$r t""".stripMargin)
-        .localCheckpoint(eager = false)
+           |FROM __bpe_enc${r - 1} e CROSS JOIN __bpe_top$r t""".stripMargin))
         .createOrReplaceTempView(s"__bpe_enc$r")
       s.sql(
         s"""SELECT $r AS merge_round, lhs, rhs, cnt AS pair_count,

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * public call. Each persisting query is materialized TWICE in one
   * session (the accumulation shape the verdict flagged), then released;
   * `getPersistentRDDs` must return exactly to its pre-query baseline
-  * WITHOUT clearSessionCaches. An op that adds a raw `.persist` without
-  * `Caches.track` fails the baseline assertion here.
+  * WITHOUT clearSessionCaches. An op that pins a frame outside
+  * `Caches.pin` / `Caches.track` fails the baseline assertion here (and
+  * MaterializationLintSpec rejects it at the source).
   */
 class CacheReleaseSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -43,6 +44,24 @@ class CacheReleaseSpec extends AnyFunSuite {
     }
   }
 
+  test("checkpointing queries release to baseline via Caches.releaseAll") {
+    // each pins frames with Caches.pin only (no persist); a pin that
+    // bypasses the registry survives releaseAll and shows up here
+    val leaked = for (name <- Seq("q13_bfs", "q25_triangles", "q39_mst",
+        "ta_bm25", "ev_cooccur", "dd_resolve")) yield {
+      val baseline = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.queries(name)(spark, sf).count()
+      SparkEntry.queries(name)(spark, sf).count()
+      Caches.releaseAll(spark)
+      assert(Caches.trackedCount(spark) == 0, s"$name: registry not empty")
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- baseline
+      left.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+      name -> left.size
+    }
+    assert(leaked.forall(_._2 == 0),
+      s"pinned RDDs left after Caches.releaseAll: ${leaked.mkString(", ")}")
+  }
+
   test("dsDsirWithin (library variant, no queries entry) releases too") {
     import spark.implicits._
     val baseline = spark.sparkContext.getPersistentRDDs.keySet
@@ -61,12 +80,11 @@ class CacheReleaseSpec extends AnyFunSuite {
     assert(Caches.trackedCount(spark) == 0)
   }
 
-  test("untrack drops exactly the released frame's registration") {
+  test("release drops exactly the released frame's registration") {
     Caches.releaseAll(spark)
     val kept = Caches.track(spark.range(10).toDF())
     val released = Caches.track(spark.range(20).toDF())
-    released.unpersist(blocking = true)
-    Caches.untrack(released)
+    Caches.release(released)
     assert(Caches.trackedCount(spark) == 1)
     Caches.releaseAll(spark)
     assert(kept.storageLevel == org.apache.spark.storage.StorageLevel.NONE)

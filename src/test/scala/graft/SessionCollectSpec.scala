@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with or without this registry, and is exactly why `releaseAll` is
   * part of the library contract. The registry's own guarantee is that
   * IT never adds a strong path to the session, locked by the
-  * trackPinned case (no CacheManager entry involved).
+  * pinned-frame case (no CacheManager entry involved).
   */
 class SessionCollectSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,15 +33,14 @@ class SessionCollectSpec extends AnyFunSuite {
     cond()
   }
 
-  test("a dropped session with only trackPinned frames is expunged " +
+  test("a dropped session with only pinned frames is expunged " +
       "from the registry without releaseAll") {
     val base = Caches.registrySessionCount
     var child = spark.newSession()
     val childRef = new WeakReference(child)
     locally {
       // a localCheckpoint pin: RDD-layer only, no CacheManager entry
-      var df = child.range(0L, 1000L).toDF("id").localCheckpoint(true)
-      Caches.trackPinned(df)
+      var df = Caches.pin(child.range(0L, 1000L).toDF("id"), eager = true)
       assert(Caches.trackedCount(child) == 1)
       df = null
     }
@@ -60,7 +59,7 @@ class SessionCollectSpec extends AnyFunSuite {
     // shared-context listener machinery, upstream). The registry's own
     // contract is therefore: after releaseAll, it holds NOTHING for the
     // session; the collectability-when-only-we-pin case is the
-    // trackPinned test above.
+    // pinned-frame test above.
     val base = Caches.registrySessionCount
     val child = spark.newSession()
     val df = child.range(0L, 100L).toDF("id")

@@ -1,10 +1,12 @@
 package graft.graph
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Locks the release discipline of [[Superstep]] (and of the hand-rolled
-  * loops on Checkpoints.release): an iterative operator must
+  * loops on `Caches.pin` / `Caches.release`): an iterative operator must
   * not leave one pinned BlockManager frame per ITERATION behind — only
   * its result lineage (O(1) frames, or O(peels) for Scc's parts). The
   * round-7 driver session measured the failure mode this prevents:
@@ -14,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * run) lets the async ContextCleaner find them.
   *
   * The assertions count `sc.getPersistentRDDs` entries — localCheckpoint
-  * registers its RDD there, and Checkpoints.release removes it
+  * registers its RDD there, and `Caches.release` removes it
   * synchronously — so the budget is exact, not timing-dependent.
   */
 class CheckpointHygieneSpec extends AnyFunSuite {
@@ -138,6 +140,48 @@ class CheckpointHygieneSpec extends AnyFunSuite {
     assert(res.flow == 3L && res.rounds >= 3, s"flow ${res.flow} rounds ${res.rounds}")
     val left = pinned - base
     assert(left <= 4, s"pinned $left frames (want <=4, not one per round)")
+  }
+
+  /** Runs `body` while a poller holds a strong reference to every RDD
+    * that appears in `getPersistentRDDs`, and returns those still
+    * persisted afterwards. Spark keeps that map's values weakly, so
+    * without the held references a driver GC can drop an unreleased pin
+    * from the count (its blocks wait for the async ContextCleaner).
+    */
+  private def pinsLeftBy(body: => Unit): Seq[Int] = {
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, AnyRef]()
+    @volatile var polling = true
+    val poller = new Thread(() =>
+      while (polling) {
+        spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+          seen.putIfAbsent(id, r) }
+        Thread.sleep(2)
+      })
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    poller.start()
+    try body finally { polling = false; poller.join() }
+    seen.keySet().asScala.toSeq.filterNot(before.contains)
+      .filter(spark.sparkContext.getPersistentRDDs.contains).sorted
+  }
+
+  test("MaxFlow's distributed cleanup pins no more than the driver tier") {
+    // a 24-hop path network (ids from 10: 1 and 2 are the reserved
+    // super-terminals), solved by the distributed cleanup alone (no
+    // engine rounds, no driver tier): its residual BFS pins adj plus one
+    // frame per level (27 levels to reach the sink), and must release
+    // them all before returning
+    val edges = (10L until 34L).flatMap(i =>
+      Seq((i, i + 1, 3L), (i + 1, i, 3L))).toDF("src", "dst", "cap")
+    clearAll()
+    var res: MaxFlow.Result = null
+    val left = pinsLeftBy {
+      res = MaxFlow.run(spark, edges, Seq(10L), Seq(34L),
+        MaxFlow.Config(maxRounds = 0, driverCleanupMaxEdges = 0L))
+    }
+    assert(res.flow == 3L && res.cleanupTier == MaxFlow.CleanupTier.Distributed,
+      s"flow ${res.flow} tier ${res.cleanupTier}")
+    assert(left.size <= 4,
+      s"pinned ${left.size} frames (want <=4, as the driver tier): $left")
   }
 
   test("KCore pins only the surviving edge set") {

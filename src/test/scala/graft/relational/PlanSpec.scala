@@ -507,6 +507,33 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("persisted WITH-free relations are read from their caches by every consumer") {
+    // a persist of a `WITH ...` statement is never matched by later SQL
+    // (the plan recomputes it from parquet per mention); these four
+    // definitions are WITH-free so each consumer reads the cache
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    val raw = Seq((1L, "a b c a b", true), (2L, "c d e f g", false),
+      (3L, "a b d d e", true), (4L, "x y z w v", false))
+      .toDF("doc_id", "text", "is_target")
+    val cases = Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("ds_dsir", 3, () => graft.SparkEntry.queries("ds_dsir")(spark, sf)),
+      ("dsDsirWithin", 5, () => graft.ops.Pipeline.dsDsirWithin(raw, k = 2)),
+      ("ss_lsh_ann", 2, () => graft.SparkEntry.queries("ss_lsh_ann")(spark, sf)),
+      ("dd_cdc", 2, () => graft.SparkEntry.queries("dd_cdc")(spark, sf)))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    try for ((name, reads, build) <- cases) {
+      val df = build()
+      df.write.format("noop").mode("overwrite").save()
+      val plan = df.queryExecution.executedPlan
+      val scans = aqe.collect(plan) { case t: InMemoryTableScanExec => t }
+      assert(scans.size == reads,
+        s"$name: ${scans.size} cache reads, want $reads:\n$plan")
+      graft.Caches.releaseAll(spark)
+    } finally graft.Caches.releaseAll(spark)
+  }
+
   test("ev_cooccur: pair join runs on the compacted presence relation, one user window") {
     val events = graft.Tables.load(spark, sf, "events")
     val plan = formatted(

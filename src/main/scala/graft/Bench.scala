@@ -54,10 +54,10 @@ object Bench {
       // was q16's run 1 — a 16-vertex bipartite graph (q16's shape, meets
       // in 3 hops, exercises engine + acceptor + driver cleanup) absorbs
       // it untimed
-      val pairs = for { s <- 0L to 3L; t <- 10L to 13L } yield (s, t, 2L)
+      val pairs = for { s <- 20L to 23L; t <- 30L to 33L } yield (s, t, 2L)
       val wedges = (pairs ++ pairs.map(p => (p._2, p._1, p._3)))
         .toDF("src", "dst", "cap")
-      graft.graph.MaxFlow.run(spark, wedges, Seq(0L, 1L), Seq(10L, 11L),
+      graft.graph.MaxFlow.run(spark, wedges, Seq(20L, 21L), Seq(30L, 31L),
         graft.graph.MaxFlow.Config(acceptPatience = 1))
     }
 

@@ -23,18 +23,35 @@ object GraphBuilder {
     * u→v (cap c) is seen by u as (nbr v, capOut c) and by v as (nbr u,
     * capIn c), and parallel arcs sum per neighbour (A3). A null cap counts
     * as 0. The input is read once.
+    *
+    * Ids 1 and 2 belong to the super-terminals, so a source, sink or edge
+    * endpoint on either is rejected: the terminals on the driver, an edge
+    * when the build's one job reads it ("Reserved ID : <id>", the
+    * `GraphSources` message).
     */
   def buildState(spark: SparkSession, edges: DataFrame,
                  sources: Seq[Long], sinks: Seq[Long]): Dataset[VertexState] = {
     import spark.implicits._
     require(sources.nonEmpty && sinks.nonEmpty, "need at least one source and sink")
+    val reserved = Seq(GraphModel.SuperSource, GraphModel.SuperSink)
+    require(!(sources ++ sinks).exists(reserved.contains),
+      s"vertex ids ${reserved.mkString(" and ")} are reserved for the " +
+        s"super-terminals; sources $sources, sinks $sinks")
+    // the guard rides the value path: a separate assert column would be
+    // pruned away by Catalyst
+    def endpoint(c: String) = {
+      val id = col(c).cast("long")
+      when(id.isin(reserved: _*),
+        raise_error(concat(lit("Reserved ID : "), id.cast("string"))))
+        .otherwise(id)
+    }
 
     val inf = GraphModel.InfCap
     val terminal =
       sources.distinct.flatMap(sId => Seq((1L, sId, inf), (sId, 1L, inf))) ++
       sinks.distinct.flatMap(tId => Seq((tId, 2L, inf), (2L, tId, inf)))
     edges
-      .select(col("src").cast("long"), col("dst").cast("long"),
+      .select(endpoint("src"), endpoint("dst"),
         coalesce(col("cap").cast("long"), lit(0L)))
       .as[(Long, Long, Long)]
       .union(terminal.toDS())

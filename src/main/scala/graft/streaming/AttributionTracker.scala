@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{tsOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evAttribution` (last-touch
   * attribution: every purchase goes to the most recent PRECEDING click,
   * view fallback, organic else — "preceding" in strict (ts, event_id)
@@ -13,7 +15,9 @@ import java.sql.Timestamp
   * Per-user state is the last click (id, micros) and last view (id,
   * micros) — O(1); purchase rows emit AS THEY ARRIVE (each trigger folds
   * its ts-sorted slice on top of the carried lasts), and the state evicts
-  * on the quiesce timeout. A cross-batch touch only replaces the carried
+  * on the quiesce timeout ([[EventClock.QuiesceUs]]: seven days after
+  * the user's newest event, so a purchase days after its touch still
+  * attributes to it). A cross-batch touch only replaces the carried
   * one when it is LATER in (ts, event_id) order, so an out-of-order
   * in-watermark touch never regresses the state; but a purchase already
   * emitted in an earlier trigger cannot be re-attributed when a later
@@ -22,7 +26,8 @@ import java.sql.Timestamp
   * [[FunnelTracker.funnelStream]] (StreamingSpec documents the
   * divergence). [[attributionStreamExact]] buffers the user's events
   * until quiesce and folds them whole — exact for everything the
-  * watermark admitted, at O(events in the active window) state. Batch
+  * watermark admitted, at O(events in the active window) state; its rows
+  * therefore emit once the watermark passes that timeout. Batch
   * mode ([[attributionBatch]]) sees each group whole: EXACT, and
   * parity-checked against the oracle-checked SQL in StreamingSpec.
   */
@@ -50,8 +55,6 @@ object AttributionTracker {
 
   val Unset: Long = -1L
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   private val emptyState = AState(Unset, Unset, Unset, Unset, 0L)
 
   /** The shared pure core: fold events sorted by (micros, event_id) onto
@@ -70,9 +73,9 @@ object AttributionTracker {
           if (cu != Unset) ("click", ci, cu)
           else if (vu != Unset) ("view", vi, vu)
           else ("organic", Unset, Unset)
-        out += TouchRow(user, id, EventSessionizer.usToTs(us), v, touchType,
+        out += TouchRow(user, id, tsOf(us), v, touchType,
           if (touchId == Unset) None else Some(touchId),
-          if (touchUs == Unset) null else EventSessionizer.usToTs(touchUs))
+          if (touchUs == Unset) null else tsOf(touchUs))
       case "click" =>
         if (cu == Unset || us > cu || (us == cu && id > ci)) { ci = id; cu = us }
       case "view" =>
@@ -82,22 +85,7 @@ object AttributionTracker {
     (AState(ci, cu, vi, vu, st.tMax), out.toSeq)
   }
 
-  private def sortKey(e: AEv): (Long, Long) = (tsToUs(e.ts), e.event_id)
-
-  /** Monotone quiesce deadline (the FunnelTracker rule): 30 min past the
-    * newest event EVER seen, clamped above the current watermark.
-    */
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.GapMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      // batch mode: no event-time timeouts
-      case _: UnsupportedOperationException => ()
-    }
+  private def sortKey(e: AEv): (Long, Long) = (usOf(e.ts), e.event_id)
 
   private[streaming] def stateFn(user: Long, events: Iterator[AEv],
       state: GroupState[AState]): Iterator[TouchRow] = {
@@ -105,11 +93,11 @@ object AttributionTracker {
     else {
       val evs = events.toArray.sortBy(sortKey)
       val prev = state.getOption.getOrElse(emptyState)
-      val batchMax = if (evs.isEmpty) 0L else evs.map(e => tsToUs(e.ts)).max
+      val batchMax = if (evs.isEmpty) 0L else evs.map(e => usOf(e.ts)).max
       val (next, rows) = fold(user, prev,
-        evs.toSeq.map(e => (tsToUs(e.ts), e.event_id, e.event_type, e.value)))
+        evs.toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type, e.value)))
       state.update(next.copy(tMax = math.max(prev.tMax, batchMax)))
-      armTimeout(state, math.max(prev.tMax, batchMax))
+      EventClock.quiesce(state, math.max(prev.tMax, batchMax))
       rows.iterator
     }
   }
@@ -123,31 +111,6 @@ object AttributionTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(user: Long, events: Iterator[AEv],
-      state: GroupState[ABuf]): Iterator[TouchRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map { b =>
-        val sorted = b.ts.indices.map(i =>
-          (b.ts(i), b.ids(i), b.types(i), b.values(i)))
-          .sortBy(t => (t._1, t._2))
-        fold(user, emptyState, sorted)._2
-      }.getOrElse(Nil)
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.toArray
-      val prev = state.getOption.getOrElse(ABuf(Nil, Nil, Nil, Nil, 0L))
-      val batchMax =
-        if (evs.isEmpty) prev.tMax else evs.map(e => tsToUs(e.ts)).max
-      val next = ABuf(prev.ts ++ evs.map(e => tsToUs(e.ts)),
-        prev.ids ++ evs.map(_.event_id), prev.types ++ evs.map(_.event_type),
-        prev.values ++ evs.map(_.value), math.max(prev.tMax, batchMax))
-      state.update(next)
-      armTimeout(state, next.tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers until quiesce, folds whole — rows
     * emit at timeout; the exactness/state trade of funnelStreamExact.
     */
@@ -156,7 +119,20 @@ object AttributionTracker {
     implicit val stEnc = Encoders.product[ABuf]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[AEv], state: GroupState[ABuf]) =>
+          EventClock.buffered(evs, state, ABuf(Nil, Nil, Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val us = es.map(e => usOf(e.ts))
+              ABuf(b.ts ++ us, b.ids ++ es.map(_.event_id),
+                b.types ++ es.map(_.event_type), b.values ++ es.map(_.value),
+                (b.tMax +: us).max)
+          } { b =>
+            fold(user, emptyState, b.ts.indices
+              .map(i => (b.ts(i), b.ids(i), b.types(i), b.values(i)))
+              .sortBy(t => (t._1, t._2)))._2
+          }
+      }
   }
 
   /** Batch entry: each group seen whole — exact, SQL-parity-checked. */
@@ -165,7 +141,7 @@ object AttributionTracker {
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
         val sorted = it.toArray.sortBy(sortKey).toSeq
-          .map(e => (tsToUs(e.ts), e.event_id, e.event_type, e.value))
+          .map(e => (usOf(e.ts), e.event_id, e.event_type, e.value))
         fold(user, emptyState, sorted)._2.iterator
       }
   }

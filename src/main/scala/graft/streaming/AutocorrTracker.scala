@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming counterpart of `ops.Sessionize.evAutocorr`: the lag-1
   * arrival-memory statistic maintained CONTINUOUSLY in O(1) state per
   * event type — the live burst-structure monitor next to RateTracker's
@@ -44,8 +46,6 @@ object AutocorrTracker {
 
   private val emptyState =
     AState(Unset, Unset, 0L, 0L, 0L, 0L, 0L, Unset, 0L, 0L)
-
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
 
   private def minuteOf(us: Long): Long = Math.floorDiv(us, 60000000L)
 
@@ -104,21 +104,6 @@ object AutocorrTracker {
     s
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      // the shared lifetime horizon — this tracker's split-feed parity
-      // spec is what exposed the no-data-batch timeout hazard (see
-      // EventSessionizer.LifetimeQuiesceMicros)
-      val desiredMs =
-        tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private def row(tpe: String, st: AState): Option[AcRow] =
     pearson(close(st)).map { case (n, r) =>
       if (r.isNaN) AcRow(tpe, n, 0.0, defined = false)
@@ -132,7 +117,7 @@ object AutocorrTracker {
       state.remove()
       out.iterator
     } else {
-      val us = events.map(e => tsToUs(e.ts)).toArray
+      val us = events.map(e => usOf(e.ts)).toArray
       if (us.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(emptyState)
@@ -140,7 +125,7 @@ object AutocorrTracker {
           .unsafeWrapArray(us.sorted))
         val next = next0.copy(tMax = math.max(prev.tMax, us.max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         Iterator.empty // the statistic emits once, at quiesce
       }
     }
@@ -166,7 +151,7 @@ object AutocorrTracker {
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
         row(tpe, fold(emptyState,
-          it.map(e => tsToUs(e.ts)).toSeq.sorted)).iterator
+          it.map(e => usOf(e.ts)).toSeq.sorted)).iterator
       }
   }
 }

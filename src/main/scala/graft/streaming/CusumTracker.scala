@@ -48,11 +48,13 @@ object CusumTracker {
     */
   case class CuState(days: Seq[Long], ns: Seq[Long], emitted: Long,
                      baseN: Long, baseSum: Long, sHi: Long, sLo: Long)
+    extends EventClock.Days
   case class CusumRow(event_type: String, day: Long, n: Long,
                       s_hi: Long, s_lo: Long, alarm: Boolean)
 
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
+  /** A type idle this many days past its last scored day is GC'd. */
+  private val IdleDays = 30L
+  private val Empty = CuState(Nil, Nil, Long.MinValue, 0L, 0L, 0L, 0L)
 
   /** Fold one CLOSED day into the recursion. Pure; shared by streaming,
     * batch, and the spec replay.
@@ -72,74 +74,34 @@ object CusumTracker {
         CusumRow(tpe, day, x, sHi, sLo, alarm = sHi >= h || sLo >= h))
     }
 
-  private def merged(state: GroupState[CuState],
-      events: Iterator[CuEv]): CuState = {
-    val prev = state.getOption.getOrElse(
-      CuState(Nil, Nil, Long.MinValue, 0L, 0L, 0L, 0L))
-    val add = events.map(e => EventSessionizer.tsToUs(e.ts) / DayUs).toSeq
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val counts = prev.days.zip(prev.ns).toMap
-    val next = (counts.keySet ++ add.keySet).toSeq.sorted.map { d =>
-      d -> (counts.getOrElse(d, 0L) + add.getOrElse(d, 0L))
-    }
-    prev.copy(days = next.map(_._1), ns = next.map(_._2))
+  private def merged(st: CuState, events: Iterator[CuEv]): CuState = {
+    val held = EventClock.countByDay(events, st.days.zip(st.ns))(_.ts)
+    st.copy(days = held.map(_._1), ns = held.map(_._2))
   }
 
-  private def advance(baseDays: Int, kPct: Int, hTimes: Int, tpe: String,
-      st: CuState, wmMs: Long,
-      state: GroupState[CuState]): Iterator[CusumRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    val counts = st.days.zip(st.ns).toMap
-    var cur = st
-    val out = Seq.newBuilder[CusumRow]
-    for (d <- counts.keys.filter(d =>
-        d > st.emitted && d <= finalThrough).toSeq.sorted) {
-      val (next, row) = step(baseDays, kPct, hTimes, tpe, cur, d, counts(d))
-      cur = next
-      out += row
-    }
-    // an event for a day at-or-before `emitted` would re-open a scored
-    // day — it was admitted by the watermark before the day closed, so
-    // by construction none exists; only in-flight days are retained
-    val keep = st.days.zip(st.ns).filter(_._1 > cur.emitted)
-    val next = cur.copy(days = keep.map(_._1), ns = keep.map(_._2))
-    // GC: drop a key with nothing in flight once the watermark has also
-    // passed its 30-day idle horizon (the timeout below) — without the
-    // second clause a once-scored type (baseN > 0) could never be
-    // removed and the store would grow with event-type churn forever.
-    // A type that resumes after removal re-baselines from scratch.
-    if (keep.isEmpty && (next.baseN == 0 ||
-        (cur.emitted != Long.MinValue &&
-          wmMs >= (cur.emitted + 30) * DayMs))) state.remove()
-    else {
-      state.update(next)
-      keep.map(_._1).minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (keep.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((cur.emitted + 30) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
+  /** Score the held days in (emitted, through] in day order; only the
+    * in-flight days stay held. An event for a day at-or-before `emitted`
+    * would re-open a scored day; the watermark drops such an event before
+    * it reaches the state, so none exists.
+    */
+  private def advance(baseDays: Int, kPct: Int, hTimes: Int, tpe: String)(
+      st: CuState, through: Long): (CuState, Seq[CusumRow]) = {
+    val held = st.days.zip(st.ns)
+    val (cur, rows) = EventClock.foldDays(st,
+      held.filter(h => h._1 > st.emitted && h._1 <= through))(
+      step(baseDays, kPct, hTimes, tpe, _, _, _))
+    val keep = held.filter(_._1 > cur.emitted)
+    (cur.copy(days = keep.map(_._1), ns = keep.map(_._2)), rows)
   }
 
+  /** The daily shell over this tracker's step. A type whose state is GC'd
+    * at the idle horizon re-baselines from scratch if it resumes.
+    */
   private[streaming] def stateFn(baseDays: Int, kPct: Int, hTimes: Int)(
       tpe: String, events: Iterator[CuEv],
-      state: GroupState[CuState]): Iterator[CusumRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut)
-      advance(baseDays, kPct, hTimes, tpe, state.get, wmMs, state)
-    else {
-      val st = merged(state, events)
-      try advance(baseDays, kPct, hTimes, tpe, st, wmMs, state)
-      catch {
-        // batch mode has no timeout clock — cusumBatch emits directly
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[CuState]): Iterator[CusumRow] =
+    EventClock.daily(events, state, Empty)(merged)(
+      advance(baseDays, kPct, hTimes, tpe), _.emitted + IdleDays)
 
   /** Streaming entry: one row per observed day, emitted at watermark
     * finalization, folded in strict day order.
@@ -163,15 +125,8 @@ object CusumTracker {
     implicit val rowEnc = Encoders.product[CusumRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val counts = it.map(e => EventSessionizer.tsToUs(e.ts) / DayUs)
-          .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toMap
-        var cur = CuState(Nil, Nil, Long.MinValue, 0L, 0L, 0L, 0L)
-        counts.keys.toSeq.sorted.map { d =>
-          val (next, row) = step(baseDays, kPct, hTimes, tpe, cur, d,
-            counts(d))
-          cur = next
-          row
-        }.iterator
+        EventClock.foldDays(Empty, EventClock.countByDay(it)(_.ts))(
+          step(baseDays, kPct, hTimes, tpe, _, _, _))._2.iterator
       }
   }
 }

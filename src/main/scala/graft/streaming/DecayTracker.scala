@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{DayUs, dayOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evDecay`: the recency-decayed
   * engagement score (Σ over a user's active days of 2^−(T−d), T = the
   * stream's last day, terms 63+ days old clamped to 0) maintained with
@@ -29,7 +31,7 @@ import java.sql.Timestamp
   * (StreamingSpec parity), any input.
   *
   * Lifetime horizon (family-wide contract, see
-  * [[EventSessionizer.LifetimeQuiesceMicros]]): a user silent past the
+  * [[EventClock.QuiesceUs]]): a user silent past the
   * quiesce timeout is FLUSHED and their state reclaimed — if they
   * re-activate later they start fresh and emit a SECOND row, so a
   * lifetime-spanning readout must merge per-user rows downstream (or
@@ -52,12 +54,6 @@ object DecayTracker {
   private val Unset: Long = Long.MinValue
 
   private val Mask63: Long = (1L << 63) - 1
-
-  private val DayUs: Long = 86400000000L
-
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
-  private def dayOf(us: Long): Long = Math.floorDiv(us, DayUs)
 
   /** Fold one observed day into the state — exact for any arrival order
     * except a day older than the carried 63-day window (dropped).
@@ -85,17 +81,6 @@ object DecayTracker {
     if (s.lastDay == Unset) Nil
     else Seq(DecayRow(user, s.lastDay, s.mask, s.nOld))
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(user: Long, events: Iterator[DEv],
       state: GroupState[DState]): Iterator[DecayRow] = {
     if (state.hasTimedOut) {
@@ -103,14 +88,14 @@ object DecayTracker {
       state.remove()
       out.iterator
     } else {
-      val days = events.map(e => dayOf(tsToUs(e.ts))).toArray
+      val days = events.map(e => dayOf(usOf(e.ts))).toArray
       if (days.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(DState(Unset, 0L, 0L, 0L))
         val next = days.sorted.foldLeft(prev)(foldDay)
         val tMax = math.max(prev.tMax, days.max * DayUs + DayUs - 1)
         state.update(next.copy(tMax = tMax))
-        armTimeout(state, tMax)
+        EventClock.quiesce(state, tMax)
         Iterator.empty
       }
     }
@@ -130,7 +115,7 @@ object DecayTracker {
     implicit val rowEnc = Encoders.product[DecayRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val st = it.map(e => dayOf(tsToUs(e.ts))).toSeq.sorted
+        val st = it.map(e => dayOf(usOf(e.ts))).toSeq.sorted
           .foldLeft(DState(Unset, 0L, 0L, 0L))(foldDay)
         row(user, st).iterator
       }

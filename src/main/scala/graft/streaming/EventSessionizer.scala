@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{arm, tsOf, usOf}
+
 /** Custom stateful sessionization via `flatMapGroupsWithState` (builder
   * brief: "KeyValueGroupedDataset.mapGroupsWithState /
   * flatMapGroupsWithState for custom state") — the hand-rolled counterpart
@@ -29,38 +31,13 @@ object EventSessionizer {
 
   val GapMicros: Long = 30L * 60 * 1000000
 
-  /** State-GC horizon for LIFETIME-scale trackers (streaks, gaps
-    * spectrum, markov, ewma, top-k, conversion lag, autocorr): seven
-    * days of per-key silence. The session gap above is WRONG as a GC
-    * horizon for those statistics — Spark runs a no-data micro-batch
-    * after every trigger to evaluate timeouts, so on a multi-trigger
-    * feed any key quiet for (watermark delay + horizon) would be
-    * flushed-or-dropped mid-stream and its rollup silently restarted,
-    * diverging from batch (found by AutocorrTracker's split-feed parity
-    * spec). Seven days bounds state for keys that really left while
-    * keeping every statistic exact across ordinary quiet spells.
-    */
-  val LifetimeQuiesceMicros: Long = 7L * 86400000000L
-
   /** Monetary sum kept in integer cents — exact and order-independent
     * (matching the decimal-exact discipline of the oracle-checked ops).
     */
   private def cents(v: Double): Long = math.round(v * 100)
 
-  /** Timestamp ↔ epoch-micros without losing sub-millisecond precision
-    * (`getTime` alone is millis).
-    */
-  private[streaming] def tsToUs(t: Timestamp): Long =
-    t.getTime / 1000 * 1000000 + t.getNanos / 1000
-
-  private[streaming] def usToTs(us: Long): Timestamp = {
-    val t = new Timestamp(Math.floorDiv(us, 1000000) * 1000)
-    t.setNanos((Math.floorMod(us, 1000000) * 1000).toInt)
-    t
-  }
-
   private def toSess(user: Long, s: OpenSess): Sess =
-    Sess(user, usToTs(s.startUs), usToTs(s.endUs), s.n, s.cents)
+    Sess(user, tsOf(s.startUs), tsOf(s.endUs), s.n, s.cents)
 
   private[streaming] def stateFn(user: Long, events: Iterator[Ev],
                                  state: GroupState[OpenSess]): Iterator[Sess] = {
@@ -70,10 +47,10 @@ object EventSessionizer {
       state.remove()
     } else {
       // events within one batch arrive unordered: sort by (ts, event_id)
-      val sorted = events.toArray.sortBy(e => (tsToUs(e.ts), e.event_id))
+      val sorted = events.toArray.sortBy(e => (usOf(e.ts), e.event_id))
       var cur = state.getOption
       for (e <- sorted) {
-        val us = tsToUs(e.ts)
+        val us = usOf(e.ts)
         cur match {
           case Some(s) if us - s.endUs > GapMicros =>
             out += toSess(user, s)
@@ -87,24 +64,9 @@ object EventSessionizer {
       }
       cur.foreach { s =>
         state.update(s)
-        val desiredMs = s.endUs / 1000 + GapMicros / 1000
-        try {
-          // Event-time timeouts must be strictly ahead of the watermark; if
-          // the session's natural close time is already at/behind it, clamp
-          // to watermark+1 ms so the session still times out on the next
-          // batch. Swallowing the rejection instead (the old `catch
-          // Throwable`) would park the open session in state forever —
-          // silent data loss on a stream.
-          val timeoutMs =
-            try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-            catch { case _: UnsupportedOperationException => desiredMs }
-          state.setTimeoutTimestamp(timeoutMs)
-        } catch {
-          // batch mode only: event-time timeouts don't exist there; the
-          // open tail session is intentionally not emitted (closed
-          // sessions only). Anything else propagates.
-          case _: UnsupportedOperationException => ()
-        }
+        // the open tail session is not emitted in batch mode (closed
+        // sessions only): there `arm` is a no-op
+        arm(state, s.endUs / 1000 + GapMicros / 1000)
       }
     }
     out.iterator

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{DayUs, dayOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evEwma`: the per-type daily
   * volume EWMA (α = ½) maintained CONTINUOUSLY — each day ROLLOVER emits
   * the completed day's (type, day, n, ewma) row, so a monitor holds the
@@ -44,32 +46,27 @@ object EwmaTracker {
 
   private val Unset: Long = Long.MinValue
 
-  private val DayUs: Long = 86400000000L
-
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
-  private def dayOf(us: Long): Long = Math.floorDiv(us, DayUs)
-
   private def dayTs(day: Long): Timestamp = new Timestamp(day * DayUs / 1000)
 
   private def next(prev: EState, n: Long): Double =
     if (!prev.have) n.toDouble else 0.5 * n + 0.5 * prev.ewma
 
-  /** The shared pure core: fold SORTED event days onto the carried state,
-    * emitting one row per COMPLETED day. Events for a day before the
-    * carried current are dropped (documented); events AT it accumulate.
+  /** The shared pure core: fold ascending (day, event count) pairs onto
+    * the carried state, emitting one row per COMPLETED day. Events for a
+    * day before the carried current are dropped (documented); events AT it
+    * accumulate.
     */
   private[streaming] def fold(tpe: String, st: EState,
-      sortedDays: Seq[Long]): (EState, Seq[EwmaRow]) = {
+      days: Seq[(Long, Long)]): (EState, Seq[EwmaRow]) = {
     var s = st
     val out = Seq.newBuilder[EwmaRow]
-    for (d <- sortedDays) {
-      if (s.curDay == Unset) s = s.copy(curDay = d, n = 1L)
-      else if (d == s.curDay) s = s.copy(n = s.n + 1)
+    for ((d, n) <- days) {
+      if (s.curDay == Unset) s = s.copy(curDay = d, n = n)
+      else if (d == s.curDay) s = s.copy(n = s.n + n)
       else if (d > s.curDay) {
         val e = next(s, s.n)
         out += EwmaRow(tpe, dayTs(s.curDay), s.n, e)
-        s = s.copy(curDay = d, n = 1L, ewma = e, have = true)
+        s = s.copy(curDay = d, n = n, ewma = e, have = true)
       }
       // else: a day before the carried current — dropped (documented)
     }
@@ -81,16 +78,7 @@ object EwmaTracker {
     if (s.curDay == Unset) Nil
     else Seq(EwmaRow(tpe, dayTs(s.curDay), s.n, next(s, s.n)))
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
+  private val Empty = EState(Unset, 0L, 0.0, have = false, 0L)
 
   private[streaming] def stateFn(tpe: String, events: Iterator[EEv],
       state: GroupState[EState]): Iterator[EwmaRow] = {
@@ -99,15 +87,14 @@ object EwmaTracker {
       state.remove()
       out.iterator
     } else {
-      val days = events.map(e => dayOf(tsToUs(e.ts))).toArray
+      val days = EventClock.countByDay(events)(_.ts)
       if (days.isEmpty) Iterator.empty
       else {
-        val prev = state.getOption.getOrElse(
-          EState(Unset, 0L, 0.0, have = false, 0L))
-        val (next0, rows) = fold(tpe, prev, days.sorted.toSeq)
-        val tMax = math.max(prev.tMax, days.max * DayUs + DayUs - 1)
+        val prev = state.getOption.getOrElse(Empty)
+        val (next0, rows) = fold(tpe, prev, days)
+        val tMax = math.max(prev.tMax, days.last._1 * DayUs + DayUs - 1)
         state.update(next0.copy(tMax = tMax))
-        armTimeout(state, tMax)
+        EventClock.quiesce(state, tMax)
         rows.iterator
       }
     }
@@ -124,42 +111,6 @@ object EwmaTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(tpe: String, events: Iterator[EEv],
-      state: GroupState[EBuf]): Iterator[EwmaRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap { b =>
-        val merged = b.days.zip(b.ns).groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (d, xs) => (d, xs.map(_._2).sum) }
-        var s = EState(Unset, 0L, 0.0, have = false, 0L)
-        val rows = Seq.newBuilder[EwmaRow]
-        for ((d, n) <- merged) {
-          val e = if (!s.have) n.toDouble else 0.5 * n + 0.5 * s.ewma
-          rows += EwmaRow(tpe, dayTs(d), n, e)
-          s = s.copy(ewma = e, have = true)
-        }
-        rows.result()
-      }
-      state.remove()
-      out.iterator
-    } else {
-      val days = events.map(e => dayOf(tsToUs(e.ts))).toArray
-      val prev = state.getOption.getOrElse(EBuf(Nil, Nil, 0L))
-      // merge this trigger's counts into the buffered per-day counts
-      val add = days.groupBy(identity).map { case (d, xs) =>
-        (d, xs.length.toLong) }
-      val asMap = prev.days.zip(prev.ns).toMap
-      val merged = (asMap.keySet ++ add.keySet).toSeq.sorted.map { d =>
-        (d, asMap.getOrElse(d, 0L) + add.getOrElse(d, 0L))
-      }
-      val tMax =
-        if (days.isEmpty) prev.tMax
-        else math.max(prev.tMax, days.max * DayUs + DayUs - 1)
-      state.update(EBuf(merged.map(_._1), merged.map(_._2), tMax))
-      armTimeout(state, tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers per-day counts until quiesce (state
     * O(active days), not O(events)), folds the days whole.
     */
@@ -168,7 +119,19 @@ object EwmaTracker {
     implicit val stEnc = Encoders.product[EBuf]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (tpe: String, evs: Iterator[EEv], state: GroupState[EBuf]) =>
+          EventClock.buffered(evs, state, EBuf(Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val held =
+                EventClock.countByDay(es.iterator, b.days.zip(b.ns))(_.ts)
+              val dayEnds = es.map(e => dayOf(usOf(e.ts)) * DayUs + DayUs - 1)
+              EBuf(held.map(_._1), held.map(_._2), (b.tMax +: dayEnds).max)
+          } { b =>
+            val (st, rows) = fold(tpe, Empty, b.days.zip(b.ns))
+            rows ++ flush(tpe, st)
+          }
+      }
   }
 
   /** Batch entry: each group seen whole — exact; equals evEwma row-for-row
@@ -178,8 +141,7 @@ object EwmaTracker {
     implicit val rowEnc = Encoders.product[EwmaRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val (st, rows) = fold(tpe, EState(Unset, 0L, 0.0, have = false, 0L),
-          it.map(e => dayOf(tsToUs(e.ts))).toSeq.sorted)
+        val (st, rows) = fold(tpe, Empty, EventClock.countByDay(it)(_.ts))
         (rows ++ flush(tpe, st)).iterator
       }
   }

@@ -5,12 +5,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{tsOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evFunnel` (the strict-order
   * view→click→purchase funnel) via `mapGroupsWithState`-family state:
   * per-user state is THREE micros timestamps (earliest view, earliest
   * click strictly after it, earliest purchase strictly after that) —
   * O(1), co-partitioned by user, evicted on event-time timeout, at which
-  * point the user's final funnel row is emitted.
+  * point the user's final funnel row is emitted. The timeout is the
+  * lifetime quiesce ([[EventClock.QuiesceUs]]): a row emits once the
+  * watermark passes seven days after the user's newest event, so a
+  * purchase hours after the click still completes the funnel.
   *
   * Ordering: events within a trigger batch are sorted before folding (the
   * EventSessionizer discipline). The O(1) fold is order-robust for the
@@ -43,9 +48,6 @@ object FunnelTracker {
 
   val Unset: Long = -1L
 
-  private[streaming] def tsToUs(t: Timestamp): Long =
-    EventSessionizer.tsToUs(t)
-
   /** The shared pure core: fold ts-sorted events into the funnel state.
     * view keeps the global min; click the min strictly after the view;
     * purchase the min strictly after the click.
@@ -67,9 +69,9 @@ object FunnelTracker {
   private def toRow(user: Long, s: FState): Option[FunnelRow] =
     if (s.tView == Unset) None
     else Some(FunnelRow(user,
-      EventSessionizer.usToTs(s.tView),
-      if (s.tClick == Unset) null else EventSessionizer.usToTs(s.tClick),
-      if (s.tPurchase == Unset) null else EventSessionizer.usToTs(s.tPurchase),
+      tsOf(s.tView),
+      if (s.tClick == Unset) null else tsOf(s.tClick),
+      if (s.tPurchase == Unset) null else tsOf(s.tPurchase),
       if (s.tPurchase != Unset) 3 else if (s.tClick != Unset) 2 else 1))
 
   private[streaming] def stateFn(user: Long, events: Iterator[FEv],
@@ -79,26 +81,14 @@ object FunnelTracker {
       state.remove()
       out.iterator
     } else {
-      val sorted = events.toArray.map(e => (tsToUs(e.ts), e.event_type))
+      val sorted = events.toArray.map(e => (usOf(e.ts), e.event_type))
         .sortBy(_._1).toSeq
       val prev = state.getOption.getOrElse(FState(Unset, Unset, Unset, 0L))
       val batchMax = if (sorted.isEmpty) 0L else sorted.map(_._1).max
       val next = fold(prev, sorted)
         .copy(tMax = math.max(prev.tMax, batchMax))
       state.update(next)
-      try {
-        // quiesce rule: emit the funnel row once the user has been silent
-        // past the watermark — 30 min after the newest event EVER seen
-        // (monotone across batches even under late data)
-        val desiredMs = next.tMax / 1000 + EventSessionizer.GapMicros / 1000
-        val timeoutMs =
-          try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-          catch { case _: UnsupportedOperationException => desiredMs }
-        state.setTimeoutTimestamp(timeoutMs)
-      } catch {
-        // batch mode: no event-time timeouts — funnelBatch emits directly
-        case _: UnsupportedOperationException => ()
-      }
+      EventClock.quiesce(state, next.tMax)
       Iterator.empty
     }
   }
@@ -117,40 +107,6 @@ object FunnelTracker {
     */
   case class FBuf(ts: Seq[Long], types: Seq[String], tMax: Long)
 
-  private[streaming] def stateFnExact(user: Long, events: Iterator[FEv],
-                                      state: GroupState[FBuf]): Iterator[FunnelRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.flatMap { b =>
-        // the whole in-watermark event set, folded once in ts order —
-        // cross-trigger disorder cannot have discarded anything
-        toRow(user, fold(FState(Unset, Unset, Unset, 0L),
-          b.ts.zip(b.types).sortBy(_._1)))
-      }
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.toArray
-      val prev = state.getOption.getOrElse(FBuf(Nil, Nil, 0L))
-      val batchMax =
-        if (evs.isEmpty) prev.tMax else evs.map(e => tsToUs(e.ts)).max
-      val next = FBuf(prev.ts ++ evs.map(e => tsToUs(e.ts)),
-        prev.types ++ evs.map(_.event_type),
-        math.max(prev.tMax, batchMax))
-      state.update(next)
-      try {
-        // same monotone quiesce rule as stateFn
-        val desiredMs = next.tMax / 1000 + EventSessionizer.GapMicros / 1000
-        val timeoutMs =
-          try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-          catch { case _: UnsupportedOperationException => desiredMs }
-        state.setTimeoutTimestamp(timeoutMs)
-      } catch {
-        case _: UnsupportedOperationException => ()
-      }
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers each user's events until the quiesce
     * timeout, then folds them whole — identical to [[funnelBatch]] for
     * every event the watermark admitted, whatever the trigger-arrival
@@ -162,7 +118,18 @@ object FunnelTracker {
     implicit val stEnc = Encoders.product[FBuf]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[FEv], state: GroupState[FBuf]) =>
+          EventClock.buffered(evs, state, FBuf(Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val us = es.map(e => usOf(e.ts))
+              FBuf(b.ts ++ us, b.types ++ es.map(_.event_type),
+                (b.tMax +: us).max)
+          } { b =>
+            toRow(user, fold(FState(Unset, Unset, Unset, 0L),
+              b.ts.zip(b.types).sortBy(_._1))).toSeq
+          }
+      }
   }
 
   /** Batch entry: each group is seen whole, so the same fold is exact. */
@@ -170,7 +137,7 @@ object FunnelTracker {
     implicit val rowEnc = Encoders.product[FunnelRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val sorted = it.map(e => (tsToUs(e.ts), e.event_type)).toArray
+        val sorted = it.map(e => (usOf(e.ts), e.event_type)).toArray
           .sortBy(_._1).toSeq
         toRow(user, fold(FState(Unset, Unset, Unset, 0L), sorted)).iterator
       }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming counterpart of `ops.Sessionize.evGaps`: the inter-arrival
   * log2 spectrum, fed CONTINUOUSLY — every consecutive same-(user, type)
   * transition emits one (event_type, bucket, gap_us) increment row, so a
@@ -43,8 +45,6 @@ object GapsTracker {
 
   private val Unset: Long = Long.MinValue
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   /** length(bin(gap)) − 1, branchless for gap ≥ 1; gap 0 shares bucket 0
     * (the batch query's degenerate-gap rule).
     */
@@ -72,30 +72,19 @@ object GapsTracker {
     (s, out.result())
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(key: (Long, String),
       events: Iterator[GEv],
       state: GroupState[GState]): Iterator[GapRow] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      val evs = events.map(e => (tsToUs(e.ts), e.event_id)).toArray
+      val evs = events.map(e => (usOf(e.ts), e.event_id)).toArray
       if (evs.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(GState(Unset, 0L, 0L))
         val (next0, rows) = fold(key._1, key._2, prev, evs.sorted.toSeq)
         val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         rows.iterator
       }
     }
@@ -111,30 +100,6 @@ object GapsTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(key: (Long, String),
-      events: Iterator[GEv],
-      state: GroupState[GBuf]): Iterator[GapRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap { b =>
-        fold(key._1, key._2, GState(Unset, 0L, 0L),
-          b.us.zip(b.eids).sorted)._2
-      }
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.map(e => (tsToUs(e.ts), e.event_id)).toArray
-      val prev = state.getOption.getOrElse(GBuf(Nil, Nil, 0L))
-      val tMax =
-        if (evs.isEmpty) prev.tMax
-        else math.max(prev.tMax, evs.map(_._1).max)
-      val next = GBuf(prev.us ++ evs.map(_._1), prev.eids ++ evs.map(_._2),
-        tMax)
-      state.update(next)
-      armTimeout(state, tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers (ts, event_id) until quiesce, folds
     * whole, emits every gap once.
     */
@@ -144,7 +109,17 @@ object GapsTracker {
     events.groupByKey(e => (e.user_id, e.event_type))(
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (key: (Long, String), evs: Iterator[GEv], state: GroupState[GBuf]) =>
+          EventClock.buffered(evs, state, GBuf(Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val us = es.map(e => usOf(e.ts))
+              GBuf(b.us ++ us, b.eids ++ es.map(_.event_id), (b.tMax +: us).max)
+          } { b =>
+            fold(key._1, key._2, GState(Unset, 0L, 0L),
+              b.us.zip(b.eids).sorted)._2
+          }
+      }
   }
 
   /** Batch entry: each group seen whole — exact; aggregating the rows by
@@ -156,7 +131,7 @@ object GapsTracker {
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMapGroups { (key, it) =>
         fold(key._1, key._2, GState(Unset, 0L, 0L),
-          it.map(e => (tsToUs(e.ts), e.event_id)).toSeq.sorted)._2.iterator
+          it.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted)._2.iterator
       }
   }
 }

@@ -43,12 +43,11 @@ object HoltTracker {
     */
   case class HState(days: Seq[Long], ns: Seq[Long],
                     k: Long, l: Long, b: Long, sae: Long, emitted: Long)
+    extends EventClock.Days
   case class HoltRow(event_type: String, day: Long, n: Long, n_days: Long,
                      level: Double, trend: Double, forecast: Double,
                      mae: Double)
 
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
   private val M = 1000000L
   private val Empty =
     HState(Nil, Nil, 0L, 0L, 0L, 0L, Long.MinValue)
@@ -79,64 +78,30 @@ object HoltTracker {
         r6d((l + b).toDouble / 1e6), mae))
   }
 
-  private def merged(state: GroupState[HState],
-      events: Iterator[HEv]): HState = {
-    val prev = state.getOption.getOrElse(Empty)
-    val m = scala.collection.mutable.Map[Long, Long]()
-    prev.days.indices.foreach(i => m(prev.days(i)) = prev.ns(i))
-    events.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      m(d) = m.getOrElse(d, 0L) + 1L
-    }
-    val ds = m.keys.toSeq.sorted
-    prev.copy(days = ds, ns = ds.map(m))
+  private def merged(st: HState, events: Iterator[HEv]): HState = {
+    val held = EventClock.countByDay(events, st.days.zip(st.ns))(_.ts)
+    st.copy(days = held.map(_._1), ns = held.map(_._2))
   }
 
-  private def advance(key: String, st: HState, wmMs: Long,
-      state: GroupState[HState]): Iterator[HoltRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    var cur = st
-    val out = Seq.newBuilder[HoltRow]
-    val idx = st.days.zipWithIndex.toMap
-    for (d <- st.days.filter(d => d > st.emitted && d <= finalThrough)
-        .sorted) {
-      val (next, row) = step(cur, d, st.ns(idx(d)))
-      cur = next
-      out += row.copy(event_type = key)
-    }
-    val keepIdx = st.days.zipWithIndex.filter(_._1 > cur.emitted).map(_._2)
-    val next = cur.copy(days = keepIdx.map(st.days),
-      ns = keepIdx.map(st.ns))
-    // GC: a type idle 30 days past its last closed day re-baselines if
-    // it ever resumes (the SequentialTracker horizon rule)
-    if (keepIdx.isEmpty && (next.emitted == Long.MinValue ||
-        wmMs >= (next.emitted + 30) * DayMs)) state.remove()
-    else {
-      state.update(next)
-      next.days.minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (next.days.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((next.emitted + 30) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
+  /** Fold the held days in (emitted, through]; only in-flight days stay. */
+  private def advance(key: String)(st: HState,
+      through: Long): (HState, Seq[HoltRow]) = {
+    val held = st.days.zip(st.ns)
+    val (cur, rows) = EventClock.foldDays(st,
+      held.filter(h => h._1 > st.emitted && h._1 <= through))(step)
+    val keep = held.filter(_._1 > cur.emitted)
+    (cur.copy(days = keep.map(_._1), ns = keep.map(_._2)),
+      rows.map(_.copy(event_type = key)))
   }
 
+  /** The daily shell over [[step]]. A type idle 30 days past its last
+    * closed day is GC'd and re-baselines if it ever resumes (the
+    * SequentialTracker horizon rule).
+    */
   private[streaming] def stateFn(key: String, events: Iterator[HEv],
-      state: GroupState[HState]): Iterator[HoltRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut) advance(key, state.get, wmMs, state)
-    else {
-      val st = merged(state, events)
-      try advance(key, st, wmMs, state)
-      catch { // batch mode has no timeout clock — holtBatch emits
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[HState]): Iterator[HoltRow] =
+    EventClock.daily(events, state, Empty)(merged)(advance(key),
+      _.emitted + 30)
 
   /** Streaming entry: one row per observed (type, day), emitted at
     * watermark finalization, folded in strict day order.
@@ -157,17 +122,8 @@ object HoltTracker {
     implicit val rowEnc = Encoders.product[HoltRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (key, it) =>
-        val m = scala.collection.mutable.Map[Long, Long]()
-        it.foreach { e =>
-          val d = EventSessionizer.tsToUs(e.ts) / DayUs
-          m(d) = m.getOrElse(d, 0L) + 1L
-        }
-        var cur = Empty
-        m.keys.toSeq.sorted.map { d =>
-          val (next, row) = step(cur, d, m(d))
-          cur = next
-          row.copy(event_type = key)
-        }.iterator
+        EventClock.foldDays(Empty, EventClock.countByDay(it)(_.ts))(step)._2
+          .map(_.copy(event_type = key)).iterator
       }
   }
 }

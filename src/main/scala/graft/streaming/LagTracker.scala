@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming counterpart of `ops.Sessionize.evLag`: per-user
   * first-view → first-purchase conversion lag, emitted AT THE MOMENT the
   * conversion completes — the real-time feed an attribution or
@@ -42,8 +44,6 @@ object LagTracker {
 
   private val emptyState = LState(Unset, Unset, emitted = false, 0L)
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   /** floor(log2(n + 1)) via bit length — exact for any lag ≥ 0. */
   private[graft] def bucket(lagS: Long): Long =
     63L - java.lang.Long.numberOfLeadingZeros(lagS + 1)
@@ -71,29 +71,18 @@ object LagTracker {
     (s, out)
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(user: Long, events: Iterator[LEv],
       state: GroupState[LState]): Iterator[LagRow] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      val evs = events.map(e => (tsToUs(e.ts), e.event_type)).toArray
+      val evs = events.map(e => (usOf(e.ts), e.event_type)).toArray
       if (evs.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(emptyState)
         val (next0, out) = fold(user, prev, evs.sortBy(_._1).toSeq)
         val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         out.iterator
       }
     }
@@ -118,7 +107,7 @@ object LagTracker {
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
         fold(user, emptyState,
-          it.map(e => (tsToUs(e.ts), e.event_type)).toSeq.sortBy(_._1))
+          it.map(e => (usOf(e.ts), e.event_type)).toSeq.sortBy(_._1))
           ._2.iterator
       }
   }

@@ -38,14 +38,13 @@ import java.sql.Timestamp
   * stream and batch fold bit-identically.
   *
   * A day row emits exactly once, when the watermark passes the end of
-  * the day (the PageTracker finalization rule): days fold in strict
-  * order whatever the trigger-arrival order, and in-watermark late
-  * events land in their own day's count before that day is folded.
-  * BEYOND-watermark stragglers addressing a day that already emitted
-  * are DROPPED (the PageTracker keepIdx discipline): keeping them
-  * would mutate closed history under every later day's median while
-  * the emitted row still carries the old count — silent inconsistency.
-  * The emitted rows and the retained history therefore always agree.
+  * the day (the [[EventClock.daily]] finalization rule): days fold in
+  * strict order whatever the trigger-arrival order, and in-watermark
+  * late events land in their own day's count before that day is folded.
+  * An event for a day that already emitted is behind the watermark, and
+  * `flatMapGroupsWithState` under `EventTimeTimeout` drops such rows
+  * before the state function sees them, so the emitted rows and the
+  * retained history always agree.
   *
   * PARITY CAVEAT (the PageTracker horizon rule): a type idle longer
   * than `horizonDays` past its last closed day is GC'd and
@@ -63,11 +62,9 @@ object MadTracker {
     * (days sorted ascending); emitted = last closed day.
     */
   case class MdState(days: Seq[Long], ns: Seq[Long], emitted: Long)
+    extends EventClock.Days
   case class MadRow(event_type: String, day: Long, n: Long,
                     med2: Long, dev2: Long, mad4: Long, alarm: Boolean)
-
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
 
   /** Default state-GC horizon (see the parity caveat above). */
   val IdleHorizonDays: Long = 30L
@@ -97,75 +94,31 @@ object MadTracker {
     MadRow("", d, n, med2, dev2, mad4, 2L * dev2 > 3L * mad4)
   }
 
-  private def merged(state: GroupState[MdState],
-      events: Iterator[MdEv]): MdState = {
-    val prev = state.getOption.getOrElse(Empty)
-    val m = scala.collection.mutable.Map[Long, Long]()
-    prev.days.indices.foreach(i => m(prev.days(i)) = prev.ns(i))
-    events.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      // beyond-watermark stragglers for an ALREADY-EMITTED day are
-      // dropped (the PageTracker keepIdx discipline): folding them in
-      // would silently mutate a closed day's count, so every later
-      // day would score against a history inconsistent with the rows
-      // this tracker already emitted. flatMapGroupsWithState does NOT
-      // drop such rows itself — the watermark only gates finalization
-      // — so the guard must live here. (r12 advice item.)
-      if (d > prev.emitted) m(d) = m.getOrElse(d, 0L) + 1L
-    }
-    val ds = m.keys.toSeq.sorted
-    prev.copy(days = ds, ns = ds.map(m))
+  private def merged(st: MdState, events: Iterator[MdEv]): MdState = {
+    val held = EventClock.countByDay(events, st.days.zip(st.ns))(_.ts)
+    st.copy(days = held.map(_._1), ns = held.map(_._2))
   }
 
-  private def advance(key: String, st: MdState, wmMs: Long,
-      state: GroupState[MdState],
-      horizonDays: Long): Iterator[MadRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    val idx = st.days.zipWithIndex.toMap
-    val out = Seq.newBuilder[MadRow]
-    var emitted = st.emitted
-    for (d <- st.days.filter(d => d > st.emitted && d <= finalThrough)
-        .sorted) {
-      // history-so-far: every day ≤ d (closed strictly before d, plus
-      // d itself) — in-flight days beyond the watermark never score
-      val hist = st.days.filter(_ <= d).map(x => (x, st.ns(idx(x))))
-      out += step(hist, d, st.ns(idx(d))).copy(event_type = key)
-      emitted = d
+  /** Score the held days in (emitted, through], each against the history
+    * of every held day up to it. Unlike PageTracker, CLOSED days stay in
+    * state: they are the median's history, and only the idle horizon
+    * drops them (all at once, with the key).
+    */
+  private def advance(key: String)(st: MdState,
+      through: Long): (MdState, Seq[MadRow]) = {
+    val held = st.days.zip(st.ns)
+    val closed = held.filter(h => h._1 > st.emitted && h._1 <= through)
+    val rows = closed.map { case (d, n) =>
+      step(held.filter(_._1 <= d), d, n).copy(event_type = key)
     }
-    // unlike PageTracker, CLOSED days stay in state — they are the
-    // median's history; only the horizon drops them (all at once)
-    val next = st.copy(emitted = emitted)
-    val inFlight = next.days.filter(_ > emitted)
-    if (inFlight.isEmpty && (emitted == Long.MinValue ||
-        wmMs >= (emitted + horizonDays) * DayMs)) state.remove()
-    else {
-      state.update(next)
-      inFlight.minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (inFlight.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((emitted + horizonDays) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
+    (st.copy(emitted = closed.lastOption.fold(st.emitted)(_._1)), rows)
   }
 
   private[streaming] def stateFn(horizonDays: Long = IdleHorizonDays)(
       key: String, events: Iterator[MdEv],
-      state: GroupState[MdState]): Iterator[MadRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut) advance(key, state.get, wmMs, state,
-      horizonDays)
-    else {
-      val st = merged(state, events)
-      try advance(key, st, wmMs, state, horizonDays)
-      catch { // batch mode has no timeout clock — madBatch emits
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[MdState]): Iterator[MadRow] =
+    EventClock.daily(events, state, Empty)(merged)(advance(key),
+      _.emitted + horizonDays)
 
   /** Streaming entry: one row per observed (type, day), emitted at
     * watermark finalization, scored prequentially (median/MAD of the
@@ -190,15 +143,9 @@ object MadTracker {
     implicit val rowEnc = Encoders.product[MadRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (key, it) =>
-        val m = scala.collection.mutable.Map[Long, Long]()
-        it.foreach { e =>
-          val d = EventSessionizer.tsToUs(e.ts) / DayUs
-          m(d) = m.getOrElse(d, 0L) + 1L
-        }
-        val days = m.keys.toSeq.sorted
-        days.zipWithIndex.map { case (d, i) =>
-          val hist = days.take(i + 1).map(x => (x, m(x)))
-          step(hist, d, m(d)).copy(event_type = key)
+        val held = EventClock.countByDay(it)(_.ts)
+        held.zipWithIndex.map { case ((d, n), i) =>
+          step(held.take(i + 1), d, n).copy(event_type = key)
         }.iterator
       }
   }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{tsOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evMarkov`'s transition
   * STREAM: every consecutive (prev → cur) event-type pair of a user's
   * time-ordered stream emits as a row the moment `cur` arrives; the
@@ -42,8 +44,6 @@ object MarkovTracker {
 
   val Unset: Long = -1L
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   private val emptyState = KState("", Unset, Unset, 0L)
 
   /** The shared pure core: fold (micros, id, type) rows SORTED by
@@ -59,35 +59,24 @@ object MarkovTracker {
     for ((us, id, tpe) <- sorted) {
       if (lu == Unset) { lt = tpe; lu = us; li = id }
       else if (us > lu || (us == lu && id > li)) {
-        out += TransRow(user, lt, tpe, EventSessionizer.usToTs(us))
+        out += TransRow(user, lt, tpe, tsOf(us))
         lt = tpe; lu = us; li = id
       } // else: at-or-before the carried last — dropped (documented)
     }
     (KState(lt, lu, li, st.tMax), out.toSeq)
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(user: Long, events: Iterator[KEv],
       state: GroupState[KState]): Iterator[TransRow] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      val evs = events.toArray.sortBy(e => (tsToUs(e.ts), e.event_id))
+      val evs = events.toArray.sortBy(e => (usOf(e.ts), e.event_id))
       val prev = state.getOption.getOrElse(emptyState)
-      val batchMax = if (evs.isEmpty) 0L else evs.map(e => tsToUs(e.ts)).max
+      val batchMax = if (evs.isEmpty) 0L else evs.map(e => usOf(e.ts)).max
       val (next, rows) = fold(user, prev,
-        evs.toSeq.map(e => (tsToUs(e.ts), e.event_id, e.event_type)))
+        evs.toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type)))
       state.update(next.copy(tMax = math.max(prev.tMax, batchMax)))
-      armTimeout(state, math.max(prev.tMax, batchMax))
+      EventClock.quiesce(state, math.max(prev.tMax, batchMax))
       rows.iterator
     }
   }
@@ -101,37 +90,25 @@ object MarkovTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(user: Long, events: Iterator[KEv],
-      state: GroupState[KBuf]): Iterator[TransRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map { b =>
-        val sorted = b.ts.indices.map(i => (b.ts(i), b.ids(i), b.types(i)))
-          .sortBy(t => (t._1, t._2))
-        fold(user, emptyState, sorted)._2
-      }.getOrElse(Nil)
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.toArray
-      val prev = state.getOption.getOrElse(KBuf(Nil, Nil, Nil, 0L))
-      val batchMax =
-        if (evs.isEmpty) prev.tMax else evs.map(e => tsToUs(e.ts)).max
-      val next = KBuf(prev.ts ++ evs.map(e => tsToUs(e.ts)),
-        prev.ids ++ evs.map(_.event_id), prev.types ++ evs.map(_.event_type),
-        math.max(prev.tMax, batchMax))
-      state.update(next)
-      armTimeout(state, next.tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers until quiesce, folds whole. */
   def markovStreamExact(events: Dataset[KEv]): Dataset[TransRow] = {
     implicit val rowEnc = Encoders.product[TransRow]
     implicit val stEnc = Encoders.product[KBuf]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[KEv], state: GroupState[KBuf]) =>
+          EventClock.buffered(evs, state, KBuf(Nil, Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val us = es.map(e => usOf(e.ts))
+              KBuf(b.ts ++ us, b.ids ++ es.map(_.event_id),
+                b.types ++ es.map(_.event_type), (b.tMax +: us).max)
+          } { b =>
+            fold(user, emptyState, b.ts.indices
+              .map(i => (b.ts(i), b.ids(i), b.types(i)))
+              .sortBy(t => (t._1, t._2)))._2
+          }
+      }
   }
 
   /** Batch entry: each group seen whole — exact; its (prev, cur) counts
@@ -141,8 +118,8 @@ object MarkovTracker {
     implicit val rowEnc = Encoders.product[TransRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val sorted = it.toArray.sortBy(e => (tsToUs(e.ts), e.event_id))
-          .toSeq.map(e => (tsToUs(e.ts), e.event_id, e.event_type))
+        val sorted = it.toArray.sortBy(e => (usOf(e.ts), e.event_id))
+          .toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type))
         fold(user, emptyState, sorted)._2.iterator
       }
   }

@@ -102,7 +102,7 @@ object MinhashTracker {
   private def stateFn(cap: Int)(key: (Int, String),
       events: Iterator[BandHit],
       state: GroupState[BState]): Iterator[CandPair] = {
-    val evs = events.toArray.sortBy(e => (EventSessionizer.tsToUs(e.ts),
+    val evs = events.toArray.sortBy(e => (EventClock.usOf(e.ts),
       e.doc_id))
     var st = state.getOption.getOrElse(BState(Array.empty, 0L))
     val out = scala.collection.mutable.ArrayBuffer.empty[CandPair]
@@ -148,7 +148,7 @@ object MinhashTracker {
     implicit val pairEnc = Encoders.product[CandPair]
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.STRING)
     hits.groupByKey(h => (h.band, h.bh)).flatMapGroups { (key, it) =>
-      val evs = it.toArray.sortBy(e => (EventSessionizer.tsToUs(e.ts),
+      val evs = it.toArray.sortBy(e => (EventClock.usOf(e.ts),
         e.doc_id))
       val members = scala.collection.mutable.LinkedHashSet.empty[Long]
       val out = scala.collection.mutable.ArrayBuffer.empty[CandPair]

@@ -48,12 +48,9 @@ object PageTracker {
     * micro-units; emitted = last closed day.
     */
   case class PgState(days: Seq[Long], ns: Seq[Long],
-                    s: Long, emitted: Long)
+                    s: Long, emitted: Long) extends EventClock.Days
   case class PageRow(event_type: String, day: Long, n: Long,
                       dev_micro: Long, cusum_micro: Long, alarm: Boolean)
-
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
 
   /** Default state-GC horizon: a type idle this many days past its last
     * closed day is dropped (the SequentialTracker horizon rule) and
@@ -75,50 +72,21 @@ object PageTracker {
       PageRow("", day, n, dev, sNew, sNew > 2L * meanMicro))
   }
 
-  private def merged(state: GroupState[PgState],
-      events: Iterator[PgEv]): PgState = {
-    val prev = state.getOption.getOrElse(Empty)
-    val m = scala.collection.mutable.Map[Long, Long]()
-    prev.days.indices.foreach(i => m(prev.days(i)) = prev.ns(i))
-    events.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      m(d) = m.getOrElse(d, 0L) + 1L
-    }
-    val ds = m.keys.toSeq.sorted
-    prev.copy(days = ds, ns = ds.map(m))
+  private def merged(st: PgState, events: Iterator[PgEv]): PgState = {
+    val held = EventClock.countByDay(events, st.days.zip(st.ns))(_.ts)
+    st.copy(days = held.map(_._1), ns = held.map(_._2))
   }
 
-  private def advance(key: String, meanMicro: Long, st: PgState,
-      wmMs: Long, state: GroupState[PgState],
-      horizonDays: Long): Iterator[PageRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    var cur = st
-    val out = Seq.newBuilder[PageRow]
-    val idx = st.days.zipWithIndex.toMap
-    for (d <- st.days.filter(d => d > st.emitted && d <= finalThrough)
-        .sorted) {
-      val (next, row) = step(cur, d, st.ns(idx(d)), meanMicro)
-      cur = next
-      out += row.copy(event_type = key)
-    }
-    val keepIdx = st.days.zipWithIndex.filter(_._1 > cur.emitted).map(_._2)
-    val next = cur.copy(days = keepIdx.map(st.days),
-      ns = keepIdx.map(st.ns))
-    // GC: a type idle IdleHorizonDays past its last closed day
-    // re-baselines if it ever resumes (the SequentialTracker horizon
-    // rule) — the parity caveat documented on pageStream
-    if (keepIdx.isEmpty && (next.emitted == Long.MinValue ||
-        wmMs >= (next.emitted + horizonDays) * DayMs)) state.remove()
-    else {
-      state.update(next)
-      next.days.minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (next.days.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((next.emitted + horizonDays) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
+  /** Fold the held days in (emitted, through]; only in-flight days stay. */
+  private def advance(key: String, meanMicro: Long)(st: PgState,
+      through: Long): (PgState, Seq[PageRow]) = {
+    val held = st.days.zip(st.ns)
+    val (cur, rows) = EventClock.foldDays(st,
+      held.filter(h => h._1 > st.emitted && h._1 <= through))(
+      step(_, _, _, meanMicro))
+    val keep = held.filter(_._1 > cur.emitted)
+    (cur.copy(days = keep.map(_._1), ns = keep.map(_._2)),
+      rows.map(_.copy(event_type = key)))
   }
 
   private def meanFor(means: Map[String, Long], key: String): Long =
@@ -126,24 +94,15 @@ object PageTracker {
       s"PageTracker: no baseline mean for event type '$key' — every " +
         "type on the stream needs its fitted mean_micro"))
 
+  /** The daily shell over [[step]]; the key's idle horizon is the
+    * parity caveat documented on [[pageStream]].
+    */
   private[streaming] def stateFn(means: Map[String, Long],
       horizonDays: Long = IdleHorizonDays)(
       key: String, events: Iterator[PgEv],
-      state: GroupState[PgState]): Iterator[PageRow] = {
-    val mu = meanFor(means, key)
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut) advance(key, mu, state.get, wmMs, state,
-      horizonDays)
-    else {
-      val st = merged(state, events)
-      try advance(key, mu, st, wmMs, state, horizonDays)
-      catch { // batch mode has no timeout clock — pageBatch emits
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[PgState]): Iterator[PageRow] =
+    EventClock.daily(events, state, Empty)(merged)(
+      advance(key, meanFor(means, key)), _.emitted + horizonDays)
 
   /** Streaming entry: one row per observed (type, day), emitted at
     * watermark finalization, folded in strict day order against the
@@ -180,17 +139,9 @@ object PageTracker {
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (key, it) =>
         val mu = meanFor(means, key)
-        val m = scala.collection.mutable.Map[Long, Long]()
-        it.foreach { e =>
-          val d = EventSessionizer.tsToUs(e.ts) / DayUs
-          m(d) = m.getOrElse(d, 0L) + 1L
-        }
-        var cur = Empty
-        m.keys.toSeq.sorted.map { d =>
-          val (next, row) = step(cur, d, m(d), mu)
-          cur = next
-          row.copy(event_type = key)
-        }.iterator
+        EventClock.foldDays(Empty, EventClock.countByDay(it)(_.ts))(
+          step(_, _, _, mu))._2
+          .map(_.copy(event_type = key)).iterator
       }
   }
 }

@@ -56,11 +56,8 @@ object PsiTracker {
     * closed day.
     */
   case class PState(days: Seq[Long], pend: Seq[Long],
-                    live: Seq[Long], emitted: Long)
+                    live: Seq[Long], emitted: Long) extends EventClock.Days
   case class PsiRow(day: Long, n_live: Long, psi: Double)
-
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
 
   private def r6d(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
@@ -90,74 +87,55 @@ object PsiTracker {
     r6d(sum.doubleValue)
   }
 
-  private def merged(state: GroupState[PState], nBins: Int,
-      vmn: Double, w: Double, events: Iterator[PEv]): PState = {
-    val prev = state.getOption.getOrElse(
-      PState(Nil, Nil, Seq.fill(nBins)(0L), Long.MinValue))
-    val m = scala.collection.mutable.Map[Long, Array[Long]]()
-    prev.days.indices.foreach { i =>
-      m(prev.days(i)) =
-        prev.pend.slice(i * nBins, (i + 1) * nBins).toArray
-    }
-    events.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      val a = m.getOrElseUpdate(d, Array.fill(nBins)(0L))
+  /** The state's in-flight (day, bin counts) pairs. */
+  private def pending(st: PState, nBins: Int): Seq[(Long, Array[Long])] =
+    st.days.indices.map(i =>
+      st.days(i) -> st.pend.slice(i * nBins, (i + 1) * nBins).toArray)
+
+  /** Per-day bin counts of `events` added onto `held`. */
+  private def binned(events: Iterator[PEv], held: Seq[(Long, Array[Long])],
+      nBins: Int, vmn: Double, w: Double): Seq[(Long, Array[Long])] =
+    EventClock.byDay(events, held, Array.fill(nBins)(0L))(_.ts, { (a, e) =>
       a(bin(e.value, vmn, w, nBins)) += 1L
-    }
-    val ds = m.keys.toSeq.sorted
-    prev.copy(days = ds, pend = ds.flatMap(m(_).toSeq))
+      a
+    })
+
+  /** Add day `d`'s bin counts to the cumulative live counts and score. */
+  private def step(ref: Seq[Long])(live: Array[Long], d: Long,
+      a: Array[Long]): (Array[Long], PsiRow) = {
+    var b = 0
+    while (b < a.length) { live(b) += a(b); b += 1 }
+    (live, PsiRow(d, live.sum, psi(ref, live.toIndexedSeq)))
   }
 
-  private def advance(refCounts: Seq[Long], st: PState, wmMs: Long,
-      state: GroupState[PState]): Iterator[PsiRow] = {
-    val nBins = refCounts.length
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    val live = st.live.toArray
-    var emitted = st.emitted
-    val out = Seq.newBuilder[PsiRow]
-    val idx = st.days.zipWithIndex.toMap
-    for (d <- st.days.filter(d => d > st.emitted && d <= finalThrough)
-        .sorted) {
-      val i = idx(d)
-      var b = 0
-      while (b < nBins) { live(b) += st.pend(i * nBins + b); b += 1 }
-      emitted = d
-      out += PsiRow(d, live.sum, psi(refCounts, live.toIndexedSeq))
-    }
-    val keepIdx = st.days.zipWithIndex.filter(_._1 > emitted).map(_._2)
-    val next = PState(keepIdx.map(st.days),
-      keepIdx.flatMap(i => st.pend.slice(i * nBins, (i + 1) * nBins)),
-      live.toIndexedSeq, emitted)
-    // GC: a metric idle 30 days past its last closed day re-baselines
-    // if it ever resumes (the SequentialTracker horizon rule)
-    if (keepIdx.isEmpty && (next.emitted == Long.MinValue ||
-        wmMs >= (next.emitted + 30) * DayMs)) state.remove()
-    else {
-      state.update(next)
-      next.days.minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (next.days.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((next.emitted + 30) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
+  /** Fold the held days in (emitted, through] into the live counts; only
+    * in-flight days stay.
+    */
+  private def advance(ref: Seq[Long])(st: PState,
+      through: Long): (PState, Seq[PsiRow]) = {
+    val held = pending(st, ref.length)
+    val closed = held.filter(h => h._1 > st.emitted && h._1 <= through)
+    val (live, rows) =
+      EventClock.foldDays(st.live.toArray, closed)(step(ref))
+    val emitted = closed.lastOption.fold(st.emitted)(_._1)
+    val keep = held.filter(_._1 > emitted)
+    (PState(keep.map(_._1), keep.flatMap(_._2.toSeq), live.toIndexedSeq,
+      emitted), rows)
   }
 
+  /** The daily shell over the PSI step. A metric idle 30 days past its
+    * last closed day re-baselines if it ever resumes (the
+    * SequentialTracker horizon rule).
+    */
   private[streaming] def stateFn(ref: Seq[Long], vmn: Double, w: Double)(
       key: Int, events: Iterator[PEv],
       state: GroupState[PState]): Iterator[PsiRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut) advance(ref, state.get, wmMs, state)
-    else {
-      val st = merged(state, ref.length, vmn, w, events)
-      try advance(ref, st, wmMs, state)
-      catch { // batch mode has no timeout clock — psiBatch emits
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
+    val nBins = ref.length
+    EventClock.daily(events, state,
+      PState(Nil, Nil, Seq.fill(nBins)(0L), Long.MinValue)) { (st, evs) =>
+      val held = binned(evs, pending(st, nBins), nBins, vmn, w)
+      st.copy(days = held.map(_._1), pend = held.flatMap(_._2.toSeq))
+    }(advance(ref), _.emitted + 30)
   }
 
   /** Streaming entry: one row per observed day, emitted at watermark
@@ -188,21 +166,9 @@ object PsiTracker {
   }
 
   private def batchFold(it: Iterator[PEv], ref: Seq[Long], vmn: Double,
-      w: Double, nBins: Int): Iterator[PsiRow] = {
-    val m = scala.collection.mutable.Map[Long, Array[Long]]()
-    it.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      val a = m.getOrElseUpdate(d, Array.fill(nBins)(0L))
-      a(bin(e.value, vmn, w, nBins)) += 1L
-    }
-    val live = Array.fill(nBins)(0L)
-    m.keys.toSeq.sorted.map { d =>
-      val a = m(d)
-      var b = 0
-      while (b < nBins) { live(b) += a(b); b += 1 }
-      PsiRow(d, live.sum, psi(ref.toIndexedSeq, live.toIndexedSeq))
-    }.iterator
-  }
+      w: Double, nBins: Int): Iterator[PsiRow] =
+    EventClock.foldDays(Array.fill(nBins)(0L),
+      binned(it, Nil, nBins, vmn, w))(step(ref.toIndexedSeq))._2.iterator
 
   private def fitFor(fits: Map[String, PsiFit], metric: String): PsiFit =
     fits.getOrElse(metric, throw new IllegalArgumentException(

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming counterpart of `ops.Sessionize.evBots`: the per-user
   * inter-arrival gap feed, emitted CONTINUOUSLY — every consecutive
   * per-user transition (ANY event type: bot cadence is a property of the
@@ -24,7 +26,10 @@ import java.sql.Timestamp
   * cross-trigger approximation). [[rateStreamExact]] buffers each user's
   * (ts, event_id) pairs until the quiesce timeout and folds them whole —
   * exact for everything the watermark admitted, at O(events in window)
-  * state. Batch mode ([[rateBatch]]) sees each group whole: EXACT.
+  * state; its rows emit once the watermark passes
+  * [[EventClock.QuiesceUs]] (seven days) after the user's newest event,
+  * and the O(1) state is reclaimed at the same horizon. Batch mode ([[rateBatch]])
+  * sees each group whole: EXACT.
   */
 object RateTracker {
 
@@ -38,8 +43,6 @@ object RateTracker {
   case class RateRow(user_id: Long, gap: Long)
 
   private val Unset: Long = Long.MinValue
-
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
 
   /** The shared pure core: fold (us, event_id) pairs SORTED by that order
     * onto the carried last, emitting one gap per consecutive transition.
@@ -61,29 +64,18 @@ object RateTracker {
     (s, out.result())
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.GapMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(user: Long, events: Iterator[REv],
       state: GroupState[RState]): Iterator[RateRow] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      val evs = events.map(e => (tsToUs(e.ts), e.event_id)).toArray
+      val evs = events.map(e => (usOf(e.ts), e.event_id)).toArray
       if (evs.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(RState(Unset, 0L, 0L))
         val (next0, rows) = fold(user, prev, evs.sorted.toSeq)
         val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         rows.iterator
       }
     }
@@ -98,28 +90,6 @@ object RateTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(user: Long, events: Iterator[REv],
-      state: GroupState[RBuf]): Iterator[RateRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap { b =>
-        fold(user, RState(Unset, 0L, 0L), b.us.zip(b.eids).sorted)._2
-      }
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.map(e => (tsToUs(e.ts), e.event_id)).toArray
-      val prev = state.getOption.getOrElse(RBuf(Nil, Nil, 0L))
-      val tMax =
-        if (evs.isEmpty) prev.tMax
-        else math.max(prev.tMax, evs.map(_._1).max)
-      val next = RBuf(prev.us ++ evs.map(_._1), prev.eids ++ evs.map(_._2),
-        tMax)
-      state.update(next)
-      armTimeout(state, tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers (ts, event_id) until quiesce, folds
     * whole, emits every gap once.
     */
@@ -128,7 +98,14 @@ object RateTracker {
     implicit val stEnc = Encoders.product[RBuf]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[REv], state: GroupState[RBuf]) =>
+          EventClock.buffered(evs, state, RBuf(Nil, Nil, 0L))(_.tMax) {
+            (b, es) =>
+              val us = es.map(e => usOf(e.ts))
+              RBuf(b.us ++ us, b.eids ++ es.map(_.event_id), (b.tMax +: us).max)
+          } { b => fold(user, RState(Unset, 0L, 0L), b.us.zip(b.eids).sorted)._2 }
+      }
   }
 
   /** Batch entry: each group seen whole — exact; feeding the rows to
@@ -140,7 +117,7 @@ object RateTracker {
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
         fold(user, RState(Unset, 0L, 0L),
-          it.map(e => (tsToUs(e.ts), e.event_id)).toSeq.sorted)._2.iterator
+          it.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted)._2.iterator
       }
   }
 }

@@ -51,14 +51,12 @@ object SequentialTracker {
                      emitted: Long,
                      cna: Long, csa: Long, cqa: Long,
                      cnb: Long, csb: Long, cqb: Long,
-                     pmin: Long)
+                     pmin: Long) extends EventClock.Days
   case class SequentialRow(day: Long, na: Long, nb: Long,
                            mean_a: Option[Double], mean_b: Option[Double],
                            diff: Option[Double], lambda: Double,
                            p_now: Double, p_always_valid: Double)
 
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
   private val Empty = SqState(Nil, Nil, Nil, Nil, Nil, Nil, Nil,
     Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L, 1000000L)
 
@@ -117,80 +115,54 @@ object SequentialTracker {
         r6d(lambda), pNow, pmin.toDouble / 1e6))
   }
 
-  /** Fold arriving events into the in-flight day-moment entries. */
-  private def merged(state: GroupState[SqState], salt: String,
-      events: Iterator[SqEv]): SqState = {
-    val prev = state.getOption.getOrElse(Empty)
-    val m = scala.collection.mutable.Map[Long, Array[Long]]()
-    prev.days.indices.foreach { i =>
-      m(prev.days(i)) = Array(prev.na(i), prev.sa(i), prev.qa(i),
-        prev.nb(i), prev.sb(i), prev.qb(i))
-    }
-    events.foreach { e =>
-      val d = EventSessionizer.tsToUs(e.ts) / DayUs
-      val a = m.getOrElseUpdate(d, Array.fill(6)(0L))
-      val sv = micro(e.value)
-      val sq = micro(e.value * e.value)
-      if (isArmA(e.user_id, salt)) { a(0) += 1; a(1) += sv; a(2) += sq }
-      else { a(3) += 1; a(4) += sv; a(5) += sq }
-    }
-    val ds = m.keys.toSeq.sorted
-    prev.copy(days = ds,
-      na = ds.map(m(_)(0)), sa = ds.map(m(_)(1)), qa = ds.map(m(_)(2)),
-      nb = ds.map(m(_)(3)), sb = ds.map(m(_)(4)), qb = ds.map(m(_)(5)))
+  /** [[step]] over one day's six moments, (na, sa, qa, nb, sb, qb). */
+  private def stepDay(tauSq: Double)(st: SqState, day: Long,
+      m: Array[Long]): (SqState, SequentialRow) =
+    step(tauSq, st, day, m(0), m(1), m(2), m(3), m(4), m(5))
+
+  /** The state's in-flight (day, six moments) pairs. */
+  private def pending(st: SqState): Seq[(Long, Array[Long])] =
+    st.days.indices.map(i => st.days(i) ->
+      Array(st.na(i), st.sa(i), st.qa(i), st.nb(i), st.sb(i), st.qb(i)))
+
+  private def withPending(st: SqState,
+      held: Seq[(Long, Array[Long])]): SqState =
+    st.copy(days = held.map(_._1),
+      na = held.map(_._2(0)), sa = held.map(_._2(1)), qa = held.map(_._2(2)),
+      nb = held.map(_._2(3)), sb = held.map(_._2(4)), qb = held.map(_._2(5)))
+
+  /** Per-day arm moments of `events` added onto `held`. */
+  private def moments(events: Iterator[SqEv],
+      held: Seq[(Long, Array[Long])],
+      salt: String): Seq[(Long, Array[Long])] =
+    EventClock.byDay(events, held, Array.fill(6)(0L))(_.ts, { (m, e) =>
+      val arm = if (isArmA(e.user_id, salt)) 0 else 3
+      m(arm) += 1
+      m(arm + 1) += micro(e.value)
+      m(arm + 2) += micro(e.value * e.value)
+      m
+    })
+
+  /** Score the held days in (emitted, through]; only in-flight days stay. */
+  private def advance(tauSq: Double)(st: SqState,
+      through: Long): (SqState, Seq[SequentialRow]) = {
+    val held = pending(st)
+    val (cur, rows) = EventClock.foldDays(st,
+      held.filter(h => h._1 > st.emitted && h._1 <= through))(stepDay(tauSq))
+    (withPending(cur, held.filter(_._1 > cur.emitted)), rows)
   }
 
-  private def advance(tauSq: Double, st: SqState, wmMs: Long,
-      state: GroupState[SqState]): Iterator[SequentialRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    var cur = st
-    val out = Seq.newBuilder[SequentialRow]
-    val idx = st.days.zipWithIndex.toMap
-    for (d <- st.days.filter(d => d > st.emitted && d <= finalThrough)
-        .sorted) {
-      val i = idx(d)
-      val (next, row) = step(tauSq, cur, d, st.na(i), st.sa(i), st.qa(i),
-        st.nb(i), st.sb(i), st.qb(i))
-      cur = next
-      out += row
-    }
-    val keepIdx = st.days.zipWithIndex.filter(_._1 > cur.emitted).map(_._2)
-    val next = cur.copy(days = keepIdx.map(st.days),
-      na = keepIdx.map(st.na), sa = keepIdx.map(st.sa),
-      qa = keepIdx.map(st.qa), nb = keepIdx.map(st.nb),
-      sb = keepIdx.map(st.sb), qb = keepIdx.map(st.qb))
-    // GC: an experiment idle 30 days past its last scored day is done —
-    // dropped whole (it would re-baseline if it ever resumed; a monitor
-    // that outlives 30 silent days should widen the horizon)
-    if (keepIdx.isEmpty && (next.emitted == Long.MinValue ||
-        wmMs >= (next.emitted + 30) * DayMs)) state.remove()
-    else {
-      state.update(next)
-      next.days.minOption.foreach { d =>
-        state.setTimeoutTimestamp(math.max((d + 1) * DayMs, wmMs + 1))
-      }
-      if (next.days.isEmpty)
-        state.setTimeoutTimestamp(
-          math.max((next.emitted + 30) * DayMs, wmMs + 1))
-    }
-    out.result().iterator
-  }
-
+  /** The daily shell over [[step]]. An experiment idle 30 days past its
+    * last scored day is done and dropped whole (it would re-baseline if
+    * it ever resumed; a monitor that outlives 30 silent days should widen
+    * the horizon).
+    */
   private[streaming] def stateFn(tauSq: Double, salt: String)(
       key: Int, events: Iterator[SqEv],
-      state: GroupState[SqState]): Iterator[SequentialRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut) advance(tauSq, state.get, wmMs, state)
-    else {
-      val st = merged(state, salt, events)
-      try advance(tauSq, st, wmMs, state)
-      catch { // batch mode has no timeout clock — sequentialBatch emits
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[SqState]): Iterator[SequentialRow] =
+    EventClock.daily(events, state, Empty) { (st, evs) =>
+      withPending(st, moments(evs, pending(st), salt))
+    }(advance(tauSq), _.emitted + 30)
 
   /** Streaming entry: one row per observed day, emitted at watermark
     * finalization, folded in strict day order.
@@ -214,23 +186,8 @@ object SequentialTracker {
     implicit val rowEnc = Encoders.product[SequentialRow]
     events.groupByKey(_ => 0)(Encoders.scalaInt)
       .flatMapGroups { (_, it) =>
-        val m = scala.collection.mutable.Map[Long, Array[Long]]()
-        it.foreach { e =>
-          val d = EventSessionizer.tsToUs(e.ts) / DayUs
-          val a = m.getOrElseUpdate(d, Array.fill(6)(0L))
-          val sv = micro(e.value)
-          val sq = micro(e.value * e.value)
-          if (isArmA(e.user_id, salt)) { a(0) += 1; a(1) += sv; a(2) += sq }
-          else { a(3) += 1; a(4) += sv; a(5) += sq }
-        }
-        var cur = Empty
-        m.keys.toSeq.sorted.map { d =>
-          val a = m(d)
-          val (next, row) =
-            step(tauSq, cur, d, a(0), a(1), a(2), a(3), a(4), a(5))
-          cur = next
-          row
-        }.iterator
+        EventClock.foldDays(Empty, moments(it, Nil, salt))(
+          stepDay(tauSq))._2.iterator
       }
   }
 }

@@ -36,11 +36,9 @@ object SpikeTracker {
     * the newest finalized day (Long.MinValue before the first emit).
     */
   case class SpState(days: Seq[Long], ns: Seq[Long], emitted: Long)
+    extends EventClock.Days
   case class SpikeRow(event_type: String, day: Long, n: Long, base_n: Long,
                       base_days: Long, rate_ratio: Double, spike: Boolean)
-
-  val DayUs: Long = 86400000000L
-  val DayMs: Long = 86400000L
 
   private def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -66,60 +64,34 @@ object SpikeTracker {
         }
       }
 
-  private def merged(state: GroupState[SpState],
-      events: Iterator[SpEv]): SpState = {
-    val prev = state.getOption.getOrElse(SpState(Nil, Nil, Long.MinValue))
-    val add = events.map(e => EventSessionizer.tsToUs(e.ts) / DayUs).toSeq
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    val counts = prev.days.zip(prev.ns).toMap
-    val next = (counts.keySet ++ add.keySet).toSeq.sorted.map { d =>
-      d -> (counts.getOrElse(d, 0L) + add.getOrElse(d, 0L))
-    }
-    SpState(next.map(_._1), next.map(_._2), prev.emitted)
+  private def merged(st: SpState, events: Iterator[SpEv]): SpState = {
+    val held = EventClock.countByDay(events, st.days.zip(st.ns))(_.ts)
+    st.copy(days = held.map(_._1), ns = held.map(_._2))
   }
 
-  private def advance(tpe: String, st: SpState, wmMs: Long,
-      state: GroupState[SpState], windowDays: Int,
-      threshold: Int): Iterator[SpikeRow] = {
-    val finalThrough = Math.floorDiv(wmMs, DayMs) - 1
-    val counts = st.days.zip(st.ns).toMap
-    val out = emitRows(tpe, counts, st.emitted, finalThrough, windowDays,
+  /** Emit the observed days in (emitted, through]; keep the baseline days
+    * a FUTURE day inside the window could still cite.
+    */
+  private def advance(tpe: String, windowDays: Int, threshold: Int)(
+      st: SpState, through: Long): (SpState, Seq[SpikeRow]) = {
+    val held = st.days.zip(st.ns)
+    val rows = emitRows(tpe, held.toMap, st.emitted, through, windowDays,
       threshold)
-    val newEmitted = math.max(st.emitted, finalThrough)
-    // keep baseline days a FUTURE day inside the window could still cite
-    val keep = st.days.zip(st.ns).filter(_._1 > newEmitted - windowDays)
-    if (keep.isEmpty) state.remove()
-    else {
-      state.update(SpState(keep.map(_._1), keep.map(_._2), newEmitted))
-      val minUnemitted = keep.map(_._1).filter(_ > newEmitted)
-        .minOption
-      // next wake: the first in-flight day's end, else the GC horizon a
-      // full window past the newest retained day
-      val desired = minUnemitted
-        .map(d => (d + 1) * DayMs)
-        .getOrElse((keep.map(_._1).max + windowDays + 1) * DayMs)
-      state.setTimeoutTimestamp(math.max(desired, wmMs + 1))
-    }
-    out.iterator
+    val emitted = math.max(st.emitted, through)
+    val keep = held.filter(_._1 > emitted - windowDays)
+    (SpState(keep.map(_._1), keep.map(_._2), emitted), rows)
   }
 
+  /** The daily shell over [[emitRows]]. A type is idle once the watermark
+    * outruns its newest retained day by a full window (no future day can
+    * cite it), and at once when it retains none.
+    */
   private[streaming] def stateFn(windowDays: Int, threshold: Int)(
       tpe: String, events: Iterator[SpEv],
-      state: GroupState[SpState]): Iterator[SpikeRow] = {
-    val wmMs =
-      try state.getCurrentWatermarkMs()
-      catch { case _: UnsupportedOperationException => 0L }
-    if (state.hasTimedOut)
-      advance(tpe, state.get, wmMs, state, windowDays, threshold)
-    else {
-      val st = merged(state, events)
-      try advance(tpe, st, wmMs, state, windowDays, threshold)
-      catch {
-        // batch mode has no timeout clock — spikeBatch emits directly
-        case _: UnsupportedOperationException => Iterator.empty
-      }
-    }
-  }
+      state: GroupState[SpState]): Iterator[SpikeRow] =
+    EventClock.daily(events, state, SpState(Nil, Nil, Long.MinValue))(
+      merged)(advance(tpe, windowDays, threshold),
+      s => s.days.lastOption.fold(s.emitted)(_ + windowDays + 1))
 
   /** Streaming entry: rows emit when the watermark finalizes their day. */
   def spikeStream(events: Dataset[SpEv], windowDays: Int = 7,
@@ -137,8 +109,8 @@ object SpikeTracker {
     implicit val rowEnc = Encoders.product[SpikeRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val counts = it.map(e => EventSessionizer.tsToUs(e.ts) / DayUs)
-          .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toMap
+        val counts =
+          EventClock.countByDay(it)(_.ts).toMap
         emitRows(tpe, counts, Long.MinValue, Long.MaxValue, windowDays,
           threshold).iterator
       }

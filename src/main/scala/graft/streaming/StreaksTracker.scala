@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.{dayOf, usOf}
+
 /** Streaming counterpart of `ops.Sessionize.evStreaks`: the per-user
   * consecutive-day activity rollup (active days / number of streaks /
   * longest streak) maintained CONTINUOUSLY — each trigger in which a user
@@ -42,10 +44,6 @@ object StreaksTracker {
 
   private val emptyState = SState(Unset, 0L, 0L, 0L, 0L, 0L)
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
-  private def day(us: Long): Long = Math.floorDiv(us, 86400000000L)
-
   /** The shared pure core: fold SORTED ascending distinct days onto the
     * carried state. Days at-or-before the carried last are skipped (at =
     * idempotent no-op, before = the documented drop).
@@ -68,29 +66,18 @@ object StreaksTracker {
   private def row(user: Long, s: SState): StreakRow =
     StreakRow(user, s.activeDays, s.nRuns, s.maxRun, s.lastDay)
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(user: Long, events: Iterator[SEv],
       state: GroupState[SState]): Iterator[StreakRow] = {
     if (state.hasTimedOut) { state.remove(); Iterator.empty }
     else {
-      val us = events.map(e => tsToUs(e.ts)).toArray
+      val us = events.map(e => usOf(e.ts)).toArray
       if (us.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(emptyState)
-        val next0 = fold(prev, us.map(day).distinct.sorted.toSeq)
+        val next0 = fold(prev, us.map(dayOf).distinct.sorted.toSeq)
         val next = next0.copy(tMax = math.max(prev.tMax, us.max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         // emit only when the rollup moved (a replayed old day is silent)
         if (next0.activeDays != prev.activeDays ||
           next0.maxRun != prev.maxRun) Iterator.single(row(user, next))
@@ -110,25 +97,6 @@ object StreaksTracker {
         GroupStateTimeout.EventTimeTimeout)(stateFn)
   }
 
-  private[streaming] def stateFnExact(user: Long, events: Iterator[SEv],
-      state: GroupState[SBuf]): Iterator[StreakRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.map { b =>
-        row(user, fold(emptyState, b.days.distinct.sorted))
-      }.toSeq
-      state.remove()
-      out.iterator
-    } else {
-      val us = events.map(e => tsToUs(e.ts)).toArray
-      val prev = state.getOption.getOrElse(SBuf(Nil, 0L))
-      val tMax = if (us.isEmpty) prev.tMax else math.max(prev.tMax, us.max)
-      val next = SBuf((prev.days ++ us.map(day)).distinct, tMax)
-      state.update(next)
-      armTimeout(state, tMax)
-      Iterator.empty
-    }
-  }
-
   /** EXACT streaming entry: buffers distinct days until quiesce, folds
     * whole, emits the final rollup once.
     */
@@ -137,7 +105,13 @@ object StreaksTracker {
     implicit val stEnc = Encoders.product[SBuf]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFnExact)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[SEv], state: GroupState[SBuf]) =>
+          EventClock.buffered(evs, state, SBuf(Nil, 0L))(_.tMax) { (b, es) =>
+            val us = es.map(e => usOf(e.ts))
+            SBuf((b.days ++ us.map(dayOf)).distinct, (b.tMax +: us).max)
+          } { b => Seq(row(user, fold(emptyState, b.days.distinct.sorted))) }
+      }
   }
 
   /** Batch entry: each group seen whole — exact; equals the evStreaks
@@ -148,7 +122,7 @@ object StreaksTracker {
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .mapGroups { (user, it) =>
         row(user, fold(emptyState,
-          it.map(e => day(tsToUs(e.ts))).toSeq.distinct.sorted))
+          it.map(e => dayOf(usOf(e.ts))).toSeq.distinct.sorted))
       }
   }
 }

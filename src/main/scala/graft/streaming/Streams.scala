@@ -17,6 +17,12 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * bounded by open windows per key (watermark-evicted). At 100 TB/day the
   * same code runs with a real source (Kafka/files) — only the reader
   * changes.
+  *
+  * These transforms use Spark's own windowed state. The hand-rolled
+  * `flatMapGroupsWithState` twins (EventSessionizer and the `*Tracker`s)
+  * take every event-time decision from [[EventClock]]: the time units,
+  * the watermark read, timeout arming, the 7-day quiesce horizon, the
+  * buffered-exact kernel and the daily shell.
   */
 object Streams {
 

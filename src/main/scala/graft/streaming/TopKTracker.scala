@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming heavy hitters: a Space-Saving summary (Metwally, Agrawal,
   * El Abbadi 2005 — the `k`-counter top-k sketch every stream processor
   * ships) of user activity PER EVENT TYPE, emitted when the key quiesces
@@ -41,8 +43,6 @@ object TopKTracker {
 
   val DefaultK: Int = 8
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   /** The pure Space-Saving fold: ids arrive in stream order; an unseen id
     * with a full summary takes over the (count, id)-minimal counter at
     * (minCount + 1) carrying err = minCount. Returns the summary sorted
@@ -68,17 +68,6 @@ object TopKTracker {
       n, st.tMax)
   }
 
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs = tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
-    }
-
   private[streaming] def stateFn(k: Int)(eventType: String,
       events: Iterator[KEv],
       state: GroupState[KState]): Iterator[TopKRow] = {
@@ -90,15 +79,15 @@ object TopKTracker {
       state.remove()
       out.iterator
     } else {
-      val evs = events.toArray.sortBy(e => (tsToUs(e.ts), e.event_id))
+      val evs = events.toArray.sortBy(e => (usOf(e.ts), e.event_id))
       if (evs.isEmpty) Iterator.empty
       else {
         val prev = state.getOption.getOrElse(KState(Nil, Nil, Nil, 0L, 0L))
         val next0 = foldSS(prev, evs.map(_.user_id).toSeq, k)
         val next = next0.copy(
-          tMax = math.max(prev.tMax, evs.map(e => tsToUs(e.ts)).max))
+          tMax = math.max(prev.tMax, evs.map(e => usOf(e.ts)).max))
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         Iterator.empty
       }
     }
@@ -123,7 +112,7 @@ object TopKTracker {
     implicit val rowEnc = Encoders.product[TopKRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val evs = it.toArray.sortBy(e => (tsToUs(e.ts), e.event_id))
+        val evs = it.toArray.sortBy(e => (usOf(e.ts), e.event_id))
         val st = foldSS(KState(Nil, Nil, Nil, 0L, 0L),
           evs.map(_.user_id).toSeq, k)
         st.ids.indices.iterator.map(i =>

@@ -5,6 +5,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
+import EventClock.usOf
+
 /** Streaming keep-first URL dedup — the twin of
   * [[graft.ops.Dedup.ddUrlOn]] for a live fetch stream (the crawl
   * frontier's "have we already fetched this page" check, run as a
@@ -32,8 +34,6 @@ object UrlDedupTracker {
   case class UrlRow(url: String, keep_id: Long, first_ts_us: Long,
                     n_dups: Long)
 
-  private def tsToUs(t: Timestamp): Long = EventSessionizer.tsToUs(t)
-
   /** Apply the shared canonicalization: (ts, fetch_id, url) → same with
     * `url` replaced by its canonical form.
     */
@@ -45,7 +45,7 @@ object UrlDedupTracker {
 
   private[streaming] def fold(st: UState, evs: Seq[UEv]): UState =
     evs.foldLeft(st) { (s, e) =>
-      val us = tsToUs(e.ts)
+      val us = usOf(e.ts)
       val keepNew = s.n == 0 ||
         us < s.minTsUs || (us == s.minTsUs && e.fetch_id < s.minId)
       UState(
@@ -53,18 +53,6 @@ object UrlDedupTracker {
         if (keepNew) e.fetch_id else s.minId,
         s.n + 1,
         math.max(s.tMax, us))
-    }
-
-  private def armTimeout(state: GroupState[_], tMaxUs: Long): Unit =
-    try {
-      val desiredMs =
-        tMaxUs / 1000 + EventSessionizer.LifetimeQuiesceMicros / 1000
-      val timeoutMs =
-        try math.max(desiredMs, state.getCurrentWatermarkMs() + 1)
-        catch { case _: UnsupportedOperationException => desiredMs }
-      state.setTimeoutTimestamp(timeoutMs)
-    } catch {
-      case _: UnsupportedOperationException => ()
     }
 
   private def stateFn(url: String, events: Iterator[UEv],
@@ -81,7 +69,7 @@ object UrlDedupTracker {
         val next = fold(state.getOption.getOrElse(UState(0L, 0L, 0L, 0L)),
           evs.toSeq)
         state.update(next)
-        armTimeout(state, next.tMax)
+        EventClock.quiesce(state, next.tMax)
         Iterator.empty
       }
     }

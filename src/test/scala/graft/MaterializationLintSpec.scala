@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,38 +30,10 @@ class MaterializationLintSpec extends AnyFunSuite {
     ("graft/graph/MaxFlow.scala", roundPin,
       "the distributed cleanup's state refresh: RDD state freed when replaced"))
 
-  /** Code lines of `src`, with line comments and block comments removed. */
-  private def codeLines(src: Seq[String]): Seq[(Int, String)] = {
-    var inBlock = false
-    src.zipWithIndex.flatMap { case (raw, i) =>
-      var line = raw
-      if (inBlock) {
-        val end = line.indexOf("*/")
-        if (end < 0) line = "" else { inBlock = false; line = line.substring(end + 2) }
-      }
-      val open = line.indexOf("/*")
-      if (open >= 0) {
-        val close = line.indexOf("*/", open + 2)
-        if (close < 0) inBlock = true
-        line = line.substring(0, open) +
-          (if (close < 0) "" else line.substring(close + 2))
-      }
-      val lineComment = line.indexOf("//")
-      if (lineComment >= 0) line = line.substring(0, lineComment)
-      if (line.trim.isEmpty) None else Some((i + 1, line.trim))
+  private def hits(): Seq[(String, Int, String)] =
+    SourceScan.codeLines(root).filter { case (_, _, code) =>
+      call.findFirstIn(code).isDefined
     }
-  }
-
-  private def hits(): Seq[(String, Int, String)] = {
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-    files.flatMap { f: Path =>
-      val rel = root.relativize(f).toString.replace('\\', '/')
-      codeLines(Files.readAllLines(f).asScala.toSeq).collect {
-        case (n, code) if call.findFirstIn(code).isDefined => (rel, n, code)
-      }
-    }
-  }
 
   test("only Caches and MaxFlow's two RDD round pins materialize directly") {
     val found = hits()

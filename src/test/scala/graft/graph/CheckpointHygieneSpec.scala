@@ -132,11 +132,11 @@ class CheckpointHygieneSpec extends AnyFunSuite {
   test("MaxFlow pins O(1) state frames, not O(rounds)") {
     // long path network: the excess walk needs ~length/2 rounds to meet,
     // so an unreleased per-round state checkpoint would pin ~6+ frames
-    val edges = (0L until 24L).flatMap(i =>
+    val edges = (10L until 34L).flatMap(i =>
       Seq((i, i + 1, 3L), (i + 1, i, 3L))).toDF("src", "dst", "cap")
     clearAll()
     val base = pinned
-    val res = MaxFlow.run(spark, edges, Seq(0L), Seq(24L))
+    val res = MaxFlow.run(spark, edges, Seq(10L), Seq(34L))
     assert(res.flow == 3L && res.rounds >= 3, s"flow ${res.flow} rounds ${res.rounds}")
     val left = pinned - base
     assert(left <= 4, s"pinned $left frames (want <=4, not one per round)")

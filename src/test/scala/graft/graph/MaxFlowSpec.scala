@@ -28,6 +28,19 @@ class MaxFlowSpec extends AnyFunSuite {
     assert(r.flow == 0L)
   }
 
+  test("reserved ids 1 and 2 (the super-terminals) are rejected: an edge " +
+      "endpoint when the build reads it, a source or sink on the driver") {
+    def messages(t: Throwable): String = Iterator.iterate(t)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    val edge = intercept[Exception](try MaxFlow.run(spark,
+      toDf(Seq((10L, 1L, 5L), (1L, 13L, 5L))), Seq(10L), Seq(13L))
+      finally graft.SparkHygiene.clearSessionCaches(spark))
+    assert(messages(edge).contains("Reserved ID : 1"), messages(edge))
+    val terminal = intercept[IllegalArgumentException](MaxFlow.run(spark,
+      toDf(Seq((10L, 13L, 5L))), Seq(2L), Seq(13L)))
+    assert(terminal.getMessage.contains("reserved"), terminal.getMessage)
+  }
+
   test("max-flow equals Edmonds-Karp oracle on random graphs (SURVEY §5)") {
     for (seed <- 1 to 4) {
       val edges = EdmondsKarp.randomGraph(n = 10, edgeProb = 0.3, maxCap = 10, seed = seed)
@@ -224,10 +237,10 @@ class MaxFlowSpec extends AnyFunSuite {
       val arcs = random ++
         random.take(5) ++                                    // parallel arcs
         random.slice(5, 10).map { case (u, v, c) => (v, u, c) } ++ // antiparallel
+        // the terminal-bound arcs are the ones buildState injects: a
+        // caller's arc on the reserved ids 1 and 2 is rejected (the
+        // reserved-ids case above)
         Seq((ids(3), ids(3), Some(4L)),                      // self-loop
-          (ids(4), GraphModel.SuperSource, Some(2L)),        // into the terminals
-          (ids(5), GraphModel.SuperSink, Some(3L)),
-          (GraphModel.SuperSink, ids(6), Some(5L)),
           (ids(7), ids(8), None), (ids(7), ids(8), Some(6L)), // a null cap is 0
           (ids(9), ids(10), None))
       val (sources, sinks) = (Seq(ids(0), ids(1), ids(0)), Seq(ids(11), ids(2)))

@@ -122,9 +122,9 @@ class StreamingSpec extends AnyFunSuite {
     for (b <- batches) { stream.addData(b); q.processAllAvailable() }
     val maxTs = batches.flatten.map(_.ts.getTime).max
     // sentinel pair: advance the watermark, then let timeouts fire under it
-    stream.addData(Ev(-1L, new Timestamp(maxTs + 24L * 3600 * 1000), -1L, "x", 0.0))
+    stream.addData(Ev(-1L, new Timestamp(maxTs + 8L * 24 * 3600 * 1000), -1L, "x", 0.0))
     q.processAllAvailable()
-    stream.addData(Ev(-2L, new Timestamp(maxTs + 25L * 3600 * 1000), -1L, "x", 0.0))
+    stream.addData(Ev(-2L, new Timestamp(maxTs + 9L * 24 * 3600 * 1000), -1L, "x", 0.0))
     q.processAllAvailable()
     q.stop()
     spark.table(name).filter(col("user_id") =!= -1L).collect()
@@ -201,7 +201,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("funnel fold: strict ordering and order-robust view refinement") {
     import FunnelTracker.{FState, Unset, fold}
-    def us(s: String) = FunnelTracker.tsToUs(Timestamp.valueOf(s))
+    def us(s: String) = EventClock.usOf(Timestamp.valueOf(s))
     // click before the first view never counts
     val a = fold(FState(Unset, Unset, Unset, 0L), Seq(
       us("2024-06-01 09:00:00") -> "click",
@@ -240,9 +240,9 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName(name).start()
     for (b <- batches) { stream.addData(b); q.processAllAvailable() }
     val maxTs = batches.flatten.map(_.ts.getTime).max
-    stream.addData(Ev(-1L, new Timestamp(maxTs + 24L * 3600 * 1000), -1L, "x", 0.0))
+    stream.addData(Ev(-1L, new Timestamp(maxTs + 8L * 24 * 3600 * 1000), -1L, "x", 0.0))
     q.processAllAvailable()
-    stream.addData(Ev(-2L, new Timestamp(maxTs + 25L * 3600 * 1000), -1L, "x", 0.0))
+    stream.addData(Ev(-2L, new Timestamp(maxTs + 9L * 24 * 3600 * 1000), -1L, "x", 0.0))
     q.processAllAvailable()
     q.stop()
     spark.table(name).filter(col("user_id") =!= -1L).collect()
@@ -507,7 +507,7 @@ class StreamingSpec extends AnyFunSuite {
     // the watermark is past (emitted + 30) days → the state must be
     // REMOVED, not re-armed (the re-arm-at-wm+1-forever leak)
     val idle = CusumTracker.CuState(Nil, Nil, 10L, 7L, 70L, 0L, 0L)
-    val horizonMs = (10L + 30L) * CusumTracker.DayMs
+    val horizonMs = (10L + 30L) * EventClock.DayMs
     val timedOut = TestGroupState.create[CusumTracker.CuState](
       Optional.of(idle), GroupStateTimeout.EventTimeTimeout, 0L,
       Optional.of(horizonMs + 1L), true)
@@ -517,10 +517,10 @@ class StreamingSpec extends AnyFunSuite {
     val live = CusumTracker.CuState(Seq(11L), Seq(5L), 10L, 7L, 70L, 0L, 0L)
     val g = TestGroupState.create[CusumTracker.CuState](
       Optional.of(live), GroupStateTimeout.EventTimeTimeout, 0L,
-      Optional.of(13L * CusumTracker.DayMs), false)
+      Optional.of(13L * EventClock.DayMs), false)
     val rows = fn("a", Iterator.empty, g).toSeq
     assert(rows.map(_.day) == Seq(11L) && !g.isRemoved)
-    assert(g.getTimeoutTimestampMs.get == (11L + 30L) * CusumTracker.DayMs)
+    assert(g.getTimeoutTimestampMs.get == (11L + 30L) * EventClock.DayMs)
   }
 
   test("convPairs: stream-stream interval join == batch on disordered input; a beyond-watermark click loses its pair") {
@@ -617,8 +617,8 @@ class StreamingSpec extends AnyFunSuite {
     // the late event counted: day-2 A has n=2, and day-3 A (n=4) spikes
     // against base (2+2)/2 days => ratio 2.0
     val a = rows.map(t => (t._1, t._2) -> t).toMap
-    val day2 = EventSessionizer.tsToUs(ts("2024-06-02 10:00:00")) /
-      SpikeTracker.DayUs
+    val day2 = EventClock.usOf(ts("2024-06-02 10:00:00")) /
+      EventClock.DayUs
     assert(a(("A", day2))._3 == 2L)
     assert(a(("A", day2 + 1))._6 == 2.0 && a(("A", day2 + 1))._7)
   }
@@ -1241,6 +1241,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(exact.toSet == Set((7L, 4000000L), (7L, 6000000L)))
   }
 
+  test("rate, funnel, attribution: a user quiet past the session gap keeps " +
+      "their state — stream == buffered-exact == batch on a split feed") {
+    import spark.implicits._
+    def t(s: String) = Timestamp.valueOf(s)
+    // user 8's 12:00 view moves the watermark (10 min delay) more than
+    // 30 min past user 7's newest event; user 7's purchase in trigger 3
+    // must still fold onto the state trigger 1 built
+    val batches = Seq(
+      Seq(Ev(1L, t("2024-06-10 10:00:00"), 7L, "view", 0.0),
+        Ev(2L, t("2024-06-10 10:00:10"), 7L, "click", 0.0),
+        Ev(3L, t("2024-06-10 10:00:00"), 8L, "view", 0.0)),
+      Seq(Ev(4L, t("2024-06-10 12:00:00"), 8L, "view", 0.0)),
+      Seq(Ev(5L, t("2024-06-10 12:05:00"), 7L, "purchase", 1.0),
+        Ev(6L, t("2024-06-10 12:06:00"), 8L, "view", 0.0)))
+    val all = batches.flatten.toDF()
+    val delay = "10 minutes"
+
+    val rate = Seq(RateTracker.rateStream _, RateTracker.rateStreamExact _)
+      .zipWithIndex.map { case (entry, i) =>
+        runRateBatches(entry, s"split_rate_$i", batches, delay)
+          .filter(_._1 == 7L).map(_._2).sorted
+      }
+    val rateBatch = RateTracker.rateBatch(
+      all.select("ts", "event_id", "user_id").as[RateTracker.REv]).collect()
+      .filter(_.user_id == 7L).map(_.gap).toSeq.sorted
+    assert(rateBatch == Seq(10000000L, 7490000000L))
+
+    val funnel = Seq(FunnelTracker.funnelStream _,
+        FunnelTracker.funnelStreamExact _).zipWithIndex.map {
+      case (entry, i) =>
+        runFunnelBatches(entry, s"split_funnel_$i", batches, delay).get(7L)
+    }
+    val funnelBatch = funnelBatchRows(all).get(7L)
+    assert(funnelBatch.map(_._4).contains(3))
+
+    val attr = Seq(AttributionTracker.attributionStream _,
+        AttributionTracker.attributionStreamExact _).zipWithIndex.map {
+      case (entry, i) =>
+        runAttrBatches(entry, s"split_attr_$i", batches, delay).get(5L)
+    }
+    val attrBatch = attrBatchRows(all).get(5L)
+    assert(attrBatch.contains((7L, "click", Some(2L),
+      Some(t("2024-06-10 10:00:10")))))
+    // (stream, buffered-exact) per tracker, each equal to batch
+    assert((rate, funnel, attr) == ((Seq(rateBatch, rateBatch),
+      Seq(funnelBatch, funnelBatch), Seq(attrBatch, attrBatch))))
+  }
+
   private def runTopkBatches(name: String, batches: Seq[Seq[Ev]],
       k: Int, delay: String = "0 seconds"): Seq[(String, Long, Long, Long, Long)] = {
     import spark.implicits._
@@ -1585,6 +1633,10 @@ class StreamingSpec extends AnyFunSuite {
 
   test("mad chart: a beyond-watermark straggler for an emitted day is " +
       "DROPPED — history stays consistent with the emitted rows") {
+    // pins Spark's late-row filter: under EventTimeTimeout,
+    // flatMapGroupsWithState drops rows behind the watermark before the
+    // state function sees them, and a day emits only once the watermark
+    // has passed its end — so no straggler can reach an emitted day
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     def ev(t: String, d: Int, i: Int) = MadTracker.MdEv(
@@ -1608,7 +1660,7 @@ class StreamingSpec extends AnyFunSuite {
     // day 6 05:00, finalizing days 0-2 (emitted = day 2)
     stream.addData(early ++ later6.take(1)); q.processAllAvailable()
     // trigger 2: the beyond-watermark straggler arrives WITH day 6/7
-    // traffic — merged() must drop it (day 1 ≤ emitted)
+    // traffic — it is behind the watermark, so Spark drops it
     stream.addData((straggler +: later6.drop(1)) ++ later7)
     q.processAllAvailable()
     // advance the clock far enough to finalize day 7

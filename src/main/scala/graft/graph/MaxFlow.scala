@@ -120,7 +120,19 @@ object MaxFlow {
         * path simplicity/acyclicity (ff1/Excess.java:49-50), hop-count
         * consistency — on every vertex each round. Off by default (costs
         * a full state pass). */
-      validate: Boolean = false)
+      validate: Boolean = false) {
+    require(truncation == "priority" || truncation == "random",
+      s"truncation must be priority or random, got '$truncation'")
+    Seq("excessListMax" -> excessListMax, "maxPathLength" -> maxPathLength,
+      "candidatesPerVertex" -> candidatesPerVertex,
+      "checkpointEvery" -> checkpointEvery,
+      "acceptPatience" -> acceptPatience).foreach { case (name, v) =>
+      require(v >= 1, s"$name must be >= 1, got $v")
+    }
+    require(maxRounds >= 0, s"maxRounds must be >= 0, got $maxRounds")
+    require(driverCleanupMaxEdges >= 0,
+      s"driverCleanupMaxEdges must be >= 0, got $driverCleanupMaxEdges")
+  }
 
   /** Per-round counter set (A8) — the reference's MFCounter family
     * (mf/MFCounter.java:3-49) as one record per round:

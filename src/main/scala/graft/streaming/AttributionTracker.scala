@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{tsOf, usOf}
+import EventClock.{Stamped, tsOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evAttribution` (last-touch
   * attribution: every purchase goes to the most recent PRECEDING click,
@@ -40,13 +40,13 @@ object AttributionTracker {
     * quiesce deadline base, see [[FunnelTracker.FState]]).
     */
   case class AState(clickId: Long, clickUs: Long, viewId: Long,
-                    viewUs: Long, tMax: Long)
+                    viewUs: Long, tMax: Long) extends Stamped
 
   /** Buffered events awaiting quiesce (parallel seqs keep the encoder
     * flat), for the exact variant.
     */
   case class ABuf(ts: Seq[Long], ids: Seq[Long], types: Seq[String],
-                  values: Seq[Double], tMax: Long)
+                  values: Seq[Double], tMax: Long) extends Stamped
 
   case class TouchRow(user_id: Long, purchase_id: Long,
                       t_purchase: Timestamp, value: Double,
@@ -85,21 +85,15 @@ object AttributionTracker {
     (AState(ci, cu, vi, vu, st.tMax), out.toSeq)
   }
 
-  private def sortKey(e: AEv): (Long, Long) = (usOf(e.ts), e.event_id)
-
-  private[streaming] def stateFn(user: Long, events: Iterator[AEv],
-      state: GroupState[AState]): Iterator[TouchRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val evs = events.toArray.sortBy(sortKey)
-      val prev = state.getOption.getOrElse(emptyState)
-      val batchMax = if (evs.isEmpty) 0L else evs.map(e => usOf(e.ts)).max
-      val (next, rows) = fold(user, prev,
-        evs.toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type, e.value)))
-      state.update(next.copy(tMax = math.max(prev.tMax, batchMax)))
-      EventClock.quiesce(state, math.max(prev.tMax, batchMax))
-      rows.iterator
-    }
+  /** One trigger (or a whole batch group): sort the slice by (ts,
+    * event_id) and fold it; purchases emit at once, nothing at timeout.
+    */
+  private def step(user: Long)(prev: AState,
+      slice: Iterator[AEv]): (AState, Seq[TouchRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_id, e.event_type, e.value))
+      .toSeq.sortBy(t => (t._1, t._2))
+    val (next, rows) = fold(user, prev, sorted)
+    (next.copy(tMax = (prev.tMax +: sorted.map(_._1)).max), rows)
   }
 
   /** Streaming entry: purchase rows emit on arrival; O(1) state. */
@@ -108,7 +102,10 @@ object AttributionTracker {
     implicit val stEnc = Encoders.product[AState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[AEv], state: GroupState[AState]) =>
+          EventClock.carried(evs, state, emptyState)(step(user), _ => Nil)
+      }
   }
 
   /** EXACT streaming entry: buffers until quiesce, folds whole — rows
@@ -121,7 +118,7 @@ object AttributionTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[AEv], state: GroupState[ABuf]) =>
-          EventClock.buffered(evs, state, ABuf(Nil, Nil, Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, ABuf(Nil, Nil, Nil, Nil, 0L)) {
             (b, es) =>
               val us = es.map(e => usOf(e.ts))
               ABuf(b.ts ++ us, b.ids ++ es.map(_.event_id),
@@ -140,9 +137,7 @@ object AttributionTracker {
     implicit val rowEnc = Encoders.product[TouchRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val sorted = it.toArray.sortBy(sortKey).toSeq
-          .map(e => (usOf(e.ts), e.event_id, e.event_type, e.value))
-        fold(user, emptyState, sorted)._2.iterator
+        EventClock.whole(it, emptyState)(step(user), _ => Nil)
       }
   }
 }

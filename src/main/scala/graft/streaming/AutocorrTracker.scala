@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evAutocorr`: the lag-1
   * arrival-memory statistic maintained CONTINUOUSLY in O(1) state per
@@ -37,7 +37,7 @@ object AutocorrTracker {
     */
   case class AState(lo: Long, hi: Long, s: Long, q: Long, clo: Long,
                     chi: Long, sxy: Long, curMin: Long, curC: Long,
-                    tMax: Long)
+                    tMax: Long) extends Stamped
 
   case class AcRow(event_type: String, n_pairs: Long, autocorr: Double,
                    defined: Boolean)
@@ -110,25 +110,12 @@ object AutocorrTracker {
       else AcRow(tpe, n, r, defined = true)
     }
 
-  private[streaming] def stateFn(tpe: String, events: Iterator[AEv],
-      state: GroupState[AState]): Iterator[AcRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.flatMap(row(tpe, _))
-      state.remove()
-      out.iterator
-    } else {
-      val us = events.map(e => usOf(e.ts)).toArray
-      if (us.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(emptyState)
-        val next0 = fold(prev, scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(us.sorted))
-        val next = next0.copy(tMax = math.max(prev.tMax, us.max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        Iterator.empty // the statistic emits once, at quiesce
-      }
-    }
+  /** One trigger: fold the ts-sorted slice; the statistic emits once,
+    * at the timeout.
+    */
+  private def step(prev: AState, slice: Iterator[AEv]): (AState, Seq[AcRow]) = {
+    val us = slice.map(e => usOf(e.ts)).toSeq.sorted
+    (fold(prev, us).copy(tMax = (prev.tMax +: us).max), Nil)
   }
 
   /** Streaming entry: one final row per event type at the event-time
@@ -139,7 +126,11 @@ object AutocorrTracker {
     implicit val stEnc = Encoders.product[AState]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (tpe: String, evs: Iterator[AEv], state: GroupState[AState]) =>
+          EventClock.carried(evs, state, emptyState)(step,
+            row(tpe, _).toSeq)
+      }
   }
 
   /** Batch entry: each type seen whole — exact; equals the evAutocorr
@@ -150,8 +141,7 @@ object AutocorrTracker {
     implicit val rowEnc = Encoders.product[AcRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        row(tpe, fold(emptyState,
-          it.map(e => usOf(e.ts)).toSeq.sorted)).iterator
+        EventClock.whole(it, emptyState)(step, row(tpe, _).toSeq)
       }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{DayUs, dayOf, usOf}
+import EventClock.{DayUs, Stamped, dayOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evDecay`: the recency-decayed
   * engagement score (Σ over a user's active days of 2^−(T−d), T = the
@@ -47,6 +47,7 @@ object DecayTracker {
     * older than the window.
     */
   case class DState(lastDay: Long, mask: Long, nOld: Long, tMax: Long)
+      extends Stamped
 
   /** Quiesce output: the state facts the finalize step scores. */
   case class DecayRow(user_id: Long, last_day: Long, mask: Long, n_old: Long)
@@ -81,24 +82,16 @@ object DecayTracker {
     if (s.lastDay == Unset) Nil
     else Seq(DecayRow(user, s.lastDay, s.mask, s.nOld))
 
-  private[streaming] def stateFn(user: Long, events: Iterator[DEv],
-      state: GroupState[DState]): Iterator[DecayRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap(s => row(user, s))
-      state.remove()
-      out.iterator
-    } else {
-      val days = events.map(e => dayOf(usOf(e.ts))).toArray
-      if (days.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(DState(Unset, 0L, 0L, 0L))
-        val next = days.sorted.foldLeft(prev)(foldDay)
-        val tMax = math.max(prev.tMax, days.max * DayUs + DayUs - 1)
-        state.update(next.copy(tMax = tMax))
-        EventClock.quiesce(state, tMax)
-        Iterator.empty
-      }
-    }
+  private val emptyState = DState(Unset, 0L, 0L, 0L)
+
+  /** One trigger: fold the slice's days in order; `tMax` is the end of
+    * the newest day. The state row emits once, at the timeout.
+    */
+  private def step(prev: DState,
+      slice: Iterator[DEv]): (DState, Seq[DecayRow]) = {
+    val days = slice.map(e => dayOf(usOf(e.ts))).toSeq.sorted
+    (days.foldLeft(prev)(foldDay).copy(
+      tMax = (prev.tMax +: days.map(_ * DayUs + DayUs - 1)).max), Nil)
   }
 
   /** Streaming entry: per-user state rows at the quiesce timeout. */
@@ -107,7 +100,10 @@ object DecayTracker {
     implicit val stEnc = Encoders.product[DState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[DEv], state: GroupState[DState]) =>
+          EventClock.carried(evs, state, emptyState)(step, row(user, _))
+      }
   }
 
   /** Batch entry: each user folded whole in day order — exact. */
@@ -115,9 +111,7 @@ object DecayTracker {
     implicit val rowEnc = Encoders.product[DecayRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val st = it.map(e => dayOf(usOf(e.ts))).toSeq.sorted
-          .foldLeft(DState(Unset, 0L, 0L, 0L))(foldDay)
-        row(user, st).iterator
+        EventClock.whole(it, emptyState)(step, row(user, _))
       }
   }
 

@@ -5,14 +5,27 @@ import org.apache.spark.sql.streaming.GroupState
 import java.sql.Timestamp
 
 /** The event-time clock of the `flatMapGroupsWithState` twins: units,
-  * the watermark read, timeout arming and the two state shapes that
-  * repeat across trackers. Every `setTimeoutTimestamp` and
-  * `getCurrentWatermarkMs` of the package lives here, so a timeout rule
-  * is decided once (ClockLintSpec enforces it).
+  * the watermark read, timeout arming and the three state shapes of the
+  * trackers. Every `setTimeoutTimestamp`, `getCurrentWatermarkMs`,
+  * `hasTimedOut` and quiesce of the package lives here, so a timeout rule
+  * is decided once (ClockLintSpec enforces it; EventSessionizer, whose
+  * timeout is its session end, reads `hasTimedOut` itself).
+  *
+  * The three state shapes:
+  *  - [[carried]]: O(1) state carried from trigger to trigger. A trigger
+  *    folds its slice onto the state with the tracker's `step`; the key
+  *    emits `flush` and is removed at the quiesce timeout.
+  *  - [[buffered]]: the `*StreamExact` entries, a [[carried]] state whose
+  *    step appends the slice to a buffer; the key folds the buffer whole
+  *    at the timeout.
+  *  - [[daily]]: the day-finalizing trackers. A day emits once, when the
+  *    watermark passes its end.
   *
   * Batch mode: a batch `flatMapGroupsWithState` has no watermark and no
   * event-time timeout. [[arm]] is then a no-op and [[daily]] emits
-  * nothing; every tracker's `*Batch` entry folds each group whole.
+  * nothing. A batch group is one trigger followed by its timeout, so a
+  * carried tracker's `*Batch` entry runs [[whole]]: its `step` once on
+  * the group, then its `flush`.
   */
 object EventClock {
 
@@ -71,27 +84,57 @@ object EventClock {
   def quiesce(state: GroupState[_], tMaxUs: Long): Unit =
     arm(state, tMaxUs / 1000 + QuiesceUs / 1000)
 
-  /** The buffered-exact kernel of the `*StreamExact` entries: each
-    * trigger `append`s its slice to the key's buffer `B` (`empty` at
-    * first) and re-arms the quiesce timeout from the buffer's `tMax`; at
-    * the timeout `flush` folds the whole buffer with the tracker's pure
-    * fold (the one its batch entry uses), the rows emit and the key is
-    * removed. Exact for every event the watermark admitted, whatever the
-    * trigger decomposition, at O(events in the key's active window) state.
+  /** A carried or buffered state: it holds `tMax`, the newest event
+    * micros its key has ever seen, which the quiesce timeout runs from.
     */
-  def buffered[E, B, R](events: Iterator[E], state: GroupState[B], empty: B)(
-      tMax: B => Long)(append: (B, Seq[E]) => B)(
-      flush: B => Seq[R]): Iterator[R] =
+  trait Stamped {
+    def tMax: Long
+  }
+
+  /** The carried-state kernel of the O(1) trackers. `step(prev, slice)`
+    * folds one trigger's slice onto the key's state (`empty` at first)
+    * and returns the next state with the rows the slice completed. A
+    * timed-out key emits `flush` of its state and is removed; a trigger
+    * steps, stores the next state and re-arms the quiesce timeout from
+    * its `tMax`. Spark only calls a key that has not timed out with
+    * data, so an empty slice leaves the state as it is.
+    */
+  def carried[E, S <: Stamped, R](events: Iterator[E], state: GroupState[S],
+      empty: S)(step: (S, Iterator[E]) => (S, Seq[R]),
+      flush: S => Seq[R]): Iterator[R] =
     if (state.hasTimedOut) {
       val out = state.getOption.toSeq.flatMap(flush)
       state.remove()
       out.iterator
-    } else {
-      val next = append(state.getOption.getOrElse(empty), events.toVector)
+    } else if (!events.hasNext) Iterator.empty
+    else {
+      val (next, rows) = step(state.getOption.getOrElse(empty), events)
       state.update(next)
-      quiesce(state, tMax(next))
-      Iterator.empty
+      quiesce(state, next.tMax)
+      rows.iterator
     }
+
+  /** [[carried]] on a batch group: the group is one trigger followed by
+    * its timeout, so it emits the step's rows, then the flush.
+    */
+  def whole[E, S, R](events: Iterator[E], empty: S)(
+      step: (S, Iterator[E]) => (S, Seq[R]),
+      flush: S => Seq[R]): Iterator[R] = {
+    val (next, rows) = step(empty, events)
+    (rows ++ flush(next)).iterator
+  }
+
+  /** The buffered-exact kernel of the `*StreamExact` entries: [[carried]]
+    * with a step that `append`s the trigger's slice to the key's buffer
+    * and emits nothing; at the timeout `flush` folds the whole buffer
+    * with the tracker's pure fold (the one its batch entry uses). Exact
+    * for every event the watermark admitted, whatever the trigger
+    * decomposition, at O(events in the key's active window) state.
+    */
+  def buffered[E, B <: Stamped, R](events: Iterator[E], state: GroupState[B],
+      empty: B)(append: (B, Seq[E]) => B)(flush: B => Seq[R]): Iterator[R] =
+    carried(events, state, empty)((b, es) => (append(b, es.toVector), Nil),
+      flush)
 
   /** A day-finalizing tracker's state: the days it holds (ascending) and
     * the newest finalized day (Long.MinValue before the first). Held days

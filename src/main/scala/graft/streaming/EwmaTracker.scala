@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{DayUs, dayOf, usOf}
+import EventClock.{DayUs, Stamped, dayOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evEwma`: the per-type daily
   * volume EWMA (α = ½) maintained CONTINUOUSLY — each day ROLLOVER emits
@@ -36,10 +36,10 @@ object EwmaTracker {
     * been seeded (distinguishes the first completed day).
     */
   case class EState(curDay: Long, n: Long, ewma: Double, have: Boolean,
-                    tMax: Long)
+                    tMax: Long) extends Stamped
 
   /** Buffered-exact state: parallel (day, count) seqs, merged per trigger. */
-  case class EBuf(days: Seq[Long], ns: Seq[Long], tMax: Long)
+  case class EBuf(days: Seq[Long], ns: Seq[Long], tMax: Long) extends Stamped
 
   case class EwmaRow(event_type: String, day: Timestamp, n: Long,
                      ewma: Double)
@@ -78,26 +78,17 @@ object EwmaTracker {
     if (s.curDay == Unset) Nil
     else Seq(EwmaRow(tpe, dayTs(s.curDay), s.n, next(s, s.n)))
 
-  private val Empty = EState(Unset, 0L, 0.0, have = false, 0L)
+  private[streaming] val Empty = EState(Unset, 0L, 0.0, have = false, 0L)
 
-  private[streaming] def stateFn(tpe: String, events: Iterator[EEv],
-      state: GroupState[EState]): Iterator[EwmaRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap(s => flush(tpe, s))
-      state.remove()
-      out.iterator
-    } else {
-      val days = EventClock.countByDay(events)(_.ts)
-      if (days.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(Empty)
-        val (next0, rows) = fold(tpe, prev, days)
-        val tMax = math.max(prev.tMax, days.last._1 * DayUs + DayUs - 1)
-        state.update(next0.copy(tMax = tMax))
-        EventClock.quiesce(state, tMax)
-        rows.iterator
-      }
-    }
+  /** One trigger: fold the slice's per-day counts in day order, emitting
+    * the days it completed; `tMax` is the end of the newest day.
+    */
+  private[streaming] def step(tpe: String)(prev: EState,
+      slice: Iterator[EEv]): (EState, Seq[EwmaRow]) = {
+    val days = EventClock.countByDay(slice)(_.ts)
+    val (next, rows) = fold(tpe, prev, days)
+    (next.copy(tMax = (prev.tMax +: days.map(_._1 * DayUs + DayUs - 1)).max),
+      rows)
   }
 
   /** Streaming entry: one row per completed day; O(1) state; the open
@@ -108,7 +99,10 @@ object EwmaTracker {
     implicit val stEnc = Encoders.product[EState]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (tpe: String, evs: Iterator[EEv], state: GroupState[EState]) =>
+          EventClock.carried(evs, state, Empty)(step(tpe), flush(tpe, _))
+      }
   }
 
   /** EXACT streaming entry: buffers per-day counts until quiesce (state
@@ -121,7 +115,7 @@ object EwmaTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (tpe: String, evs: Iterator[EEv], state: GroupState[EBuf]) =>
-          EventClock.buffered(evs, state, EBuf(Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, EBuf(Nil, Nil, 0L)) {
             (b, es) =>
               val held =
                 EventClock.countByDay(es.iterator, b.days.zip(b.ns))(_.ts)
@@ -141,8 +135,7 @@ object EwmaTracker {
     implicit val rowEnc = Encoders.product[EwmaRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val (st, rows) = fold(tpe, Empty, EventClock.countByDay(it)(_.ts))
-        (rows ++ flush(tpe, st)).iterator
+        EventClock.whole(it, Empty)(step(tpe), flush(tpe, _))
       }
   }
 }

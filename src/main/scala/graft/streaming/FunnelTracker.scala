@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{tsOf, usOf}
+import EventClock.{Stamped, tsOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evFunnel` (the strict-order
   * view→click→purchase funnel) via `mapGroupsWithState`-family state:
@@ -43,6 +43,7 @@ object FunnelTracker {
     * emit the funnel row prematurely (dropping later in-time events).
     */
   case class FState(tView: Long, tClick: Long, tPurchase: Long, tMax: Long)
+      extends Stamped
   case class FunnelRow(user_id: Long, t_view: Timestamp, t_click: Timestamp,
                        t_purchase: Timestamp, depth: Int)
 
@@ -74,23 +75,15 @@ object FunnelTracker {
       if (s.tPurchase == Unset) null else tsOf(s.tPurchase),
       if (s.tPurchase != Unset) 3 else if (s.tClick != Unset) 2 else 1))
 
-  private[streaming] def stateFn(user: Long, events: Iterator[FEv],
-                                 state: GroupState[FState]): Iterator[FunnelRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.flatMap(toRow(user, _))
-      state.remove()
-      out.iterator
-    } else {
-      val sorted = events.toArray.map(e => (usOf(e.ts), e.event_type))
-        .sortBy(_._1).toSeq
-      val prev = state.getOption.getOrElse(FState(Unset, Unset, Unset, 0L))
-      val batchMax = if (sorted.isEmpty) 0L else sorted.map(_._1).max
-      val next = fold(prev, sorted)
-        .copy(tMax = math.max(prev.tMax, batchMax))
-      state.update(next)
-      EventClock.quiesce(state, next.tMax)
-      Iterator.empty
-    }
+  private val emptyState = FState(Unset, Unset, Unset, 0L)
+
+  /** One trigger: fold the ts-sorted slice; the funnel row emits once,
+    * at the timeout.
+    */
+  private def step(prev: FState,
+      slice: Iterator[FEv]): (FState, Seq[FunnelRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_type)).toSeq.sortBy(_._1)
+    (fold(prev, sorted).copy(tMax = (prev.tMax +: sorted.map(_._1)).max), Nil)
   }
 
   /** Streaming entry: rows emit when a user times out past the watermark. */
@@ -99,13 +92,17 @@ object FunnelTracker {
     implicit val stEnc = Encoders.product[FState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[FEv], state: GroupState[FState]) =>
+          EventClock.carried(evs, state, emptyState)(step,
+            toRow(user, _).toSeq)
+      }
   }
 
   /** Buffered per-user events awaiting the quiesce timeout (parallel
     * arrays keep the state encoder flat); `tMax` as in [[FState]].
     */
-  case class FBuf(ts: Seq[Long], types: Seq[String], tMax: Long)
+  case class FBuf(ts: Seq[Long], types: Seq[String], tMax: Long) extends Stamped
 
   /** EXACT streaming entry: buffers each user's events until the quiesce
     * timeout, then folds them whole — identical to [[funnelBatch]] for
@@ -120,14 +117,13 @@ object FunnelTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[FEv], state: GroupState[FBuf]) =>
-          EventClock.buffered(evs, state, FBuf(Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, FBuf(Nil, Nil, 0L)) {
             (b, es) =>
               val us = es.map(e => usOf(e.ts))
               FBuf(b.ts ++ us, b.types ++ es.map(_.event_type),
                 (b.tMax +: us).max)
           } { b =>
-            toRow(user, fold(FState(Unset, Unset, Unset, 0L),
-              b.ts.zip(b.types).sortBy(_._1))).toSeq
+            toRow(user, fold(emptyState, b.ts.zip(b.types).sortBy(_._1))).toSeq
           }
       }
   }
@@ -137,9 +133,7 @@ object FunnelTracker {
     implicit val rowEnc = Encoders.product[FunnelRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val sorted = it.map(e => (usOf(e.ts), e.event_type)).toArray
-          .sortBy(_._1).toSeq
-        toRow(user, fold(FState(Unset, Unset, Unset, 0L), sorted)).iterator
+        EventClock.whole(it, emptyState)(step, toRow(user, _).toSeq)
       }
   }
 }

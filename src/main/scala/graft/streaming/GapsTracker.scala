@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evGaps`: the inter-arrival
   * log2 spectrum, fed CONTINUOUSLY — every consecutive same-(user, type)
@@ -36,9 +36,9 @@ object GapsTracker {
                  event_type: String)
 
   /** lastUs = Long.MinValue means no event carried yet. */
-  case class GState(lastUs: Long, lastEid: Long, tMax: Long)
+  case class GState(lastUs: Long, lastEid: Long, tMax: Long) extends Stamped
 
-  case class GBuf(us: Seq[Long], eids: Seq[Long], tMax: Long)
+  case class GBuf(us: Seq[Long], eids: Seq[Long], tMax: Long) extends Stamped
 
   case class GapRow(user_id: Long, event_type: String, bucket: Long,
                     gap_us: Long)
@@ -72,22 +72,16 @@ object GapsTracker {
     (s, out.result())
   }
 
-  private[streaming] def stateFn(key: (Long, String),
-      events: Iterator[GEv],
-      state: GroupState[GState]): Iterator[GapRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val evs = events.map(e => (usOf(e.ts), e.event_id)).toArray
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(GState(Unset, 0L, 0L))
-        val (next0, rows) = fold(key._1, key._2, prev, evs.sorted.toSeq)
-        val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        rows.iterator
-      }
-    }
+  private val emptyState = GState(Unset, 0L, 0L)
+
+  /** One trigger (or a whole batch group): fold the slice in (ts,
+    * event_id) order; every gap emits at once, nothing at timeout.
+    */
+  private def step(key: (Long, String))(prev: GState,
+      slice: Iterator[GEv]): (GState, Seq[GapRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted
+    val (next, rows) = fold(key._1, key._2, prev, sorted)
+    (next.copy(tMax = (prev.tMax +: sorted.map(_._1)).max), rows)
   }
 
   /** Streaming entry: one increment row per transition; O(1) state. */
@@ -97,7 +91,10 @@ object GapsTracker {
     events.groupByKey(e => (e.user_id, e.event_type))(
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (key: (Long, String), evs: Iterator[GEv], state: GroupState[GState]) =>
+          EventClock.carried(evs, state, emptyState)(step(key), _ => Nil)
+      }
   }
 
   /** EXACT streaming entry: buffers (ts, event_id) until quiesce, folds
@@ -111,13 +108,12 @@ object GapsTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (key: (Long, String), evs: Iterator[GEv], state: GroupState[GBuf]) =>
-          EventClock.buffered(evs, state, GBuf(Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, GBuf(Nil, Nil, 0L)) {
             (b, es) =>
               val us = es.map(e => usOf(e.ts))
               GBuf(b.us ++ us, b.eids ++ es.map(_.event_id), (b.tMax +: us).max)
           } { b =>
-            fold(key._1, key._2, GState(Unset, 0L, 0L),
-              b.us.zip(b.eids).sorted)._2
+            fold(key._1, key._2, emptyState, b.us.zip(b.eids).sorted)._2
           }
       }
   }
@@ -130,8 +126,7 @@ object GapsTracker {
     events.groupByKey(e => (e.user_id, e.event_type))(
         Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .flatMapGroups { (key, it) =>
-        fold(key._1, key._2, GState(Unset, 0L, 0L),
-          it.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted)._2.iterator
+        EventClock.whole(it, emptyState)(step(key), _ => Nil)
       }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evLag`: per-user
   * first-view → first-purchase conversion lag, emitted AT THE MOMENT the
@@ -36,7 +36,7 @@ object LagTracker {
 
   /** Unset sentinels mean the corresponding first hasn't been seen. */
   case class LState(minViewUs: Long, minPurchUs: Long, emitted: Boolean,
-                    tMax: Long)
+                    tMax: Long) extends Stamped
 
   case class LagRow(user_id: Long, lag_s: Long, bucket: Long)
 
@@ -71,21 +71,14 @@ object LagTracker {
     (s, out)
   }
 
-  private[streaming] def stateFn(user: Long, events: Iterator[LEv],
-      state: GroupState[LState]): Iterator[LagRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val evs = events.map(e => (usOf(e.ts), e.event_type)).toArray
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(emptyState)
-        val (next0, out) = fold(user, prev, evs.sortBy(_._1).toSeq)
-        val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        out.iterator
-      }
-    }
+  /** One trigger (or a whole batch group): fold the ts-sorted slice; the
+    * conversion row emits at once, nothing at timeout.
+    */
+  private def step(user: Long)(prev: LState,
+      slice: Iterator[LEv]): (LState, Seq[LagRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_type)).toSeq.sortBy(_._1)
+    val (next, out) = fold(user, prev, sorted)
+    (next.copy(tMax = (prev.tMax +: sorted.map(_._1)).max), out.toSeq)
   }
 
   /** Streaming entry: one row per converting user, at conversion time;
@@ -96,7 +89,10 @@ object LagTracker {
     implicit val stEnc = Encoders.product[LState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[LEv], state: GroupState[LState]) =>
+          EventClock.carried(evs, state, emptyState)(step(user), _ => Nil)
+      }
   }
 
   /** Batch entry: each user seen whole — exact; its bucket histogram
@@ -106,9 +102,7 @@ object LagTracker {
     implicit val rowEnc = Encoders.product[LagRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        fold(user, emptyState,
-          it.map(e => (usOf(e.ts), e.event_type)).toSeq.sortBy(_._1))
-          ._2.iterator
+        EventClock.whole(it, emptyState)(step(user), _ => Nil)
       }
   }
 }

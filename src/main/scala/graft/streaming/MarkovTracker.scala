@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{tsOf, usOf}
+import EventClock.{Stamped, tsOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evMarkov`'s transition
   * STREAM: every consecutive (prev → cur) event-type pair of a user's
@@ -35,9 +35,10 @@ object MarkovTracker {
 
   /** lastUs = -1 means no event carried yet; tMax as [[FunnelTracker]]. */
   case class KState(lastType: String, lastUs: Long, lastId: Long, tMax: Long)
+      extends Stamped
 
   case class KBuf(ts: Seq[Long], ids: Seq[Long], types: Seq[String],
-                  tMax: Long)
+                  tMax: Long) extends Stamped
 
   case class TransRow(user_id: Long, prev: String, cur: String,
                       t_cur: Timestamp)
@@ -66,19 +67,15 @@ object MarkovTracker {
     (KState(lt, lu, li, st.tMax), out.toSeq)
   }
 
-  private[streaming] def stateFn(user: Long, events: Iterator[KEv],
-      state: GroupState[KState]): Iterator[TransRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val evs = events.toArray.sortBy(e => (usOf(e.ts), e.event_id))
-      val prev = state.getOption.getOrElse(emptyState)
-      val batchMax = if (evs.isEmpty) 0L else evs.map(e => usOf(e.ts)).max
-      val (next, rows) = fold(user, prev,
-        evs.toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type)))
-      state.update(next.copy(tMax = math.max(prev.tMax, batchMax)))
-      EventClock.quiesce(state, math.max(prev.tMax, batchMax))
-      rows.iterator
-    }
+  /** One trigger (or a whole batch group): fold the slice in (ts,
+    * event_id) order; transitions emit at once, nothing at timeout.
+    */
+  private def step(user: Long)(prev: KState,
+      slice: Iterator[KEv]): (KState, Seq[TransRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_id, e.event_type))
+      .toSeq.sortBy(t => (t._1, t._2))
+    val (next, rows) = fold(user, prev, sorted)
+    (next.copy(tMax = (prev.tMax +: sorted.map(_._1)).max), rows)
   }
 
   /** Streaming entry: transitions emit on arrival; O(1) state. */
@@ -87,7 +84,10 @@ object MarkovTracker {
     implicit val stEnc = Encoders.product[KState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[KEv], state: GroupState[KState]) =>
+          EventClock.carried(evs, state, emptyState)(step(user), _ => Nil)
+      }
   }
 
   /** EXACT streaming entry: buffers until quiesce, folds whole. */
@@ -98,7 +98,7 @@ object MarkovTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[KEv], state: GroupState[KBuf]) =>
-          EventClock.buffered(evs, state, KBuf(Nil, Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, KBuf(Nil, Nil, Nil, 0L)) {
             (b, es) =>
               val us = es.map(e => usOf(e.ts))
               KBuf(b.ts ++ us, b.ids ++ es.map(_.event_id),
@@ -118,9 +118,7 @@ object MarkovTracker {
     implicit val rowEnc = Encoders.product[TransRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        val sorted = it.toArray.sortBy(e => (usOf(e.ts), e.event_id))
-          .toSeq.map(e => (usOf(e.ts), e.event_id, e.event_type))
-        fold(user, emptyState, sorted)._2.iterator
+        EventClock.whole(it, emptyState)(step(user), _ => Nil)
       }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evBots`: the per-user
   * inter-arrival gap feed, emitted CONTINUOUSLY — every consecutive
@@ -36,9 +36,9 @@ object RateTracker {
   case class REv(ts: Timestamp, event_id: Long, user_id: Long)
 
   /** lastUs = Long.MinValue means no event carried yet. */
-  case class RState(lastUs: Long, lastEid: Long, tMax: Long)
+  case class RState(lastUs: Long, lastEid: Long, tMax: Long) extends Stamped
 
-  case class RBuf(us: Seq[Long], eids: Seq[Long], tMax: Long)
+  case class RBuf(us: Seq[Long], eids: Seq[Long], tMax: Long) extends Stamped
 
   case class RateRow(user_id: Long, gap: Long)
 
@@ -64,21 +64,16 @@ object RateTracker {
     (s, out.result())
   }
 
-  private[streaming] def stateFn(user: Long, events: Iterator[REv],
-      state: GroupState[RState]): Iterator[RateRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val evs = events.map(e => (usOf(e.ts), e.event_id)).toArray
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(RState(Unset, 0L, 0L))
-        val (next0, rows) = fold(user, prev, evs.sorted.toSeq)
-        val next = next0.copy(tMax = math.max(prev.tMax, evs.map(_._1).max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        rows.iterator
-      }
-    }
+  private val emptyState = RState(Unset, 0L, 0L)
+
+  /** One trigger (or a whole batch group): fold the slice in (ts,
+    * event_id) order; every gap emits at once, nothing at timeout.
+    */
+  private def step(user: Long)(prev: RState,
+      slice: Iterator[REv]): (RState, Seq[RateRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted
+    val (next, rows) = fold(user, prev, sorted)
+    (next.copy(tMax = (prev.tMax +: sorted.map(_._1)).max), rows)
   }
 
   /** Streaming entry: one increment row per transition; O(1) state. */
@@ -87,7 +82,10 @@ object RateTracker {
     implicit val stEnc = Encoders.product[RState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[REv], state: GroupState[RState]) =>
+          EventClock.carried(evs, state, emptyState)(step(user), _ => Nil)
+      }
   }
 
   /** EXACT streaming entry: buffers (ts, event_id) until quiesce, folds
@@ -100,11 +98,11 @@ object RateTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[REv], state: GroupState[RBuf]) =>
-          EventClock.buffered(evs, state, RBuf(Nil, Nil, 0L))(_.tMax) {
+          EventClock.buffered(evs, state, RBuf(Nil, Nil, 0L)) {
             (b, es) =>
               val us = es.map(e => usOf(e.ts))
               RBuf(b.us ++ us, b.eids ++ es.map(_.event_id), (b.tMax +: us).max)
-          } { b => fold(user, RState(Unset, 0L, 0L), b.us.zip(b.eids).sorted)._2 }
+          } { b => fold(user, emptyState, b.us.zip(b.eids).sorted)._2 }
       }
   }
 
@@ -116,8 +114,7 @@ object RateTracker {
     implicit val rowEnc = Encoders.product[RateRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroups { (user, it) =>
-        fold(user, RState(Unset, 0L, 0L),
-          it.map(e => (usOf(e.ts), e.event_id)).toSeq.sorted)._2.iterator
+        EventClock.whole(it, emptyState)(step(user), _ => Nil)
       }
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.{dayOf, usOf}
+import EventClock.{Stamped, dayOf, usOf}
 
 /** Streaming counterpart of `ops.Sessionize.evStreaks`: the per-user
   * consecutive-day activity rollup (active days / number of streaks /
@@ -33,9 +33,9 @@ object StreaksTracker {
 
   /** lastDay = Long.MinValue means no day carried yet. */
   case class SState(lastDay: Long, runLen: Long, maxRun: Long, nRuns: Long,
-                    activeDays: Long, tMax: Long)
+                    activeDays: Long, tMax: Long) extends Stamped
 
-  case class SBuf(days: Seq[Long], tMax: Long)
+  case class SBuf(days: Seq[Long], tMax: Long) extends Stamped
 
   case class StreakRow(user_id: Long, active_days: Long, n_streaks: Long,
                        max_streak: Long, as_of_day: Long)
@@ -66,24 +66,18 @@ object StreaksTracker {
   private def row(user: Long, s: SState): StreakRow =
     StreakRow(user, s.activeDays, s.nRuns, s.maxRun, s.lastDay)
 
-  private[streaming] def stateFn(user: Long, events: Iterator[SEv],
-      state: GroupState[SState]): Iterator[StreakRow] = {
-    if (state.hasTimedOut) { state.remove(); Iterator.empty }
-    else {
-      val us = events.map(e => usOf(e.ts)).toArray
-      if (us.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(emptyState)
-        val next0 = fold(prev, us.map(dayOf).distinct.sorted.toSeq)
-        val next = next0.copy(tMax = math.max(prev.tMax, us.max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        // emit only when the rollup moved (a replayed old day is silent)
-        if (next0.activeDays != prev.activeDays ||
-          next0.maxRun != prev.maxRun) Iterator.single(row(user, next))
-        else Iterator.empty
-      }
-    }
+  /** One trigger (or a whole batch group): fold the slice's distinct
+    * days in order and emit the rollup if it moved (a replayed old day is
+    * silent; a batch group always moves it from the empty state). Nothing
+    * emits at timeout.
+    */
+  private def step(user: Long)(prev: SState,
+      slice: Iterator[SEv]): (SState, Seq[StreakRow]) = {
+    val us = slice.map(e => usOf(e.ts)).toSeq
+    val next = fold(prev, us.map(dayOf).distinct.sorted)
+      .copy(tMax = (prev.tMax +: us).max)
+    (next, if (next.activeDays != prev.activeDays ||
+      next.maxRun != prev.maxRun) Seq(row(user, next)) else Nil)
   }
 
   /** Streaming entry: the updated rollup emits per active trigger;
@@ -94,7 +88,10 @@ object StreaksTracker {
     implicit val stEnc = Encoders.product[SState]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (user: Long, evs: Iterator[SEv], state: GroupState[SState]) =>
+          EventClock.carried(evs, state, emptyState)(step(user), _ => Nil)
+      }
   }
 
   /** EXACT streaming entry: buffers distinct days until quiesce, folds
@@ -107,7 +104,7 @@ object StreaksTracker {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout) {
         (user: Long, evs: Iterator[SEv], state: GroupState[SBuf]) =>
-          EventClock.buffered(evs, state, SBuf(Nil, 0L))(_.tMax) { (b, es) =>
+          EventClock.buffered(evs, state, SBuf(Nil, 0L)) { (b, es) =>
             val us = es.map(e => usOf(e.ts))
             SBuf((b.days ++ us.map(dayOf)).distinct, (b.tMax +: us).max)
           } { b => Seq(row(user, fold(emptyState, b.days.distinct.sorted))) }
@@ -120,9 +117,8 @@ object StreaksTracker {
   def streaksBatch(events: Dataset[SEv]): Dataset[StreakRow] = {
     implicit val rowEnc = Encoders.product[StreakRow]
     events.groupByKey(_.user_id)(Encoders.scalaLong)
-      .mapGroups { (user, it) =>
-        row(user, fold(emptyState,
-          it.map(e => dayOf(usOf(e.ts))).toSeq.distinct.sorted))
+      .flatMapGroups { (user, it) =>
+        EventClock.whole(it, emptyState)(step(user), _ => Nil)
       }
   }
 }

@@ -21,8 +21,16 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * These transforms use Spark's own windowed state. The hand-rolled
   * `flatMapGroupsWithState` twins (EventSessionizer and the `*Tracker`s)
   * take every event-time decision from [[EventClock]]: the time units,
-  * the watermark read, timeout arming, the 7-day quiesce horizon, the
-  * buffered-exact kernel and the daily shell.
+  * the watermark read, timeout arming, the 7-day quiesce horizon and the
+  * three state kernels. An O(1) tracker states one `step` (fold a
+  * trigger's slice onto its carried state) and one `flush` (its rows at
+  * the timeout) for `EventClock.carried`, and its `*Batch` entry runs
+  * the same pair through `EventClock.whole`; the `*StreamExact` entries
+  * run on the buffered-exact kernel (`carried` with a step that appends
+  * the slice to a buffer) and the day-finalizing trackers on
+  * the daily shell. EventSessionizer alone handles its own timeout (a
+  * session ends 30 minutes after its last event, not at the quiesce
+  * horizon).
   */
 object Streams {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming heavy hitters: a Space-Saving summary (Metwally, Agrawal,
   * El Abbadi 2005 — the `k`-counter top-k sketch every stream processor
@@ -36,7 +36,7 @@ object TopKTracker {
     * stream length n and the max event time seen (timeout arming).
     */
   case class KState(ids: Seq[Long], counts: Seq[Long], errs: Seq[Long],
-                    n: Long, tMax: Long)
+                    n: Long, tMax: Long) extends Stamped
 
   case class TopKRow(event_type: String, user_id: Long, est: Long,
                      err: Long, n: Long)
@@ -68,30 +68,22 @@ object TopKTracker {
       n, st.tMax)
   }
 
-  private[streaming] def stateFn(k: Int)(eventType: String,
-      events: Iterator[KEv],
-      state: GroupState[KState]): Iterator[TopKRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.flatMap { st =>
-        st.ids.indices.map(i =>
-          TopKRow(eventType, st.ids(i), st.counts(i), st.errs(i), st.n))
-      }
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.toArray.sortBy(e => (usOf(e.ts), e.event_id))
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val prev = state.getOption.getOrElse(KState(Nil, Nil, Nil, 0L, 0L))
-        val next0 = foldSS(prev, evs.map(_.user_id).toSeq, k)
-        val next = next0.copy(
-          tMax = math.max(prev.tMax, evs.map(e => usOf(e.ts)).max))
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        Iterator.empty
-      }
-    }
+  private val emptyState = KState(Nil, Nil, Nil, 0L, 0L)
+
+  /** One trigger: fold the slice's ids in (ts, event_id) order; the
+    * summary emits once, at the timeout.
+    */
+  private def step(k: Int)(prev: KState,
+      slice: Iterator[KEv]): (KState, Seq[TopKRow]) = {
+    val sorted = slice.map(e => (usOf(e.ts), e.event_id, e.user_id))
+      .toSeq.sortBy(t => (t._1, t._2))
+    (foldSS(prev, sorted.map(_._3), k)
+      .copy(tMax = (prev.tMax +: sorted.map(_._1)).max), Nil)
   }
+
+  private def rows(eventType: String)(st: KState): Seq[TopKRow] =
+    st.ids.indices.map(i =>
+      TopKRow(eventType, st.ids(i), st.counts(i), st.errs(i), st.n))
 
   /** Streaming entry: one summary (≤ k rows per event type) emitted at
     * quiesce; O(k) state per key.
@@ -101,7 +93,10 @@ object TopKTracker {
     implicit val stEnc = Encoders.product[KState]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn(k))
+        GroupStateTimeout.EventTimeTimeout) {
+        (tpe: String, evs: Iterator[KEv], state: GroupState[KState]) =>
+          EventClock.carried(evs, state, emptyState)(step(k), rows(tpe))
+      }
   }
 
   /** Batch twin: the same fold over each type's whole (ts, event_id)-
@@ -112,11 +107,7 @@ object TopKTracker {
     implicit val rowEnc = Encoders.product[TopKRow]
     events.groupByKey(_.event_type)(Encoders.STRING)
       .flatMapGroups { (tpe, it) =>
-        val evs = it.toArray.sortBy(e => (usOf(e.ts), e.event_id))
-        val st = foldSS(KState(Nil, Nil, Nil, 0L, 0L),
-          evs.map(_.user_id).toSeq, k)
-        st.ids.indices.iterator.map(i =>
-          TopKRow(tpe, st.ids(i), st.counts(i), st.errs(i), st.n))
+        EventClock.whole(it, emptyState)(step(k), rows(tpe))
       }
   }
 }

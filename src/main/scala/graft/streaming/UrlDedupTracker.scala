@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 
-import EventClock.usOf
+import EventClock.{Stamped, usOf}
 
 /** Streaming keep-first URL dedup — the twin of
   * [[graft.ops.Dedup.ddUrlOn]] for a live fetch stream (the crawl
@@ -30,6 +30,7 @@ object UrlDedupTracker {
 
   /** (ts, fetch_id)-minimal record + count; tMax arms the quiesce timer. */
   case class UState(minTsUs: Long, minId: Long, n: Long, tMax: Long)
+      extends Stamped
 
   case class UrlRow(url: String, keep_id: Long, first_ts_us: Long,
                     n_dups: Long)
@@ -43,8 +44,8 @@ object UrlDedupTracker {
       s"${graft.ops.Dedup.urlCanonSql("url")} AS url").as[UEv]
   }
 
-  private[streaming] def fold(st: UState, evs: Seq[UEv]): UState =
-    evs.foldLeft(st) { (s, e) =>
+  private[streaming] def fold(st: UState, evs: IterableOnce[UEv]): UState =
+    evs.iterator.foldLeft(st) { (s, e) =>
       val us = usOf(e.ts)
       val keepNew = s.n == 0 ||
         us < s.minTsUs || (us == s.minTsUs && e.fetch_id < s.minId)
@@ -55,25 +56,16 @@ object UrlDedupTracker {
         math.max(s.tMax, us))
     }
 
-  private def stateFn(url: String, events: Iterator[UEv],
-      state: GroupState[UState]): Iterator[UrlRow] = {
-    if (state.hasTimedOut) {
-      val out = state.getOption.toSeq.map(st =>
-        UrlRow(url, st.minId, st.minTsUs, st.n))
-      state.remove()
-      out.iterator
-    } else {
-      val evs = events.toArray
-      if (evs.isEmpty) Iterator.empty
-      else {
-        val next = fold(state.getOption.getOrElse(UState(0L, 0L, 0L, 0L)),
-          evs.toSeq)
-        state.update(next)
-        EventClock.quiesce(state, next.tMax)
-        Iterator.empty
-      }
-    }
-  }
+  private val emptyState = UState(0L, 0L, 0L, 0L)
+
+  /** One trigger: the min-fold (order-free, so unsorted); the summary
+    * row emits once, at the timeout.
+    */
+  private def step(prev: UState, slice: Iterator[UEv]): (UState, Seq[UrlRow]) =
+    (fold(prev, slice), Nil)
+
+  private def row(url: String)(st: UState): Seq[UrlRow] =
+    Seq(UrlRow(url, st.minId, st.minTsUs, st.n))
 
   /** Streaming entry over ALREADY-canonical events ([[canonicalize]]
     * upstream): one row per canonical URL at quiesce, O(1) state per key.
@@ -83,16 +75,18 @@ object UrlDedupTracker {
     implicit val stEnc = Encoders.product[UState]
     events.groupByKey(_.url)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(stateFn)
+        GroupStateTimeout.EventTimeTimeout) {
+        (url: String, evs: Iterator[UEv], state: GroupState[UState]) =>
+          EventClock.carried(evs, state, emptyState)(step, row(url))
+      }
   }
 
   /** Batch twin: the same min-fold over each URL's whole history. */
   def urlBatch(events: Dataset[UEv]): Dataset[UrlRow] = {
     implicit val rowEnc = Encoders.product[UrlRow]
     events.groupByKey(_.url)(Encoders.STRING)
-      .mapGroups { (url, it) =>
-        val st = fold(UState(0L, 0L, 0L, 0L), it.toSeq)
-        UrlRow(url, st.minId, st.minTsUs, st.n)
+      .flatMapGroups { (url, it) =>
+        EventClock.whole(it, emptyState)(step, row(url))
       }
   }
 }

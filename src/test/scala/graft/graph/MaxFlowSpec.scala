@@ -162,6 +162,19 @@ class MaxFlowSpec extends AnyFunSuite {
       """i=1; Flows=\d+/\d+; LE=\d+; So=\d+/\d+; Si=\d+/\d+"""))
   }
 
+  test("Config rejects values the engine would mishandle silently") {
+    // "Random" would run priority truncation; checkpointEvery = 0 would
+    // divide by zero after round 1 with a stateDir; K <= 0 keeps no path
+    for (bad <- Seq(() => MaxFlow.Config(truncation = "Random"),
+        () => MaxFlow.Config(checkpointEvery = 0),
+        () => MaxFlow.Config(excessListMax = 0),
+        () => MaxFlow.Config(maxRounds = -1)))
+      intercept[IllegalArgumentException](bad())
+    assert(MaxFlow.Config(truncation = "random", maxRounds = 0,
+      driverCleanupMaxEdges = 0L, excessListMax = Int.MaxValue)
+      .truncation == "random")
+  }
+
   test("distributed cleanup fallback (driverCleanupMaxEdges=0) stays exact") {
     // maxRounds=0 disables the excess-path engine entirely and
     // driverCleanupMaxEdges=0 forbids the one-shot driver EK, so the whole

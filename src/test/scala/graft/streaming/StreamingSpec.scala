@@ -386,6 +386,52 @@ class StreamingSpec extends AnyFunSuite {
       List((7L, 3L, 250L)) && st3.isRemoved)
   }
 
+  test("carried kernel: a trigger carries the max tMax and arms the " +
+      "quiesce, an empty trigger is a no-op, a timeout flushes and " +
+      "removes, and a batch group is one trigger plus its timeout") {
+    import org.apache.spark.api.java.Optional
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, TestGroupState}
+    import EwmaTracker.{EEv, EState, Empty, flush, step}
+    def ev(t: String) = EEv(Timestamp.valueOf(t), "a")
+    def group(prev: Option[EState], wmMs: Long, timedOut: Boolean) =
+      TestGroupState.create[EState](Optional.ofNullable(prev.orNull),
+        GroupStateTimeout.EventTimeTimeout, 0L, Optional.of(wmMs), timedOut)
+    def run(g: GroupState[EState], evs: Seq[EEv]) = EventClock.carried(
+      evs.iterator, g, Empty)(step("a"), flush("a", _)).toList
+    val quiesceMs = EventClock.QuiesceUs / 1000
+    val all = Seq(ev("2024-06-01 10:00:00"), ev("2024-06-01 11:00:00"),
+      ev("2024-06-02 09:00:00"))
+    val wm0 = Timestamp.valueOf("2024-06-01 00:00:00").getTime
+    val end2 = EventClock.usOf(Timestamp.valueOf("2024-06-03 00:00:00")) - 1
+    // a trigger emits the day it completed, stores the stepped state with
+    // tMax at the end of the newest day and arms tMax + the quiesce horizon
+    val (s12, rows12) = step("a")(Empty, all.iterator)
+    val g1 = group(None, wm0, timedOut = false)
+    assert(run(g1, all) == rows12 && rows12.map(_.n) == Seq(2L))
+    assert(g1.get == s12 && s12.tMax == end2)
+    assert(g1.getTimeoutTimestampMs.get == end2 / 1000 + quiesceMs)
+    // an older event keeps the carried tMax; a deadline behind the
+    // watermark is clamped to watermark + 1
+    val wmLate = end2 / 1000 + quiesceMs + 5000L
+    val g2 = group(Some(s12), wmLate, timedOut = false)
+    run(g2, Seq(ev("2024-06-01 12:00:00")))
+    assert(g2.get.tMax == end2 && g2.getTimeoutTimestampMs.get == wmLate + 1)
+    // a trigger with no rows leaves the state and its timeout untouched
+    val g3 = group(Some(s12), wm0, timedOut = false)
+    assert(run(g3, Nil).isEmpty && g3.get == s12 && !g3.isRemoved &&
+      !g3.getTimeoutTimestampMs.isPresent)
+    // a timed-out key emits its flush and is removed
+    val g4 = group(Some(s12), wmLate, timedOut = true)
+    assert(flush("a", s12).nonEmpty && run(g4, Nil) == flush("a", s12) &&
+      g4.isRemoved)
+    // whole == one trigger followed by its timeout, rows then flush
+    val trig = group(None, wm0, timedOut = false)
+    val streamed = run(trig, all) ++
+      run(group(Some(trig.get), wmLate, timedOut = true), Nil)
+    assert(EventClock.whole(all.iterator, Empty)(step("a"), flush("a", _))
+      .toList == streamed && streamed.map(_.n) == Seq(2L, 1L))
+  }
+
   test("streaming exact dedup drops replayed event_ids (bounded state)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
